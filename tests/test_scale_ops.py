@@ -14,7 +14,8 @@ from climatemind_ontology_processing_spark.operators.similarity import (
     brute_force_topk, ivf_assign, lsh_topk)
 from climatemind_ontology_processing_spark.operators.textstats import with_textstats
 from climatemind_ontology_processing_spark.plans.lineage import (
-    completed_buckets, run_bucketed, with_bucket)
+    LINEAGE_SCHEMA, append_lineage_rows, completed_buckets, run_bucketed,
+    with_bucket)
 from climatemind_ontology_processing_spark.sources.pages import pages_df
 from climatemind_ontology_processing_spark.streaming.incremental import (
     incremental_triples)
@@ -334,8 +335,9 @@ def test_lineage_resume(spark, tmp_path):
     out_a = str(tmp_path / "a")
     lin_a = str(tmp_path / "lin_a")
     # full run (oracle) — job count must be CONSTANT in n_buckets (the
-    # single-pass rewrite: 3 actions, not ~3 per bucket; AQE may split an
-    # action into a few jobs, hence the slack)
+    # single-pass rewrite: the triple write plus the lineage write, not ~3
+    # actions per bucket; AQE splits each action into a few jobs, hence the
+    # slack)
     sc = spark.sparkContext
     sc.setJobGroup("lineage-full-run", "test")
     rep = run_bucketed(pages, out_a, lin_a, run_id="r1", n_buckets=4)
@@ -472,6 +474,84 @@ def test_lineage_stale_bucket_cleared(spark, tmp_path):
         f.endswith(".parquet")
         for f in os.listdir(os.path.join(out, "bucket=0"))), \
         "stale rows must be cleared"
+    # the all-empty readback is zero rows, not an error: both buckets get
+    # zero-count lineage rows
+    assert _lineage_counts(spark, lin, "rX") == {0: (0, 0), 1: (0, 0)}
+    # the same on an output path that was never written before
+    fresh_lin = str(tmp_path / "fresh_lin")
+    rep = run_bucketed(pages, str(tmp_path / "fresh_out"), fresh_lin,
+                       run_id="rF", n_buckets=2)
+    assert sorted(rep.processed) == [0, 1]
+    assert _lineage_counts(spark, fresh_lin, "rF") == {0: (0, 0), 1: (0, 0)}
+
+
+def _lineage_counts(spark, lin, run_id):
+    """{bucket: (n_pages, n_triples)}, asserting one lineage row per bucket."""
+    rows = (spark.read.schema(LINEAGE_SCHEMA).json(lin)
+            .filter(F.col("run_id") == run_id).collect())
+    got = {r.bucket: (r.n_pages, r.n_triples) for r in rows}
+    assert len(got) == len(rows), "exactly one lineage row per bucket"
+    return got
+
+
+def _parquet_files(out, bucket):
+    d = os.path.join(out, f"bucket={bucket}")
+    return {f: os.path.getsize(os.path.join(d, f))
+            for f in os.listdir(d) if f.endswith(".parquet")}
+
+
+@pytest.mark.parametrize("wave_size", [None, 2])
+def test_lineage_counters_match_pages_and_committed_output(spark, tmp_path,
+                                                           wave_size):
+    """Each bucket's lineage row counts its input pages and its committed
+    triple rows, for a single-pass run and a run in waves of 2."""
+    pages = pages_df(spark, 120, seed=42, partitions=4)
+    out = str(tmp_path / "out")
+    lin = str(tmp_path / "lin")
+    run_bucketed(pages, out, lin, run_id="rc", n_buckets=4, wave_size=wave_size)
+    n_pages = {r.bucket: r["count"] for r in
+               with_bucket(pages, 4).groupBy("bucket").count().collect()}
+    n_triples = {r.bucket: r["count"] for r in
+                 spark.read.parquet(out).groupBy("bucket").count().collect()}
+    assert _lineage_counts(spark, lin, "rc") == {
+        b: (n_pages.get(b, 0), n_triples.get(b, 0)) for b in range(4)}
+    assert sum(n_pages.values()) == 120 and sum(n_triples.values()) > 0
+
+
+def test_lineage_rows_of_one_append_share_constants(spark, tmp_path):
+    with pytest.raises(ValueError, match="run_id, stage, status, attempt"):
+        append_lineage_rows(spark, str(tmp_path / "lin"), [
+            {"run_id": "a", "stage": "s", "bucket": 0, "n_pages": 1, "n_triples": 1},
+            {"run_id": "b", "stage": "s", "bucket": 1, "n_pages": 1, "n_triples": 1}])
+
+
+def test_lineage_one_file_per_bucket_and_resume_leaves_done_buckets(spark, tmp_path):
+    """Every written bucket dir holds exactly one parquet file, and a resume
+    never touches the files of completed buckets (the wave APPENDS, so only
+    the pending dirs it cleared may change)."""
+    pages = pages_df(spark, 120, seed=42, partitions=4)
+    out = str(tmp_path / "out")
+    # keep all 4 dedup reducers, so the layout cannot follow from AQE
+    # coalescing this small input into one task
+    key = "spark.sql.adaptive.coalescePartitions.enabled"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    try:
+        run_bucketed(pages, out, str(tmp_path / "lin"), run_id="rl", n_buckets=4)
+    finally:
+        spark.conf.set(key, prev)
+    before = {b: _parquet_files(out, b) for b in range(4)}
+    assert all(len(files) == 1 for files in before.values()), before
+    # resume against a lineage where only buckets 0-1 are done
+    lin2 = str(tmp_path / "lin2")
+    append_lineage_rows(spark, lin2, [
+        {"run_id": "rl", "stage": "triples", "bucket": b, "n_pages": 0,
+         "n_triples": 0} for b in (0, 1)])
+    rep = run_bucketed(pages, out, lin2, run_id="rl", n_buckets=4)
+    assert rep.skipped == [0, 1] and sorted(rep.processed) == [2, 3]
+    after = {b: _parquet_files(out, b) for b in range(4)}
+    assert after[0] == before[0] and after[1] == before[1]
+    assert all(len(after[b]) == 1 and after[b] != before[b] for b in (2, 3))
 
 
 def test_lineage_wave_granularity(spark, tmp_path):
