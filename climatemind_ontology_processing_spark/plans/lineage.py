@@ -171,18 +171,19 @@ def _run_pending_wave(pages: DataFrame, out_path: str, lineage_path: str,
 
     # action 1 — the extraction job itself, one write for the whole wave;
     # triples re-derive their bucket from url provenance (same deterministic
-    # hash), and the repartition gives each bucket one task, hence one file
+    # hash).  Repartitioning to an explicit width gives each bucket one task,
+    # hence one file, and keeps AQE from coalescing the wave into ONE writer.
     _clear_bucket_dirs(spark, out_path, wave)
     triples = with_bucket(triples_from_pages(pending.drop("bucket")), n_buckets)
-    (triples.repartition("bucket").write.mode("append")
+    width = min(len(wave), spark.sparkContext.defaultParallelism)
+    (triples.repartition(width, "bucket").write.mode("append")
      .partitionBy("bucket").parquet(out_path))
 
     # action 2 — one lineage row per wave bucket: keys-only page counts and
     # triple counts of the COMMITTED partitions (the at-least-once-safe
     # source of truth), left-joined so an empty bucket counts zero
     committed = spark.read.schema(_OUTPUT_SCHEMA).parquet(out_path).filter(in_wave)
-    counts = spark.range(n_buckets).select(F.col("id").cast("int").alias("bucket"))
-    counts = counts.filter(in_wave)
+    counts = spark.range(n_buckets).selectExpr("int(id) AS bucket").filter(in_wave)
     for name, df in (("n_pages", pending), ("n_triples", committed)):
         counts = counts.join(df.groupBy("bucket").agg(F.count("*").alias(name)),
                              "bucket", "left")
