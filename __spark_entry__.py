@@ -1452,13 +1452,8 @@ def _q_dag_layers(spark, sf_dir):
 
 def _q_bfs_reachable(spark, sf_dir):
     """G2 — BFS frontier expansion from nation 0 over trade edges."""
-    from climatemind_ontology_processing_spark.operators.traversal import (
-        _stash_local_rows)
     edges = _trade_edges(spark, sf_dir).withColumn("type", F.lit("trade"))
-    # the seed frame is a literal — stash its rows so the small path skips
-    # the distinct+collect job
-    seeds = _stash_local_rows(spark.createDataFrame([(0,)], "id int"), [(0,)])
-    return bfs_reachable(edges, seeds, "forward", None) \
+    return bfs_reachable(edges, [0], "forward", None) \
         .select(F.col("id").cast("int").alias("id")).orderBy("id")
 
 

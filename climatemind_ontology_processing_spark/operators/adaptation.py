@@ -29,7 +29,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..config import GREENHOUSE_EFFECT, INHIBITS
-from .traversal import bfs_reachable, transitive_closure
+from .traversal import (_bfs_local, bfs_reachable, transitive_closure,
+                        typed_adjacency)
 
 
 def downstream_nodes(edges_b: DataFrame, root: str = GREENHOUSE_EFFECT) -> DataFrame:
@@ -37,14 +38,12 @@ def downstream_nodes(edges_b: DataFrame, root: str = GREENHOUSE_EFFECT) -> DataF
     return bfs_reachable(edges_b, [root], direction="forward", edge_type=None)
 
 
-def _local_pairs(edges_b: DataFrame, root: str) -> list[tuple]:
-    """Driver-side (effect, intermediate) pairs for the small-graph path:
-    the same reachability product as the distributed branch — reflexive
-    closure of the downstream-restricted subgraph, filtered to sources
-    reachable from the root — computed over the memoized edge list."""
-    from .traversal import _bfs_local, _collect_hops
-
-    fwd = _collect_hops(edges_b, "forward", None)
+def _local_pairs(b_rows: list, root: str) -> list[tuple]:
+    """Driver twin of :func:`intermediate_pairs` over B's (src, dst, type)
+    rows: the same reachability product — reflexive closure of the
+    downstream-restricted subgraph, filtered to sources reachable from the
+    root."""
+    fwd = typed_adjacency(b_rows)
     down = _bfs_local(fwd, [root])
     sub: dict = {}
     for u, vs in fwd.items():
@@ -65,12 +64,6 @@ def intermediate_pairs(edges_b: DataFrame,
                        root: str = GREENHOUSE_EFFECT) -> DataFrame:
     """G5 — (effect, intermediate) pairs: intermediate lies on a simple path
     root -> effect in B.  One closure computation serves every effect node."""
-    from .traversal import _edge_count_small
-
-    if _edge_count_small(edges_b):
-        ty = edges_b.schema["src"].dataType.simpleString()
-        return edges_b.sparkSession.createDataFrame(
-            _local_pairs(edges_b, root), f"effect {ty}, intermediate {ty}")
     down = downstream_nodes(edges_b, root)
     # restrict closure to the downstream component (everything on a
     # root->e path is itself downstream)
@@ -96,22 +89,6 @@ def adaptation_solutions(edges_g: DataFrame, edges_b: DataFrame,
     Effects whose intermediates have no inhibit out-edges get an empty array
     (the reference sets an empty list attribute too, :546-548).
     """
-    from .traversal import (_collect_edge_rows, _edge_count_small,
-                            _stash_local_rows)
-
-    if _edge_count_small(edges_b) and _edge_count_small(edges_g):
-        pairs = _local_pairs(edges_b, root)
-        inhib: dict = {}
-        for s, d, t in _collect_edge_rows(edges_g):
-            if t == INHIBITS:
-                inhib.setdefault(s, set()).add(d)
-        sols: dict = {}
-        for effect, inter in pairs:
-            sols.setdefault(effect, set()).update(inhib.get(inter, ()))
-        ty = edges_b.schema["src"].dataType.simpleString()
-        rows = [(e, sorted(vs)) for e, vs in sorted(sols.items())]
-        return _stash_local_rows(edges_b.sparkSession.createDataFrame(
-            rows, f"effect {ty}, adaptation_solutions array<{ty}>"), rows)
     pairs = intermediate_pairs(edges_b, root)
     inhib = edges_g.filter(F.col("type") == INHIBITS) \
         .select(F.col("src").alias("intermediate"), F.col("dst").alias("solution"))
@@ -125,20 +102,24 @@ def adaptation_solutions(edges_g: DataFrame, edges_b: DataFrame,
                  .alias("adaptation_solutions")))
 
 
+def adaptations_local(g_rows: list, b_rows: list,
+                      root: str = GREENHOUSE_EFFECT) -> list[tuple]:
+    """Driver twin of :func:`adaptation_solutions` over G's and B's
+    (src, dst, type) rows: sorted (effect, sorted solutions) pairs."""
+    inhib: dict = {}
+    for s, d, t in g_rows:
+        if t == INHIBITS:
+            inhib.setdefault(s, set()).add(d)
+    sols: dict = {}
+    for effect, inter in _local_pairs(b_rows, root):
+        sols.setdefault(effect, set()).update(inhib.get(inter, ()))
+    return [(e, sorted(vs)) for e, vs in sorted(sols.items())]
+
+
 def total_adaptation_nodes(adaptations: DataFrame) -> DataFrame:
     """DataFrame[id] — union of all adaptation solutions
     (``make_graph_class.py:558`` accumulator; duplicates irrelevant, used as a
     subgraph node set)."""
-    from .traversal import _local_rows, _stash_local_rows
-
-    stashed = _local_rows(adaptations)
-    if stashed is not None:
-        ids = sorted({v for _e, vs in stashed for v in vs})
-        ty = adaptations.schema["adaptation_solutions"] \
-            .dataType.elementType.simpleString()
-        rows = [(v,) for v in ids]
-        return _stash_local_rows(adaptations.sparkSession.createDataFrame(
-            rows, f"id {ty}"), rows)
     return (adaptations
             .select(F.explode("adaptation_solutions").alias("id"))
             .distinct())

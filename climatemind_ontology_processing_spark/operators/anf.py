@@ -138,31 +138,20 @@ def hyperball(edges: DataFrame, rounds: int = 3, p: int = 6,
            .filter(F.col("c") != F.col("n")))
     sel = pre.distinct()
 
-    from .traversal import (SMALL_GRAPH_THRESHOLD, _collect_probe_rows,
-                            _edge_count_small)
+    # validates p and hash_family on both arms before any Spark work
+    reg, rho = hll_reg_rho(F.col("id"), p, hash_family)
 
-    if SMALL_GRAPH_THRESHOLD > 0:
-        # hash_family is validated by hll_reg_rho on the distributed path;
-        # keep the same loud check before the driver-side register algebra
-        if hash_family != "md5_60":
-            raise ValueError("hll requires hash_family='md5_60' "
-                             f"(got {hash_family!r}: signed 64-bit hashes "
-                             "break the 60-bit register layout)")
-        if not 4 <= p <= 16:
-            raise ValueError(f"p must be in [4, 16], got {p}")
-        # probe BELOW the distinct — the probe machinery dedups
-        # driver-side anyway (build_graph pre-dedup-probe equivalence)
-        if _edge_count_small(pre):
-            probe = _collect_probe_rows(pre)
-            if len(probe) <= SMALL_GRAPH_THRESHOLD:
-                return _hyperball_local(
-                    edges.sparkSession, probe, rounds, p,
-                    pre.schema["c"].dataType.simpleString())
+    from .traversal import small_rows
+
+    # probe BELOW the distinct (small_rows dedups driver-side)
+    probe = small_rows(pre)
+    if probe is not None:
+        return _hyperball_local(edges.sparkSession, probe, rounds, p,
+                                pre.schema["c"].dataType.simpleString())
 
     e = sel.localCheckpoint(eager=True)
     nodes = (e.select(F.col("c").alias("id"))
              .unionByName(e.select(F.col("n").alias("id"))).distinct())
-    reg, rho = hll_reg_rho(F.col("id"), p, hash_family)
     state = (nodes.select("id", reg.alias("register"), rho.alias("rho"))
              .localCheckpoint(eager=True))
     out = _ball_summary(state, p, 0)

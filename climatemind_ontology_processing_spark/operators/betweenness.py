@@ -130,16 +130,16 @@ def sampled_betweenness(edges: DataFrame, num_sources: int = 8,
     e0 = (edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
           .filter(F.col("a").isNotNull() & F.col("b").isNotNull()
                   & (F.col("a") != F.col("b"))))
-    from .traversal import (SMALL_GRAPH_THRESHOLD, _collect_probe_rows,
-                            _edge_count_small)
+    from .traversal import SMALL_GRAPH_THRESHOLD, small_rows
 
     # probe the DIRECTED edge set and symmetrize driver-side: the old
     # probe collected union(e0, flip(e0)).distinct(), whose outer distinct
     # added an exchange stage on top of the substrate (13 -> 12 jobs)
-    if SMALL_GRAPH_THRESHOLD > 0 and _edge_count_small(e0):
+    rows = small_rows(e0)
+    if rows is not None:
         seen: set = set()
         sym_rows = []
-        for a, b in _collect_probe_rows(e0):
+        for a, b in rows:
             for p in ((a, b), (b, a)):
                 if p not in seen:
                     seen.add(p)

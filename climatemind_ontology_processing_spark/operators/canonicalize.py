@@ -52,13 +52,14 @@ def connected_components(edges: DataFrame, src: str = "src", dst: str = "dst",
     """
     from ..config import DEFAULT_SALT_BUCKETS
     from .skew import salted_agg
-    from .traversal import _collect_probe_rows, _edge_count_small
+    from .traversal import small_rows
 
     buckets = DEFAULT_SALT_BUCKETS if salt_buckets is None else salt_buckets
 
     e = (edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
          .filter(F.col("a") != F.col("b")).distinct())
-    if _edge_count_small(e):
+    rows = small_rows(e)
+    if rows is not None:
         # small-graph fast path: union-find on the collected edge list
         # (identical output; see traversal.SMALL_GRAPH_THRESHOLD)
         parent: dict = {}
@@ -69,7 +70,7 @@ def connected_components(edges: DataFrame, src: str = "src", dst: str = "dst",
                 x = parent[x]
             return x
 
-        for a, b in _collect_probe_rows(e):
+        for a, b in rows:
             parent.setdefault(a, a)
             parent.setdefault(b, b)
             ra, rb = find(a), find(b)

@@ -28,14 +28,20 @@ from pyspark.sql import functions as F
 from ..config import GREENHOUSE_EFFECT
 from ..functions.arrays import flatten_source_lists
 from .acyclic import make_acyclic
-from .adaptation import adaptation_solutions, total_adaptation_nodes
+from .adaptation import (adaptation_solutions, adaptations_local,
+                         total_adaptation_nodes)
 from .attributes import attach_attributes
 from .causal_sources import causal_sources
 from .edge_props import remove_edge_properties_from_nodes, set_edge_properties
-from .mitigation import mitigation_solutions, rank_mitigations, upstream_nodes
-from .myths import general_myths_ranked, myth_sources, solution_and_impact_myths
+from .mitigation import (mitigation_solutions, mitigations_local,
+                         rank_mitigations, rank_mitigations_local,
+                         upstream_local, upstream_nodes)
+from .myths import (MYTH_KEY, general_myths_ranked, general_myths_ranked_local,
+                    myth_sources, solution_and_impact_myths)
+from .traversal import small_rows
 from .visualization import (annotate_cyto_edges, annotate_cyto_nodes,
-                            annotated_graph, build_subgraphs, subgraph_tables)
+                            annotated_graph, build_subgraphs, subgraph_tables,
+                            subgraphs_local)
 
 
 @dataclass
@@ -62,20 +68,31 @@ def triples_to_edges(triples: DataFrame) -> DataFrame:
 
 def build_graph(triples: DataFrame, concepts: DataFrame,
                 root: str = GREENHOUSE_EFFECT) -> GraphBundle:
-    from .traversal import _adopt_probe, _edge_count_small
+    """EP1 — raw triples + concept dictionary -> :class:`GraphBundle`.
 
-    edges0 = triples_to_edges(triples)
-    # probe the PRE-dedup projection: the probe collect dedups driver-side
-    # anyway, so the dropDuplicates exchange inside edges0 adds nothing to
-    # the verdict or the rows — adopt them onto edges0
+    The size choice is made once, here: :func:`.traversal.small_rows` over
+    the raw (src, dst, type) projection of ``triples``.  A graph within the
+    threshold takes the SMALL arm: the annotation passes (upstream set,
+    mitigations, adaptations, subgraphs, general myths) run as driver twins
+    on the collected G, B and annotated edge rows and the node annotation
+    maps, and whole-stage codegen is off for the call.  Any larger graph
+    runs every pass as DataFrame plans.  Both arms give identical rows
+    (pinned in tests/test_graph_parity.py).
+
+    The gate counts RAW, pre-dedup rows, so a duplicate-heavy input whose
+    distinct edges would fit still takes the distributed arm.  That is
+    conservative on purpose: the arm never changes the result, and
+    counting before the dedup keeps the probe free of an extra exchange —
+    its distinct rows are exactly the dedup'd G edges.
+    """
     raw_edges = triples.select(F.col("subj").alias("src"),
                                F.col("obj").alias("dst"),
                                F.col("pred").alias("type"))
-    small0 = _edge_count_small(raw_edges)
-    _adopt_probe(edges0, raw_edges)
-    if not small0:
-        return _build_graph_impl(edges0, concepts, root)
-    # SMALL path: whole-stage codegen compilation dominates sub-threshold
+    g_rows = small_rows(raw_edges)
+    edges0 = triples_to_edges(triples)
+    if g_rows is None:
+        return _build_graph_impl(edges0, concepts, root, None)
+    # SMALL arm: whole-stage codegen compilation dominates sub-threshold
     # runs (the ~12 annotation stages each compile large generated classes
     # for a few hundred rows; measured ~1.5 s/rep on the golden fixture).
     # Scope the toggle to this call — big graphs keep codegen.
@@ -84,39 +101,33 @@ def build_graph(triples: DataFrame, concepts: DataFrame,
     old = spark.conf.get(key, "true")
     spark.conf.set(key, "false")
     try:
-        return _build_graph_impl(edges0, concepts, root)
+        return _build_graph_impl(edges0, concepts, root, g_rows)
     finally:
         spark.conf.set(key, old)
 
 
-def _build_graph_impl(edges0: DataFrame, concepts: DataFrame,
-                      root: str = GREENHOUSE_EFFECT) -> GraphBundle:
-    from .traversal import _edge_count_small
+def _edge_rows(edges: DataFrame) -> list[tuple]:
+    return [tuple(r) for r in edges.select("src", "dst", "type").collect()]
+
+
+def _build_graph_impl(edges0: DataFrame, concepts: DataFrame, root: str,
+                      g_rows: list[tuple] | None) -> GraphBundle:
+    """``g_rows`` are G's distinct (src, dst, type) rows on the small arm,
+    None on the distributed arm."""
+    small = g_rows is not None
 
     # Size-adaptive checkpoint width: a curated KG (hundreds..thousands of
     # edges) gains nothing from 32-partition checkpointed RDDs — every
     # downstream stage (and the 25-subgraph union fan-out) schedules that
     # many tasks per checkpoint it touches, and checkpointed RDD lineage
     # bypasses AQE coalescing so the width sticks.  SMALL graphs coalesce
-    # each checkpoint to 1 partition; big graphs (> SMALL_GRAPH_THRESHOLD
-    # edges) keep full parallelism.  (Lowering shuffle_partitions /
-    # coalescing the driver-side traversal frames were ALSO tried and
-    # measured neutral-to-negative on this pipeline — the residual cost is
-    # per-stage scheduling floor spread over ~12 phases, not width.)
-    small = _edge_count_small(edges0)
-
-    from .traversal import _mark_small
-
+    # each checkpoint to 1 partition; big graphs keep full parallelism.
+    # (Lowering shuffle_partitions / coalescing the driver-side traversal
+    # frames were ALSO tried and measured neutral-to-negative on this
+    # pipeline — the residual cost is per-stage scheduling floor spread
+    # over ~12 phases, not width.)
     def _ckpt(df: DataFrame) -> DataFrame:
-        out = (df.coalesce(1) if small else df).localCheckpoint(eager=True)
-        # every edge table below derives from edges0 by filtering — once
-        # edges0 probed small, skip the probe on the derived frames
-        return _mark_small(out) if small else out
-
-    # driver-built small-path outputs (upstream/mitigation/adaptation sets)
-    # are already-materialized local relations — checkpointing them would
-    # only add a job per stage
-    _ckpt_set = (lambda df: df) if small else _ckpt
+        return (df.coalesce(1) if small else df).localCheckpoint(eager=True)
 
     # J1 + A3 (checkpointed: both set_edge_properties and
     # remove_edge_properties_from_nodes consume nodes0 — one attach
@@ -133,55 +144,82 @@ def _build_graph_impl(edges0: DataFrame, concepts: DataFrame,
     # deep self-unions under AQE hit the same attribute-binding bug)
     edges_b = _ckpt(make_acyclic(edges, nodes))
 
-    # G3/G7/O1
-    from .traversal import _local_rows
+    # annotated graph + cyto (checkpointed: the 25-subgraph fan-out
+    # references these plans ~25x each — without truncation every
+    # induced-edge branch would recompute the whole upstream pipeline)
+    a_nodes, a_edges = annotated_graph(nodes, edges_b)
+    a_nodes = _ckpt(annotate_cyto_nodes(a_nodes))
+    a_edges = _ckpt(annotate_cyto_edges(a_edges, a_nodes))
 
-    ups = _ckpt_set(upstream_nodes(edges_b, root))
-    mit = _ckpt_set(mitigation_solutions(edges_b, root, ups=ups))
-    # small path: ONE narrow collect of the per-label annotation maps
-    # replaces the rank_mitigations and general_myths collect jobs (their
-    # ordering replicas are pinned in tests/test_small_path_equivalence)
-    ann_rows = (nodes.select("label", "data_properties",
-                             "super_class_membership").collect()
-                if small else None)
-    mit_rows0 = _local_rows(mit)
-    if ann_rows is not None and mit_rows0 is not None:
-        from .mitigation import rank_mitigations_local
-        _dp = {r["label"]: r["data_properties"] for r in ann_rows}
-        mit_ranked = rank_mitigations_local([r[0] for r in mit_rows0], _dp)
-    else:
-        mit_ranked = [r.id for r in rank_mitigations(mit, nodes).collect()]
-
-    # G4/G5/G8 — inhibit neighbors from PRE-cut G, paths from B
-    adapt = _ckpt_set(adaptation_solutions(edges, edges_b, root))
-    adapt_ids = total_adaptation_nodes(adapt)
-
-    # solution sources (A5) for mitigation + adaptation solution nodes.
+    # Solution sources (A5) for mitigation + adaptation solution nodes.
     # Reference gating differs per pass: mitigation sets the attribute only
     # when non-empty (make_graph_class.py:508 ``if sources:``), adaptation
     # sets it unconditionally (:553-557) — so empty bags survive only for
     # adaptation solutions.
-    from .traversal import _local_rows
-
-    mit_rows = _local_rows(mit)
-    aid_rows = _local_rows(adapt_ids)
     flat = flatten_source_lists(F.col("properties"))
-    if mit_rows is not None and aid_rows is not None:
-        # small path: both id sets are driver-side — literal membership
-        # filters replace the flag union + groupBy + join (node labels are
-        # unique, so the inner join was exactly this filter; _always =
-        # max(_always) is True iff the label is an adaptation id)
-        always_set = {r[0] for r in aid_rows}
-        sol = sorted({r[0] for r in mit_rows} | always_set)
-        in_always = (F.col("label").isin(sorted(always_set))
-                     if always_set else F.lit(False))
+    if small:
+        # G3/G7/O1, G4/G5/G8, G2/G9/G10 and O2 as driver twins over three
+        # edge row lists and ONE narrow collect of the node annotation maps
+        spark = edges.sparkSession
+        b_rows = _edge_rows(edges_b)
+        a_rows = _edge_rows(a_edges)
+        ann = nodes.select("label", "data_properties", "super_class_membership",
+                           "personal_values_10").collect()
+        dp = {r["label"]: r["data_properties"] for r in ann}
+        scm = {r["label"]: r["super_class_membership"] for r in ann}
+        # personal-value subgraphs come from the annotated (myth-free) nodes
+        pv_labels = sorted(
+            r["label"] for r in ann
+            if any(r["personal_values_10"] or ())
+            and MYTH_KEY not in (r["super_class_membership"] or {}))
+
+        ups_set = upstream_local(b_rows, root)
+        mit_ids = mitigations_local(b_rows, ups_set)
+        mit_ranked = rank_mitigations_local(mit_ids, dp)
+        adapt_rows = adaptations_local(g_rows, b_rows, root)
+        adapt_ids = sorted({v for _e, vs in adapt_rows for v in vs})
+
+        # literal membership filters replace the flag union + groupBy +
+        # join (node labels are unique, so the inner join was exactly this
+        # filter; _always = max(_always) is True iff the label is an
+        # adaptation id)
+        sol = sorted(set(mit_ids) | set(adapt_ids))
+        in_always = (F.col("label").isin(adapt_ids) if adapt_ids
+                     else F.lit(False))
         solution_sources_df = (nodes
             .filter(F.col("label").isin(sol) if sol else F.lit(False))
             .select("label",
                     F.when((F.size(flat) > 0) | in_always, flat)
                      .alias("solution_sources"))
             .filter(F.col("solution_sources").isNotNull()))
+
+        subs = subgraphs_local(a_rows, pv_labels, set(mit_ids),
+                               set(adapt_ids), root)
+        ty = edges_b.schema["src"].dataType.simpleString()
+        sub_nodes = spark.createDataFrame(
+            [(name, v) for name, (ns, _es) in subs.items() for v in ns],
+            f"subgraph_name string, node_id {ty}")
+        sub_edges = spark.createDataFrame(
+            [(name, s, d) for name, (_ns, es) in subs.items() for s, d in es],
+            f"subgraph_name string, src {ty}, dst {ty}")
+        down_ids = subs["downstream_adaptations"][0]
+
+        gen_rows = general_myths_ranked_local(g_rows, scm, dp, ups_set)
+        gen_myth_list = [m for m, _f in gen_rows]
+        ups = spark.createDataFrame([(v,) for v in sorted(ups_set)], f"id {ty}")
+        mit = spark.createDataFrame([(v,) for v in mit_ids], f"id {ty}")
+        adapt = spark.createDataFrame(
+            adapt_rows, f"effect {ty}, adaptation_solutions array<{ty}>")
+        gen_myths = spark.createDataFrame(
+            gen_rows, "myth string, myth_frequency double")
     else:
+        ups = _ckpt(upstream_nodes(edges_b, root))
+        mit = _ckpt(mitigation_solutions(edges_b, root, ups=ups))
+        mit_ranked = [r.id for r in rank_mitigations(mit, nodes).collect()]
+        # G4/G5/G8 — inhibit neighbors from PRE-cut G, paths from B
+        adapt = _ckpt(adaptation_solutions(edges, edges_b, root))
+        adapt_ids = total_adaptation_nodes(adapt)
+
         sol_ids = (mit.withColumn("_always", F.lit(False))
                    .unionByName(adapt_ids.withColumn("_always", F.lit(True))))
         sol_flags = sol_ids.groupBy("id").agg(F.max("_always").alias("_always"))
@@ -192,34 +230,16 @@ def _build_graph_impl(edges0: DataFrame, concepts: DataFrame,
                      .alias("solution_sources"))
             .filter(F.col("solution_sources").isNotNull()))
 
-    # annotated graph + cyto + subgraphs (checkpointed: the 25-subgraph
-    # fan-out below references these plans ~25x each — without truncation
-    # every induced-edge branch would recompute the whole upstream pipeline)
-    a_nodes, a_edges = annotated_graph(nodes, edges_b)
-    a_nodes = _ckpt(annotate_cyto_nodes(a_nodes))
-    a_edges = _ckpt(annotate_cyto_edges(a_edges, a_nodes))
-    subs = build_subgraphs(a_nodes, a_edges, mit, adapt_ids, root)
-    sub_nodes, sub_edges = subgraph_tables(subs, a_edges)
+        subs = build_subgraphs(a_nodes, a_edges, mit, adapt_ids, root)
+        sub_nodes, sub_edges = subgraph_tables(subs, a_edges)
+        down_ids = subs["downstream_adaptations"]
+
+        gen_myths = general_myths_ranked(edges, nodes, ups)
+        gen_myth_list = [r["myth"] for r in gen_myths.collect()]
 
     # myths (against full G nodes/edges; downstream set from the annotated
     # subgraph per process_myths.py:42)
-    down_ids = subs["downstream_adaptations"]
     myth_cat = solution_and_impact_myths(edges, nodes, down_ids)
-    ups_rows = _local_rows(ups)
-    if ann_rows is not None and ups_rows is not None:
-        from .myths import general_myths_ranked_local
-        from .traversal import _collect_edge_rows, _stash_local_rows
-        _scm = {r["label"]: r["super_class_membership"] for r in ann_rows}
-        gen_rows = general_myths_ranked_local(
-            _collect_edge_rows(edges), _scm, _dp,
-            {r[0] for r in ups_rows})
-        gen_myths = _stash_local_rows(
-            edges.sparkSession.createDataFrame(
-                gen_rows, "myth string, myth_frequency double"), gen_rows)
-        gen_myth_list = [m for m, _f in gen_rows]
-    else:
-        gen_myths = general_myths_ranked(edges, nodes, ups)
-        gen_myth_list = [r["myth"] for r in gen_myths.collect()]
     myth_src = myth_sources(nodes)
 
     # causal sources

@@ -256,17 +256,17 @@ def label_propagation(edges: DataFrame, src: str = "src", dst: str = "dst",
     e = (edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
          .filter(F.col("a") != F.col("b")))
 
-    from .traversal import (SMALL_GRAPH_THRESHOLD, _collect_probe_rows,
-                            _edge_count_small)
+    from .traversal import SMALL_GRAPH_THRESHOLD, small_rows
 
     # probe the DIRECTED set and symmetrize driver-side (betweenness
     # pattern): the old shape eagerly checkpointed union+flip+distinct
     # BEFORE the probe, paying two exchanges and a store even on tiny
     # graphs; the distributed branch below still materializes it
-    if SMALL_GRAPH_THRESHOLD > 0 and _edge_count_small(e):
+    rows = small_rows(e)
+    if rows is not None:
         seen: set = set()
         sym_rows = []
-        for a, b in _collect_probe_rows(e):
+        for a, b in rows:
             for p in ((a, b), (b, a)):
                 if p not in seen:
                     seen.add(p)
@@ -673,54 +673,51 @@ def node2vec_walks(edges: DataFrame, length: int = 4,
            .filter(F.col("c") != F.col("n")))
     sel = pre.distinct()
 
-    from .traversal import (SMALL_GRAPH_THRESHOLD, _collect_probe_rows,
-                            _edge_count_small)
+    from .traversal import small_rows
 
-    # probe BELOW the distinct (the probe machinery dedups driver-side
-    # anyway — same equivalence as build_graph's pre-dedup probe)
-    if SMALL_GRAPH_THRESHOLD > 0 and _edge_count_small(pre):
-        probe = _collect_probe_rows(pre)
-        if len(probe) <= SMALL_GRAPH_THRESHOLD:
-            # small-graph path: the identical hash-biased argmin walk over
-            # the collected adjacency — every choice still derives from
-            # (seed, step, prev, cur, cand), so it is bit-identical to the
-            # distributed rounds (oracle-verified)
-            import hashlib
+    # probe BELOW the distinct (small_rows dedups driver-side)
+    probe = small_rows(pre)
+    if probe is not None:
+        # small-graph path: the identical hash-biased argmin walk over
+        # the collected adjacency — every choice still derives from
+        # (seed, step, prev, cur, cand), so it is bit-identical to the
+        # distributed rounds (oracle-verified)
+        import hashlib
 
-            out_adj: dict = {}
-            und_set = set()
-            for c, n in probe:
-                out_adj.setdefault(c, []).append(n)
-                und_set.add((c, n))
-                und_set.add((n, c))
-            starts = sorted(out_adj)
-            cur = {s: (s, None) for s in starts}
-            rows = [(s, 0, s) for s in starts]
-            for t in range(1, length + 1):
-                nxt = {}
-                for s, (node, prev) in cur.items():
-                    best = None
-                    for n in out_adj.get(node, ()):
-                        if prev is not None and n == prev:
-                            mult = int(p_micro)
-                        elif (prev, n) in und_set:
-                            mult = 1_000_000
-                        else:
-                            mult = int(q_micro)
-                        key = (f"{seed}|{t}|"
-                               f"{'-' if prev is None else prev}|{node}|{n}")
-                        h = int(hashlib.md5(key.encode())
-                                .hexdigest()[:10], 16)
-                        cand = (h * mult, n)
-                        if best is None or cand < best:
-                            best = cand
-                    if best is not None:
-                        nxt[s] = (best[1], node)
-                        rows.append((s, t, best[1]))
-                cur = nxt
-            ty = sel.schema["c"].dataType.simpleString()
-            return edges.sparkSession.createDataFrame(
-                rows, f"start {ty}, step int, node {ty}")
+        out_adj: dict = {}
+        und_set = set()
+        for c, n in probe:
+            out_adj.setdefault(c, []).append(n)
+            und_set.add((c, n))
+            und_set.add((n, c))
+        starts = sorted(out_adj)
+        cur = {s: (s, None) for s in starts}
+        rows = [(s, 0, s) for s in starts]
+        for t in range(1, length + 1):
+            nxt = {}
+            for s, (node, prev) in cur.items():
+                best = None
+                for n in out_adj.get(node, ()):
+                    if prev is not None and n == prev:
+                        mult = int(p_micro)
+                    elif (prev, n) in und_set:
+                        mult = 1_000_000
+                    else:
+                        mult = int(q_micro)
+                    key = (f"{seed}|{t}|"
+                           f"{'-' if prev is None else prev}|{node}|{n}")
+                    h = int(hashlib.md5(key.encode())
+                            .hexdigest()[:10], 16)
+                    cand = (h * mult, n)
+                    if best is None or cand < best:
+                        best = cand
+                if best is not None:
+                    nxt[s] = (best[1], node)
+                    rows.append((s, t, best[1]))
+            cur = nxt
+        ty = sel.schema["c"].dataType.simpleString()
+        return edges.sparkSession.createDataFrame(
+            rows, f"start {ty}, step int, node {ty}")
 
     e = sel.localCheckpoint(eager=True)
     und = (e.unionByName(e.select(F.col("n").alias("c"),

@@ -158,22 +158,21 @@ def textrank_scores(docs: DataFrame, window: int = 2, iters: int = 3,
     # list fits on the driver, run the identical BIGINT `div` recurrence
     # locally — zero per-round jobs (size-adaptive convention; the
     # materialized `e` above means the probe collect reads, not computes)
-    from .traversal import SMALL_GRAPH_THRESHOLD
-    if SMALL_GRAPH_THRESHOLD > 0:
-        rows = e.limit(SMALL_GRAPH_THRESHOLD + 1).collect()
-        if len(rows) <= SMALL_GRAPH_THRESHOLD:
-            score = {}
-            for r in rows:
-                score[r[0]] = MICRO
-            for _ in range(iters):
-                flow: dict = {}
-                for s, d, w, ws in rows:
-                    flow[d] = flow.get(d, 0) + (score[s] * w) // ws
-                score = {tok: 15 * MICRO // 100
-                         + (85 * flow.get(tok, 0)) // 100
-                         for tok in score}
-            return docs.sparkSession.createDataFrame(
-                sorted(score.items()), "tok string, score long")
+    from .traversal import small_rows
+    rows = small_rows(e)     # (src, dst) pairs are unique, so no row merges
+    if rows is not None:
+        score = {}
+        for r in rows:
+            score[r[0]] = MICRO
+        for _ in range(iters):
+            flow: dict = {}
+            for s, d, w, ws in rows:
+                flow[d] = flow.get(d, 0) + (score[s] * w) // ws
+            score = {tok: 15 * MICRO // 100
+                     + (85 * flow.get(tok, 0)) // 100
+                     for tok in score}
+        return docs.sparkSession.createDataFrame(
+            sorted(score.items()), "tok string, score long")
 
     scores = strength.select(F.col("src").alias("tok"),
                              F.lit(MICRO).cast("long").alias("score"))

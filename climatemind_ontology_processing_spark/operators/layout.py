@@ -33,16 +33,17 @@ def dag_layers(edges: DataFrame, src: str = "src", dst: str = "dst",
     """(id, layer) — longest-path layering of a DAG; raises ValueError on a
     cycle (run ``acyclic.make_acyclic`` first, as the reference pipeline
     does before visualizing)."""
-    from .traversal import _collect_probe_rows, _edge_count_small
+    from .traversal import small_rows
 
     e = (edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
          .filter(F.col("u").isNotNull() & F.col("v").isNotNull())
          .distinct())
-    if _edge_count_small(e):
+    rows = small_rows(e)
+    if rows is not None:
         adj: dict = {}
         indeg: dict = {}
         nodes: set = set()
-        for u, v in _collect_probe_rows(e):
+        for u, v in rows:
             adj.setdefault(u, []).append(v)
             indeg[v] = indeg.get(v, 0) + 1
             nodes.add(u)

@@ -24,29 +24,11 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..config import CAUSES, GREENHOUSE_EFFECT, INHIBITS
-from .traversal import bfs_reachable
+from .traversal import _bfs_local, bfs_reachable, typed_adjacency
 
 
 def upstream_nodes(edges_b: DataFrame, root: str = GREENHOUSE_EFFECT) -> DataFrame:
-    """G3 — DataFrame[id] of nodes on causes-edges upstream of ``root``.
-
-    Size-adaptive: on a small graph the whole pipeline — reverse BFS plus
-    the causes-edge endpoint collapse — runs on the memoized collected
-    edge list (one Spark action total, shared with every other traversal
-    over the same frame) instead of a BFS + two joins + a distinct."""
-    from .traversal import (_bfs_local, _collect_edge_rows, _collect_hops,
-                            _edge_count_small, _stash_local_rows)
-    if _edge_count_small(edges_b):
-        reached = _bfs_local(_collect_hops(edges_b, "reverse", None), [root])
-        out: set = set()
-        for s, d, t in _collect_edge_rows(edges_b):
-            if t == CAUSES and d in reached:
-                out.add(s)
-                out.add(d)
-        ty = edges_b.schema["src"].dataType.simpleString()
-        rows = [(v,) for v in sorted(out)]
-        return _stash_local_rows(edges_b.sparkSession.createDataFrame(
-            rows, f"id {ty}"), rows)
+    """G3 — DataFrame[id] of nodes on causes-edges upstream of ``root``."""
     reached = bfs_reachable(edges_b, [root], direction="reverse", edge_type=None)
     causes = edges_b.filter(F.col("type") == CAUSES) \
         .join(reached.withColumnRenamed("id", "dst"), "dst", "left_semi")
@@ -55,29 +37,30 @@ def upstream_nodes(edges_b: DataFrame, root: str = GREENHOUSE_EFFECT) -> DataFra
             .distinct())
 
 
+def upstream_local(b_rows: list, root: str = GREENHOUSE_EFFECT) -> set:
+    """Driver twin of :func:`upstream_nodes` over B's (src, dst, type)
+    rows: reverse reach of ``root`` over any edge type, then both
+    endpoints of the causes edges that land in it."""
+    reached = _bfs_local(typed_adjacency(b_rows, "reverse"), [root])
+    return {x for s, d, t in b_rows if t == CAUSES and d in reached
+            for x in (s, d)}
+
+
 def mitigation_solutions(edges_b: DataFrame, root: str = GREENHOUSE_EFFECT,
                          ups: DataFrame | None = None) -> DataFrame:
     """G7 — DataFrame[id]: inhibit-edge targets of upstream nodes.  Pass a
     precomputed upstream set to avoid recomputing the BFS."""
-    from .traversal import (_collect_edge_rows, _edge_count_small,
-                            _local_rows, _stash_local_rows)
-    if _edge_count_small(edges_b):
-        if ups is None:
-            ups = upstream_nodes(edges_b, root)
-        stashed = _local_rows(ups)
-        ups_ids = {r[0] for r in (stashed if stashed is not None
-                                  else ups.collect())}
-        out = sorted({d for s, d, t in _collect_edge_rows(edges_b)
-                      if t == INHIBITS and s in ups_ids})
-        ty = edges_b.schema["src"].dataType.simpleString()
-        rows = [(v,) for v in out]
-        return _stash_local_rows(edges_b.sparkSession.createDataFrame(
-            rows, f"id {ty}"), rows)
     if ups is None:
         ups = upstream_nodes(edges_b, root)
     return (edges_b.filter(F.col("type") == INHIBITS)
             .join(ups.withColumnRenamed("id", "src"), "src", "left_semi")
             .select(F.col("dst").alias("id")).distinct())
+
+
+def mitigations_local(b_rows: list, ups: set) -> list:
+    """Driver twin of :func:`mitigation_solutions`: sorted inhibit-edge
+    targets of the upstream set ``ups``."""
+    return sorted({d for s, d, t in b_rows if t == INHIBITS and s in ups})
 
 
 def rank_mitigations(mitigations: DataFrame, nodes: DataFrame) -> DataFrame:

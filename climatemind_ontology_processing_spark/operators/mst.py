@@ -50,59 +50,57 @@ def boruvka_msf(edges: DataFrame, src: str = "src", dst: str = "dst",
     registered oracle proves it algorithm-independently via the cycle
     property.)  Pinned against the distributed path in pytest.
     """
-    from .traversal import SMALL_GRAPH_THRESHOLD
+    from .traversal import small_rows
 
-    if SMALL_GRAPH_THRESHOLD > 0:
-        probe = (edges.select(src, dst, weight)
-                 .limit(SMALL_GRAPH_THRESHOLD + 1).collect())
-        if len(probe) <= SMALL_GRAPH_THRESHOLD:
-            best: dict = {}
-            for s, d, w in probe:
-                if s is None or d is None or s == d:
-                    continue          # least/greatest turn these into
-                    # self-loops, which the filter drops
-                if w is None:
-                    raise RuntimeError(
-                        f"boruvka_msf: NULL weight on edge {s}-{d}")
-                k = (s, d) if s <= d else (d, s)
-                if k not in best or w < best[k]:
-                    best[k] = w
-            parent: dict = {}
-            for lo, hi in best:
-                parent.setdefault(lo, lo)
-                parent.setdefault(hi, hi)
+    probe = small_rows(edges.select(src, dst, weight))
+    if probe is not None:
+        best: dict = {}
+        for s, d, w in probe:
+            if s is None or d is None or s == d:
+                continue          # least/greatest turn these into
+                # self-loops, which the filter drops
+            if w is None:
+                raise RuntimeError(
+                    f"boruvka_msf: NULL weight on edge {s}-{d}")
+            k = (s, d) if s <= d else (d, s)
+            if k not in best or w < best[k]:
+                best[k] = w
+        parent: dict = {}
+        for lo, hi in best:
+            parent.setdefault(lo, lo)
+            parent.setdefault(hi, hi)
 
-            def find(x):
-                while parent[x] != x:
-                    parent[x] = parent[parent[x]]
-                    x = parent[x]
-                return x
+        def find(x):
+            while parent[x] != x:
+                parent[x] = parent[parent[x]]
+                x = parent[x]
+            return x
 
-            out = []
-            for _ in range(max_rounds):
-                inter = [(lo, hi, w) for (lo, hi), w in best.items()
-                         if find(lo) != find(hi)]
-                if not inter:
-                    ts = edges.schema[src].dataType.simpleString()
-                    tw = edges.schema[weight].dataType.simpleString()
-                    return edges.sparkSession.createDataFrame(
-                        out, f"lo {ts}, hi {ts}, {weight} {tw}")
-                chosen: dict = {}
-                for lo, hi, w in inter:
-                    key = (w, lo, hi)
-                    for c in (find(lo), find(hi)):
-                        if c not in chosen or key < chosen[c]:
-                            chosen[c] = key
-                for w, lo, hi in sorted(set(chosen.values())):
-                    ra, rb = find(lo), find(hi)
-                    if ra != rb:
-                        parent[max(ra, rb)] = min(ra, rb)
-                    out.append((lo, hi, w))
-            raise RuntimeError(
-                f"boruvka_msf: {max_rounds} rounds exhausted before "
-                "quiescence — raise max_rounds (components halve per "
-                "round, so this indicates a bug or a graph beyond "
-                "2^max_rounds nodes)")
+        out = []
+        for _ in range(max_rounds):
+            inter = [(lo, hi, w) for (lo, hi), w in best.items()
+                     if find(lo) != find(hi)]
+            if not inter:
+                ts = edges.schema[src].dataType.simpleString()
+                tw = edges.schema[weight].dataType.simpleString()
+                return edges.sparkSession.createDataFrame(
+                    out, f"lo {ts}, hi {ts}, {weight} {tw}")
+            chosen: dict = {}
+            for lo, hi, w in inter:
+                key = (w, lo, hi)
+                for c in (find(lo), find(hi)):
+                    if c not in chosen or key < chosen[c]:
+                        chosen[c] = key
+            for w, lo, hi in sorted(set(chosen.values())):
+                ra, rb = find(lo), find(hi)
+                if ra != rb:
+                    parent[max(ra, rb)] = min(ra, rb)
+                out.append((lo, hi, w))
+        raise RuntimeError(
+            f"boruvka_msf: {max_rounds} rounds exhausted before "
+            "quiescence — raise max_rounds (components halve per "
+            "round, so this indicates a bug or a graph beyond "
+            "2^max_rounds nodes)")
 
     checked_w = F.when(
         F.col(weight).isNull(),

@@ -45,12 +45,21 @@ def myth_edges(edges_g: DataFrame, nodes: DataFrame) -> DataFrame:
             .select(F.col("src").alias("myth"), F.col("dst").alias("target")))
 
 
-def solution_and_impact_myths(edges_g: DataFrame, nodes: DataFrame,
-                              downstream_adaptation_ids: DataFrame) -> DataFrame:
-    """(target, solution_myths array, impact_myths array) — empty arrays where
-    a category doesn't apply but the other does."""
-    from .traversal import _local_rows
+def _in_ids(col: str, ids: DataFrame | list):
+    """Literal membership in a driver-side id list (a plain filter, no join
+    against a stats-less local frame); None for a DataFrame id set."""
+    if not isinstance(ids, list):
+        return None
+    vals = sorted(set(ids))
+    return F.col(col).isin(vals) if vals else F.lit(False)
 
+
+def solution_and_impact_myths(edges_g: DataFrame, nodes: DataFrame,
+                              downstream_adaptation_ids: DataFrame | list
+                              ) -> DataFrame:
+    """(target, solution_myths array, impact_myths array) — empty arrays where
+    a category doesn't apply but the other does.  The downstream-adaptation
+    id set is a DataFrame[id] or a driver-side list."""
     me = myth_edges(edges_g, nodes)
     risk = nodes.filter(
         F.col("super_class_membership").isNotNull() &
@@ -60,15 +69,10 @@ def solution_and_impact_myths(edges_g: DataFrame, nodes: DataFrame,
     tagged = me.join(
         F.broadcast(risk.withColumn("_is_risk", F.lit(True))),
         "target", "left")
-    down_rows = _local_rows(downstream_adaptation_ids)
-    if down_rows is not None:
-        # driver-side id set (small path): literal membership instead of a
-        # join against a stats-less local frame — identical tagging (the
-        # left join yields True-or-null; so does when(isin))
-        vals = sorted({r[0] for r in down_rows})
-        is_down = (F.when(F.col("target").isin(vals), F.lit(True))
-                   if vals else F.lit(None).cast("boolean"))
-        tagged = tagged.withColumn("_is_down", is_down)
+    in_down = _in_ids("target", downstream_adaptation_ids)
+    if in_down is not None:
+        # the left join below yields True-or-null; so does when(isin)
+        tagged = tagged.withColumn("_is_down", F.when(in_down, F.lit(True)))
     else:
         down = downstream_adaptation_ids.select(
             F.col(downstream_adaptation_ids.columns[0]).alias("target"))
@@ -84,16 +88,13 @@ def solution_and_impact_myths(edges_g: DataFrame, nodes: DataFrame,
 
 
 def general_myths_ranked(edges_g: DataFrame, nodes: DataFrame,
-                         upstream_ids: DataFrame) -> DataFrame:
-    """O2 — (myth, myth_frequency) sorted by frequency desc, label asc."""
-    from .traversal import _local_rows
-
+                         upstream_ids: DataFrame | list) -> DataFrame:
+    """O2 — (myth, myth_frequency) sorted by frequency desc, label asc.  The
+    upstream id set is a DataFrame[id] or a driver-side list."""
     me = myth_edges(edges_g, nodes)
-    ups_rows = _local_rows(upstream_ids)
-    if ups_rows is not None:
-        vals = sorted({r[0] for r in ups_rows})
-        general = (me.filter(F.col("target").isin(vals)) if vals
-                   else me.filter(F.lit(False))).select("myth").distinct()
+    in_ups = _in_ids("target", upstream_ids)
+    if in_ups is not None:
+        general = me.filter(in_ups).select("myth").distinct()
     else:
         ups = upstream_ids.select(
             F.col(upstream_ids.columns[0]).alias("target"))

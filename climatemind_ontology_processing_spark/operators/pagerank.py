@@ -188,41 +188,40 @@ def katz_centrality(edges: DataFrame, rounds: int = 4, atten_denom: int = 4,
     if rounds < 1 or atten_denom < 2:
         raise ValueError("rounds >= 1 and atten_denom >= 2 required")
     limit_ = (2 ** 63 - 1) // 1_000_000
-    from .traversal import SMALL_GRAPH_THRESHOLD
+    from .traversal import small_rows
 
-    if SMALL_GRAPH_THRESHOLD > 0:
-        probe = (edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-                 .filter(F.col("u") != F.col("v"))
-                 .limit(SMALL_GRAPH_THRESHOLD + 1).collect())
-        if len(probe) <= SMALL_GRAPH_THRESHOLD:
-            probe = sorted({tuple(r) for r in probe})
-            # driver-side power iteration: same BIGINT walk counts, same
-            # per-term truncating division (// == DIV on non-negatives),
-            # same overflow guard — zero per-round jobs (size-adaptive
-            # convention; pinned vs the distributed path in pytest)
-            inn: dict = {}
-            nodes = set()
-            for u, v in probe:
-                inn.setdefault(v, []).append(u)
-                nodes.add(u)
-                nodes.add(v)
-            w = {n: 1 for n in nodes}
-            acc = {n: 0 for n in nodes}
-            for k in range(1, rounds + 1):
-                w = {v: sum(w.get(u, 0) for u in us)
-                     for v, us in inn.items()}
-                mx = max(w.values(), default=0)
-                if mx > limit_:
-                    raise RuntimeError(
-                        f"katz_centrality round {k}: walk count {mx} "
-                        "overflows the micro-BIGINT term — reduce rounds "
-                        "or use a float variant")
-                denom = atten_denom ** k
-                for v, c in w.items():
-                    acc[v] += (c * 1_000_000) // denom
-            ty = edges.schema[src].dataType.simpleString()
-            return edges.sparkSession.createDataFrame(
-                sorted(acc.items()), f"id {ty}, katz_micro long")
+    probe = small_rows(
+        edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
+        .filter(F.col("u") != F.col("v")))
+    if probe is not None:
+        probe = sorted(probe)
+        # driver-side power iteration: same BIGINT walk counts, same
+        # per-term truncating division (// == DIV on non-negatives),
+        # same overflow guard — zero per-round jobs (size-adaptive
+        # convention; pinned vs the distributed path in pytest)
+        inn: dict = {}
+        nodes = set()
+        for u, v in probe:
+            inn.setdefault(v, []).append(u)
+            nodes.add(u)
+            nodes.add(v)
+        w = {n: 1 for n in nodes}
+        acc = {n: 0 for n in nodes}
+        for k in range(1, rounds + 1):
+            w = {v: sum(w.get(u, 0) for u in us)
+                 for v, us in inn.items()}
+            mx = max(w.values(), default=0)
+            if mx > limit_:
+                raise RuntimeError(
+                    f"katz_centrality round {k}: walk count {mx} "
+                    "overflows the micro-BIGINT term — reduce rounds "
+                    "or use a float variant")
+            denom = atten_denom ** k
+            for v, c in w.items():
+                acc[v] += (c * 1_000_000) // denom
+        ty = edges.schema[src].dataType.simpleString()
+        return edges.sparkSession.createDataFrame(
+            sorted(acc.items()), f"id {ty}, katz_micro long")
     e = (edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
          .filter(F.col("u") != F.col("v")).distinct()
          .localCheckpoint(eager=True))

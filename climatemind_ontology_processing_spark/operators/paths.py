@@ -124,7 +124,7 @@ def landmark_distances(edges: DataFrame, num_landmarks: int = 16,
     follow ``shortest_paths`` semantics (None = hop count; integral
     non-negative otherwise — reuse it for validation if needed).  Loud
     non-convergence, same as every iterative operator here."""
-    from .traversal import SMALL_GRAPH_THRESHOLD
+    from .traversal import small_rows
 
     w = (F.col(weight).cast("long") if weight is not None
          else F.lit(1).cast("long"))
@@ -134,52 +134,51 @@ def landmark_distances(edges: DataFrame, num_landmarks: int = 16,
     if undirected:
         e0 = e0.unionByName(e0.select(F.col("v").alias("u"),
                                       F.col("u").alias("v"), "w"))
-    if SMALL_GRAPH_THRESHOLD > 0:
-        probe = e0.limit(SMALL_GRAPH_THRESHOLD + 1).collect()
-        if len(probe) <= SMALL_GRAPH_THRESHOLD:
-            probe = sorted({tuple(r) for r in probe})
-            # driver-side: the SAME concurrent min-plus rounds (one pass
-            # over the edge list per round, loud cap preserved) on the
-            # collected edges — zero per-round jobs (size-adaptive
-            # convention; distributed equivalence pinned in pytest)
-            if any(r[2] < 0 for r in probe):
-                raise ValueError("negative edge weights not supported")
-            if landmarks is None:
-                # pick_landmarks semantics: degree over the SYMMETRIZED
-                # distinct neighbor pairs, self-loops excluded, ties id-asc
-                sym_pairs = {(u, v) for u, v, _w in probe if u != v}
-                sym_pairs |= {(v, u) for u, v in sym_pairs}
-                nbrs: dict = {}
-                for u, v in sym_pairs:
-                    nbrs.setdefault(u, set()).add(v)
-                lms = sorted(nbrs, key=lambda n: (-len(nbrs[n]), n))
-                lm_ids = lms[:int(num_landmarks)]
-            else:
-                lm_ids = sorted({r[0] for r in landmarks.collect()})
-            dist = {(lm, lm): 0 for lm in lm_ids}
-            converged = False
-            for _ in range(max_rounds):
-                new = dict(dist)
-                for u, v, ew in probe:
-                    for lm in lm_ids:
-                        du = dist.get((lm, u))
-                        if du is not None:
-                            d = du + ew
-                            cur = new.get((lm, v))
-                            if cur is None or d < cur:
-                                new[(lm, v)] = d
-                if new == dist:
-                    converged = True
-                    break
-                dist = new
-            if not converged:
-                raise RuntimeError(
-                    f"landmark_distances did not converge within "
-                    f"max_rounds={max_rounds} — raise max_rounds")
-            ty = e0.schema["u"].dataType.simpleString()
-            return edges.sparkSession.createDataFrame(
-                [(lm, n, d) for (lm, n), d in sorted(dist.items())],
-                f"landmark {ty}, id {ty}, dist long")
+    probe = small_rows(e0)
+    if probe is not None:
+        probe = sorted(probe)
+        # driver-side: the SAME concurrent min-plus rounds (one pass
+        # over the edge list per round, loud cap preserved) on the
+        # collected edges — zero per-round jobs (size-adaptive
+        # convention; distributed equivalence pinned in pytest)
+        if any(r[2] < 0 for r in probe):
+            raise ValueError("negative edge weights not supported")
+        if landmarks is None:
+            # pick_landmarks semantics: degree over the SYMMETRIZED
+            # distinct neighbor pairs, self-loops excluded, ties id-asc
+            sym_pairs = {(u, v) for u, v, _w in probe if u != v}
+            sym_pairs |= {(v, u) for u, v in sym_pairs}
+            nbrs: dict = {}
+            for u, v in sym_pairs:
+                nbrs.setdefault(u, set()).add(v)
+            lms = sorted(nbrs, key=lambda n: (-len(nbrs[n]), n))
+            lm_ids = lms[:int(num_landmarks)]
+        else:
+            lm_ids = sorted({r[0] for r in landmarks.collect()})
+        dist = {(lm, lm): 0 for lm in lm_ids}
+        converged = False
+        for _ in range(max_rounds):
+            new = dict(dist)
+            for u, v, ew in probe:
+                for lm in lm_ids:
+                    du = dist.get((lm, u))
+                    if du is not None:
+                        d = du + ew
+                        cur = new.get((lm, v))
+                        if cur is None or d < cur:
+                            new[(lm, v)] = d
+            if new == dist:
+                converged = True
+                break
+            dist = new
+        if not converged:
+            raise RuntimeError(
+                f"landmark_distances did not converge within "
+                f"max_rounds={max_rounds} — raise max_rounds")
+        ty = e0.schema["u"].dataType.simpleString()
+        return edges.sparkSession.createDataFrame(
+            [(lm, n, d) for (lm, n), d in sorted(dist.items())],
+            f"landmark {ty}, id {ty}, dist long")
     e = _checkpoint(e0.distinct())
     if not e.filter(F.col("w") < 0).isEmpty():
         raise ValueError("negative edge weights not supported")

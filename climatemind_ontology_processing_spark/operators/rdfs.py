@@ -109,20 +109,19 @@ def transitive_closure(pairs: DataFrame, a: str = "a", b: str = "b",
     exhaustion (loud-cap invariant).  Cycles are fine — reflexive pairs
     appear iff a node reaches itself through the cycle.
     """
-    from .traversal import SMALL_GRAPH_THRESHOLD, _bfs_local
+    from .traversal import small_rows
 
     sel = pairs.select(F.col(a).alias("a"), F.col(b).alias("b")).distinct()
-    if SMALL_GRAPH_THRESHOLD > 0:
-        probe = sel.limit(SMALL_GRAPH_THRESHOLD + 1).collect()
-        if len(probe) <= SMALL_GRAPH_THRESHOLD:
-            adj: dict = {}
-            for r in probe:
-                adj.setdefault(r[0], []).append(r[1])
-            out = _closure_local(adj, max_rounds)
-            ta = sel.schema["a"].dataType.simpleString()
-            tb = sel.schema["b"].dataType.simpleString()
-            return pairs.sparkSession.createDataFrame(
-                out, f"{a} {ta}, {b} {tb}")
+    probe = small_rows(sel)
+    if probe is not None:
+        adj: dict = {}
+        for r in probe:
+            adj.setdefault(r[0], []).append(r[1])
+        out = _closure_local(adj, max_rounds)
+        ta = sel.schema["a"].dataType.simpleString()
+        tb = sel.schema["b"].dataType.simpleString()
+        return pairs.sparkSession.createDataFrame(
+            out, f"{a} {ta}, {b} {tb}")
     base = sel.localCheckpoint(eager=True)
     closure = base
     frontier = base

@@ -35,7 +35,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .traversal import _checkpoint, _collect_probe_rows, _edge_count_small
+from .traversal import _checkpoint, small_rows
 
 
 def _tarjan_components(edge_rows, nodes) -> list[tuple]:
@@ -106,8 +106,8 @@ def strongly_connected_components(edges: DataFrame, src: str = "src",
     t = e.schema["a"].dataType.simpleString()
     spark = edges.sparkSession
 
-    if _edge_count_small(e):
-        rows = _collect_probe_rows(e)
+    rows = small_rows(e)
+    if rows is not None:
         nodes = sorted({x for ab in rows for x in ab})
         return spark.createDataFrame(_tarjan_components(rows, nodes),
                                      f"id {t}, component {t}")

@@ -14,18 +14,10 @@ Edges schema throughout: (src string, dst string, type string, ...).
 from __future__ import annotations
 
 import os
-import weakref
 from collections import defaultdict, deque
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-# Per-DataFrame memo for the small-graph path: the graph pipeline runs 5+
-# traversals over the SAME (checkpointed, immutable) edge DataFrame object;
-# collecting its adjacency once instead of per call removes two Spark
-# actions per repeat traversal.  Weak keys: entries die with the DataFrame.
-_SMALL_GRAPH_MEMO: "weakref.WeakKeyDictionary[DataFrame, dict]" = \
-    weakref.WeakKeyDictionary()
 
 # Adaptive execution: below this edge count the traversal runs driver-side on
 # the collected edge list (identical semantics, zero per-iteration job
@@ -34,167 +26,90 @@ _SMALL_GRAPH_MEMO: "weakref.WeakKeyDictionary[DataFrame, dict]" = \
 # the join loop, the curated-ontology path (hundreds of edges) is local.
 SMALL_GRAPH_THRESHOLD = int(os.environ.get("CMKG_SMALL_GRAPH_EDGES", "200000"))
 
+_DIRECTIONS = ("forward", "reverse", "any")
+
+
+def small_rows(df: DataFrame) -> list[tuple] | None:
+    """The size probe of every dual-path operator: ONE ``limit(N+1)``
+    collect of ``df`` (N = ``SMALL_GRAPH_THRESHOLD``) that doubles as the
+    driver twin's input.  Returns the distinct rows in first-seen order, or
+    None when ``df`` has more than N raw rows or N <= 0 (the distributed
+    arm runs).  The gate counts raw, pre-dedup rows — no distinct exchange
+    on top of the caller's plan; the dedup happens on the collected rows.
+    Project ``df`` to hashable columns (no maps) before calling."""
+    n = SMALL_GRAPH_THRESHOLD
+    if n <= 0:
+        return None
+    rows = df.limit(n + 1).collect()
+    if len(rows) > n:
+        return None
+    return list(dict.fromkeys(tuple(r) for r in rows))
+
 
 def _checkpoint(df: DataFrame) -> DataFrame:
-    """Eager localCheckpoint with a defensive fallback.
+    """Eager localCheckpoint with one retry.
 
     Spark 4.1's localCheckpoint intermittently fails with
     ``NoSuchElementException: key not found: <attr>`` when checkpointing a
     Union of previously-checkpointed plans (observed in the closure loop).
     Re-aliasing every column mints fresh attribute ids, which sidesteps the
-    stale-attribute lookup; if even that fails we return the plan
-    uncheckpointed (correctness unaffected — only lineage length grows).
+    stale-attribute lookup.  If the retry fails too, its error propagates:
+    an uncheckpointed plan would grow the lineage of every later iteration.
     """
     try:
         return df.localCheckpoint(eager=True)
     except Exception:
-        try:
-            aliased = df.select([F.col(c).alias(c) for c in df.columns])
-            return aliased.localCheckpoint(eager=True)
-        except Exception:
-            return df
+        aliased = df.select([F.col(c).alias(c) for c in df.columns])
+        return aliased.localCheckpoint(eager=True)
 
 
-def _probe_cols(edges: DataFrame) -> list[str]:
-    """Columns the small-graph machinery collects: (src, dst[, type]) when
-    present, else the frame's own first two columns (e.g. CC's (a, b))."""
-    if "src" in edges.columns and "dst" in edges.columns:
-        return (["src", "dst", "type"] if "type" in edges.columns
-                else ["src", "dst"])
-    return list(edges.columns[:2])
-
-
-def _edge_count_small(edges: DataFrame) -> bool:
-    """Size probe that doubles as the collect: ONE limited collect of the
-    distinct probe columns decides small-vs-distributed AND, when small,
-    caches the rows every downstream adjacency derives from — the upstream
-    plan (often a multi-join substrate) executes once, not once for the
-    probe and again for the collect (guide §1/§2.4: don't recompute what
-    you already materialized)."""
-    if SMALL_GRAPH_THRESHOLD <= 0:
-        return False
-    memo = _SMALL_GRAPH_MEMO.setdefault(edges, {})
-    # keyed on the live threshold so tests that flip it mid-session re-probe
-    key = ("small", SMALL_GRAPH_THRESHOLD)
-    if key not in memo:
-        cols = _probe_cols(edges)
-        # RAW limited collect (same row-count gate the round-start probe
-        # used) — no extra distinct exchange on top of the upstream plan;
-        # the dedup happens driver-side on the rows we collected anyway
-        rows = edges.select(*cols).limit(SMALL_GRAPH_THRESHOLD + 1).collect()
-        memo[key] = len(rows) <= SMALL_GRAPH_THRESHOLD
-        if memo[key]:
-            seen = set()
-            dedup = []
-            for r in rows:
-                t = tuple(r)
-                if t not in seen:
-                    seen.add(t)
-                    dedup.append(t)
-            memo[("probe_rows", tuple(cols))] = dedup
-    return memo[key]
-
-
-def _mark_small(df: DataFrame) -> DataFrame:
-    """Pre-seed the small-graph verdict for a frame DERIVED from one
-    already probed small (subset edge sets can only shrink) — skips the
-    limit-collect probe; the first consumer still collects the rows."""
-    if SMALL_GRAPH_THRESHOLD > 0:
-        _SMALL_GRAPH_MEMO.setdefault(df, {})[
-            ("small", SMALL_GRAPH_THRESHOLD)] = True
-    return df
-
-
-def _adopt_probe(target: DataFrame, source: DataFrame) -> None:
-    """Copy a small-graph probe verdict (and its collected rows) from
-    ``source`` onto ``target`` — for a target that differs from the probed
-    source only by a dedup the probe machinery performs driver-side anyway
-    (e.g. dropDuplicates over the same projection), so re-collecting
-    through the target's exchange would do no new work."""
-    src_memo = _SMALL_GRAPH_MEMO.get(source)
-    if not src_memo:
-        return
-    tgt = _SMALL_GRAPH_MEMO.setdefault(target, {})
-    for key, val in src_memo.items():
-        tgt.setdefault(key, val)
-
-
-def _stash_local_rows(df: DataFrame, rows: list) -> DataFrame:
-    """Record the driver-side rows a small-path operator just built its
-    DataFrame from, so downstream small-path consumers read them back
-    without a collect job (WeakKeyDictionary — dies with the frame)."""
-    _SMALL_GRAPH_MEMO.setdefault(df, {})["local_rows"] = rows
-    return df
-
-
-def _local_rows(df: DataFrame):
-    """The stashed driver-side rows for ``df``, or None."""
-    memo = _SMALL_GRAPH_MEMO.get(df)
-    return None if memo is None else memo.get("local_rows")
-
-
-def _collect_probe_rows(edges: DataFrame) -> list[tuple]:
-    """Distinct rows of the probe columns, reusing the probe's collect."""
-    memo = _SMALL_GRAPH_MEMO.setdefault(edges, {})
-    cols = _probe_cols(edges)
-    key = ("probe_rows", tuple(cols))
-    if key not in memo:
-        rows = edges.select(*cols).distinct().collect()
-        memo[key] = [tuple(r) for r in rows]
-    return memo[key]
-
-
-def _collect_edge_rows(edges: DataFrame) -> list[tuple]:
-    """One collect of (src, dst, type) per DataFrame object; every
-    (direction, edge_type) adjacency derives from it driver-side, so N
-    traversals over the same graph cost ONE Spark action total."""
-    memo = _SMALL_GRAPH_MEMO.setdefault(edges, {})
-    if "rows" not in memo:
-        has_type = "type" in edges.columns
-        rows = _collect_probe_rows(edges)
-        memo["rows"] = [(r[0], r[1], r[2] if has_type else None) for r in rows]
-    return memo["rows"]
-
-
-def _collect_hops(edges: DataFrame, direction: str,
-                  edge_type: str | None) -> dict[str, list]:
-    memo = _SMALL_GRAPH_MEMO.setdefault(edges, {})
-    key = ("adj", direction, edge_type)
-    if key in memo:
-        return memo[key]
+def _adjacency(pairs, direction: str = "forward") -> dict:
+    """Adjacency lists over (src, dst) pairs, each pair used once."""
     adj: dict = defaultdict(list)
-    seen = set()
-    for s, d, t in _collect_edge_rows(edges):
-        if edge_type is not None and t != edge_type:
-            continue
-        if (s, d) in seen:          # distinct over (src, dst) like before
-            continue
-        seen.add((s, d))
+    for s, d in dict.fromkeys(pairs):
         if direction in ("forward", "any"):
             adj[s].append(d)
         if direction in ("reverse", "any"):
             adj[d].append(s)
-    memo[key] = adj
     return adj
 
 
-def _seed_values(seeds: DataFrame | list) -> list:
-    """Seeds may be a DataFrame[id] or a plain driver-side list (saves a
-    Spark action when the caller already knows the seed labels); a frame
-    with stashed local rows (a literal the caller just built) reads them
-    back without the distinct+collect job."""
-    if isinstance(seeds, list):
-        return sorted(set(seeds))
-    rows = _local_rows(seeds)
-    if rows is not None:
-        return sorted({r[0] for r in rows})
-    return sorted({r[0] for r in seeds.distinct().collect()})
+def typed_adjacency(rows: list, direction: str = "forward",
+                    edge_type: str | None = None) -> dict:
+    """:func:`_adjacency` over (src, dst, type) rows, keeping only
+    ``edge_type`` edges unless it is None — the driver twins' hop table."""
+    return _adjacency(((s, d) for s, d, t in rows
+                       if edge_type is None or t == edge_type), direction)
 
 
-def _seed_df(spark, seeds: DataFrame | list) -> DataFrame:
+def _hop_pairs(edges: DataFrame, edge_type: str | None) -> DataFrame:
+    """(src, dst) of the ``edge_type`` edges (all edges when None)."""
+    e = edges if edge_type is None else edges.filter(F.col("type") == edge_type)
+    return e.select("src", "dst")
+
+
+def _hop_table(edges: DataFrame, direction: str,
+               edge_type: str | None) -> DataFrame:
+    """Checkpointed distinct (from, to) hops for the iterative BFS."""
+    e = _hop_pairs(edges, edge_type)
+    hops = []
+    if direction in ("forward", "any"):
+        hops.append(e.select(F.col("src").alias("from"), F.col("dst").alias("to")))
+    if direction in ("reverse", "any"):
+        hops.append(e.select(F.col("dst").alias("from"), F.col("src").alias("to")))
+    hop = hops[0] if len(hops) == 1 else hops[0].unionByName(hops[1])
+    return _checkpoint(hop.distinct())
+
+
+def _check_direction(direction: str) -> None:
+    if direction not in _DIRECTIONS:
+        raise ValueError(f"bad direction {direction!r}")
+
+
+def _seed_df(spark, seeds: DataFrame | list, id_type: str) -> DataFrame:
     if isinstance(seeds, list):
         return spark.createDataFrame([(s,) for s in sorted(set(seeds))],
-                                     "id string")
+                                     f"id {id_type}")
     return seeds
 
 
@@ -224,32 +139,27 @@ def bfs_reachable(edges: DataFrame, seeds: DataFrame | list,
     ``ontology_processing_utils.py:7-41``): node set reachable from ``seeds``
     along edges of ``edge_type`` (None = "any") in ``direction`` (forward /
     reverse / any).  ``seeds`` is a DataFrame[id] or a driver-side list of
-    string ids.  Returns DataFrame[id] including the seeds.
+    ids; a list takes the type of ``edges.src`` on both arms.  Returns
+    DataFrame[id] including the seeds.
 
     The reference returns an *induced subgraph*; compose with
     :func:`induced_edges` for the edge set.
     """
+    _check_direction(direction)
     spark = edges.sparkSession
-    if _edge_count_small(edges):
-        adj = _collect_hops(edges, direction, edge_type)
-        reached = sorted(_bfs_local(adj, _seed_values(seeds)))
-        seed_type = ("string" if isinstance(seeds, list)
-                     else seeds.schema.fields[0].dataType.simpleString())
+    src_type = edges.schema["src"].dataType.simpleString()
+    rows = small_rows(_hop_pairs(edges, edge_type))
+    if rows is not None:
+        if isinstance(seeds, list):
+            seed_vals, seed_type = set(seeds), src_type
+        else:
+            seed_vals = {r[0] for r in seeds.collect()}
+            seed_type = seeds.schema.fields[0].dataType.simpleString()
+        reached = sorted(_bfs_local(_adjacency(rows, direction),
+                                    sorted(seed_vals)))
         return spark.createDataFrame([(v,) for v in reached], f"id {seed_type}")
-    seeds = _seed_df(spark, seeds)
-    e = edges
-    if edge_type is not None:
-        e = e.filter(F.col("type") == edge_type)
-    hops = []
-    if direction in ("forward", "any"):
-        hops.append(e.select(F.col("src").alias("from"), F.col("dst").alias("to")))
-    if direction in ("reverse", "any"):
-        hops.append(e.select(F.col("dst").alias("from"), F.col("src").alias("to")))
-    if not hops:
-        raise ValueError(f"bad direction {direction!r}")
-    hop = hops[0] if len(hops) == 1 else hops[0].unionByName(hops[1])
-    hop = _checkpoint(hop.distinct())
-
+    seeds = _seed_df(spark, seeds, src_type)
+    hop = _hop_table(edges, direction, edge_type)
     visited = _checkpoint(seeds.select(F.col(seeds.columns[0]).alias("id")).distinct())
     frontier = visited
     for _ in range(max_iters):
@@ -270,27 +180,19 @@ def bfs_reachable_tagged(edges: DataFrame, seeds: DataFrame,
     """G10 — multi-source tagged BFS: ``seeds`` is DataFrame[tag, id]; expands
     all tags in ONE iterative join (one Spark loop for ~20 seeds, not 20
     loops).  Returns DataFrame[tag, id]."""
+    _check_direction(direction)
     spark = edges.sparkSession
-    if _edge_count_small(edges):
-        adj = _collect_hops(edges, direction, edge_type)
+    rows = small_rows(_hop_pairs(edges, edge_type))
+    if rows is not None:
+        adj = _adjacency(rows, direction)
         id_field = seeds.schema.fields[1]
-        rows = []
+        out = []
         for tag, seed_vals in _group_seeds(seeds):
             for v in sorted(_bfs_local(adj, seed_vals)):
-                rows.append((tag, v))
+                out.append((tag, v))
         return spark.createDataFrame(
-            rows, f"tag string, id {id_field.dataType.simpleString()}")
-    e = edges
-    if edge_type is not None:
-        e = e.filter(F.col("type") == edge_type)
-    hops = []
-    if direction in ("forward", "any"):
-        hops.append(e.select(F.col("src").alias("from"), F.col("dst").alias("to")))
-    if direction in ("reverse", "any"):
-        hops.append(e.select(F.col("dst").alias("from"), F.col("src").alias("to")))
-    hop = hops[0] if len(hops) == 1 else hops[0].unionByName(hops[1])
-    hop = _checkpoint(hop.distinct())
-
+            out, f"tag string, id {id_field.dataType.simpleString()}")
+    hop = _hop_table(edges, direction, edge_type)
     visited = _checkpoint(seeds.select("tag", F.col(seeds.columns[1]).alias("id")).distinct())
     frontier = visited
     for _ in range(max_iters):
@@ -339,21 +241,18 @@ def transitive_closure(edges: DataFrame, edge_type: str | None = None,
     (``all_simple_paths(r, r)`` yields [[r]] in the reference's NetworkX).
     """
     spark = edges.sparkSession
-    if _edge_count_small(edges):
-        fwd = _collect_hops(edges, "forward", edge_type)
-        nodes = set(fwd)
-        for vs in list(fwd.values()):
-            nodes.update(vs)
+    e = _hop_pairs(edges, edge_type)
+    rows = small_rows(e)
+    if rows is not None:
+        fwd = _adjacency(rows)
+        nodes = {x for pair in rows for x in pair}
         pairs = []
         src_field = edges.schema["src"].dataType.simpleString()
         for n in sorted(nodes):
             for m in sorted(_bfs_local(fwd, [n])):
                 pairs.append((n, m))
         return spark.createDataFrame(pairs, f"src {src_field}, dst {src_field}")
-    e = edges
-    if edge_type is not None:
-        e = e.filter(F.col("type") == edge_type)
-    base = _checkpoint(e.select("src", "dst").distinct())
+    base = _checkpoint(e.distinct())
     nodes = base.select(F.col("src").alias("n")).unionByName(
         base.select(F.col("dst").alias("n"))).distinct()
     closure = _checkpoint(

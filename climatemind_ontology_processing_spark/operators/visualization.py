@@ -32,7 +32,8 @@ from pyspark.sql import functions as F
 from ..config import CAUSES, GREENHOUSE_EFFECT
 from ..functions.arrays import any_truthy
 from .myths import RISK_SOLUTION_KEY, myth_nodes
-from .traversal import bfs_reachable, bfs_reachable_tagged, induced_edges
+from .traversal import (_adjacency, _bfs_local, bfs_reachable,
+                        bfs_reachable_tagged, induced_edges, typed_adjacency)
 
 
 def _risk_solution_ids(nodes: DataFrame) -> DataFrame:
@@ -108,94 +109,13 @@ def filter_by_edge_type(nodes: DataFrame, edges: DataFrame,
     return nodes.join(endpoint_ids, "label", "left_semi"), kept
 
 
-def _build_subgraphs_local(nodes: DataFrame, edges_annot: DataFrame,
-                           mitigation_ids: DataFrame, adaptation_ids: DataFrame,
-                           root: str) -> dict:
-    """Small-graph path: every subgraph node set, the reversed-solutions
-    edge list, and the per-pv tagged BFS computed on the memoized collected
-    edge list — the 25-subgraph fan-out costs three tiny collects (edge
-    rows, pv labels, mitigation/adaptation ids) instead of ~25 join plans.
-    Returns plain Python collections under key "__local__" alongside the
-    DataFrame views of the same data (identical rows to the distributed
-    branch; pinned by the golden parity suite)."""
-    from collections import defaultdict
-
-    from ..functions.arrays import any_truthy
-    from .traversal import (_bfs_local, _collect_edge_rows, _collect_hops,
-                            _local_rows)
-
-    spark = edges_annot.sparkSession
-    rows = _collect_edge_rows(edges_annot)
-    upstream = sorted(_bfs_local(_collect_hops(edges_annot, "reverse", CAUSES),
-                                 [root]))
-    down_adapt = _bfs_local(_collect_hops(edges_annot, "forward", None), [root])
-    downstream = sorted(_bfs_local(_collect_hops(edges_annot, "forward", CAUSES),
-                                   [root]))
-    mit_stash = _local_rows(mitigation_ids)
-    adapt_stash = _local_rows(adaptation_ids)
-    mit_ids = {r[0] for r in (mit_stash if mit_stash is not None
-                              else mitigation_ids.collect())}
-    adapt_ids = {r[0] for r in (adapt_stash if adapt_stash is not None
-                                else adaptation_ids.collect())}
-    upstream_mit = sorted(set(upstream) | mit_ids)
-
-    # reversed-solutions graph restricted to downstream_adaptations
-    da = [(s, d) for s, d, _t in rows if s in down_adapt and d in down_adapt]
-    rev = sorted({(d, s) if d in adapt_ids else (s, d) for s, d in da})
-    rev_adj: dict = defaultdict(list)
-    for s, d in rev:
-        rev_adj[d].append(s)      # reverse direction for the pv BFS
-
-    pv_labels = sorted(
-        r[0] for r in nodes.select("label")
-        .filter(any_truthy(F.col("personal_values_10"))).collect())
-    pv_members = {tag: sorted(_bfs_local(rev_adj, [tag])) for tag in pv_labels}
-
-    ty = edges_annot.schema["src"].dataType.simpleString()
-
-    def _df(vals):
-        # stash the rows: downstream consumers (myths, solution-source
-        # gating) turn membership joins into literal isin filters when the
-        # id list is already driver-side
-        from .traversal import _stash_local_rows
-        rows = [(v,) for v in vals]
-        return _stash_local_rows(
-            spark.createDataFrame(rows, f"id {ty}"), rows)
-
-    return {
-        "upstream": _df(upstream),
-        "downstream_adaptations": _df(sorted(down_adapt)),
-        "downstream": _df(downstream),
-        "upstream_mitigations": _df(upstream_mit),
-        "__pv__": spark.createDataFrame(
-            [(tag, v) for tag in pv_labels for v in pv_members[tag]],
-            f"tag string, id {ty}"),
-        "__pv_edges_base__": spark.createDataFrame(
-            rev, f"src {ty}, dst {ty}"),
-        "__local__": {
-            "upstream": set(upstream),
-            "downstream_adaptations": set(down_adapt),
-            "downstream": set(downstream),
-            "upstream_mitigations": set(upstream_mit),
-            "pv_members": pv_members,
-            "rev_edges": rev,
-            "edge_rows": rows,
-        },
-    }
-
-
 def build_subgraphs(nodes: DataFrame, edges_annot: DataFrame,
                     mitigation_ids: DataFrame, adaptation_ids: DataFrame,
                     root: str = GREENHOUSE_EFFECT) -> dict[str, DataFrame]:
     """All named subgraph node sets.  Returns {name: DataFrame[id]}; pv
-    subgraphs are returned together under key "__pv__" as DataFrame[tag, id];
-    on small graphs a "__local__" key additionally carries the driver-side
-    collections for :func:`subgraph_tables` to reuse."""
-    from .traversal import _edge_count_small
-
-    if _edge_count_small(edges_annot):
-        return _build_subgraphs_local(nodes, edges_annot, mitigation_ids,
-                                      adaptation_ids, root)
+    subgraphs are returned together under key "__pv__" as DataFrame[tag, id]
+    and the reversed-solutions edges they are cut from under
+    "__pv_edges_base__"."""
     upstream = bfs_reachable(edges_annot, [root], "reverse", CAUSES)
     downstream_adapt = bfs_reachable(edges_annot, [root], "forward", None)
     downstream = bfs_reachable(edges_annot, [root], "forward", CAUSES)
@@ -226,34 +146,10 @@ def subgraph_tables(subgraphs: dict[str, DataFrame],
                     edges_annot: DataFrame) -> tuple[DataFrame, DataFrame]:
     """Materialize (subgraph_name, node_id) and (subgraph_name, src, dst)
     tables — the engine's S7 sink shape, partitionable by subgraph_name."""
-    loc = subgraphs.get("__local__")
-    if loc is not None:
-        # small-graph path: induce every named + pv subgraph's edges on the
-        # already-collected rows — two createDataFrames instead of a
-        # 25-branch union-of-joins plan
-        spark = edges_annot.sparkSession
-        pairs = {(s, d) for s, d, _t in loc["edge_rows"]}
-        nrows, erows = [], set()
-        for name in ("upstream", "downstream_adaptations", "downstream",
-                     "upstream_mitigations"):
-            ns = loc[name]
-            nrows.extend((name, v) for v in sorted(ns))
-            erows.update((name, s, d) for s, d in pairs
-                         if s in ns and d in ns)
-        for tag, members in loc["pv_members"].items():
-            ms = set(members)
-            nrows.extend((tag, v) for v in members)
-            erows.update((tag, s, d) for s, d in loc["rev_edges"]
-                         if s in ms and d in ms)
-        ty = edges_annot.schema["src"].dataType.simpleString()
-        return (spark.createDataFrame(
-                    nrows, f"subgraph_name string, node_id {ty}"),
-                spark.createDataFrame(
-                    sorted(erows), f"subgraph_name string, src {ty}, dst {ty}"))
     parts_n = []
     parts_e = []
     for name, df in subgraphs.items():
-        if name.startswith("__pv_edges") or name == "__local__":
+        if name.startswith("__pv_edges"):
             continue
         if name == "__pv__":
             parts_n.append(df.select(F.col("tag").alias("subgraph_name"),
@@ -280,3 +176,35 @@ def subgraph_tables(subgraphs: dict[str, DataFrame],
     for p in parts_e[1:]:
         edges_t = edges_t.unionByName(p)
     return nodes_t, edges_t.distinct()
+
+
+def subgraphs_local(a_rows: list, pv_labels: list, mitigation_ids: set,
+                    adaptation_ids: set, root: str = GREENHOUSE_EFFECT
+                    ) -> dict[str, tuple[list, list]]:
+    """Driver twin of :func:`build_subgraphs` + :func:`subgraph_tables`
+    over the annotated graph's (src, dst, type) rows:
+    {subgraph_name: (sorted node ids, sorted (src, dst) edges)} for the
+    four named subgraphs and one per personal-value label."""
+    upstream = _bfs_local(typed_adjacency(a_rows, "reverse", CAUSES), [root])
+    down_adapt = _bfs_local(typed_adjacency(a_rows), [root])
+    named = {
+        "upstream": upstream,
+        "downstream_adaptations": down_adapt,
+        "downstream": _bfs_local(typed_adjacency(a_rows, "forward", CAUSES),
+                                 [root]),
+        "upstream_mitigations": upstream | mitigation_ids,
+    }
+    pairs = sorted({(s, d) for s, d, _t in a_rows})
+    out = {name: (sorted(ns), [(s, d) for s, d in pairs
+                               if s in ns and d in ns])
+           for name, ns in named.items()}
+    # per-personal-value: reverse BFS over the downstream_adaptations
+    # subgraph with solution-pointing edges reversed
+    rev = sorted({(d, s) if d in adaptation_ids else (s, d)
+                  for s, d in pairs if s in down_adapt and d in down_adapt})
+    rev_adj = _adjacency(rev, "reverse")
+    for tag in pv_labels:
+        ms = _bfs_local(rev_adj, [tag])
+        out[tag] = (sorted(ms), [(s, d) for s, d in rev
+                                 if s in ms and d in ms])
+    return out

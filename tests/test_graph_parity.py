@@ -16,6 +16,7 @@ import pytest
 
 from pyspark.sql import functions as F
 
+import climatemind_ontology_processing_spark.operators.traversal as trav
 from climatemind_ontology_processing_spark.operators.acyclic import feedback_edges
 from climatemind_ontology_processing_spark.operators.graph_pipeline import (
     GraphBundle, build_graph)
@@ -28,14 +29,27 @@ def golden():
     return json.loads(ref.read_text())
 
 
-@pytest.fixture(scope="module")
-def bundle(spark, golden) -> GraphBundle:
-    triples = spark.createDataFrame(
+def _golden_triples(spark, golden):
+    return spark.createDataFrame(
         [(e["src"], e["type"], e["dst"]) for e in golden["edges"]]
         # inject exact duplicates — dedup must absorb them (A1)
         + [(e["src"], e["type"], e["dst"]) for e in golden["edges"][:10]],
         "subj string, pred string, obj string")
-    return build_graph(triples, concepts_df(spark))
+
+
+@pytest.fixture(scope="module")
+def bundle(spark, golden) -> GraphBundle:
+    """The small arm (default threshold) — what curated ontologies run."""
+    return build_graph(_golden_triples(spark, golden), concepts_df(spark))
+
+
+@pytest.fixture(scope="module")
+def bundle_distributed(spark, golden) -> GraphBundle:
+    """The same build forced onto the distributed arm (threshold 0): every
+    annotation pass runs as DataFrame plans and iterative joins."""
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(trav, "SMALL_GRAPH_THRESHOLD", 0)
+        return build_graph(_golden_triples(spark, golden), concepts_df(spark))
 
 
 @pytest.fixture(scope="module")
@@ -300,3 +314,34 @@ def test_to_plotly_figure_golden_subgraph(bundle):
     all_x = [x for t in data for x in t["x"]]
     assert layout["xaxis"]["range"][0] <= min(all_x)
     assert layout["xaxis"]["range"][1] >= max(all_x)
+
+
+def _canon(v):
+    """Map key order is not part of a row's value."""
+    if isinstance(v, dict):
+        return sorted((k, _canon(x)) for k, x in v.items())
+    if isinstance(v, list):
+        return [_canon(x) for x in v]
+    return v
+
+
+def _rows(df):
+    return sorted(repr(_canon(r.asDict(recursive=True))) for r in df.collect())
+
+
+def test_distributed_arm_matches_small_arm(bundle, bundle_distributed):
+    """Both arms of build_graph give identical rows, so the golden checks
+    above (run on the small arm) hold for the distributed arm too: node
+    table with every annotation column, all 25 subgraphs' nodes and edges,
+    the ranked mitigation list and the general-myth ranking."""
+    small, dist = bundle, bundle_distributed
+    assert _rows(dist.nodes) == _rows(small.nodes)
+    assert _rows(dist.subgraph_nodes) == _rows(small.subgraph_nodes)
+    assert _rows(dist.subgraph_edges) == _rows(small.subgraph_edges)
+    assert dist.mitigation_ranked == small.mitigation_ranked
+    assert len(small.mitigation_ranked) == 54
+    gen = [repr(tuple(r)) for r in small.extras["general_myths"].collect()]
+    assert [repr(tuple(r))
+            for r in dist.extras["general_myths"].collect()] == gen
+    for key in ("upstream_ids", "mitigation_ids", "adaptations"):
+        assert _rows(dist.extras[key]) == _rows(small.extras[key]), key

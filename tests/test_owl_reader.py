@@ -23,8 +23,6 @@ from climatemind_ontology_processing_spark.sources.owl_reader import (
 
 OWL_PATH = str(resources.files("climatemind_ontology_processing_spark.data")
                / "climate_mind.owl")
-REFERENCE_PICKLE = ("/root/reference/ontology_processing/output/"
-                    "graphs_for_visualization.pickle")
 
 
 def _fixture(name):
@@ -112,20 +110,16 @@ def test_process_ontology_file_csv_artifact(owl_artifacts):
     assert n == 220
 
 
-def test_process_ontology_file_full_parity(owl_artifacts):
+def test_process_ontology_file_full_parity(owl_artifacts,
+                                           assert_pickle_matches_golden):
     """The strongest S1 statement: feeding the reconstructed .owl through the
-    engine's processOntology reproduces the REFERENCE's own output pickle —
-    node sets, edge sets, and per-node attributes of every subgraph."""
-    with open(REFERENCE_PICKLE, "rb") as f:
-        ref = pickle.load(f)
+    engine's processOntology reproduces the REFERENCE's own output pickle
+    (as committed in data/golden_graph.json) — node sets, edge sets, and
+    node and edge attributes of every subgraph."""
     with open(os.path.join(owl_artifacts,
                            "graphs_for_visualization.pickle"), "rb") as f:
         got = pickle.load(f)
-    assert set(got) == set(ref)
-    for name, ref_g in ref.items():
-        got_g = got[name]
-        assert set(got_g.nodes) == set(ref_g.nodes), name
-        assert set(got_g.edges) == set(ref_g.edges), name
+    assert_pickle_matches_golden(got)
 
 
 def _owl2_text() -> str:

@@ -1,6 +1,7 @@
 """EP1 sink parity: run the full pipeline on golden-derived triples and
-compare the emitted artifacts against the REFERENCE's own output pickle,
-loaded with networkx — the strongest end-to-end round-trip we can make.
+compare the emitted artifacts against the reference's own output pickle
+(committed as data/golden_graph.json), loaded with networkx — the strongest
+end-to-end round-trip we can make.
 
 Order-insensitive comparison for set-semantics lists (URL bags, class lists —
 reference order is Python-set order); order-sensitive for the value vectors.
@@ -15,24 +16,6 @@ import pytest
 
 from climatemind_ontology_processing_spark.plans.process_ontology import (
     process_ontology)
-
-REFERENCE_PICKLE = ("/root/reference/ontology_processing/output/"
-                    "graphs_for_visualization.pickle")
-
-ORDERED_KEYS = {"personal_values_10", "personal_values_19", "political_value"}
-
-
-def normalize(attrs: dict) -> dict:
-    out = {}
-    for k, v in attrs.items():
-        if isinstance(v, list) and k not in ORDERED_KEYS:
-            out[k] = sorted(map(str, v))
-        elif isinstance(v, dict):
-            out[k] = {kk: sorted(map(str, vv)) if isinstance(vv, list) else vv
-                      for kk, vv in v.items()}
-        else:
-            out[k] = v
-    return out
 
 
 @pytest.fixture(scope="module")
@@ -59,34 +42,13 @@ def test_artifact_files_exist(artifacts):
     assert os.path.exists(os.path.join(artifacts, "nodes"))
 
 
-def test_subgraph_pickle_matches_reference(artifacts):
-    with open(REFERENCE_PICKLE, "rb") as f:
-        ref = pickle.load(f)
+def test_subgraph_pickle_matches_reference(artifacts,
+                                          assert_pickle_matches_golden):
+    """The subgraphs pickle of a build from golden-derived triples matches
+    the reference's own pickle, as committed in data/golden_graph.json."""
     with open(os.path.join(artifacts, "graphs_for_visualization.pickle"), "rb") as f:
         got = pickle.load(f)
-
-    assert set(got) == set(ref)
-    for name, ref_g in ref.items():
-        got_g = got[name]
-        assert set(got_g.nodes) == set(ref_g.nodes), name
-        assert set(got_g.edges) == set(ref_g.edges), name
-        # attribute parity on the post-annotation subgraphs ('upstream' was
-        # copied pre-annotation in the reference, so it lacks cyto_classes)
-        if name == "upstream":
-            continue
-        for n in ref_g.nodes:
-            ra = {k: v for k, v in ref_g.nodes[n].items()}
-            ga = {k: v for k, v in got_g.nodes[n].items()}
-            # reference data_properties spell every declared key; ours too
-            assert normalize(ga) == normalize(ra), (name, n)
-        for u, v in ref_g.edges:
-            re_ = ref_g.edges[u, v]
-            ge = got_g.edges[u, v]
-            assert ge.get("type") == re_.get("type"), (name, u, v)
-            assert normalize(ge.get("properties") or {}) == \
-                normalize(re_.get("properties") or {}), (name, u, v)
-            assert sorted(ge.get("cyto_classes", [])) == \
-                sorted(re_.get("cyto_classes", [])), (name, u, v)
+    assert_pickle_matches_golden(got)
 
 
 def test_s6_alt_format_sinks_roundtrip(spark, artifacts):
@@ -178,7 +140,7 @@ def test_gpickle_annotation_attributes(artifacts):
         assert "causal sources" in g.nodes[n], n
 
 
-def test_s8_gpickle_scan_fixed_point(spark, artifacts):
+def test_s8_gpickle_scan_fixed_point(spark, artifacts, normalize_attrs):
     """S8 — load_graph_pickle inverts save_graph_pickle: save -> load ->
     save reproduces identical node/edge attribute dicts."""
     import networkx as nx
@@ -195,9 +157,9 @@ def test_s8_gpickle_scan_fixed_point(spark, artifacts):
     assert set(g1.nodes) == set(g2.nodes)
     assert set(g1.edges) == set(g2.edges)
     for n in g1.nodes:
-        assert normalize(g1.nodes[n]) == normalize(g2.nodes[n]), n
+        assert normalize_attrs(g1.nodes[n]) == normalize_attrs(g2.nodes[n]), n
     for e in g1.edges:
-        assert normalize(g1.edges[e]) == normalize(g2.edges[e]), e
+        assert normalize_attrs(g1.edges[e]) == normalize_attrs(g2.edges[e]), e
 
 
 def test_p7_edge_type_display_filter(spark, artifacts):

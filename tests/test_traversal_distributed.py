@@ -237,3 +237,57 @@ def test_scc_hand_structure(spark):
     assert got == {"a": "a", "b": "a", "c": "a",
                    "d": "d", "e": "d", "f": "d",
                    "g": "g", "h": "h"}
+
+
+def test_list_seeds_take_edge_type_on_both_arms(spark, monkeypatch):
+    """A driver-side seed list takes the type of ``edges.src``: the small
+    and the distributed arm return the same schema and rows."""
+    e = spark.createDataFrame([(0, 1, "t"), (1, 2, "t"), (5, 6, "t")],
+                              "src bigint, dst bigint, type string")
+    small = bfs_reachable(e, [0])
+    monkeypatch.setattr(trav, "SMALL_GRAPH_THRESHOLD", 0)
+    dist = bfs_reachable(e, [0])
+    assert small.schema == dist.schema
+    assert small.schema.simpleString() == "struct<id:bigint>"
+    assert sorted(small.collect()) == sorted(dist.collect())
+    assert sorted(r.id for r in dist.collect()) == [0, 1, 2]
+
+
+def test_bfs_rejects_bad_direction_on_both_arms(spark, edges, monkeypatch):
+    with pytest.raises(ValueError, match="bad direction"):
+        bfs_reachable(edges, ["r"], "sideways")
+    monkeypatch.setattr(trav, "SMALL_GRAPH_THRESHOLD", 0)
+    with pytest.raises(ValueError, match="bad direction"):
+        bfs_reachable(edges, ["r"], "sideways")
+
+
+def test_small_rows_gate(spark, monkeypatch):
+    """One limited collect: distinct rows in first-seen order at or below
+    the threshold (counted on RAW rows), None above it or when the
+    threshold is <= 0."""
+    df = spark.createDataFrame([("a", "b"), ("a", "b"), ("b", "c")],
+                               "src string, dst string")
+    monkeypatch.setattr(trav, "SMALL_GRAPH_THRESHOLD", 3)
+    assert trav.small_rows(df) == [("a", "b"), ("b", "c")]
+    monkeypatch.setattr(trav, "SMALL_GRAPH_THRESHOLD", 2)
+    assert trav.small_rows(df) is None
+    monkeypatch.setattr(trav, "SMALL_GRAPH_THRESHOLD", 0)
+    assert trav.small_rows(df) is None
+
+
+def test_checkpoint_raises_after_retry(spark, monkeypatch):
+    """_checkpoint retries once on fresh attribute ids, then fails loudly
+    instead of handing back an uncheckpointed plan."""
+    calls = []
+
+    def failing(self, eager=True):
+        calls.append(eager)
+        raise RuntimeError("checkpoint failed")
+
+    df = spark.createDataFrame([("a", "b")], "src string, dst string")
+    # the session's concrete DataFrame class (pyspark.sql.DataFrame is an
+    # abstract base in Spark 4)
+    monkeypatch.setattr(type(df), "localCheckpoint", failing)
+    with pytest.raises(RuntimeError, match="checkpoint failed"):
+        trav._checkpoint(df)
+    assert len(calls) == 2
