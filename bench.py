@@ -34,12 +34,61 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 
+# --- workload builders (shared with bench_extra.py) --------------------------
+def scale_factor(sf_dir: str) -> float:
+    """The scale factor in an sf dir name (``.../sf0.1`` -> 0.1)."""
+    m = re.search(r"sf([0-9.]+)", sf_dir)
+    return float(m.group(1)) if m else 0.1
+
+
+def page_count(sf: float) -> int:
+    """Synthetic pages of the ``triples_pipeline`` leaf at scale ``sf``."""
+    return max(int(500_000 * sf), 1000)
+
+
+def warm_up(spark, cpus: int) -> None:
+    """Fork python workers / heat codegen so the first timed query doesn't
+    absorb session startup."""
+    from climatemind_ontology_processing_spark.plans.pipeline import triples_from_pages
+    from climatemind_ontology_processing_spark.sources.pages import pages_df
+    triples_from_pages(pages_df(spark, 1000, seed=1, partitions=cpus)).count()
+
+
+def triples_pipeline(spark, n_pages: int, cpus: int):
+    """The ``triples_pipeline`` leaf's plan: pages -> triples."""
+    from climatemind_ontology_processing_spark.plans.pipeline import triples_from_pages
+    from climatemind_ontology_processing_spark.sources.pages import pages_df
+    return triples_from_pages(
+        pages_df(spark, n_pages, seed=42, partitions=cpus * 2))
+
+
+def golden_triples(spark):
+    """The ``graph_build`` leaf's input: the golden graph's edges as
+    (subj, pred, obj) triples."""
+    from importlib import resources
+    golden = json.loads(
+        (resources.files("climatemind_ontology_processing_spark.data")
+         / "golden_graph.json").read_text())
+    return spark.createDataFrame(
+        [(e["src"], e["type"], e["dst"]) for e in golden["edges"]],
+        "subj string, pred string, obj string")
+
+
+def graph_build(spark, triples) -> int:
+    """The ``graph_build`` leaf: the full annotation pipeline over
+    ``triples``, forcing the subgraph and node tables."""
+    from climatemind_ontology_processing_spark.operators.graph_pipeline import build_graph
+    from climatemind_ontology_processing_spark.sources.dictionary import concepts_df
+    bundle = build_graph(triples, concepts_df(spark))
+    bundle.subgraph_nodes.count()
+    return bundle.nodes.count()
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     reps = max(int(os.environ.get("SPARK_GRAFT_REPS", "2")), 1)
-    m = re.search(r"sf([0-9.]+)", sf_dir)
-    sf = float(m.group(1)) if m else 0.1
+    sf = scale_factor(sf_dir)
     loadavg_start = [round(x, 2) for x in os.getloadavg()]
 
     from climatemind_ontology_processing_spark.session import get_spark
@@ -49,8 +98,6 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
 
     import __spark_entry__ as entrymod
-    from climatemind_ontology_processing_spark.plans.pipeline import triples_from_pages
-    from climatemind_ontology_processing_spark.sources.pages import pages_df
 
     timings: dict[str, float] = {}
     reps_sec: dict[str, list[float]] = {}
@@ -66,41 +113,21 @@ def main() -> None:
         reps_sec[name] = ts
         timings[name] = min(ts)
 
-    # warm-up: fork python workers / heat codegen so the first timed query
-    # doesn't absorb session startup
-    triples_from_pages(pages_df(spark, 1000, seed=1, partitions=cpus)).count()
+    warm_up(spark, cpus)
 
     # --- core pipeline: pages -> triples ------------------------------------
-    n_pages = max(int(500_000 * sf), 1000)
+    n_pages = page_count(sf)
     counts: list[int] = []
     timed("triples_pipeline", lambda: counts.append(
-        triples_from_pages(
-            pages_df(spark, n_pages, seed=42, partitions=cpus * 2)).count()))
+        triples_pipeline(spark, n_pages, cpus).count()))
     n_triples = counts[-1]
     dt = timings["triples_pipeline"]
     triples_per_sec = round(n_triples / dt, 1)
     pages_per_sec = round(n_pages / dt, 1)
 
     # --- graph annotation pipeline (fixed-size golden fixture) --------------
-    import json as _json
-    from importlib import resources
-
-    from climatemind_ontology_processing_spark.operators.graph_pipeline import build_graph
-    from climatemind_ontology_processing_spark.sources.dictionary import concepts_df
-
-    golden = _json.loads(
-        (resources.files("climatemind_ontology_processing_spark.data")
-         / "golden_graph.json").read_text())
-    triples_fixture = spark.createDataFrame(
-        [(e["src"], e["type"], e["dst"]) for e in golden["edges"]],
-        "subj string, pred string, obj string")
-
-    def run_graph_build() -> None:
-        bundle = build_graph(triples_fixture, concepts_df(spark))
-        bundle.subgraph_nodes.count()
-        bundle.nodes.count()
-
-    timed("graph_build", run_graph_build)
+    triples_fixture = golden_triples(spark)
+    timed("graph_build", lambda: graph_build(spark, triples_fixture))
 
     # --- driver-table headline queries ---------------------------------------
     headline = [

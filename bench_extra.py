@@ -20,8 +20,12 @@ import json
 import os
 import sys
 import time
+from types import SimpleNamespace
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+
+from bench import (golden_triples, graph_build, page_count,  # noqa: E402
+                   scale_factor, triples_pipeline, warm_up)
 
 
 def main() -> None:
@@ -46,40 +50,17 @@ def main() -> None:
     import __spark_entry__ as entrymod
     qs = entrymod.queries()
 
+    fixture = golden_triples(spark) if "graph_build" in args.names else None
+
     def build(name):
         if name == "graph_build":
-            import json as _json
-            from importlib import resources
-            from climatemind_ontology_processing_spark.operators.graph_pipeline import build_graph
-            from climatemind_ontology_processing_spark.sources.dictionary import concepts_df
-            golden = _json.loads(
-                (resources.files("climatemind_ontology_processing_spark.data")
-                 / "golden_graph.json").read_text())
-            triples_fixture = spark.createDataFrame(
-                [(e["src"], e["type"], e["dst"]) for e in golden["edges"]],
-                "subj string, pred string, obj string")
-
-            class _GB:
-                def count(self):
-                    bundle = build_graph(triples_fixture, concepts_df(spark))
-                    bundle.subgraph_nodes.count()
-                    return bundle.nodes.count()
-            return _GB()
+            return SimpleNamespace(count=lambda: graph_build(spark, fixture))
         if name == "triples_pipeline":
-            from climatemind_ontology_processing_spark.plans.pipeline import triples_from_pages
-            from climatemind_ontology_processing_spark.sources.pages import pages_df
-            import re
-            m = re.search(r"sf([0-9.]+)", sf_dir)
-            sf = float(m.group(1)) if m else 0.1
-            n_pages = max(int(500_000 * sf), 1000)
-            return triples_from_pages(
-                pages_df(spark, n_pages, seed=42, partitions=cpus * 2))
+            return triples_pipeline(spark, page_count(scale_factor(sf_dir)),
+                                    cpus)
         return qs[name](spark, sf_dir)
 
-    # warm-up (same as bench.py)
-    from climatemind_ontology_processing_spark.plans.pipeline import triples_from_pages
-    from climatemind_ontology_processing_spark.sources.pages import pages_df
-    triples_from_pages(pages_df(spark, 1000, seed=1, partitions=cpus)).count()
+    warm_up(spark, cpus)      # same as bench.py
 
     out: dict[str, list[float]] = {}
     for name in args.names:

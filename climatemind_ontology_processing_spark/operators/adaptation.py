@@ -29,8 +29,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..config import GREENHOUSE_EFFECT, INHIBITS
-from .traversal import (_bfs_local, bfs_reachable, transitive_closure,
-                        typed_adjacency)
+from .traversal import (_MAX_ROUNDS, _reach_local, bfs_reachable,
+                        transitive_closure, typed_adjacency)
 
 
 def downstream_nodes(edges_b: DataFrame, root: str = GREENHOUSE_EFFECT) -> DataFrame:
@@ -44,20 +44,15 @@ def _local_pairs(b_rows: list, root: str) -> list[tuple]:
     downstream-restricted subgraph, filtered to sources reachable from the
     root."""
     fwd = typed_adjacency(b_rows)
-    down = _bfs_local(fwd, [root])
-    sub: dict = {}
-    for u, vs in fwd.items():
-        if u in down:
-            kept = [v for v in vs if v in down]
-            if kept:
-                sub[u] = kept
-    nodes = set(sub)
-    for vs in sub.values():
-        nodes.update(vs)
-    reach = {n: _bfs_local(sub, [n]) for n in nodes}  # reflexive
-    from_root = reach.get(root, set())
-    return [(m, n) for n in sorted(nodes) if n in from_root
-            for m in sorted(reach[n]) if m in down]
+    down = {v for _, v in _reach_local(fwd, [(root, root)], _MAX_ROUNDS,
+                                       "bfs_reachable")}
+    sub = {u: [v for v in vs if v in down] for u, vs in fwd.items()
+           if u in down}
+    nodes = {u for u, vs in sub.items() if vs} | {
+        v for vs in sub.values() for v in vs}
+    reach = _reach_local(sub, [(n, n) for n in nodes], _MAX_ROUNDS,
+                         "transitive_closure")  # reflexive
+    return [(m, n) for n, m in sorted(reach) if (root, n) in reach]
 
 
 def intermediate_pairs(edges_b: DataFrame,

@@ -463,7 +463,10 @@ def near_dup_pairs(docs: DataFrame, id_col: str = "doc_id",
     if threshold == 0.5:
         # integer-exact t=1/2 form — one array_intersect in the pushed-down
         # join condition instead of two (see ppjoin_pairs for the
-        # half-ulp boundary proof)
+        # half-ulp boundary proof).  3*inter >= sz_a+sz_b equals
+        # jaccard >= 0.5 only for NON-EMPTY shingle sets (an empty/empty
+        # pair passes 0 >= 0 with a null jaccard); _shingled_checkpointed's
+        # size > 0 filter is that precondition
         return (joined.filter(3 * inter >= F.size("_sa") + F.size("_sb"))
                 .withColumn("jaccard", inter / union)
                 .select("a", "b", "jaccard"))
@@ -913,7 +916,10 @@ def ppjoin_pairs(docs: DataFrame, id_col: str = "doc_id",
         # the division form mentions array_intersect twice (and the
         # projection a third time) — measured ~20% of the whole query.
         # For t = 1/2:  inter/U >= 0.5  <=>  3*inter >= sz_a+sz_b
-        # (U = sz_a+sz_b-inter > 0, integers).  Exact including double
+        # (U = sz_a+sz_b-inter > 0, integers — U > 0 needs NON-EMPTY
+        # shingle sets: an empty/empty pair would pass 0 >= 0; every
+        # candidate here shares an exploded prefix shingle, so sz >= 1).
+        # Exact including double
         # rounding: the closest ratio below 1/2 is 1/2 - 1/(2U), a gap of
         # >= 2^-21 at any real U — 2^32 ulps of 0.5 — so rounding the
         # quotient can never cross the boundary.  Other thresholds keep

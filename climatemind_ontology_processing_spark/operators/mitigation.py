@@ -24,7 +24,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..config import CAUSES, GREENHOUSE_EFFECT, INHIBITS
-from .traversal import _bfs_local, bfs_reachable, typed_adjacency
+from .traversal import (_MAX_ROUNDS, _reach_local, bfs_reachable,
+                        typed_adjacency)
 
 
 def upstream_nodes(edges_b: DataFrame, root: str = GREENHOUSE_EFFECT) -> DataFrame:
@@ -41,7 +42,9 @@ def upstream_local(b_rows: list, root: str = GREENHOUSE_EFFECT) -> set:
     """Driver twin of :func:`upstream_nodes` over B's (src, dst, type)
     rows: reverse reach of ``root`` over any edge type, then both
     endpoints of the causes edges that land in it."""
-    reached = _bfs_local(typed_adjacency(b_rows, "reverse"), [root])
+    reached = {v for _, v in _reach_local(typed_adjacency(b_rows, "reverse"),
+                                          [(root, root)], _MAX_ROUNDS,
+                                          "bfs_reachable")}
     return {x for s, d, t in b_rows if t == CAUSES and d in reached
             for x in (s, d)}
 

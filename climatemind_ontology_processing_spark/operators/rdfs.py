@@ -34,8 +34,9 @@ Scale shape: the schema side (classes + properties) is vocabulary-sized
 — its closures are tiny and BROADCAST into every instance-side join, so
 the only full-size operations are one map-side-joined projection per
 rule plus the final distinct.  The transitive closures themselves run
-semi-naive (frontier joins new facts only) with the repo's loud round
-cap (a truncated fixpoint is invisible — CLAUDE.md invariant).
+on the shared reachability kernel (``traversal._reach`` and its driver
+twin ``_reach_local``: semi-naive, loud round cap — a truncated fixpoint
+is invisible).
 """
 from __future__ import annotations
 
@@ -43,6 +44,8 @@ import os
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from .traversal import _adjacency, _checkpoint, _reach, _reach_local, small_rows
 
 S, P, O = "subj", "pred", "obj"
 
@@ -58,39 +61,6 @@ SCHEMA_LITERAL_MAX = int(os.environ.get("CMKG_RDFS_SCHEMA_LITERAL_MAX",
                                         "256"))
 
 
-def _closure_local(adj: dict, max_rounds: int) -> list:
-    """Driver-side transitive closure of an adjacency dict — the
-    small-graph path shared by transitive_closure and rdfs_closure's
-    literal schema stratum.  Returns sorted (a, b) pairs; RAISES on
-    round-cap exhaustion at the same boundary as the distributed loop
-    (frontier still live after max_rounds)."""
-    out = []
-    maxd = 0
-    for src in sorted(adj):
-        # >= 1 step: level BFS from the successors (a node reaches
-        # itself only through a cycle); track shortest-hop depth so
-        # the loud round cap fires exactly when the distributed
-        # loop's would
-        seen = set(adj[src])
-        frontier = seen
-        depth = 1
-        while frontier:
-            maxd = max(maxd, depth)
-            nxt = {v for u in frontier for v in adj.get(u, ())
-                   if v not in seen}
-            seen |= nxt
-            frontier = nxt
-            depth += 1
-        for dst in sorted(seen):
-            out.append((src, dst))
-    if maxd >= max_rounds:
-        raise RuntimeError(
-            f"transitive_closure did not converge within max_rounds="
-            f"{max_rounds} — raise max_rounds (chain deeper than the "
-            f"cap)")
-    return out
-
-
 def transitive_closure(pairs: DataFrame, a: str = "a", b: str = "b",
                        max_rounds: int = 25) -> DataFrame:
     """Transitive closure of a binary relation as (a, b) pairs.
@@ -99,45 +69,27 @@ def transitive_closure(pairs: DataFrame, a: str = "a", b: str = "b",
     relation that fits on the driver — the usual case for schema
     hierarchies, which are vocabulary-sized — closes in one collected
     BFS pass with zero per-round Spark jobs; bigger relations run the
-    distributed semi-naive loop below.  Identical output either way
-    (pinned in tests/test_rdfs.py).
+    distributed kernel.  Identical output either way (pinned in
+    tests/test_rdfs.py).
 
-    Semi-naive evaluation: each round extends only the NEW pairs of the
-    previous round by one hop, then anti-joins the accumulated closure,
-    so converged chains stop contributing work.  Rounds grow closure
-    depth by 1, hence ``max_rounds`` bounds the longest chain; RAISES on
-    exhaustion (loud-cap invariant).  Cycles are fine — reflexive pairs
-    appear iff a node reaches itself through the cycle.
+    Both arms reach from the relation's own pairs, tagged by their left
+    side, so a node reaches itself only through a cycle.  Each round
+    extends only the NEW pairs of the previous one by one hop; RAISES iff
+    the frontier is still non-empty after ``max_rounds`` expansions
+    (loud-cap invariant).
     """
-    from .traversal import small_rows
-
-    sel = pairs.select(F.col(a).alias("a"), F.col(b).alias("b")).distinct()
+    sel = pairs.select(F.col(a).alias("tag"), F.col(b).alias("id")).distinct()
     probe = small_rows(sel)
     if probe is not None:
-        adj: dict = {}
-        for r in probe:
-            adj.setdefault(r[0], []).append(r[1])
-        out = _closure_local(adj, max_rounds)
-        ta = sel.schema["a"].dataType.simpleString()
-        tb = sel.schema["b"].dataType.simpleString()
-        return pairs.sparkSession.createDataFrame(
-            out, f"{a} {ta}, {b} {tb}")
-    base = sel.localCheckpoint(eager=True)
-    closure = base
-    frontier = base
-    for _ in range(max_rounds):
-        if frontier.isEmpty():
-            return closure.select(F.col("a").alias(a), F.col("b").alias(b))
-        step = (frontier.alias("f")
-                .join(base.alias("e"), F.col("f.b") == F.col("e.a"))
-                .select(F.col("f.a").alias("a"), F.col("e.b").alias("b"))
-                .distinct())
-        frontier = step.join(closure, ["a", "b"], "left_anti") \
-                       .localCheckpoint(eager=True)
-        closure = closure.unionByName(frontier).localCheckpoint(eager=True)
-    raise RuntimeError(
-        f"transitive_closure did not converge within max_rounds="
-        f"{max_rounds} — raise max_rounds (chain deeper than the cap)")
+        ta, tb = (f.dataType.simpleString() for f in sel.schema.fields)
+        out = _reach_local(_adjacency(probe), probe, max_rounds,
+                           "transitive_closure")
+        return pairs.sparkSession.createDataFrame(sorted(out),
+                                                  f"{a} {ta}, {b} {tb}")
+    closure = _reach(sel, sel.select(F.col("tag").alias("from"),
+                                     F.col("id").alias("to")),
+                     max_rounds, "transitive_closure")
+    return closure.select(F.col("tag").alias(a), F.col("id").alias(b))
 
 
 def rdfs_closure(instance: DataFrame, schema: DataFrame,
@@ -168,7 +120,7 @@ def rdfs_closure(instance: DataFrame, schema: DataFrame,
     inst = instance.select(S, P, O)
     if not assume_distinct:
         inst = inst.distinct()
-    inst = inst.localCheckpoint(eager=True)
+    inst = _checkpoint(inst)
 
     # literal small path: a vocabulary-sized schema closes driver-side and
     # the rule joins become literal-map lookups — the instance side then
@@ -186,7 +138,7 @@ def rdfs_closure(instance: DataFrame, schema: DataFrame,
             return _rdfs_closure_literal(
                 inst, rows, type_pred, sub_class, sub_prop, domain, range_,
                 max_rounds)
-    sch = schema.select(S, P, O).distinct().localCheckpoint(eager=True)
+    sch = _checkpoint(schema.select(S, P, O).distinct())
 
     # --- schema stratum: rdfs11 / rdfs5 closures (vocabulary-sized) ------
     sc = transitive_closure(
@@ -265,21 +217,19 @@ def _rdfs_closure_literal(inst: DataFrame, sch_rows: list, type_pred: str,
     """rdfs_closure's literal small path: ``sch_rows`` is the collected,
     deduped, null-free (subj, pred, obj) schema; ``inst`` is the already
     checkpointed instance table.  Same algebra as the join path — rdfs5/11
-    closed by _closure_local (same loud round cap), rdfs7/2/3/9 as
+    closed by _reach_local (same loud round cap), rdfs7/2/3/9 as
     literal-map explodes (map miss => null => row dropped, exactly the
     inner-join semantics), identical final MIN-over-tagged-union."""
     spark = inst.sparkSession
     trip_schema = f"{S} string, {P} string, {O} string"
 
-    def _adj(pred_name):
-        adj: dict = {}
-        for s, p, o in sch_rows:
-            if p == pred_name:
-                adj.setdefault(s, []).append(o)
-        return adj
+    def _closure(pred_name):
+        pairs = [(s, o) for s, p, o in sch_rows if p == pred_name]
+        return sorted(_reach_local(_adjacency(pairs), pairs, max_rounds,
+                                   "transitive_closure"))
 
-    sc_pairs = _closure_local(_adj(sub_class), max_rounds)   # rdfs11
-    sp_pairs = _closure_local(_adj(sub_prop), max_rounds)    # rdfs5
+    sc_pairs = _closure(sub_class)   # rdfs11
+    sp_pairs = _closure(sub_prop)    # rdfs5
     dom_by_p: dict = {}
     rng_by_p: dict = {}
     for s, p, o in sch_rows:

@@ -7,7 +7,8 @@ typing — where `residual_cycle_pairs` only witnesses their existence.
 Component id = MIN member id, matching `connected_components`' convention.
 
 Size-adaptive like `traversal`: below ``SMALL_GRAPH_THRESHOLD`` edges the
-graph collects to the driver and runs iterative Tarjan (one pass); above
+graph collects to the driver and runs iterative Tarjan (one pass) to find
+each SCC's root, then collects the members the way step 3 below does; above
 it, the distributed FW-BW **coloring** algorithm (Orzan'04 / Fleischer et
 al.'s divide-and-conquer family, the standard Pregel/MapReduce SCC shape):
 
@@ -19,7 +20,8 @@ al.'s divide-and-conquer family, the standard Pregel/MapReduce SCC shape):
        valid because the ancestor relation is transitive, so
        ``color(color(v))`` is still an ancestor of ``v``;
     3. COLLECT: for each root (``color(v) == v``), backward-BFS within its
-       color class; the collected set IS ``SCC(root)`` (any intermediate
+       color class (``traversal._reach`` over the reversed intra-color
+       edges, tagged by root); the collected set IS ``SCC(root)`` (any intermediate
        node w on a path v -> root with root ->* v satisfies w ->* root and
        root ->* w, hence shares the color — the classic FW-BW argument),
        and root is its min member;
@@ -35,7 +37,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .traversal import _checkpoint, small_rows
+from .traversal import (_adjacency, _checkpoint, _reach, _reach_local,
+                        small_rows)
 
 
 def _tarjan_components(edge_rows, nodes) -> list[tuple]:
@@ -100,7 +103,8 @@ def strongly_connected_components(edges: DataFrame, src: str = "src",
     joining back to a node table should left-join and default to the node
     itself.  The distributed path raises if the graph has not fully
     decomposed within ``max_outer`` rounds (a truncated result would be
-    indistinguishable from a converged one)."""
+    indistinguishable from a converged one).  Both paths raise when an
+    SCC's backward collect needs more than ``max_inner`` expansions."""
     e = (edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
          .filter(F.col("a") != F.col("b")).distinct())
     t = e.schema["a"].dataType.simpleString()
@@ -109,7 +113,15 @@ def strongly_connected_components(edges: DataFrame, src: str = "src",
     rows = small_rows(e)
     if rows is not None:
         nodes = sorted({x for ab in rows for x in ab})
-        return spark.createDataFrame(_tarjan_components(rows, nodes),
+        comp = dict(_tarjan_components(rows, nodes))
+        # step 3's collect on the driver: reverse reach from every root over
+        # the intra-component edges, so its round cap fires as it would
+        # on the distributed path
+        hops = _adjacency(((a, b) for a, b in rows if comp[a] == comp[b]),
+                          "reverse")
+        members = _reach_local(hops, [(c, c) for c in set(comp.values())],
+                               max_inner, "SCC backward collect")
+        return spark.createDataFrame(sorted((v, c) for c, v in members),
                                      f"id {t}, component {t}")
 
     done: DataFrame | None = None
@@ -167,32 +179,20 @@ def strongly_connected_components(edges: DataFrame, src: str = "src",
                 "wrong color classes; raise max_inner (pointer jumping "
                 "needs ~log2(diameter) rounds)")
         # --- 3. collect SCC(root) by backward BFS within each color class
-        members = _checkpoint(
-            color.filter(F.col("id") == F.col("comp"))
-                 .select("id", F.col("comp").alias("root")))
-        frontier = members
-        for _ in range(max_inner):
-            preds = (cur.join(frontier.select(F.col("id").alias("b"), "root"),
-                              "b")
-                     .select(F.col("a").alias("id"), "root")
-                     .join(color, "id")
-                     .filter(F.col("comp") == F.col("root"))
-                     .select("id", "root").distinct())
-            fresh = _checkpoint(preds.join(members, ["id", "root"],
-                                           "left_anti"))
-            if fresh.isEmpty():
-                break
-            members = _checkpoint(members.unionByName(fresh))
-            frontier = fresh
-        else:  # pragma: no cover - loud cap-exhaustion guard
-            raise RuntimeError(
-                f"SCC backward collect did not converge within max_inner="
-                f"{max_inner} rounds — an SCC with backward hop-depth > "
-                "max_inner would be emitted PARTIALLY and its remainder "
-                "mis-trimmed as singletons; raise max_inner")
-        emit(members.select("id", F.col("root").alias("component")))
+        roots = (color.filter(F.col("id") == F.col("comp"))
+                 .select(F.col("id").alias("tag"), "id"))
+        intra = (cur
+                 .join(color.select(F.col("id").alias("a"),
+                                    F.col("comp").alias("ca")), "a")
+                 .join(color.select(F.col("id").alias("b"),
+                                    F.col("comp").alias("cb")), "b")
+                 .filter(F.col("ca") == F.col("cb")))
+        members = _reach(roots, intra.select(F.col("b").alias("from"),
+                                             F.col("a").alias("to")),
+                         max_inner, "SCC backward collect")
+        emit(members.select("id", F.col("tag").alias("component")))
         # --- 4. peel the found SCCs and iterate
-        found = members.select("id").distinct()
+        found = members.select("id")     # one tag per id: hops are intra-color
         cur = _checkpoint(
             cur.join(found.withColumnRenamed("id", "a"), "a", "left_anti")
                .join(found.withColumnRenamed("id", "b"), "b", "left_anti"))

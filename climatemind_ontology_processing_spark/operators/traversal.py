@@ -2,19 +2,22 @@
 
 The reference's traversals are Python recursion/stacks over an in-RAM NetworkX
 graph (``ontology_processing_utils.py:7-41``, ``make_graph_class.py:440-455,
-516-531``).  Catalyst has no fixpoint operator, so each traversal is a
-driver-side loop of DataFrame joins with ``localCheckpoint`` per iteration to
-cut lineage (SURVEY §4).  Iteration count is bounded by graph diameter (small
-for causal web graphs); each iteration is one shuffle join on the frontier —
-the frontier is usually tiny relative to the edge table, so Spark broadcasts
-it under AQE.
+516-531``).  Catalyst has no fixpoint operator, so every traversal here (and
+rdfs' closure and scc's backward collect) runs ONE semi-naive reachability
+kernel, :func:`_reach`: a driver-side loop of DataFrame joins over a tagged
+frontier, checkpointed per round to cut lineage (SURVEY §4).  One loop serves
+many seeds at once (the tag column), and each round is one shuffle join on
+the frontier — usually tiny relative to the edge table, so Spark broadcasts
+it under AQE.  The small-graph arm runs the kernel's driver twin,
+:func:`_reach_local`.  Both arms share one round cap: they raise iff the
+frontier is still non-empty after ``max_rounds`` expansions.
 
 Edges schema throughout: (src string, dst string, type string, ...).
 """
 from __future__ import annotations
 
 import os
-from collections import defaultdict, deque
+from collections import defaultdict
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -27,6 +30,9 @@ from pyspark.sql import functions as F
 SMALL_GRAPH_THRESHOLD = int(os.environ.get("CMKG_SMALL_GRAPH_EDGES", "200000"))
 
 _DIRECTIONS = ("forward", "reverse", "any")
+
+# default round cap of the traversals and of their driver twins
+_MAX_ROUNDS = 200
 
 
 def small_rows(df: DataFrame) -> list[tuple] | None:
@@ -90,7 +96,7 @@ def _hop_pairs(edges: DataFrame, edge_type: str | None) -> DataFrame:
 
 def _hop_table(edges: DataFrame, direction: str,
                edge_type: str | None) -> DataFrame:
-    """Checkpointed distinct (from, to) hops for the iterative BFS."""
+    """Distinct (from, to) hops for the iterative BFS."""
     e = _hop_pairs(edges, edge_type)
     hops = []
     if direction in ("forward", "any"):
@@ -98,7 +104,7 @@ def _hop_table(edges: DataFrame, direction: str,
     if direction in ("reverse", "any"):
         hops.append(e.select(F.col("dst").alias("from"), F.col("src").alias("to")))
     hop = hops[0] if len(hops) == 1 else hops[0].unionByName(hops[1])
-    return _checkpoint(hop.distinct())
+    return hop.distinct()
 
 
 def _check_direction(direction: str) -> None:
@@ -106,105 +112,95 @@ def _check_direction(direction: str) -> None:
         raise ValueError(f"bad direction {direction!r}")
 
 
-def _seed_df(spark, seeds: DataFrame | list, id_type: str) -> DataFrame:
-    if isinstance(seeds, list):
-        return spark.createDataFrame([(s,) for s in sorted(set(seeds))],
-                                     f"id {id_type}")
-    return seeds
+def _cap_error(what: str, max_rounds: int) -> RuntimeError:
+    return RuntimeError(
+        f"{what} did not converge within max_rounds={max_rounds}: the "
+        f"frontier is still non-empty after {max_rounds} expansions — "
+        "raise max_rounds (the seeds reach deeper than the cap)")
 
 
-def _group_seeds(seeds: DataFrame) -> list[tuple[str, list]]:
-    grouped: dict = defaultdict(list)
-    for r in seeds.distinct().collect():
-        grouped[r[0]].append(r[1])
-    return sorted(grouped.items())
+def _reach(seeds: DataFrame, hops: DataFrame, max_rounds: int,
+           what: str) -> DataFrame:
+    """The semi-naive reachability kernel: ``seeds`` is DataFrame[tag, id],
+    ``hops`` DataFrame[from, to] over the same (join-comparable, possibly
+    struct) id type.  Each round joins the frontier to ``hops`` and
+    anti-joins the visited set on (tag, id), so converged tags stop
+    contributing work and one loop serves every tag.  Returns the visited
+    (tag, id) pairs, seeds included.  Raises iff the frontier is still
+    non-empty after ``max_rounds`` expansions (a truncated fixpoint would be
+    indistinguishable from a converged one)."""
+    hops = _checkpoint(hops)
+    visited = _checkpoint(seeds.select("tag", "id").distinct())
+    frontier = visited
+    for _ in range(max_rounds):
+        frontier = _checkpoint(
+            frontier.join(hops, frontier.id == hops["from"])
+            .select("tag", F.col("to").alias("id")).distinct()
+            .join(visited, ["tag", "id"], "left_anti"))
+        if frontier.isEmpty():
+            return visited
+        visited = _checkpoint(visited.unionByName(frontier))
+    raise _cap_error(what, max_rounds)
 
 
-def _bfs_local(adj: dict, seeds: list) -> set:
+def _reach_local(adj: dict, seeds, max_rounds: int, what: str) -> set:
+    """Driver twin of :func:`_reach`: level-synchronous BFS of the (tag, id)
+    ``seeds`` over the adjacency dict ``adj``, one level per round, so it
+    raises at exactly the kernel's boundary.  Returns the visited (tag, id)
+    set, seeds included."""
     visited = set(seeds)
-    q = deque(seeds)
-    while q:
-        u = q.popleft()
-        for v in adj.get(u, ()):
-            if v not in visited:
-                visited.add(v)
-                q.append(v)
-    return visited
+    frontier = visited
+    for _ in range(max_rounds):
+        frontier = {(t, v) for t, u in frontier
+                    for v in adj.get(u, ())} - visited
+        if not frontier:
+            return visited
+        visited |= frontier
+    raise _cap_error(what, max_rounds)
 
 
 def bfs_reachable(edges: DataFrame, seeds: DataFrame | list,
-                  direction: str = "forward",
-                  edge_type: str | None = None, max_iters: int = 200) -> DataFrame:
+                  direction: str = "forward", edge_type: str | None = None,
+                  max_rounds: int = _MAX_ROUNDS) -> DataFrame:
     """G2 — typed directional BFS (``custom_bfs``,
     ``ontology_processing_utils.py:7-41``): node set reachable from ``seeds``
     along edges of ``edge_type`` (None = "any") in ``direction`` (forward /
     reverse / any).  ``seeds`` is a DataFrame[id] or a driver-side list of
     ids; a list takes the type of ``edges.src`` on both arms.  Returns
-    DataFrame[id] including the seeds.
+    DataFrame[id] including the seeds: :func:`bfs_reachable_tagged` with
+    one constant tag.
 
     The reference returns an *induced subgraph*; compose with
     :func:`induced_edges` for the edge set.
     """
-    _check_direction(direction)
-    spark = edges.sparkSession
-    src_type = edges.schema["src"].dataType.simpleString()
-    rows = small_rows(_hop_pairs(edges, edge_type))
-    if rows is not None:
-        if isinstance(seeds, list):
-            seed_vals, seed_type = set(seeds), src_type
-        else:
-            seed_vals = {r[0] for r in seeds.collect()}
-            seed_type = seeds.schema.fields[0].dataType.simpleString()
-        reached = sorted(_bfs_local(_adjacency(rows, direction),
-                                    sorted(seed_vals)))
-        return spark.createDataFrame([(v,) for v in reached], f"id {seed_type}")
-    seeds = _seed_df(spark, seeds, src_type)
-    hop = _hop_table(edges, direction, edge_type)
-    visited = _checkpoint(seeds.select(F.col(seeds.columns[0]).alias("id")).distinct())
-    frontier = visited
-    for _ in range(max_iters):
-        nxt = (frontier.join(hop, frontier.id == hop["from"])
-               .select(F.col("to").alias("id")).distinct()
-               .join(visited, "id", "left_anti"))
-        nxt = _checkpoint(nxt)
-        if nxt.isEmpty():
-            break
-        visited = _checkpoint(visited.unionByName(nxt))
-        frontier = nxt
-    return visited
+    if isinstance(seeds, list):
+        src_type = edges.schema["src"].dataType.simpleString()
+        seeds = edges.sparkSession.createDataFrame(
+            [(s,) for s in sorted(set(seeds))], f"id {src_type}")
+    tagged = seeds.select(F.lit(0).alias("tag"), seeds.columns[0])
+    return bfs_reachable_tagged(edges, tagged, direction, edge_type,
+                                max_rounds).select("id")
 
 
 def bfs_reachable_tagged(edges: DataFrame, seeds: DataFrame,
                          direction: str = "forward", edge_type: str | None = None,
-                         max_iters: int = 200) -> DataFrame:
+                         max_rounds: int = _MAX_ROUNDS) -> DataFrame:
     """G10 — multi-source tagged BFS: ``seeds`` is DataFrame[tag, id]; expands
     all tags in ONE iterative join (one Spark loop for ~20 seeds, not 20
     loops).  Returns DataFrame[tag, id]."""
     _check_direction(direction)
-    spark = edges.sparkSession
+    seeds = seeds.select(F.col(seeds.columns[0]).alias("tag"),
+                         F.col(seeds.columns[1]).alias("id"))
     rows = small_rows(_hop_pairs(edges, edge_type))
-    if rows is not None:
-        adj = _adjacency(rows, direction)
-        id_field = seeds.schema.fields[1]
-        out = []
-        for tag, seed_vals in _group_seeds(seeds):
-            for v in sorted(_bfs_local(adj, seed_vals)):
-                out.append((tag, v))
-        return spark.createDataFrame(
-            out, f"tag string, id {id_field.dataType.simpleString()}")
-    hop = _hop_table(edges, direction, edge_type)
-    visited = _checkpoint(seeds.select("tag", F.col(seeds.columns[1]).alias("id")).distinct())
-    frontier = visited
-    for _ in range(max_iters):
-        nxt = (frontier.join(hop, frontier.id == hop["from"])
-               .select("tag", F.col("to").alias("id")).distinct()
-               .join(visited, ["tag", "id"], "left_anti"))
-        nxt = _checkpoint(nxt)
-        if nxt.isEmpty():
-            break
-        visited = _checkpoint(visited.unionByName(nxt))
-        frontier = nxt
-    return visited
+    if rows is None:
+        return _reach(seeds, _hop_table(edges, direction, edge_type),
+                      max_rounds, "bfs_reachable")
+    reached = _reach_local(_adjacency(rows, direction),
+                           [tuple(r) for r in seeds.collect()],
+                           max_rounds, "bfs_reachable")
+    tag_t, id_t = (f.dataType.simpleString() for f in seeds.schema.fields)
+    return edges.sparkSession.createDataFrame(sorted(reached),
+                                              f"tag {tag_t}, id {id_t}")
 
 
 def induced_edges(edges: DataFrame, nodeset: DataFrame) -> DataFrame:
@@ -228,7 +224,7 @@ def union_subgraph(nodesets: list[DataFrame], edges: DataFrame) -> tuple[DataFra
 
 
 def transitive_closure(edges: DataFrame, edge_type: str | None = None,
-                       max_iters: int = 200) -> DataFrame:
+                       max_rounds: int = _MAX_ROUNDS) -> DataFrame:
     """Reflexive-transitive closure pairs (src, dst): src reaches dst.
 
     Supports the G5 rewrite (SURVEY §2.7): node n lies on a simple path
@@ -236,41 +232,26 @@ def transitive_closure(edges: DataFrame, edge_type: str | None = None,
     reference's exponential ``nx.all_simple_paths`` enumeration
     (``make_graph_class.py:522-528``) with a polynomial reachability product.
 
-    Semi-naive iteration: delta ⨝ edges, accumulate, stop at fixpoint; bounded
-    by diameter.  Reflexive pairs (n, n) for every endpoint are included
-    (``all_simple_paths(r, r)`` yields [[r]] in the reference's NetworkX).
+    One :func:`_reach` seeded with the identity pairs (n, n) of every
+    endpoint, tagged by source; bounded by diameter.  Reflexive pairs are
+    included (``all_simple_paths(r, r)`` yields [[r]] in the reference's
+    NetworkX).
     """
-    spark = edges.sparkSession
     e = _hop_pairs(edges, edge_type)
     rows = small_rows(e)
     if rows is not None:
-        fwd = _adjacency(rows)
         nodes = {x for pair in rows for x in pair}
-        pairs = []
-        src_field = edges.schema["src"].dataType.simpleString()
-        for n in sorted(nodes):
-            for m in sorted(_bfs_local(fwd, [n])):
-                pairs.append((n, m))
-        return spark.createDataFrame(pairs, f"src {src_field}, dst {src_field}")
-    base = _checkpoint(e.distinct())
-    nodes = base.select(F.col("src").alias("n")).unionByName(
-        base.select(F.col("dst").alias("n"))).distinct()
-    closure = _checkpoint(
-        nodes.select(F.col("n").alias("src"), F.col("n").alias("dst"))
-        .unionByName(base).distinct())
-    delta = closure
-    for _ in range(max_iters):
-        step = (delta.alias("c").join(base.alias("e"),
-                                      F.col("c.dst") == F.col("e.src"))
-                .select(F.col("c.src").alias("src"), F.col("e.dst").alias("dst"))
-                .distinct()
-                .join(closure, ["src", "dst"], "left_anti"))
-        step = _checkpoint(step)
-        if step.isEmpty():
-            break
-        closure = _checkpoint(closure.unionByName(step))
-        delta = step
-    return closure
+        reached = _reach_local(_adjacency(rows), [(n, n) for n in nodes],
+                               max_rounds, "transitive_closure")
+        t = edges.schema["src"].dataType.simpleString()
+        return edges.sparkSession.createDataFrame(sorted(reached),
+                                                  f"src {t}, dst {t}")
+    hops = _hop_table(edges, "forward", edge_type)
+    nodes = hops.select(F.col("from").alias("tag")).unionByName(
+        hops.select(F.col("to").alias("tag")))
+    closure = _reach(nodes.withColumn("id", F.col("tag")), hops, max_rounds,
+                     "transitive_closure")
+    return closure.select(F.col("tag").alias("src"), F.col("id").alias("dst"))
 
 
 def rpq_reachable(triples: DataFrame, seeds: DataFrame,
@@ -286,13 +267,13 @@ def rpq_reachable(triples: DataFrame, seeds: DataFrame,
     ``[(0,'buys_from',0), (0,'in_nation',1), (1,'in_region',2)]`` with
     accept ``(2,)``.
 
-    The classic automaton-product construction: BFS over (node, NFA
-    state) pairs — each round joins the frontier to the edge table on
-    the node AND to the (broadcast, literally-tiny) transition table on
-    (state, pred), anti-joins the visited set, and stops when the
-    frontier drains (loud RuntimeError on the round cap: product-graph
-    diameter exceeded).  State explosion is bounded by |V| x |NFA
-    states| — NFAs for real path patterns have a handful of states.
+    The classic automaton-product construction: the triples join the
+    (broadcast, literally-tiny) transition table on the predicate ONCE,
+    giving product hops (u, state) -> (v, nstate) over struct ids, and
+    :func:`_reach` runs the BFS over them tagged by seed (loud RuntimeError
+    on the round cap: product-graph diameter exceeded).  State explosion is
+    bounded by |V| x |NFA states| — NFAs for real path patterns have a
+    handful of states.
 
     Returns (seed, node, state) for ACCEPTING visited pairs, including
     the seed itself when ``start_state`` accepts."""
@@ -300,35 +281,24 @@ def rpq_reachable(triples: DataFrame, seeds: DataFrame,
         raise ValueError("transitions must be non-empty")
     if not accept_states:
         raise ValueError("accept_states must be non-empty")
-    spark = triples.sparkSession
-    trans = spark.createDataFrame(
+    trans = triples.sparkSession.createDataFrame(
         [(int(a), str(pr), int(b)) for a, pr, b in transitions],
         "state int, pred string, nstate int")
-    e = (triples.select(F.col(s).alias("u"), F.col(p).alias("pred"),
-                        F.col(o).alias("v"))
-         .distinct().localCheckpoint(eager=True))
-    visited = (seeds.select(F.col("id").alias("seed"),
-                            F.col("id").alias("node"),
-                            F.lit(start_state).alias("state"))
-               .distinct().localCheckpoint(eager=True))
-    frontier = visited
-    for _ in range(max_rounds):
-        step = (frontier
-                .join(e, frontier.node == e.u)
-                .join(F.broadcast(trans),
-                      (frontier.state == trans.state)
-                      & (e.pred == trans.pred))
-                .select("seed", F.col("v").alias("node"),
-                        F.col("nstate").alias("state"))
-                .distinct())
-        fresh = (step.join(visited, ["seed", "node", "state"], "left_anti")
-                 .localCheckpoint(eager=True))
-        if fresh.isEmpty():
-            return (visited
-                    .filter(F.col("state").isin(list(accept_states)))
-                    .select("seed", "node", "state"))
-        visited = visited.unionByName(fresh).localCheckpoint(eager=True)
-        frontier = fresh
-    raise RuntimeError(
-        f"rpq_reachable: frontier still growing after max_rounds="
-        f"{max_rounds} — product-graph diameter exceeds the cap")
+    node_type = triples.schema[s].dataType
+
+    def at(node: str, state):
+        return F.struct(F.col(node).cast(node_type).alias("node"),
+                        state.alias("state"))
+
+    hops = (triples.select(F.col(s).alias("u"), F.col(p).alias("pred"),
+                           F.col(o).alias("v"))
+            .join(F.broadcast(trans), "pred")
+            .select(at("u", F.col("state")).alias("from"),
+                    at("v", F.col("nstate")).alias("to"))
+            .distinct())
+    tagged = seeds.select(F.col("id").alias("tag"),
+                          at("id", F.lit(int(start_state))).alias("id"))
+    return (_reach(tagged, hops, max_rounds, "rpq_reachable")
+            .filter(F.col("id.state").isin(list(accept_states)))
+            .select(F.col("tag").alias("seed"), F.col("id.node").alias("node"),
+                    F.col("id.state").alias("state")))

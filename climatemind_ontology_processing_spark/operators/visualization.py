@@ -32,7 +32,7 @@ from pyspark.sql import functions as F
 from ..config import CAUSES, GREENHOUSE_EFFECT
 from ..functions.arrays import any_truthy
 from .myths import RISK_SOLUTION_KEY, myth_nodes
-from .traversal import (_adjacency, _bfs_local, bfs_reachable,
+from .traversal import (_MAX_ROUNDS, _adjacency, _reach_local, bfs_reachable,
                         bfs_reachable_tagged, induced_edges, typed_adjacency)
 
 
@@ -185,13 +185,16 @@ def subgraphs_local(a_rows: list, pv_labels: list, mitigation_ids: set,
     over the annotated graph's (src, dst, type) rows:
     {subgraph_name: (sorted node ids, sorted (src, dst) edges)} for the
     four named subgraphs and one per personal-value label."""
-    upstream = _bfs_local(typed_adjacency(a_rows, "reverse", CAUSES), [root])
-    down_adapt = _bfs_local(typed_adjacency(a_rows), [root])
+    def from_root(adj):
+        return {v for _, v in _reach_local(adj, [(root, root)], _MAX_ROUNDS,
+                                           "bfs_reachable")}
+
+    upstream = from_root(typed_adjacency(a_rows, "reverse", CAUSES))
+    down_adapt = from_root(typed_adjacency(a_rows))
     named = {
         "upstream": upstream,
         "downstream_adaptations": down_adapt,
-        "downstream": _bfs_local(typed_adjacency(a_rows, "forward", CAUSES),
-                                 [root]),
+        "downstream": from_root(typed_adjacency(a_rows, "forward", CAUSES)),
         "upstream_mitigations": upstream | mitigation_ids,
     }
     pairs = sorted({(s, d) for s, d, _t in a_rows})
@@ -202,9 +205,12 @@ def subgraphs_local(a_rows: list, pv_labels: list, mitigation_ids: set,
     # subgraph with solution-pointing edges reversed
     rev = sorted({(d, s) if d in adaptation_ids else (s, d)
                   for s, d in pairs if s in down_adapt and d in down_adapt})
-    rev_adj = _adjacency(rev, "reverse")
-    for tag in pv_labels:
-        ms = _bfs_local(rev_adj, [tag])
+    members: dict = {tag: set() for tag in pv_labels}
+    for tag, v in _reach_local(_adjacency(rev, "reverse"),
+                               [(t, t) for t in pv_labels], _MAX_ROUNDS,
+                               "bfs_reachable"):
+        members[tag].add(v)
+    for tag, ms in members.items():
         out[tag] = (sorted(ms), [(s, d) for s, d in rev
                                  if s in ms and d in ms])
     return out

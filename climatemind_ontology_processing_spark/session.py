@@ -13,6 +13,17 @@ from pyspark.sql import SparkSession
 from .config import DEFAULT_SHUFFLE_PARTITIONS
 
 
+def driver_memory(phys_bytes: int | None = None) -> str:
+    """``spark.driver.memory``: ``$SPARK_DRIVER_MEM`` when set (the
+    deployment override), else half the host's physical RAM capped at 16g —
+    a fixed 16g default would exceed the RAM of a 15 GB host."""
+    if "SPARK_DRIVER_MEM" in os.environ:
+        return os.environ["SPARK_DRIVER_MEM"]
+    if phys_bytes is None:
+        phys_bytes = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE")
+    return f"{min(phys_bytes // 2, 16 << 30) >> 20}m"
+
+
 def get_spark(
     app_name: str = "climatemind-kg",
     master: str | None = None,
@@ -76,7 +87,7 @@ def get_spark(
         # co-tenant noise prevented attributing a specific win to it).
         .config("spark.cleaner.periodicGC.interval",
                 os.environ.get("SPARK_GRAFT_PERIODIC_GC", "1min"))
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "16g"))
+        .config("spark.driver.memory", driver_memory())
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

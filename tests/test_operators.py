@@ -1996,3 +1996,25 @@ def test_double_sweep_lower_bounds_networkx_diameter(spark):
     assert r.diameter_lb <= nx.diameter(g)
     # double sweep is usually tight; on this fixed graph it is
     assert r.diameter_lb == nx.diameter(g)
+
+
+def test_t_half_forms_match_division_form_on_blank_documents(spark):
+    """The t=0.5 integer form ``3*inter >= sz_a+sz_b`` equals
+    ``jaccard >= 0.5`` only for non-empty shingle sets (an empty/empty pair
+    passes 0 >= 0 with a null jaccard).  On empty and whitespace-only
+    texts, near_dup_pairs and ppjoin_pairs must return exactly the
+    division form's rows (jaccard_pairs), none with a null jaccard."""
+    from climatemind_ontology_processing_spark.operators.dedup import (
+        near_dup_pairs, ppjoin_pairs)
+    text = "the quick brown fox jumps over the lazy dog"
+    docs = spark.createDataFrame(
+        [(0, ""), (1, "   "), (2, ""), (3, "\t\n "), (4, text), (5, text),
+         (6, "short")],
+        "doc_id long, text string")
+    rows = lambda df: {(r.a, r.b, r.jaccard) for r in df.collect()}
+    want = rows(jaccard_pairs(docs, threshold=0.5))
+    assert (4, 5, 1.0) in want
+    assert all(j is not None for _a, _b, j in want)
+    assert rows(near_dup_pairs(docs, threshold=0.5,
+                               exact_dedup_first=False)) == want
+    assert rows(ppjoin_pairs(docs, threshold=0.5)) == want

@@ -291,3 +291,76 @@ def test_checkpoint_raises_after_retry(spark, monkeypatch):
     with pytest.raises(RuntimeError, match="checkpoint failed"):
         trav._checkpoint(df)
     assert len(calls) == 2
+
+
+CAP = 3
+
+
+def _path(spark, n_edges):
+    return spark.createDataFrame(
+        [(f"n{i}", f"n{i + 1}", "t") for i in range(n_edges)],
+        "src string, dst string, type string")
+
+
+def _cap_cases():
+    """{name: (run(spark, depth) -> DataFrame, rows expected at depth)}.
+    ``depth`` is the number of expansions after which the loop's frontier
+    drains: a path of depth-1 edges for a BFS from its head, depth edges for
+    rdfs' closure (seeded with the relation's own pairs), a depth-cycle for
+    SCC's backward collect from its root."""
+    from pyspark.sql import functions as F
+
+    from climatemind_ontology_processing_spark.operators import rdfs
+    from climatemind_ontology_processing_spark.operators.scc import (
+        strongly_connected_components)
+    from climatemind_ontology_processing_spark.operators.traversal import (
+        rpq_reachable)
+
+    def tagged(spark, d):
+        seeds = spark.createDataFrame([("t", "n0")], "tag string, id string")
+        return bfs_reachable_tagged(_path(spark, d - 1), seeds, "forward",
+                                    None, CAP)
+
+    def rpq(spark, d):
+        trip = _path(spark, d - 1).select(F.col("src").alias("subj"),
+                                          F.col("type").alias("pred"),
+                                          F.col("dst").alias("obj"))
+        seeds = spark.createDataFrame([("n0",)], "id string")
+        return rpq_reachable(trip, seeds, [(0, "t", 0)], (0,), max_rounds=CAP)
+
+    def scc(spark, d):
+        cycle = spark.createDataFrame(
+            [(f"n{i}", f"n{(i + 1) % d}") for i in range(d)],
+            "src string, dst string")
+        return strongly_connected_components(cycle, max_inner=CAP)
+
+    return {
+        "bfs_reachable": (lambda spark, d: bfs_reachable(
+            _path(spark, d - 1), ["n0"], "forward", None, CAP), CAP),
+        "bfs_reachable_tagged": (tagged, CAP),
+        "transitive_closure": (lambda spark, d: transitive_closure(
+            _path(spark, d - 1), None, CAP), CAP * (CAP + 1) // 2),
+        "rdfs.transitive_closure": (lambda spark, d: rdfs.transitive_closure(
+            _path(spark, d), a="src", b="dst", max_rounds=CAP),
+            CAP * (CAP + 1) // 2),
+        "rpq_reachable": (rpq, CAP),
+        "scc_backward_collect": (scc, CAP),
+    }
+
+
+@pytest.mark.parametrize("case", sorted(_cap_cases()))
+def test_round_cap_boundary_same_on_both_arms(spark, monkeypatch, case):
+    """One round-cap rule for every reachability loop, on both arms: a
+    frontier that drains within the cap returns the full result (identical
+    rows on the small and the distributed arm); one expansion deeper
+    raises instead of truncating silently."""
+    run, n_rows = _cap_cases()[case]
+    got = {}
+    for threshold in (trav.SMALL_GRAPH_THRESHOLD, 0):
+        monkeypatch.setattr(trav, "SMALL_GRAPH_THRESHOLD", threshold)
+        got[threshold] = sorted(run(spark, CAP).collect())
+        with pytest.raises(RuntimeError, match=f"max_rounds={CAP}"):
+            run(spark, CAP + 1).collect()
+    small, dist = got.values()
+    assert len(small) == n_rows
+    assert small == dist
