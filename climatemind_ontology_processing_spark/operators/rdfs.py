@@ -45,7 +45,8 @@ import os
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .traversal import _adjacency, _checkpoint, _reach, _reach_local, small_rows
+from .traversal import (_adjacency, _checkpoint, _reach, _reach_local,
+                        small_rows)
 
 S, P, O = "subj", "pred", "obj"
 

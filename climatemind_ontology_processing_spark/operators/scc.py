@@ -8,7 +8,7 @@ Component id = MIN member id, matching `connected_components`' convention.
 
 Size-adaptive like `traversal`: below ``SMALL_GRAPH_THRESHOLD`` edges the
 graph collects to the driver and runs iterative Tarjan (one pass) to find
-each SCC's root, then collects the members the way step 3 below does; above
+each SCC's root, then collects its members as step 3 below does; above
 it, the distributed FW-BW **coloring** algorithm (Orzan'04 / Fleischer et
 al.'s divide-and-conquer family, the standard Pregel/MapReduce SCC shape):
 
@@ -21,10 +21,10 @@ al.'s divide-and-conquer family, the standard Pregel/MapReduce SCC shape):
        ``color(color(v))`` is still an ancestor of ``v``;
     3. COLLECT: for each root (``color(v) == v``), backward-BFS within its
        color class (``traversal._reach`` over the reversed intra-color
-       edges, tagged by root); the collected set IS ``SCC(root)`` (any intermediate
-       node w on a path v -> root with root ->* v satisfies w ->* root and
-       root ->* w, hence shares the color — the classic FW-BW argument),
-       and root is its min member;
+       edges, tagged by root); the collected set IS ``SCC(root)`` (any
+       intermediate node w on a path v -> root with root ->* v satisfies
+       w ->* root and root ->* w, hence shares the color — the classic
+       FW-BW argument), and root is its min member;
     4. remove collected SCCs and iterate on the remainder.
 
 Every shuffle in the distributed path carries (node, label) pairs only —

@@ -116,7 +116,7 @@ def _cap_error(what: str, max_rounds: int) -> RuntimeError:
     return RuntimeError(
         f"{what} did not converge within max_rounds={max_rounds}: the "
         f"frontier is still non-empty after {max_rounds} expansions — "
-        "raise max_rounds (the seeds reach deeper than the cap)")
+        "raise the operator's round cap")
 
 
 def _reach(seeds: DataFrame, hops: DataFrame, max_rounds: int,
