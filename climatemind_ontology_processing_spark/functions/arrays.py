@@ -25,6 +25,20 @@ def flatten_source_lists(properties: Column, source_types: list[str] | None = No
     return F.array_distinct(F.flatten(F.array(*parts)))
 
 
+def flatten_source_lists_local(properties: dict | None,
+                               source_types: list[str] | None = None) -> list:
+    """Driver twin of :func:`flatten_source_lists` over one property dict
+    (``ontology_processing_utils.py:77-92``)."""
+    return list(dict.fromkeys(u for k in source_types or SOURCE_TYPES
+                              for u in (properties or {}).get(k) or ()))
+
+
+def sort_array_local(values) -> list:
+    """Driver twin of ``F.sort_array`` over strings: ascending, nulls
+    first."""
+    return sorted(values, key=lambda v: (v is not None, v or ""))
+
+
 def compute_collapse(values: Column) -> Column:
     """A3 — collapse a {1, -1, 0, null} vector to a scalar
     (``make_graph_class.py:268-291``): all-null -> null; any 1 -> 1 (unless a

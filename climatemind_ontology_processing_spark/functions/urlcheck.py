@@ -13,6 +13,8 @@ exotic inputs.
 """
 from __future__ import annotations
 
+import re
+
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -23,6 +25,16 @@ URL_REGEX = (
     r"(?::[0-9]{1,5})?"
     r"(?:/[^\s]*)?$"
 )
+
+
+# URL_REGEX as java.util.regex reads it: ASCII \s, $ before a final EOL
+_URL_RE_JVM = re.compile(
+    URL_REGEX[:-1] + r"(?:\r\n|[\n\r\x85\u2028\u2029])?\Z", re.ASCII)
+
+
+def url_ok_jvm(url: str | None) -> bool:
+    """Driver twin of :func:`is_valid_url` (Spark's ``rlike``)."""
+    return url is not None and _URL_RE_JVM.match(url) is not None
 
 
 def is_valid_url(col: Column) -> Column:

@@ -40,6 +40,17 @@ def make_acyclic(edges: DataFrame, nodes: DataFrame) -> DataFrame:
     return edges.join(F.broadcast(cut), ["src", "dst", "type"], "left_anti")
 
 
+def make_acyclic_local(edge_rows: list, classes_by_label: dict) -> list:
+    """Driver twin of :func:`make_acyclic` (``make_graph_class.py:395-431``)
+    over (src, dst, type, ...) rows and ``{label: direct_classes}``."""
+    def has(label, classes):
+        return not set(classes).isdisjoint(classes_by_label.get(label) or ())
+
+    return [e for e in edge_rows
+            if not (e[2] == CAUSES and has(e[0], [FEEDBACK_LOOP_CLASS])
+                    and has(e[1], CUT_TARGET_CLASSES))]
+
+
 def residual_cycle_pairs(edges_b: DataFrame) -> DataFrame:
     """Nodes still on a directed cycle after the rule-based cut.
 

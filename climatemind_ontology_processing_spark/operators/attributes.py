@@ -89,3 +89,34 @@ def attach_attributes(edges: DataFrame, concepts: DataFrame) -> DataFrame:
     nodes = graph_nodes(edges)
     joined = nodes.join(F.broadcast(concepts), "label", "left")
     return with_personal_values(joined)
+
+
+def _collapse_local(values: list) -> int | None:
+    """Driver twin of :func:`compute_collapse`."""
+    vals = {v for v in values if v is not None}
+    return None if not vals or {1, -1} <= vals else (
+        -1 if -1 in vals else int(1 in vals))
+
+
+def attach_attributes_local(g_rows: list, concept_by_label: dict) -> dict:
+    """Driver twin of :func:`attach_attributes` (``make_graph_class.py:93-304``)
+    over G's (src, dst, type) rows and ``{label: concept row dict}``:
+    ``{label: node dict}``; pv values truncate toward zero, as Spark's cast."""
+    nodes = {}
+    for label in dict.fromkeys(x for s, d, _t in g_rows for x in (s, d)):
+        n = dict(concept_by_label.get(label) or {}, label=label)
+        dp = n.get("data_properties") or {}
+        v = {k: None if dp.get(k) is None else int(dp[k])
+             for k in PERSONAL_VALUES_19 + POLITICAL_KEYS}
+        pv10, conflicts = [], []
+        for slot, keys in PERSONAL_VALUES_10:
+            vec = [v[k] for k in keys]
+            pv10.append(vec[0] if len(keys) == 1 else _collapse_local(vec))
+            if len(keys) > 1 and 1 in vec and -1 in vec:
+                conflicts.append(slot)
+        n.update(personal_values_19=[v[k] for k in PERSONAL_VALUES_19],
+                 personal_values_10=pv10,
+                 political_value=[v[k] for k in POLITICAL_KEYS],
+                 pv_conflicts=conflicts)
+        nodes[label] = n
+    return nodes

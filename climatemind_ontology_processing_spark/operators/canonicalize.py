@@ -52,7 +52,7 @@ def connected_components(edges: DataFrame, src: str = "src", dst: str = "dst",
     """
     from ..config import DEFAULT_SALT_BUCKETS
     from .skew import salted_agg
-    from .traversal import small_rows
+    from .traversal import _cap_error, small_rows
 
     buckets = DEFAULT_SALT_BUCKETS if salt_buckets is None else salt_buckets
 
@@ -121,6 +121,8 @@ def connected_components(edges: DataFrame, src: str = "src", dst: str = "dst",
         parent = jump
         if changed.isEmpty():
             break
+    else:  # labels still moved in the last round
+        raise _cap_error("connected_components", max_rounds)
     return parent.select(F.col("id"), F.col("comp").alias("component"))
 
 

@@ -21,7 +21,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..config import CAUSES, SOURCE_TYPES
-from ..functions.urlcheck import filter_valid_urls
+from ..functions.urlcheck import filter_valid_urls, url_ok_jvm
 
 
 def causal_sources(edges_with_props: DataFrame) -> DataFrame:
@@ -41,3 +41,15 @@ def causal_sources(edges_with_props: DataFrame) -> DataFrame:
                 F.flatten(F.collect_list("urls")))).alias("_all"))
             .select("label",
                     filter_valid_urls(F.col("_all")).alias("causal_sources")))
+
+
+def causal_sources_local(edge_rows: list) -> list:
+    """Driver twin of :func:`causal_sources` (``process_causal_sources.py:
+    21-67``) over (src, dst, type, properties) rows."""
+    urls: dict = {}
+    for _s, d, t, props in edge_rows:
+        if t == CAUSES and props:
+            urls.setdefault(d, set()).update(
+                u for k in SOURCE_TYPES for u in props.get(k) or ())
+    return [(lab, [u for u in sorted(us - {None}) if url_ok_jvm(u)])
+            for lab, us in urls.items()]

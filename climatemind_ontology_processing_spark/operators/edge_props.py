@@ -26,6 +26,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..config import INHIBITS, SOURCE_TYPES
+from ..functions.arrays import sort_array_local
 
 
 def _node_props(nodes: DataFrame) -> DataFrame:
@@ -90,6 +91,20 @@ def _prop_map_col(st: tuple):
     return prop_map
 
 
+def set_edge_properties_local(g_rows: list, props_by_label: dict) -> list:
+    """Driver twin of :func:`set_edge_properties` (``make_graph_class.py:
+    306-354``) over G's (src, dst, type) rows and ``{label: properties}``:
+    (src, dst, type, properties) rows."""
+    def props(s, d, t):
+        pa, pb = props_by_label.get(s) or {}, props_by_label.get(d) or {}
+        inter = {k: set(pa[k] or ()) & set(pb[k] or ())
+                 for k in pa.keys() & pb.keys() & set(SOURCE_TYPES)}
+        return {k: sort_array_local(v) for k, v in inter.items()
+                if v and t is not None and t != INHIBITS}
+
+    return [(s, d, t, props(s, d, t)) for s, d, t in g_rows]
+
+
 def removal_sets(edges_with_props: DataFrame) -> DataFrame:
     """A7/U2 — per-(node, prop) union of edge intersections to subtract
     (``make_graph_class.py:338-350``).  Returns (label, prop, removed)."""
@@ -122,3 +137,20 @@ def remove_edge_properties_from_nodes(nodes: DataFrame,
             .withColumn("properties",
                         F.when(F.col("properties").isNotNull(), cleaned))
             .drop("_removed"))
+
+
+def remove_edge_properties_local(props_by_label: dict,
+                                 edge_rows: list) -> dict:
+    """Driver twin of :func:`remove_edge_properties_from_nodes`
+    (``make_graph_class.py:357-376``) over ``{label: properties}`` and
+    (src, dst, type, properties) rows: ``{label: cleaned properties}``."""
+    removed: dict = {}
+    for s, d, _t, props in edge_rows:
+        for k, urls in props.items():
+            for x in (s, d):
+                removed.setdefault(x, {}).setdefault(k, set()).update(urls)
+    return {lab: None if p is None else {
+                k: None if v is None else sort_array_local(
+                    set(v) - removed[lab][k] if k in removed.get(lab, {})
+                    else v) for k, v in p.items()}
+            for lab, p in props_by_label.items()}

@@ -14,9 +14,10 @@ Stage order mirrors the reference exactly (each stage cites its impl):
   myths (J4/A6/O2)                          (process_myths.py)
   causal sources (J3/A4/P6)                 (process_causal_sources.py)
 
-Everything is lazily-planned DataFrames except the iterative traversals
-(driver loops, SURVEY §4) and the tiny ranked lists (collected — they are
-attributes of one root node in the reference).
+A graph within the small-graph threshold runs every stage as a driver twin
+(the reference's own single-machine shape); a larger one runs lazily-planned
+DataFrames, with iterative-join traversals (SURVEY §4) and the tiny ranked
+lists collected (they are attributes of one root node in the reference).
 """
 from __future__ import annotations
 
@@ -26,22 +27,25 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..config import GREENHOUSE_EFFECT
-from ..functions.arrays import flatten_source_lists
-from .acyclic import make_acyclic
+from ..functions.arrays import flatten_source_lists, flatten_source_lists_local
+from .acyclic import make_acyclic, make_acyclic_local
 from .adaptation import (adaptation_solutions, adaptations_local,
                          total_adaptation_nodes)
-from .attributes import attach_attributes
-from .causal_sources import causal_sources
-from .edge_props import remove_edge_properties_from_nodes, set_edge_properties
+from .attributes import attach_attributes, attach_attributes_local
+from .causal_sources import causal_sources, causal_sources_local
+from .edge_props import (remove_edge_properties_from_nodes,
+                         remove_edge_properties_local, set_edge_properties,
+                         set_edge_properties_local)
 from .mitigation import (mitigation_solutions, mitigations_local,
                          rank_mitigations, rank_mitigations_local,
                          upstream_local, upstream_nodes)
-from .myths import (MYTH_KEY, general_myths_ranked, general_myths_ranked_local,
-                    myth_sources, solution_and_impact_myths)
+from .myths import (general_myths_ranked, general_myths_ranked_local,
+                    myth_sources, myth_sources_local, solution_and_impact_myths,
+                    solution_and_impact_myths_local)
 from .traversal import small_rows
 from .visualization import (annotate_cyto_edges, annotate_cyto_nodes,
-                            annotated_graph, build_subgraphs, subgraph_tables,
-                            subgraphs_local)
+                            annotated_graph, annotated_graph_local,
+                            build_subgraphs, subgraph_tables, subgraphs_local)
 
 
 @dataclass
@@ -72,12 +76,11 @@ def build_graph(triples: DataFrame, concepts: DataFrame,
 
     The size choice is made once, here: :func:`.traversal.small_rows` over
     the raw (src, dst, type) projection of ``triples``.  A graph within the
-    threshold takes the SMALL arm: the annotation passes (upstream set,
-    mitigations, adaptations, subgraphs, general myths) run as driver twins
-    on the collected G, B and annotated edge rows and the node annotation
-    maps, and whole-stage codegen is off for the call.  Any larger graph
-    runs every pass as DataFrame plans.  Both arms give identical rows
-    (pinned in tests/test_graph_parity.py).
+    threshold takes the SMALL arm: one driver pass over the probe rows and
+    one collect of ``concepts``, each frame one ``createDataFrame``, so no
+    Spark job runs until the caller writes or collects.  Any larger graph
+    runs every pass as DataFrame plans.  Both arms give identical rows and
+    schemas (pinned in tests/test_graph_parity.py).
 
     The gate counts RAW, pre-dedup rows, so a duplicate-heavy input whose
     distinct edges would fit still takes the distributed arm.  That is
@@ -89,45 +92,120 @@ def build_graph(triples: DataFrame, concepts: DataFrame,
                                F.col("obj").alias("dst"),
                                F.col("pred").alias("type"))
     g_rows = small_rows(raw_edges)
-    edges0 = triples_to_edges(triples)
     if g_rows is None:
-        return _build_graph_impl(edges0, concepts, root, None)
-    # SMALL arm: whole-stage codegen compilation dominates sub-threshold
-    # runs (the ~12 annotation stages each compile large generated classes
-    # for a few hundred rows; measured ~1.5 s/rep on the golden fixture).
-    # Scope the toggle to this call — big graphs keep codegen.
-    spark = triples.sparkSession
-    key = "spark.sql.codegen.wholeStage"
-    old = spark.conf.get(key, "true")
-    spark.conf.set(key, "false")
-    try:
-        return _build_graph_impl(edges0, concepts, root, g_rows)
-    finally:
-        spark.conf.set(key, old)
+        return _build_graph_impl(triples_to_edges(triples), concepts, root)
+    return _build_graph_local(g_rows, raw_edges.schema, concepts, root)
 
 
-def _edge_rows(edges: DataFrame) -> list[tuple]:
-    return [tuple(r) for r in edges.select("src", "dst", "type").collect()]
+def _build_graph_local(g_rows: list[tuple], edge_schema, concepts: DataFrame,
+                       root: str) -> GraphBundle:
+    """The small arm: the reference's single-machine pipeline
+    (``make_graph_class.py:84-559`` and the process_* passes, in the stage
+    order above) as driver twins over G's distinct (src, dst, type) rows.
+    Nodes are ``{label: node dict}``, edges (src, dst, type, properties)."""
+    rows = concepts.collect()
+    by_label = {r["label"]: r.asDict() for r in rows}
+    if len(by_label) != len(rows):
+        raise ValueError("concept labels must be unique")
+    nodes = attach_attributes_local(g_rows, by_label)
+    props0 = {lab: n.get("properties") for lab, n in nodes.items()}
+    edges = set_edge_properties_local(g_rows, props0)
+    for lab, p in remove_edge_properties_local(props0, edges).items():
+        nodes[lab]["properties"] = p
+    edges_b = make_acyclic_local(
+        edges, {lab: n.get("direct_classes") for lab, n in nodes.items()})
+    a_nodes, a_edges = annotated_graph_local(nodes, edges_b)
+
+    b_rows = [e[:3] for e in edges_b]
+    dp = {lab: n.get("data_properties") for lab, n in nodes.items()}
+    ups_set = upstream_local(b_rows, root)
+    mit_ids = mitigations_local(b_rows, ups_set)
+    mit_ranked = rank_mitigations_local(mit_ids, dp)
+    adapt_rows = adaptations_local(g_rows, b_rows, root)
+    adapt_ids = {v for _e, vs in adapt_rows for v in vs}
+    subs = subgraphs_local(
+        [e[:3] for e in a_edges], sorted(
+            lab for lab, n in a_nodes.items()
+            if "personal-value" in n["cyto_classes"]),
+        set(mit_ids), adapt_ids, root)
+    gen_rows = general_myths_ranked_local(g_rows, {
+        lab: n.get("super_class_membership") for lab, n in nodes.items()},
+        dp, ups_set)
+    myth_cat = solution_and_impact_myths_local(
+        edges, nodes, subs["downstream_adaptations"][0])
+    # A5: empty bags survive only for adaptation solutions (see the
+    # distributed arm)
+    flat = {lab: flatten_source_lists_local(nodes[lab]["properties"])
+            for lab in set(mit_ids) | adapt_ids}
+    # fold the annotations onto the nodes, incl. the two root-node lists
+    for col, vals in (
+            ("solution_sources", {lab: f for lab, f in flat.items()
+                                  if f or lab in adapt_ids}),
+            ("adaptation_solutions", dict(adapt_rows)),
+            ("solution_myths", {t: m for t, m, _i in myth_cat}),
+            ("impact_myths", {t: m for t, _s, m in myth_cat}),
+            ("myth_sources", dict(myth_sources_local(nodes))),
+            ("causal_sources", dict(causal_sources_local(edges))),
+            ("mitigation_solutions", {root: mit_ranked}),
+            ("general_myths", {root: [m for m, _f in gen_rows]})):
+        for lab, v in vals.items():
+            if lab in nodes:
+                nodes[lab][col] = v
+
+    # each frame has the distributed arm's column names, order and types
+    ty = edge_schema["src"].dataType.simpleString()
+    s, ids = "array<string>", f"array<{ty}>"
+    e_fields = [("src", ty), ("dst", ty), ("type", "string"),
+                ("properties", "map<string,array<string>>")]
+    n_fields = ([("label", ty)] + [(f.name, f.dataType.simpleString())
+                                   for f in concepts.schema
+                                   if f.name != "label"]
+                + [(c, "array<int>") for c in ("personal_values_19",
+                   "personal_values_10", "political_value")]
+                + [("pv_conflicts", s)])
+
+    def frame(rows, fields):
+        rows = [tuple(r.get(c) for c, _t in fields) if isinstance(r, dict)
+                else r for r in rows]
+        return concepts.sparkSession.createDataFrame(
+            rows, ", ".join(f"`{c}` {t}" for c, t in fields))
+
+    return GraphBundle(
+        nodes=frame(nodes.values(), n_fields + [
+            ("solution_sources", s), ("adaptation_solutions", ids),
+            ("solution_myths", ids), ("impact_myths", ids),
+            ("myth_sources", s), ("causal_sources", s),
+            ("mitigation_solutions", s), ("general_myths", s)]),
+        edges=frame(edges, e_fields),
+        edges_b=frame(edges_b, e_fields),
+        annotated_nodes=frame(a_nodes.values(),
+                              n_fields + [("cyto_classes", s)]),
+        annotated_edges=frame(
+            [(d, src, t, p, c) for src, d, t, p, c in a_edges],
+            [e_fields[1], e_fields[0], *e_fields[2:], ("cyto_classes", s)]),
+        subgraph_nodes=frame(
+            [(name, v) for name, (ns, _es) in subs.items() for v in ns],
+            [("subgraph_name", "string"), ("node_id", ty)]),
+        subgraph_edges=frame(
+            [(name, a, b) for name, (_ns, es) in subs.items() for a, b in es],
+            [("subgraph_name", "string"), ("src", ty), ("dst", ty)]),
+        mitigation_ranked=mit_ranked,
+        extras={
+            "upstream_ids": frame([(v,) for v in sorted(ups_set)], [("id", ty)]),
+            "mitigation_ids": frame([(v,) for v in mit_ids], [("id", ty)]),
+            "adaptations": frame(adapt_rows, [("effect", ty),
+                                              ("adaptation_solutions", ids)]),
+            "general_myths": frame(gen_rows, [("myth", "string"),
+                                              ("myth_frequency", "double")]),
+        },
+    )
 
 
-def _build_graph_impl(edges0: DataFrame, concepts: DataFrame, root: str,
-                      g_rows: list[tuple] | None) -> GraphBundle:
-    """``g_rows`` are G's distinct (src, dst, type) rows on the small arm,
-    None on the distributed arm."""
-    small = g_rows is not None
-
-    # Size-adaptive checkpoint width: a curated KG (hundreds..thousands of
-    # edges) gains nothing from 32-partition checkpointed RDDs — every
-    # downstream stage (and the 25-subgraph union fan-out) schedules that
-    # many tasks per checkpoint it touches, and checkpointed RDD lineage
-    # bypasses AQE coalescing so the width sticks.  SMALL graphs coalesce
-    # each checkpoint to 1 partition; big graphs keep full parallelism.
-    # (Lowering shuffle_partitions / coalescing the driver-side traversal
-    # frames were ALSO tried and measured neutral-to-negative on this
-    # pipeline — the residual cost is per-stage scheduling floor spread
-    # over ~12 phases, not width.)
+def _build_graph_impl(edges0: DataFrame, concepts: DataFrame,
+                      root: str) -> GraphBundle:
+    """The distributed arm: every pass as DataFrame plans."""
     def _ckpt(df: DataFrame) -> DataFrame:
-        return (df.coalesce(1) if small else df).localCheckpoint(eager=True)
+        return df.localCheckpoint(eager=True)
 
     # J1 + A3 (checkpointed: both set_edge_properties and
     # remove_edge_properties_from_nodes consume nodes0 — one attach
@@ -151,91 +229,36 @@ def _build_graph_impl(edges0: DataFrame, concepts: DataFrame, root: str,
     a_nodes = _ckpt(annotate_cyto_nodes(a_nodes))
     a_edges = _ckpt(annotate_cyto_edges(a_edges, a_nodes))
 
+    # G3/G7/O1
+    ups = _ckpt(upstream_nodes(edges_b, root))
+    mit = _ckpt(mitigation_solutions(edges_b, root, ups=ups))
+    mit_ranked = [r.id for r in rank_mitigations(mit, nodes).collect()]
+    # G4/G5/G8 — inhibit neighbors from PRE-cut G, paths from B
+    adapt = _ckpt(adaptation_solutions(edges, edges_b, root))
+    adapt_ids = total_adaptation_nodes(adapt)
+
     # Solution sources (A5) for mitigation + adaptation solution nodes.
     # Reference gating differs per pass: mitigation sets the attribute only
     # when non-empty (make_graph_class.py:508 ``if sources:``), adaptation
     # sets it unconditionally (:553-557) — so empty bags survive only for
     # adaptation solutions.
     flat = flatten_source_lists(F.col("properties"))
-    if small:
-        # G3/G7/O1, G4/G5/G8, G2/G9/G10 and O2 as driver twins over three
-        # edge row lists and ONE narrow collect of the node annotation maps
-        spark = edges.sparkSession
-        b_rows = _edge_rows(edges_b)
-        a_rows = _edge_rows(a_edges)
-        ann = nodes.select("label", "data_properties", "super_class_membership",
-                           "personal_values_10").collect()
-        dp = {r["label"]: r["data_properties"] for r in ann}
-        scm = {r["label"]: r["super_class_membership"] for r in ann}
-        # personal-value subgraphs come from the annotated (myth-free) nodes
-        pv_labels = sorted(
-            r["label"] for r in ann
-            if any(r["personal_values_10"] or ())
-            and MYTH_KEY not in (r["super_class_membership"] or {}))
+    sol_ids = (mit.withColumn("_always", F.lit(False))
+               .unionByName(adapt_ids.withColumn("_always", F.lit(True))))
+    sol_flags = sol_ids.groupBy("id").agg(F.max("_always").alias("_always"))
+    solution_sources_df = (nodes
+        .join(sol_flags.withColumnRenamed("id", "label"), "label")
+        .select("label",
+                F.when((F.size(flat) > 0) | F.col("_always"), flat)
+                 .alias("solution_sources"))
+        .filter(F.col("solution_sources").isNotNull()))
 
-        ups_set = upstream_local(b_rows, root)
-        mit_ids = mitigations_local(b_rows, ups_set)
-        mit_ranked = rank_mitigations_local(mit_ids, dp)
-        adapt_rows = adaptations_local(g_rows, b_rows, root)
-        adapt_ids = sorted({v for _e, vs in adapt_rows for v in vs})
+    subs = build_subgraphs(a_nodes, a_edges, mit, adapt_ids, root)
+    sub_nodes, sub_edges = subgraph_tables(subs, a_edges)
+    down_ids = subs["downstream_adaptations"]
 
-        # literal membership filters replace the flag union + groupBy +
-        # join (node labels are unique, so the inner join was exactly this
-        # filter; _always = max(_always) is True iff the label is an
-        # adaptation id)
-        sol = sorted(set(mit_ids) | set(adapt_ids))
-        in_always = (F.col("label").isin(adapt_ids) if adapt_ids
-                     else F.lit(False))
-        solution_sources_df = (nodes
-            .filter(F.col("label").isin(sol) if sol else F.lit(False))
-            .select("label",
-                    F.when((F.size(flat) > 0) | in_always, flat)
-                     .alias("solution_sources"))
-            .filter(F.col("solution_sources").isNotNull()))
-
-        subs = subgraphs_local(a_rows, pv_labels, set(mit_ids),
-                               set(adapt_ids), root)
-        ty = edges_b.schema["src"].dataType.simpleString()
-        sub_nodes = spark.createDataFrame(
-            [(name, v) for name, (ns, _es) in subs.items() for v in ns],
-            f"subgraph_name string, node_id {ty}")
-        sub_edges = spark.createDataFrame(
-            [(name, s, d) for name, (_ns, es) in subs.items() for s, d in es],
-            f"subgraph_name string, src {ty}, dst {ty}")
-        down_ids = subs["downstream_adaptations"][0]
-
-        gen_rows = general_myths_ranked_local(g_rows, scm, dp, ups_set)
-        gen_myth_list = [m for m, _f in gen_rows]
-        ups = spark.createDataFrame([(v,) for v in sorted(ups_set)], f"id {ty}")
-        mit = spark.createDataFrame([(v,) for v in mit_ids], f"id {ty}")
-        adapt = spark.createDataFrame(
-            adapt_rows, f"effect {ty}, adaptation_solutions array<{ty}>")
-        gen_myths = spark.createDataFrame(
-            gen_rows, "myth string, myth_frequency double")
-    else:
-        ups = _ckpt(upstream_nodes(edges_b, root))
-        mit = _ckpt(mitigation_solutions(edges_b, root, ups=ups))
-        mit_ranked = [r.id for r in rank_mitigations(mit, nodes).collect()]
-        # G4/G5/G8 — inhibit neighbors from PRE-cut G, paths from B
-        adapt = _ckpt(adaptation_solutions(edges, edges_b, root))
-        adapt_ids = total_adaptation_nodes(adapt)
-
-        sol_ids = (mit.withColumn("_always", F.lit(False))
-                   .unionByName(adapt_ids.withColumn("_always", F.lit(True))))
-        sol_flags = sol_ids.groupBy("id").agg(F.max("_always").alias("_always"))
-        solution_sources_df = (nodes
-            .join(sol_flags.withColumnRenamed("id", "label"), "label")
-            .select("label",
-                    F.when((F.size(flat) > 0) | F.col("_always"), flat)
-                     .alias("solution_sources"))
-            .filter(F.col("solution_sources").isNotNull()))
-
-        subs = build_subgraphs(a_nodes, a_edges, mit, adapt_ids, root)
-        sub_nodes, sub_edges = subgraph_tables(subs, a_edges)
-        down_ids = subs["downstream_adaptations"]
-
-        gen_myths = general_myths_ranked(edges, nodes, ups)
-        gen_myth_list = [r["myth"] for r in gen_myths.collect()]
+    gen_myths = general_myths_ranked(edges, nodes, ups)
+    gen_myth_list = [r["myth"] for r in gen_myths.collect()]
 
     # myths (against full G nodes/edges; downstream set from the annotated
     # subgraph per process_myths.py:42)
@@ -256,17 +279,12 @@ def _build_graph_impl(edges0: DataFrame, concepts: DataFrame, root: str,
                else F.array().cast("array<string>"))
         return F.when(F.col("label") == root, arr)
 
-    # size-gated broadcast hints: in the small path several right sides
-    # are driver-built frames (LogicalRDD, unknown stats) that would
-    # otherwise plan as sort-merge joins with exchanges; above the
-    # threshold they keep the planner's choice
-    _b = F.broadcast if small else (lambda df: df)
     nodes_final = (nodes
-        .join(_b(solution_sources_df), "label", "left")
-        .join(_b(adapt.withColumnRenamed("effect", "label")), "label", "left")
-        .join(_b(myth_cat.withColumnRenamed("target", "label")), "label", "left")
-        .join(_b(myth_src.withColumnRenamed("myth", "label")), "label", "left")
-        .join(_b(causal), "label", "left")
+        .join(solution_sources_df, "label", "left")
+        .join(adapt.withColumnRenamed("effect", "label"), "label", "left")
+        .join(myth_cat.withColumnRenamed("target", "label"), "label", "left")
+        .join(myth_src.withColumnRenamed("myth", "label"), "label", "left")
+        .join(causal, "label", "left")
         .withColumn("mitigation_solutions", _root_list(mit_ranked))
         .withColumn("general_myths", _root_list(gen_myth_list)))
 

@@ -103,12 +103,3 @@ def rank_mitigations_local(mit_ids: list, dp_by_label: dict) -> list:
         return (0, -k, i)
 
     return sorted(mit_ids, key=key)
-
-
-def mitigation_list(edges_b: DataFrame, nodes: DataFrame,
-                    root: str = GREENHOUSE_EFFECT) -> list[str]:
-    """Driver-side ordered list for the ``mitigation solutions`` attribute of
-    the root node (``make_graph_class.py:499-503``).  Small by construction
-    (solution count), so collect is safe."""
-    ranked = rank_mitigations(mitigation_solutions(edges_b, root), nodes)
-    return [r.id for r in ranked.collect()]

@@ -24,7 +24,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..config import MYTH_ABOUT
-from ..functions.arrays import flatten_source_lists
+from ..functions.arrays import flatten_source_lists, flatten_source_lists_local
 
 MYTH_KEY = "myth"
 RISK_SOLUTION_KEY = "risk solution"
@@ -37,6 +37,11 @@ def myth_nodes(nodes: DataFrame) -> DataFrame:
         F.map_contains_key(F.col("super_class_membership"), MYTH_KEY))
 
 
+def has_key(node: dict, key: str) -> bool:
+    """``map_contains_key(super_class_membership, key)`` on a node dict."""
+    return key in (node.get("super_class_membership") or {})
+
+
 def myth_edges(edges_g: DataFrame, nodes: DataFrame) -> DataFrame:
     """(myth, target) pairs over is_a_myth_about out-edges of myth nodes."""
     myths = myth_nodes(nodes).select(F.col("label").alias("myth"))
@@ -45,21 +50,11 @@ def myth_edges(edges_g: DataFrame, nodes: DataFrame) -> DataFrame:
             .select(F.col("src").alias("myth"), F.col("dst").alias("target")))
 
 
-def _in_ids(col: str, ids: DataFrame | list):
-    """Literal membership in a driver-side id list (a plain filter, no join
-    against a stats-less local frame); None for a DataFrame id set."""
-    if not isinstance(ids, list):
-        return None
-    vals = sorted(set(ids))
-    return F.col(col).isin(vals) if vals else F.lit(False)
-
-
 def solution_and_impact_myths(edges_g: DataFrame, nodes: DataFrame,
-                              downstream_adaptation_ids: DataFrame | list
+                              downstream_adaptation_ids: DataFrame
                               ) -> DataFrame:
     """(target, solution_myths array, impact_myths array) — empty arrays where
-    a category doesn't apply but the other does.  The downstream-adaptation
-    id set is a DataFrame[id] or a driver-side list."""
+    a category doesn't apply but the other does."""
     me = myth_edges(edges_g, nodes)
     risk = nodes.filter(
         F.col("super_class_membership").isNotNull() &
@@ -69,15 +64,10 @@ def solution_and_impact_myths(edges_g: DataFrame, nodes: DataFrame,
     tagged = me.join(
         F.broadcast(risk.withColumn("_is_risk", F.lit(True))),
         "target", "left")
-    in_down = _in_ids("target", downstream_adaptation_ids)
-    if in_down is not None:
-        # the left join below yields True-or-null; so does when(isin)
-        tagged = tagged.withColumn("_is_down", F.when(in_down, F.lit(True)))
-    else:
-        down = downstream_adaptation_ids.select(
-            F.col(downstream_adaptation_ids.columns[0]).alias("target"))
-        tagged = tagged.join(down.withColumn("_is_down", F.lit(True)),
-                             "target", "left")
+    down = downstream_adaptation_ids.select(
+        F.col(downstream_adaptation_ids.columns[0]).alias("target"))
+    tagged = tagged.join(down.withColumn("_is_down", F.lit(True)),
+                         "target", "left")
     return (tagged.groupBy("target")
             .agg(
                 F.array_sort(F.collect_set(
@@ -87,18 +77,30 @@ def solution_and_impact_myths(edges_g: DataFrame, nodes: DataFrame,
             .filter((F.size("solution_myths") > 0) | (F.size("impact_myths") > 0)))
 
 
+def solution_and_impact_myths_local(g_rows: list, nodes: dict,
+                                    downstream_adaptation_ids) -> list:
+    """Driver twin of :func:`solution_and_impact_myths`
+    (``process_myths.py:27-50``) over G's (src, dst, type, ...) rows and
+    ``{label: node dict}``: (target, solution_myths, impact_myths) rows."""
+    down = set(downstream_adaptation_ids)
+    cats: dict = {}
+    for s, d, t, *_ in g_rows:
+        if t == MYTH_ABOUT and has_key(nodes[s], MYTH_KEY):
+            sol, imp = cats.setdefault(d, (set(), set()))
+            if has_key(nodes[d], RISK_SOLUTION_KEY):
+                sol.add(s)
+            if d in down:
+                imp.add(s)
+    return [(d, sorted(sol), sorted(imp)) for d, (sol, imp) in cats.items()
+            if sol or imp]
+
+
 def general_myths_ranked(edges_g: DataFrame, nodes: DataFrame,
-                         upstream_ids: DataFrame | list) -> DataFrame:
-    """O2 — (myth, myth_frequency) sorted by frequency desc, label asc.  The
-    upstream id set is a DataFrame[id] or a driver-side list."""
+                         upstream_ids: DataFrame) -> DataFrame:
+    """O2 — (myth, myth_frequency) sorted by frequency desc, label asc."""
     me = myth_edges(edges_g, nodes)
-    in_ups = _in_ids("target", upstream_ids)
-    if in_ups is not None:
-        general = me.filter(in_ups).select("myth").distinct()
-    else:
-        ups = upstream_ids.select(
-            F.col(upstream_ids.columns[0]).alias("target"))
-        general = me.join(ups, "target", "left_semi").select("myth").distinct()
+    ups = upstream_ids.select(F.col(upstream_ids.columns[0]).alias("target"))
+    general = me.join(ups, "target", "left_semi").select("myth").distinct()
     freq = nodes.select(
         F.col("label").alias("myth"),
         F.col("data_properties").getItem("myth_frequency").alias("myth_frequency"))
@@ -137,3 +139,10 @@ def myth_sources(nodes: DataFrame) -> DataFrame:
     return myth_nodes(nodes).select(
         F.col("label").alias("myth"),
         flatten_source_lists(F.col("properties")).alias("myth_sources"))
+
+
+def myth_sources_local(nodes: dict) -> list:
+    """Driver twin of :func:`myth_sources` (``process_myths.py:58-78``) over
+    ``{label: node dict}``."""
+    return [(lab, flatten_source_lists_local(n.get("properties")))
+            for lab, n in nodes.items() if has_key(n, MYTH_KEY)]

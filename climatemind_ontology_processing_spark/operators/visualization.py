@@ -31,7 +31,7 @@ from pyspark.sql import functions as F
 
 from ..config import CAUSES, GREENHOUSE_EFFECT
 from ..functions.arrays import any_truthy
-from .myths import RISK_SOLUTION_KEY, myth_nodes
+from .myths import MYTH_KEY, RISK_SOLUTION_KEY, has_key, myth_nodes
 from .traversal import (_MAX_ROUNDS, _adjacency, _reach_local, bfs_reachable,
                         bfs_reachable_tagged, induced_edges, typed_adjacency)
 
@@ -77,6 +77,24 @@ def annotate_cyto_nodes(nodes: DataFrame) -> DataFrame:
             F.when(is_pv, F.lit("personal-value")),
         ), lambda x: x.isNotNull())
     return nodes.withColumn("cyto_classes", cyto)
+
+
+def annotated_graph_local(nodes: dict, b_rows: list) -> tuple[dict, list]:
+    """Driver twin of :func:`annotated_graph` (``make_graph_class.py:
+    381-393``) plus the two cyto passes (``process_visualization.py:35-73``)
+    over ``{label: node dict}`` and B's (src, dst, type, properties) rows:
+    the myth-free nodes and edges, each with its ``cyto_classes``."""
+    kept = {lab: dict(n, cyto_classes=[c for c, on in (
+                ("risk-solution", has_key(n, RISK_SOLUTION_KEY)),
+                ("personal-value", any(v not in (None, 0)
+                                       for v in n["personal_values_10"])))
+                if on])
+            for lab, n in nodes.items() if not has_key(n, MYTH_KEY)}
+    risk = {lab for lab, n in kept.items() if has_key(n, RISK_SOLUTION_KEY)}
+    edges = [(s, d, t, p, ["solution-edge"] if s in risk or d in risk
+              else [] if p else ["edge-no-source"])
+             for s, d, t, p in b_rows if s in kept and d in kept]
+    return kept, edges
 
 
 def reverse_solution_edges(edges: DataFrame, adaptation_ids: DataFrame) -> DataFrame:

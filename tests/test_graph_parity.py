@@ -345,3 +345,149 @@ def test_distributed_arm_matches_small_arm(bundle, bundle_distributed):
             for r in dist.extras["general_myths"].collect()] == gen
     for key in ("upstream_ids", "mitigation_ids", "adaptations"):
         assert _rows(dist.extras[key]) == _rows(small.extras[key]), key
+    for name, sf, df in _frames(small, dist):
+        assert df.schema.simpleString() == sf.schema.simpleString(), name
+        assert _rows(df) == _rows(sf), name
+
+
+_FRAMES = ("nodes", "edges", "edges_b", "annotated_nodes", "annotated_edges",
+           "subgraph_nodes", "subgraph_edges")
+
+
+def _frames(small, dist):
+    """(name, small frame, distributed frame) for every bundle frame."""
+    for name in _FRAMES:
+        yield name, getattr(small, name), getattr(dist, name)
+    for key in small.extras:
+        yield f"extras[{key}]", small.extras[key], dist.extras[key]
+
+
+def _edge_case_graph(spark):
+    """A small graph rooted at GREENHOUSE_EFFECT holding what the golden
+    graph lacks: myths about a risk-solution, a downstream-adaptation and an
+    upstream target; a {1, -1} pv conflict and fractional pv values; a label
+    missing from the dictionary; a feedback-loop edge the G6 rule cuts;
+    invalid URLs on a causes edge; mitigation and adaptation solutions with
+    empty sources; a duplicate URL in a node's own list; duplicate
+    triples."""
+    from climatemind_ontology_processing_spark.config import (
+        CAUSES, GREENHOUSE_EFFECT, INHIBITS, MYTH_ABOUT)
+    from climatemind_ontology_processing_spark.sources.dictionary import (
+        concepts_df_from_rows)
+
+    root = GREENHOUSE_EFFECT
+    shared = ["http://shared.example.org/a", "not a url",
+              "http://trailing.example.org\r", "http://nbsp.example.org/a\xa0b"]
+    risk = {"risk solution": ["x"]}
+    myth = {"myth": ["x"]}
+
+    def c(label, classes=(), scm=None, props=None, dp=None):
+        return {"concept_id": label, "label": label, "iri": f"iri:{label}",
+                "comment": None, "direct_classes": list(classes),
+                "all_classes": list(classes), "super_class_membership":
+                scm or {}, "properties": props or {}, "data_properties": dp
+                or {}}
+
+    concepts = [
+        c(root, props={"dc_source": ["http://root.example.org/r"] + shared}),
+        c("human emissions", ["root cause linked to humans"],
+          props={"dc_source": ["http://dup.example.org/d"] * 2,
+                 "schema_mediaSource": ["http://m.example.org/1"]}),
+        c("melting permafrost", ["feedback loop"]),
+        c("renewable energy", scm=risk, dp={"CO2_eq_reduced": 5.0},
+          props={"schema_mediaSource": ["http://m.example.org/1",
+                                        "http://r.example.org/2"]}),
+        c("bike lanes", scm=risk, dp={"CO2_eq_reduced": 0.0}),
+        c("heat waves", dp={"benevolence_caring": 1.0,
+                            "benevolence_dependability": -1.0,
+                            "achievement": 1.7, "hedonism": -0.5,
+                            "conservative": -1.0},
+          props={"dc_source": shared + ["http://heat.example.org/h"]}),
+        c("cooling centers", scm=risk),
+        c("myth: renewables fail", scm=myth, dp={"myth_frequency": 2.0},
+          props={"dc_source": ["http://b.example.org/1"],
+                 "schema_academicBook": ["http://a.example.org/2",
+                                         "http://b.example.org/1"]}),
+        c("myth: heat is fine", scm=myth),
+        c("myth: no human cause", scm=myth, dp={"myth_frequency": 3.0}),
+        c("myth: unranked", scm=myth),
+    ]
+    edges = [
+        ("human emissions", CAUSES, root),
+        (root, CAUSES, "melting permafrost"),
+        ("melting permafrost", CAUSES, "human emissions"),   # G6 cut
+        ("human emissions", INHIBITS, "renewable energy"),
+        ("human emissions", INHIBITS, "bike lanes"),
+        (root, CAUSES, "heat waves"),
+        ("heat waves", INHIBITS, "cooling centers"),
+        ("heat waves", CAUSES, "unlisted effect"),           # not in the dictionary
+        ("myth: renewables fail", MYTH_ABOUT, "renewable energy"),
+        ("myth: heat is fine", MYTH_ABOUT, "heat waves"),
+        ("myth: no human cause", MYTH_ABOUT, "human emissions"),
+        ("myth: unranked", MYTH_ABOUT, "human emissions"),
+    ]
+    triples = spark.createDataFrame(
+        [(s, t, d) for s, t, d in edges + edges[:3]],
+        "subj string, pred string, obj string")
+    return triples, concepts_df_from_rows(spark, concepts)
+
+
+def test_edge_case_graph_same_on_both_arms(spark):
+    """Every bundle frame of the edge-case graph has identical rows and
+    schema on the small arm and the distributed arm, and the cases the
+    graph is built for are really hit."""
+    triples, concepts = _edge_case_graph(spark)
+    small = build_graph(triples, concepts)
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(trav, "SMALL_GRAPH_THRESHOLD", 0)
+        dist = build_graph(triples, concepts)
+    for name, sf, df in _frames(small, dist):
+        assert df.schema.simpleString() == sf.schema.simpleString(), name
+        assert _rows(df) == _rows(sf), name
+    assert dist.mitigation_ranked == small.mitigation_ranked == [
+        "renewable energy", "bike lanes"]
+
+    nodes = {r["label"]: r.asDict(recursive=True)
+             for r in small.nodes.collect()}
+    heat, lost = nodes["heat waves"], nodes["unlisted effect"]
+    assert heat["pv_conflicts"] == ["benevolence"]
+    assert heat["personal_values_10"][:4] == [1, None, None, 0]
+    assert heat["political_value"] == [-1, None]
+    # sorted, "not a url" dropped; the regex follows java.util.regex (ASCII
+    # \s, and $ before a final line terminator)
+    assert heat["causal_sources"] == [
+        "http://nbsp.example.org/a\xa0b", "http://shared.example.org/a",
+        "http://trailing.example.org\r"]
+    assert lost["concept_id"] is None and lost["pv_conflicts"] == []
+    assert nodes["renewable energy"]["solution_myths"] == [
+        "myth: renewables fail"]
+    assert heat["impact_myths"] == ["myth: heat is fine"]
+    assert nodes["cooling centers"]["solution_sources"] == []
+    assert nodes["bike lanes"]["solution_sources"] is None
+    assert nodes["myth: renewables fail"]["myth_sources"] == [
+        "http://b.example.org/1", "http://a.example.org/2"]
+    assert nodes["human emissions"]["properties"]["dc_source"] == [
+        "http://dup.example.org/d"] * 2
+    assert [tuple(r) for r in small.extras["general_myths"].collect()] == [
+        ("myth: no human cause", 3.0), ("myth: unranked", None)]
+    cut = ("melting permafrost", "human emissions")
+    assert cut in {(r.src, r.dst) for r in small.edges.collect()}
+    assert cut not in {(r.src, r.dst) for r in small.edges_b.collect()}
+
+
+def test_small_arm_runs_no_job_before_the_writes(spark, golden):
+    """The small arm of build_graph starts two Spark jobs: the size probe
+    and the collect of the concept dictionary.  Every annotation pass runs
+    on the driver, so nothing runs until the frames are written or
+    collected.  The triples sit in one partition, as in a one-file parquet
+    input: the probe's limit collect then scans in one job."""
+    sc = spark.sparkContext
+    triples, concepts = _golden_triples(spark, golden).coalesce(1), \
+        concepts_df(spark)
+    sc.setJobGroup("small-arm-jobs", "build_graph small arm")
+    try:
+        build_graph(triples, concepts)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert len(sc.statusTracker().getJobIdsForGroup("small-arm-jobs")) <= 2

@@ -146,6 +146,18 @@ def test_cc_chain_pointer_jumping_log_rounds(spark, force_distributed):
     assert set(got.values()) == {"n000"}
 
 
+def test_cc_raises_at_round_cap(spark, force_distributed):
+    """A 41-node chain needs more than one propagate+jump round: at
+    max_rounds=1 the distributed loop must raise, not return the partial
+    labelling (37 components)."""
+    rows = [(f"n{i:02d}", f"n{i + 1:02d}") for i in range(40)]
+    e = spark.createDataFrame(rows, "src string, dst string")
+    with pytest.raises(RuntimeError,
+                       match="connected_components did not converge "
+                             "within max_rounds=1"):
+        connected_components(e, max_rounds=1).collect()
+
+
 def test_cc_paths_agree(spark, force_distributed):
     e = spark.createDataFrame(
         [("a", "b"), ("b", "c"), ("d", "e"), ("f", "a")], "src string, dst string")
