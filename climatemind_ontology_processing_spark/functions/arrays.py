@@ -34,8 +34,7 @@ def flatten_source_lists_local(properties: dict | None,
 
 
 def sort_array_local(values) -> list:
-    """Driver twin of ``F.sort_array`` over strings: ascending, nulls
-    first."""
+    """Driver twin of ``F.sort_array`` over strings (nulls first)."""
     return sorted(values, key=lambda v: (v is not None, v or ""))
 
 
@@ -63,6 +62,13 @@ def compute_collapse(values: Column) -> Column:
             .when(has_neg, F.lit(-1))
             .when(has_one, F.lit(1))
             .otherwise(F.lit(0)))
+
+
+def compute_collapse_local(values: list) -> int | None:
+    """Driver twin of :func:`compute_collapse`."""
+    vals = {v for v in values if v is not None}
+    return None if not vals or {1, -1} <= vals else (
+        -1 if -1 in vals else int(1 in vals))
 
 
 def compute_conflict(values: Column) -> Column:

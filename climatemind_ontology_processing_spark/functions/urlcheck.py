@@ -28,13 +28,13 @@ URL_REGEX = (
 
 
 # URL_REGEX as java.util.regex reads it: ASCII \s, $ before a final EOL
-_URL_RE_JVM = re.compile(
+_URL_RE_JAVA = re.compile(
     URL_REGEX[:-1] + r"(?:\r\n|[\n\r\x85\u2028\u2029])?\Z", re.ASCII)
 
 
-def url_ok_jvm(url: str | None) -> bool:
+def is_valid_url_local(url: str | None) -> bool:
     """Driver twin of :func:`is_valid_url` (Spark's ``rlike``)."""
-    return url is not None and _URL_RE_JVM.match(url) is not None
+    return url is not None and _URL_RE_JAVA.match(url) is not None
 
 
 def is_valid_url(col: Column) -> Column:

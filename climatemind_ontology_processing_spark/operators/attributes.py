@@ -21,7 +21,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..config import PERSONAL_VALUES_10, PERSONAL_VALUES_19, POLITICAL_KEYS
-from ..functions.arrays import compute_collapse, compute_conflict
+from ..functions.arrays import (compute_collapse, compute_collapse_local,
+                               compute_conflict)
 
 
 def graph_nodes(edges: DataFrame) -> DataFrame:
@@ -91,13 +92,6 @@ def attach_attributes(edges: DataFrame, concepts: DataFrame) -> DataFrame:
     return with_personal_values(joined)
 
 
-def _collapse_local(values: list) -> int | None:
-    """Driver twin of :func:`compute_collapse`."""
-    vals = {v for v in values if v is not None}
-    return None if not vals or {1, -1} <= vals else (
-        -1 if -1 in vals else int(1 in vals))
-
-
 def attach_attributes_local(g_rows: list, concept_by_label: dict) -> dict:
     """Driver twin of :func:`attach_attributes` (``make_graph_class.py:93-304``)
     over G's (src, dst, type) rows and ``{label: concept row dict}``:
@@ -111,7 +105,7 @@ def attach_attributes_local(g_rows: list, concept_by_label: dict) -> dict:
         pv10, conflicts = [], []
         for slot, keys in PERSONAL_VALUES_10:
             vec = [v[k] for k in keys]
-            pv10.append(vec[0] if len(keys) == 1 else _collapse_local(vec))
+            pv10.append(vec[0] if len(keys) == 1 else compute_collapse_local(vec))
             if len(keys) > 1 and 1 in vec and -1 in vec:
                 conflicts.append(slot)
         n.update(personal_values_19=[v[k] for k in PERSONAL_VALUES_19],

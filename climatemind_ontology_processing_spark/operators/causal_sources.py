@@ -21,7 +21,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..config import CAUSES, SOURCE_TYPES
-from ..functions.urlcheck import filter_valid_urls, url_ok_jvm
+from ..functions.urlcheck import filter_valid_urls, is_valid_url_local
 
 
 def causal_sources(edges_with_props: DataFrame) -> DataFrame:
@@ -51,5 +51,5 @@ def causal_sources_local(edge_rows: list) -> list:
         if t == CAUSES and props:
             urls.setdefault(d, set()).update(
                 u for k in SOURCE_TYPES for u in props.get(k) or ())
-    return [(lab, [u for u in sorted(us - {None}) if url_ok_jvm(u)])
+    return [(lab, [u for u in sorted(us - {None}) if is_valid_url_local(u)])
             for lab, us in urls.items()]

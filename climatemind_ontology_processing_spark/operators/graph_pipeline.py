@@ -133,8 +133,8 @@ def _build_graph_local(g_rows: list[tuple], edge_schema, concepts: DataFrame,
         dp, ups_set)
     myth_cat = solution_and_impact_myths_local(
         edges, nodes, subs["downstream_adaptations"][0])
-    # A5: empty bags survive only for adaptation solutions (see the
-    # distributed arm)
+    # A5 (make_graph_class.py:506-513, 551-557): empty bags survive only
+    # for adaptation solutions
     flat = {lab: flatten_source_lists_local(nodes[lab]["properties"])
             for lab in set(mit_ids) | adapt_ids}
     # fold the annotations onto the nodes, incl. the two root-node lists

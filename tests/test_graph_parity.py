@@ -345,6 +345,7 @@ def test_distributed_arm_matches_small_arm(bundle, bundle_distributed):
             for r in dist.extras["general_myths"].collect()] == gen
     for key in ("upstream_ids", "mitigation_ids", "adaptations"):
         assert _rows(dist.extras[key]) == _rows(small.extras[key]), key
+    # every bundle frame, with the same schema on both arms
     for name, sf, df in _frames(small, dist):
         assert df.schema.simpleString() == sf.schema.simpleString(), name
         assert _rows(df) == _rows(sf), name
