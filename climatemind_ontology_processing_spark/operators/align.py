@@ -27,6 +27,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from .traversal import _checkpoint
+
 MICRO = 1_000_000
 
 
@@ -55,8 +57,8 @@ def align_entities(left: DataFrame, right: DataFrame,
     # each side feeds TWO arms (the holders census and the candidate
     # join); materialize once so a multi-join upstream fact plan is not
     # re-executed per arm (same reuse-counting as rules.mine_chain_rules)
-    l = _facts(left, subj, pred, obj).localCheckpoint(eager=True)
-    r = _facts(right, subj, pred, obj).localCheckpoint(eager=True)
+    l = _checkpoint(_facts(left, subj, pred, obj))
+    r = _checkpoint(_facts(right, subj, pred, obj))
     weights = (l.unionByName(r)
                .groupBy("pred", "obj")
                .agg(F.countDistinct("subj").cast("long").alias("_nh"))

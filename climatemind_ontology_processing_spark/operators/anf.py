@@ -37,6 +37,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .sketch import _HASH_BITS, _alpha, hll_reg_rho
+from .traversal import _checkpoint
 
 
 def _ball_summary(state: DataFrame, p: int, step: int) -> DataFrame:
@@ -149,11 +150,11 @@ def hyperball(edges: DataFrame, rounds: int = 3, p: int = 6,
         return _hyperball_local(edges.sparkSession, probe, rounds, p,
                                 pre.schema["c"].dataType.simpleString())
 
-    e = sel.localCheckpoint(eager=True)
+    e = _checkpoint(sel)
     nodes = (e.select(F.col("c").alias("id"))
              .unionByName(e.select(F.col("n").alias("id"))).distinct())
-    state = (nodes.select("id", reg.alias("register"), rho.alias("rho"))
-             .localCheckpoint(eager=True))
+    state = _checkpoint(nodes.select("id", reg.alias("register"),
+                                     rho.alias("rho")))
     out = _ball_summary(state, p, 0)
     for t in range(1, rounds + 1):
         prop = (e.join(state.withColumnRenamed("id", "n"), "n")
@@ -162,7 +163,7 @@ def hyperball(edges: DataFrame, rounds: int = 3, p: int = 6,
                  .groupBy("id", "register")
                  .agg(F.max("rho").alias("rho")))
         if t % checkpoint_every == 0 or t == rounds:
-            state = state.localCheckpoint(eager=True)
+            state = _checkpoint(state)
         out = out.unionByName(_ball_summary(state, p, t))
     return out
 
@@ -196,10 +197,10 @@ def exact_neighborhood_function(edges: DataFrame, rounds: int,
     twin used to validate hyperball estimates (O(V·E) worst case; do NOT
     run at web scale, that is the entire point of the sketch).  Returns
     (id, step, n_ball)."""
-    e = (edges.select(F.col(src).alias("c"), F.col(dst).alias("n"))
-         .filter(F.col("c").isNotNull() & F.col("n").isNotNull())
-         .filter(F.col("c") != F.col("n"))
-         .distinct().localCheckpoint(eager=True))
+    e = _checkpoint(edges.select(F.col(src).alias("c"), F.col(dst).alias("n"))
+                    .filter(F.col("c").isNotNull() & F.col("n").isNotNull())
+                    .filter(F.col("c") != F.col("n"))
+                    .distinct())
     nodes = (e.select(F.col("c").alias("id"))
              .unionByName(e.select(F.col("n").alias("id"))).distinct())
     ball = nodes.select("id", F.col("id").alias("member"))
@@ -208,8 +209,7 @@ def exact_neighborhood_function(edges: DataFrame, rounds: int,
     for t in range(1, rounds + 1):
         grown = (e.join(ball.withColumnRenamed("id", "n"), "n")
                  .select(F.col("c").alias("id"), "member"))
-        ball = (ball.unionByName(grown).distinct()
-                .localCheckpoint(eager=True))
+        ball = _checkpoint(ball.unionByName(grown).distinct())
         out = out.unionByName(
             ball.groupBy("id").agg(F.count("*").cast("long")
                                    .alias("n_ball"))

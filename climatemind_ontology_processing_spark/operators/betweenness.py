@@ -35,7 +35,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .traversal import _checkpoint
+from .traversal import _checkpoint, _fixpoint
 
 # sigma <= 2^20 keeps sigma * (1e6 + delta) far below 2^63 even with
 # delta ~ n * 1e6 for millions of reachable pairs
@@ -61,14 +61,11 @@ def _betweenness_local(spark, sym_rows, sources, num_sources, max_rounds, ty):
         srcs = sorted({r[0] for r in sources.collect()})
 
     # forward: level-synchronous BFS with path counts
-    dist: dict = {}
-    sigma: dict = {}
-    for s in srcs:
-        dist[(s, s)] = 0
-        sigma[(s, s)] = 1
-    frontier = [(s, s) for s in srcs]
-    level, converged = 0, False
-    for _ in range(max_rounds):
+    dist = {(s, s): 0 for s in srcs}
+    sigma = {(s, s): 1 for s in srcs}
+
+    def step(state):
+        frontier, level = state
         acc: dict = {}
         for s, v in frontier:
             sv = sigma[(s, v)]
@@ -76,16 +73,14 @@ def _betweenness_local(spark, sym_rows, sources, num_sources, max_rounds, ty):
                 if (s, b) not in dist:
                     acc[(s, b)] = acc.get((s, b), 0) + sv
         if not acc:
-            converged = True
-            break
+            return state, True
         for k, sg in acc.items():
             dist[k] = level + 1
             sigma[k] = sg
-        frontier, level = list(acc), level + 1
-    if not converged:
-        raise RuntimeError(
-            f"sampled_betweenness forward BFS did not exhaust within "
-            f"max_rounds={max_rounds} — raise max_rounds")
+        return (list(acc), level + 1), False
+
+    _, level = _fixpoint((list(dist), 0), step, max_rounds,
+                         "sampled_betweenness")
     max_sigma = max(sigma.values(), default=0)
     if max_sigma > SIGMA_EXACT_MAX:
         raise ValueError(
@@ -163,24 +158,22 @@ def sampled_betweenness(edges: DataFrame, num_sources: int = 8,
     assigned = _checkpoint(sources.select(
         F.col("id").alias("s"), F.col("id").alias("v"),
         F.lit(0).alias("dist"), F.lit(1).cast("long").alias("sigma")))
-    frontier, level, converged = assigned, 0, False
-    for _ in range(max_rounds):
-        nxt = (frontier.join(e, frontier["v"] == e["a"])
-               .select("s", F.col("b").alias("v"), "sigma")
-               .join(assigned.select("s", "v"), ["s", "v"], "left_anti")
-               .groupBy("s", "v").agg(F.sum("sigma").alias("sigma"))
-               .withColumn("dist", F.lit(level + 1))
-               .select("s", "v", "dist", "sigma"))
-        nxt = _checkpoint(nxt)
+
+    def step(state):
+        assigned, frontier, level = state
+        nxt = _checkpoint(
+            frontier.join(e, frontier["v"] == e["a"])
+            .select("s", F.col("b").alias("v"), "sigma")
+            .join(assigned.select("s", "v"), ["s", "v"], "left_anti")
+            .groupBy("s", "v").agg(F.sum("sigma").alias("sigma"))
+            .withColumn("dist", F.lit(level + 1))
+            .select("s", "v", "dist", "sigma"))
         if nxt.isEmpty():
-            converged = True
-            break
-        assigned = _checkpoint(assigned.unionByName(nxt))
-        frontier, level = nxt, level + 1
-    if not converged:
-        raise RuntimeError(
-            f"sampled_betweenness forward BFS did not exhaust within "
-            f"max_rounds={max_rounds} — raise max_rounds")
+            return state, True
+        return (_checkpoint(assigned.unionByName(nxt)), nxt, level + 1), False
+
+    assigned, _, level = _fixpoint((assigned, assigned, 0), step, max_rounds,
+                                   "sampled_betweenness")
     max_sigma = assigned.agg(F.max("sigma")).collect()[0][0] or 0
     if max_sigma > SIGMA_EXACT_MAX:
         raise ValueError(

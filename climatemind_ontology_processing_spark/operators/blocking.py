@@ -35,6 +35,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from .traversal import _checkpoint
+
 
 def snm_ranks(records: DataFrame, key_col: str, id_col: str,
               bucket_expr) -> DataFrame:
@@ -64,8 +66,7 @@ def snm_pairs(records: DataFrame, key_col: str, id_col: str,
         raise ValueError("window must be >= 2")
     if bucket_expr is None:
         bucket_expr = F.substring(F.col(key_col).cast("string"), 1, 1)
-    ranks = snm_ranks(records, key_col, id_col, bucket_expr) \
-        .localCheckpoint(eager=True)
+    ranks = _checkpoint(snm_ranks(records, key_col, id_col, bucket_expr))
     wd = window - 1
     a = ranks.select(F.col("id").alias("a_id"), F.col("rank").alias("ra"),
                      (F.col("rank") / wd).cast("long").alias("blk"))

@@ -52,7 +52,7 @@ def connected_components(edges: DataFrame, src: str = "src", dst: str = "dst",
     """
     from ..config import DEFAULT_SALT_BUCKETS
     from .skew import salted_agg
-    from .traversal import _cap_error, small_rows
+    from .traversal import _changed, _checkpoint, _fixpoint, small_rows
 
     buckets = DEFAULT_SALT_BUCKETS if salt_buckets is None else salt_buckets
 
@@ -82,18 +82,18 @@ def connected_components(edges: DataFrame, src: str = "src", dst: str = "dst",
         return edges.sparkSession.createDataFrame(
             rows, f"id {t}, component {t}")
     # undirected
-    sym = e.unionByName(e.select(F.col("b").alias("a"), F.col("a").alias("b"))) \
-           .distinct().localCheckpoint(eager=True)
+    sym = _checkpoint(e.unionByName(e.select(F.col("b").alias("a"),
+                                             F.col("a").alias("b")))
+                      .distinct())
 
     # parent[u] = min(u, min neighbor)  (initial approximation)
     parent = (sym.groupBy("a").agg(F.least(F.min("b"), F.first("a")).alias("p"))
               .select(F.col("a").alias("id"), F.col("p").alias("comp")))
     nodes = sym.select(F.col("a").alias("id")).distinct()
-    parent = (nodes.join(parent, "id", "left")
-              .select("id", F.coalesce("comp", "id").alias("comp"))
-              .localCheckpoint(eager=True))
+    parent = _checkpoint(nodes.join(parent, "id", "left")
+                         .select("id", F.coalesce("comp", "id").alias("comp")))
 
-    for _ in range(max_rounds):
+    def step(parent):
         # propagate: comp[u] <- min(comp[u], min over neighbors of comp[v])
         joined = sym.join(parent.withColumnRenamed("id", "b"), "b")
         if salted:
@@ -115,14 +115,10 @@ def connected_components(edges: DataFrame, src: str = "src", dst: str = "dst",
                         F.least(F.col("x.comp"),
                                 F.coalesce(F.col("y.comp"),
                                            F.col("x.comp"))).alias("comp")))
-        jump = jump.localCheckpoint(eager=True)
-        changed = (jump.join(parent.withColumnRenamed("comp", "old"), "id")
-                   .filter(F.col("comp") != F.col("old")))
-        parent = jump
-        if changed.isEmpty():
-            break
-    else:  # labels still moved in the last round
-        raise _cap_error("connected_components", max_rounds)
+        jump = _checkpoint(jump)
+        return jump, _changed(jump, parent, ["id"]).isEmpty()
+
+    parent = _fixpoint(parent, step, max_rounds, "connected_components")
     return parent.select(F.col("id"), F.col("comp").alias("component"))
 
 

@@ -31,6 +31,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .graphstats import undirected_canonical
+from .traversal import _checkpoint, _fixpoint
 
 
 def jp_coloring(edges: DataFrame, src: str = "src", dst: str = "dst",
@@ -39,24 +40,19 @@ def jp_coloring(edges: DataFrame, src: str = "src", dst: str = "dst",
     at least one edge; ``color`` is the 0-based greedy mex, ``jp_round``
     the round the node was selected (1-based)."""
     e = undirected_canonical(edges, src, dst)
-    sym = (e.select(F.col("lo").alias("id"), F.col("hi").alias("nbr"))
-           .unionByName(e.select(F.col("hi").alias("id"),
-                                 F.col("lo").alias("nbr")))
-           .localCheckpoint(eager=True))
+    sym = _checkpoint(
+        e.select(F.col("lo").alias("id"), F.col("hi").alias("nbr"))
+        .unionByName(e.select(F.col("hi").alias("id"),
+                              F.col("lo").alias("nbr"))))
     pri_col = F.conv(F.substring(F.md5(F.concat_ws(
         "|", F.lit(seed), F.col("id").cast("string"))), 1, 15), 16, 10) \
         .cast("long")
-    pri = (sym.select("id").distinct()
-           .select("id", pri_col.alias("h"))
-           .localCheckpoint(eager=True))
-    uncolored = pri.select("id").localCheckpoint(eager=True)
-    # empty-input-safe zero-row frame with the output schema
-    colored = None
-    empty = pri.select("id", F.lit(0).cast("long").alias("color"),
-                       F.lit(0).alias("jp_round")).limit(0)
-    for r in range(1, max_rounds + 1):
-        if uncolored.isEmpty():
-            return colored if colored is not None else empty
+    pri = _checkpoint(sym.select("id").distinct()
+                      .select("id", pri_col.alias("h")))
+
+    def step(state):
+        r, uncolored, colored = state
+        r += 1
         upri = pri.join(uncolored, "id", "left_semi")
         live_sym = (sym.join(uncolored, "id", "left_semi")
                     .join(uncolored.withColumnRenamed("id", "nbr"), "nbr",
@@ -67,11 +63,11 @@ def jp_coloring(edges: DataFrame, src: str = "src", dst: str = "dst",
                     .groupBy("id")
                     .agg(F.min(F.struct(F.col("nh"), F.col("nbr")))
                          .alias("_b")))
-        winners = (upri.join(nbr_best, "id", "left")
-                   .filter(F.col("_b").isNull()
-                           | (F.struct(F.col("h"), F.col("id"))
-                              < F.col("_b")))
-                   .select("id").localCheckpoint(eager=True))
+        winners = _checkpoint(
+            upri.join(nbr_best, "id", "left")
+            .filter(F.col("_b").isNull()
+                    | (F.struct(F.col("h"), F.col("id")) < F.col("_b")))
+            .select("id"))
         if colored is None:
             taken = winners.select(
                 "id", F.array().cast("array<long>").alias("cols"))
@@ -93,10 +89,10 @@ def jp_coloring(edges: DataFrame, src: str = "src", dst: str = "dst",
                                 F.lit(r).alias("jp_round"))
         # one checkpoint per round on the accumulator (assigned folds into
         # it; a separate checkpoint would just double the actions)
-        colored = assigned.localCheckpoint(eager=True) if colored is None \
-            else colored.unionByName(assigned).localCheckpoint(eager=True)
-        uncolored = uncolored.join(winners, "id", "left_anti") \
-            .localCheckpoint(eager=True)
-    raise RuntimeError(
-        f"jp_coloring did not color every node within max_rounds="
-        f"{max_rounds} — raise max_rounds")
+        colored = _checkpoint(assigned if colored is None
+                              else colored.unionByName(assigned))
+        uncolored = _checkpoint(uncolored.join(winners, "id", "left_anti"))
+        return (r, uncolored, colored), uncolored.isEmpty()
+
+    uncolored = _checkpoint(pri.select("id"))
+    return _fixpoint((0, uncolored, None), step, max_rounds, "jp_coloring")[2]

@@ -28,6 +28,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .dedup import let_bound, shingle_hashes
+from .traversal import _checkpoint
 
 # the one shingling expression, imported from dedup so decontamination and
 # the dedup suite can never silently diverge on tokenization or hashing
@@ -159,8 +160,7 @@ def bpe_train(docs: DataFrame, text_col: str = "text",
     syms = F.concat(
         F.transform(F.split(F.col("w"), ""), lambda c: c),
         F.array(F.lit(end_marker)))
-    vocab = words.select(F.col("freq"), syms.alias("s")) \
-        .localCheckpoint(eager=True)
+    vocab = _checkpoint(words.select(F.col("freq"), syms.alias("s")))
 
     merges: list[tuple[str, str]] = []
     for _ in range(n_merges):
@@ -207,8 +207,7 @@ def bpe_train(docs: DataFrame, text_col: str = "text",
                 F.concat(acc.getField("out"), F.array(x)).alias("out"),
                 F.lit(False).alias("fresh"))),
             lambda acc: acc.getField("out"))
-        vocab = vocab.select("freq", merged.alias("s")) \
-            .localCheckpoint(eager=True)
+        vocab = _checkpoint(vocab.select("freq", merged.alias("s")))
     return merges
 
 

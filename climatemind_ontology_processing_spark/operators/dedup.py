@@ -16,6 +16,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from .traversal import _checkpoint
+
 
 # ---------------------------------------------------------------------------
 # A1 — exact triple dedup (make_network.py:44)
@@ -244,10 +246,10 @@ def _shingled_checkpointed(docs: DataFrame, id_col: str, text_col: str,
     """(doc, shingles) with non-empty shingle sets, eagerly materialized —
     shared by candidate generation AND exact verification so the corpus is
     shingled exactly once per near-dup run."""
-    return (with_shingles(docs, text_col, n, hash_family=hash_family)
-            .filter(F.size("shingles") > 0)
-            .select(F.col(id_col).alias("doc"), "shingles")
-            .localCheckpoint(eager=True))
+    return _checkpoint(
+        with_shingles(docs, text_col, n, hash_family=hash_family)
+        .filter(F.size("shingles") > 0)
+        .select(F.col(id_col).alias("doc"), "shingles"))
 
 
 def _lsh_bucket_table(shingled, num_hashes: int, bands: int):
@@ -261,9 +263,8 @@ def _lsh_bucket_table(shingled, num_hashes: int, bands: int):
     4.1 behavior; the two-step shape keeps the UDF in a canonical
     Project-over-RDD the planner always extracts into ArrowEvalPython)."""
     rows = num_hashes // bands
-    sigs = shingled.select(
-        "doc", minhash_signature(F.col("shingles"), num_hashes).alias("sig")) \
-        .localCheckpoint(eager=True)
+    sigs = _checkpoint(shingled.select(
+        "doc", minhash_signature(F.col("shingles"), num_hashes).alias("sig")))
     return sigs.select(
         "doc",
         F.explode(F.array(*[
@@ -768,7 +769,7 @@ def duplicate_spans(docs: DataFrame, id_col: str = "doc_id",
     # the window-hash table feeds both the occurrence census and the
     # duplicated-window semi-join; materialize once so the corpus is
     # tokenized and window-hashed exactly once per run
-    wh = wh.localCheckpoint(eager=True)
+    wh = _checkpoint(wh)
     hot = (wh.groupBy("h").agg(F.count("*").alias("_c"))
            .filter(F.col("_c") >= min_count).select("h"))
     dup = wh.join(hot, "h", "left_semi").select(id_col, "start")
@@ -877,9 +878,8 @@ def ppjoin_pairs(docs: DataFrame, id_col: str = "doc_id",
     # and verification is one array_intersect per candidate pair instead
     # of a two-join row expansion + count + two size joins (guide §2.3:
     # shuffle candidate ids, not candidate-x-shingle rows).
-    sh = (with_shingles(docs, text_col, n, hash_family=hash_family)
-          .select(F.col(id_col).alias("doc"), F.col("shingles"))
-          .localCheckpoint(eager=True))
+    sh = _checkpoint(with_shingles(docs, text_col, n, hash_family=hash_family)
+                     .select(F.col(id_col).alias("doc"), F.col("shingles")))
     ex = sh.select("doc", F.explode("shingles").alias("s"))
     dfreq = ex.groupBy("s").agg(F.count("*").alias("_df"))
     # sz from a count(*) window over the SAME doc partitioning the rank

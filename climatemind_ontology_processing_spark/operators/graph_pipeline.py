@@ -42,7 +42,7 @@ from .mitigation import (mitigation_solutions, mitigations_local,
 from .myths import (general_myths_ranked, general_myths_ranked_local,
                     myth_sources, myth_sources_local, solution_and_impact_myths,
                     solution_and_impact_myths_local)
-from .traversal import small_rows
+from .traversal import _checkpoint, small_rows
 from .visualization import (annotate_cyto_edges, annotate_cyto_nodes,
                             annotated_graph, annotated_graph_local,
                             build_subgraphs, subgraph_tables, subgraphs_local)
@@ -204,37 +204,34 @@ def _build_graph_local(g_rows: list[tuple], edge_schema, concepts: DataFrame,
 def _build_graph_impl(edges0: DataFrame, concepts: DataFrame,
                       root: str) -> GraphBundle:
     """The distributed arm: every pass as DataFrame plans."""
-    def _ckpt(df: DataFrame) -> DataFrame:
-        return df.localCheckpoint(eager=True)
-
     # J1 + A3 (checkpointed: both set_edge_properties and
     # remove_edge_properties_from_nodes consume nodes0 — one attach
     # execution instead of two, and their stage jobs stop re-broadcasting
     # the concepts dictionary)
-    nodes0 = _ckpt(attach_attributes(edges0, concepts))
+    nodes0 = _checkpoint(attach_attributes(edges0, concepts))
 
     # J2 / A7 / U1-U3  (eager checkpoint: lazy localCheckpoint under AQE can
     # lose attribute bindings — observed "key not found: src#N" in Spark 4.1)
-    edges = _ckpt(set_edge_properties(edges0, nodes0))
-    nodes = _ckpt(remove_edge_properties_from_nodes(nodes0, edges))
+    edges = _checkpoint(set_edge_properties(edges0, nodes0))
+    nodes = _checkpoint(remove_edge_properties_from_nodes(nodes0, edges))
 
     # G6 (checkpointed: the traversal loops below self-union this plan, and
     # deep self-unions under AQE hit the same attribute-binding bug)
-    edges_b = _ckpt(make_acyclic(edges, nodes))
+    edges_b = _checkpoint(make_acyclic(edges, nodes))
 
     # annotated graph + cyto (checkpointed: the 25-subgraph fan-out
     # references these plans ~25x each — without truncation every
     # induced-edge branch would recompute the whole upstream pipeline)
     a_nodes, a_edges = annotated_graph(nodes, edges_b)
-    a_nodes = _ckpt(annotate_cyto_nodes(a_nodes))
-    a_edges = _ckpt(annotate_cyto_edges(a_edges, a_nodes))
+    a_nodes = _checkpoint(annotate_cyto_nodes(a_nodes))
+    a_edges = _checkpoint(annotate_cyto_edges(a_edges, a_nodes))
 
     # G3/G7/O1
-    ups = _ckpt(upstream_nodes(edges_b, root))
-    mit = _ckpt(mitigation_solutions(edges_b, root, ups=ups))
+    ups = _checkpoint(upstream_nodes(edges_b, root))
+    mit = _checkpoint(mitigation_solutions(edges_b, root, ups=ups))
     mit_ranked = [r.id for r in rank_mitigations(mit, nodes).collect()]
     # G4/G5/G8 — inhibit neighbors from PRE-cut G, paths from B
-    adapt = _ckpt(adaptation_solutions(edges, edges_b, root))
+    adapt = _checkpoint(adaptation_solutions(edges, edges_b, root))
     adapt_ids = total_adaptation_nodes(adapt)
 
     # Solution sources (A5) for mitigation + adaptation solution nodes.

@@ -18,6 +18,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from .traversal import _changed, _checkpoint, _fixpoint
+
 
 def undirected_canonical(edges: DataFrame, src: str = "src",
                          dst: str = "dst") -> DataFrame:
@@ -80,7 +82,7 @@ def adamic_adar(edges: DataFrame, src: str = "src", dst: str = "dst",
     # halves and the final anti-join; without this the upstream edge
     # derivation (often a multi-join pipeline) replays three times and the
     # self-join degenerates to SortMergeJoin on unknown-size inputs
-    e = undirected_canonical(edges, src, dst).localCheckpoint(eager=True)
+    e = _checkpoint(undirected_canonical(edges, src, dst))
     sym = (e.select(F.col("lo").alias("w"), F.col("hi").alias("n"))
            .unionByName(
                e.select(F.col("hi").alias("w"), F.col("lo").alias("n"))))
@@ -125,29 +127,21 @@ def k_core(edges: DataFrame, k: int, src: str = "src",
     bounded by the peel depth (<= max degree, typically tiny)."""
     if k < 1:
         raise ValueError("k must be >= 1")
-    e = (undirected_canonical(edges, src, dst)
-         .select(F.col("lo").alias("a"), F.col("hi").alias("b"))
-         .localCheckpoint(eager=True))
-    n_edges = e.count()
-    converged = False
-    for _ in range(max_rounds):
+    def step(state):
+        e, n_edges = state
         deg = (e.select(F.col("a").alias("id"))
                .unionByName(e.select(F.col("b").alias("id")))
                .groupBy("id").agg(F.count("*").alias("deg")))
         keep = deg.filter(F.col("deg") >= k).select("id")
-        pruned = (e.join(keep.withColumnRenamed("id", "a"), "a", "left_semi")
-                  .join(keep.withColumnRenamed("id", "b"), "b", "left_semi")
-                  .localCheckpoint(eager=True))
+        pruned = _checkpoint(
+            e.join(keep.withColumnRenamed("id", "a"), "a", "left_semi")
+            .join(keep.withColumnRenamed("id", "b"), "b", "left_semi"))
         n_pruned = pruned.count()       # one count/round: n_edges is known
-        e = pruned
-        if n_pruned == n_edges:
-            converged = True
-            break
-        n_edges = n_pruned
-    if not converged:
-        # an unfinished peel would be returned as "the k-core" silently
-        raise RuntimeError(
-            f"k_core did not reach a fixpoint within max_rounds={max_rounds}")
+        return (pruned, n_pruned), n_pruned == n_edges
+
+    e = _checkpoint(undirected_canonical(edges, src, dst)
+                    .select(F.col("lo").alias("a"), F.col("hi").alias("b")))
+    e, _ = _fixpoint((e, e.count()), step, max_rounds, "k_core")
     return (e.select(F.col("a").alias("id"))
             .unionByName(e.select(F.col("b").alias("id")))
             .distinct())
@@ -160,7 +154,7 @@ def clustering_coefficients(edges: DataFrame, src: str = "src",
     BIGINT, same convention as the other scored operators).  Nodes of
     degree < 2 score 0.  Composes ``triangle_counts`` with the undirected
     degree aggregation — one extra keys-only join."""
-    e = undirected_canonical(edges, src, dst).localCheckpoint(eager=True)
+    e = _checkpoint(undirected_canonical(edges, src, dst))
     deg = (e.select(F.col("lo").alias("id"))
            .unionByName(e.select(F.col("hi").alias("id")))
            .groupBy("id").agg(F.count("*").alias("degree")))
@@ -194,7 +188,7 @@ def degree_assortativity(edges: DataFrame, src: str = "src",
     overflowing (ANSI mode would throw mid-query; non-ANSI would silently
     wrap).  For hub-degree graphs beyond the bound, cap or sample degrees
     upstream — a 10^6-degree hub dominates the correlation anyway."""
-    e = undirected_canonical(edges, src, dst).localCheckpoint(eager=True)
+    e = _checkpoint(undirected_canonical(edges, src, dst))
     sym = (e.select(F.col("lo").alias("u"), F.col("hi").alias("v"))
            .unionByName(e.select(F.col("hi").alias("u"),
                                  F.col("lo").alias("v"))))
@@ -291,19 +285,20 @@ def label_propagation(edges: DataFrame, src: str = "src", dst: str = "dst",
             return edges.sparkSession.createDataFrame(
                 sorted(lab.items()), f"id {ty}, community {ty}")
 
-    und = e.unionByName(e.select(F.col("b").alias("a"),
-                                 F.col("a").alias("b"))).distinct() \
-        .localCheckpoint(eager=True)
+    und = _checkpoint(e.unionByName(e.select(F.col("b").alias("a"),
+                                             F.col("a").alias("b")))
+                      .distinct())
     labels = und.select(F.col("a").alias("id")).distinct() \
         .withColumn("lab", F.col("id"))
     for _ in range(rounds):
         votes = (und.join(labels.select(F.col("id").alias("b"), "lab"), "b")
                  .groupBy(F.col("a").alias("id"), "lab")
                  .agg(F.count("*").alias("c")))
-        labels = (votes.groupBy("id")
-                  .agg(F.min_by("lab", F.struct((-F.col("c")).alias("nc"),
-                                                F.col("lab").alias("l")))
-                        .alias("lab"))).localCheckpoint(eager=True)
+        labels = _checkpoint(
+            votes.groupBy("id")
+            .agg(F.min_by("lab", F.struct((-F.col("c")).alias("nc"),
+                                          F.col("lab").alias("l")))
+                 .alias("lab")))
     return labels.select("id", F.col("lab").alias("community"))
 
 
@@ -327,12 +322,12 @@ def hits(edges: DataFrame, rounds: int = 3, src: str = "src",
     """
     if rounds < 1:
         raise ValueError("rounds must be >= 1")
-    e = (edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-         .filter(F.col("u").isNotNull() & F.col("v").isNotNull())
-         .distinct().localCheckpoint(eager=True))
-    nodes = (e.select(F.col("u").alias("id"))
-             .unionByName(e.select(F.col("v").alias("id")))
-             .distinct().localCheckpoint(eager=True))
+    e = _checkpoint(edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
+                    .filter(F.col("u").isNotNull() & F.col("v").isNotNull())
+                    .distinct())
+    nodes = _checkpoint(e.select(F.col("u").alias("id"))
+                        .unionByName(e.select(F.col("v").alias("id")))
+                        .distinct())
     state = nodes.select("id", F.lit(1.0).alias("auth"),
                          F.lit(1.0).alias("hub"))
 
@@ -361,7 +356,7 @@ def hits(edges: DataFrame, rounds: int = 3, src: str = "src",
             .select("id", "auth", F.coalesce("hub", F.lit(0.0)).alias("hub")),
             "hub")
         if (i + 1) % checkpoint_every == 0 or i == rounds - 1:
-            state = state.localCheckpoint(eager=True)
+            state = _checkpoint(state)
     return state.select("id", F.col("auth").alias("authority"), "hub")
 
 
@@ -387,18 +382,18 @@ def neighborhood_mean(edges: DataFrame, rounds: int = 2,
         raise ValueError("rounds must be >= 1")
     e = (edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
          .filter(F.col("a") != F.col("b")))
-    und = e.unionByName(e.select(F.col("b").alias("a"),
-                                 F.col("a").alias("b"))).distinct() \
-        .localCheckpoint(eager=True)
+    und = _checkpoint(e.unionByName(e.select(F.col("b").alias("a"),
+                                             F.col("a").alias("b")))
+                      .distinct())
     init = (feature_col if feature_col is not None
             else (F.col("id") % 97).cast("long") * F.lit(1_000_000))
     feats = und.select(F.col("a").alias("id")).distinct() \
         .select("id", init.alias("f"))
     for _ in range(rounds):
-        feats = (und.join(feats.select(F.col("id").alias("b"), "f"), "b")
-                 .groupBy(F.col("a").alias("id"))
-                 .agg(F.expr("sum(f) DIV count(*)").alias("f"))
-                 .localCheckpoint(eager=True))
+        feats = _checkpoint(
+            und.join(feats.select(F.col("id").alias("b"), "f"), "b")
+            .groupBy(F.col("a").alias("id"))
+            .agg(F.expr("sum(f) DIV count(*)").alias("f")))
     return feats.select("id", F.col("f").alias("f_micro"))
 
 
@@ -426,9 +421,9 @@ def random_walks(edges: DataFrame, length: int = 4, src: str = "src",
         raise ValueError("length must be >= 1")
     if hash_family not in ("md5_60", "xxhash64"):
         raise ValueError(f"unknown hash_family {hash_family!r}")
-    e = (edges.select(F.col(src).alias("c"), F.col(dst).alias("n"))
-         .filter(F.col("c").isNotNull() & F.col("n").isNotNull())
-         .distinct().localCheckpoint(eager=True))
+    e = _checkpoint(edges.select(F.col(src).alias("c"), F.col(dst).alias("n"))
+                    .filter(F.col("c").isNotNull() & F.col("n").isNotNull())
+                    .distinct())
 
     def h(step: int):
         # evaluated on the (frontier x out-edge) join, where the current
@@ -444,12 +439,12 @@ def random_walks(edges: DataFrame, length: int = 4, src: str = "src",
         .select("start", F.col("start").alias("node"))
     out = cur.select("start", F.lit(0).alias("step"), "node")
     for t in range(1, length + 1):
-        nxt = (cur.join(e.withColumnRenamed("c", "node"), "node")
-               .groupBy("start")
-               .agg(F.min_by("n", F.struct(h(t).alias("h"),
-                                           F.col("n").alias("n")))
-                     .alias("node"))
-               .localCheckpoint(eager=True))
+        nxt = _checkpoint(
+            cur.join(e.withColumnRenamed("c", "node"), "node")
+            .groupBy("start")
+            .agg(F.min_by("n", F.struct(h(t).alias("h"),
+                                        F.col("n").alias("n")))
+                 .alias("node")))
         out = out.unionByName(
             nxt.select("start", F.lit(t).alias("step"), "node"))
         cur = nxt
@@ -474,12 +469,10 @@ def k_truss(edges: DataFrame, k: int, src: str = "src", dst: str = "dst",
     """
     if k < 2:
         raise ValueError("k must be >= 2")
-    e = undirected_canonical(edges, src, dst).localCheckpoint(eager=True)
-    n_prev = e.count()
     need = k - 2
-    for _ in range(max_rounds):
-        if n_prev == 0:
-            return e
+
+    def step(state):
+        e, n_prev = state
         tri = (e.alias("x")
                .join(e.alias("y"), F.col("x.hi") == F.col("y.lo"))
                .join(e.alias("z"),
@@ -493,17 +486,15 @@ def k_truss(edges: DataFrame, k: int, src: str = "src", dst: str = "dst",
                .unionAll(tri.select(F.col("b").alias("lo"),
                                     F.col("c").alias("hi")))
                .groupBy("lo", "hi").agg(F.count("*").alias("_sup")))
-        kept = (e.join(sup, ["lo", "hi"], "left")
-                .filter(F.coalesce("_sup", F.lit(0)) >= need)
-                .select("lo", "hi")
-                .localCheckpoint(eager=True))
+        kept = _checkpoint(e.join(sup, ["lo", "hi"], "left")
+                           .filter(F.coalesce("_sup", F.lit(0)) >= need)
+                           .select("lo", "hi"))
         n = kept.count()
-        if n == n_prev:
-            return kept
-        e, n_prev = kept, n
-    raise RuntimeError(
-        f"k_truss did not converge within max_rounds={max_rounds} "
-        f"(still {n_prev} edges) — raise max_rounds")
+        # an empty edge set is final: the next round could drop nothing
+        return (kept, n), n in (n_prev, 0)
+
+    e = _checkpoint(undirected_canonical(edges, src, dst))
+    return _fixpoint((e, e.count()), step, max_rounds, "k_truss")[0]
 
 
 def wl_colors(edges: DataFrame, rounds: int = 3, src: str = "src",
@@ -530,12 +521,12 @@ def wl_colors(edges: DataFrame, rounds: int = 3, src: str = "src",
     """
     if rounds < 1:
         raise ValueError("rounds must be >= 1")
-    e = undirected_canonical(edges, src, dst).localCheckpoint(eager=True)
+    e = _checkpoint(undirected_canonical(edges, src, dst))
     sym = (e.select(F.col("lo").alias("id"), F.col("hi").alias("nbr"))
            .unionByName(
                e.select(F.col("hi").alias("id"), F.col("lo").alias("nbr"))))
-    state = (sym.groupBy("id").agg(F.count("*").cast("long").alias("color"))
-             .localCheckpoint(eager=True))
+    state = _checkpoint(sym.groupBy("id")
+                        .agg(F.count("*").cast("long").alias("color")))
     for i in range(rounds):
         sig = (sym.join(state.select(F.col("id").alias("nbr"),
                                      F.col("color").alias("nc")), "nbr")
@@ -551,7 +542,7 @@ def wl_colors(edges: DataFrame, rounds: int = 3, src: str = "src",
                                                F.col("nbrs"))), 1, 15),
                              16, 10).cast("long").alias("color")))
         if (i + 1) % checkpoint_every == 0 or i == rounds - 1:
-            state = state.localCheckpoint(eager=True)
+            state = _checkpoint(state)
     return state
 
 
@@ -719,7 +710,7 @@ def node2vec_walks(edges: DataFrame, length: int = 4,
         return edges.sparkSession.createDataFrame(
             rows, f"start {ty}, step int, node {ty}")
 
-    e = sel.localCheckpoint(eager=True)
+    e = _checkpoint(sel)
     und = (e.unionByName(e.select(F.col("n").alias("c"),
                                   F.col("c").alias("n")))
            .distinct()
@@ -741,13 +732,13 @@ def node2vec_walks(edges: DataFrame, length: int = 4,
                 .when(F.col("_adj").isNotNull(), F.lit(1_000_000))
                 .otherwise(F.lit(int(q_micro)))).cast("long")
         score = h40(t) * mult
-        return (cand.groupBy("start")
-                .agg(F.min_by(F.struct(F.col("n"), F.col("node")),
-                              F.struct(score.alias("s"),
-                                       F.col("n").alias("n"))).alias("_nx"))
-                .select("start", F.col("_nx.n").alias("node"),
-                        F.col("_nx.node").alias("prev"))
-                .localCheckpoint(eager=True))
+        return _checkpoint(
+            cand.groupBy("start")
+            .agg(F.min_by(F.struct(F.col("n"), F.col("node")),
+                          F.struct(score.alias("s"),
+                                   F.col("n").alias("n"))).alias("_nx"))
+            .select("start", F.col("_nx.n").alias("node"),
+                    F.col("_nx.node").alias("prev")))
 
     starts = e.select(F.col("c").alias("start")).distinct()
     cur = starts.select("start", F.col("start").alias("node"),
@@ -779,16 +770,14 @@ def luby_mis(edges: DataFrame, src: str = "src", dst: str = "dst",
     return silently).  Returns (id, mis_round).
     """
     e = undirected_canonical(edges, src, dst)
-    sym = (e.select(F.col("lo").alias("id"), F.col("hi").alias("nbr"))
-           .unionByName(e.select(F.col("hi").alias("id"),
-                                 F.col("lo").alias("nbr")))
-           .localCheckpoint(eager=True))
-    live = sym.select("id").distinct().localCheckpoint(eager=True)
-    out = None
-    for r in range(1, max_rounds + 1):
-        if live.isEmpty():
-            return out if out is not None else live.select(
-                "id", F.lit(0).alias("mis_round")).limit(0)
+    sym = _checkpoint(
+        e.select(F.col("lo").alias("id"), F.col("hi").alias("nbr"))
+        .unionByName(e.select(F.col("hi").alias("id"),
+                              F.col("lo").alias("nbr"))))
+
+    def step(state):
+        r, live, out = state
+        r += 1
         pri_col = F.conv(F.substring(F.md5(F.concat_ws(
             "|", F.lit(seed), F.lit(str(r)),
             F.col("id").cast("string"))), 1, 15), 16, 10).cast("long")
@@ -802,22 +791,23 @@ def luby_mis(edges: DataFrame, src: str = "src", dst: str = "dst",
                     .groupBy("id")
                     .agg(F.min(F.struct(F.col("nh"), F.col("nbr")))
                          .alias("_b")))
-        winners = (pri.join(nbr_best, "id", "left")
-                   .filter(F.col("_b").isNull()
-                           | (F.struct(F.col("h"), F.col("id"))
-                              < F.col("_b")))
-                   .select("id").localCheckpoint(eager=True))
-        rows = winners.select("id", F.lit(r).alias("mis_round"))
-        out = rows if out is None else out.unionByName(rows)
+        winners = _checkpoint(
+            pri.join(nbr_best, "id", "left")
+            .filter(F.col("_b").isNull()
+                    | (F.struct(F.col("h"), F.col("id")) < F.col("_b")))
+            .select("id"))
+        out = out.unionByName(
+            winners.select("id", F.lit(r).alias("mis_round")))
         removed = (winners.unionByName(
             live_sym.join(winners, "id", "left_semi").select(
                 F.col("nbr").alias("id")))
             .distinct())
-        live = live.join(removed, "id", "left_anti") \
-            .localCheckpoint(eager=True)
-    raise RuntimeError(
-        f"luby_mis did not empty the live set within max_rounds="
-        f"{max_rounds}")
+        live = _checkpoint(live.join(removed, "id", "left_anti"))
+        return (r, live, out), live.isEmpty()
+
+    live = _checkpoint(sym.select("id").distinct())
+    empty = live.select("id", F.lit(0).alias("mis_round")).limit(0)
+    return _fixpoint((0, live, empty), step, max_rounds, "luby_mis")[2]
 
 
 def skipgram_pairs(walks: DataFrame, window: int = 2,
@@ -961,16 +951,15 @@ def lt_cascade(edges: DataFrame, seeds: DataFrame, src: str = "src",
     anywhere)."""
     if not (0 < theta_micro <= 10 ** 6):
         raise ValueError("theta_micro must be in (0, 10^6]")
-    e = (edges.select(F.col(src).alias("u"), F.col(dst).alias("v"),
-                      F.col(weight).cast("long").alias("w"))
-         .filter(F.col("u") != F.col("v"))
-         .localCheckpoint(eager=True))
+    e = _checkpoint(edges.select(F.col(src).alias("u"), F.col(dst).alias("v"),
+                                 F.col(weight).cast("long").alias("w"))
+                    .filter(F.col("u") != F.col("v")))
     if not e.filter(F.col("w").isNull() | (F.col("w") <= 0)).isEmpty():
         raise ValueError("lt_cascade requires positive integral weights")
     tot = e.groupBy("v").agg(F.sum("w").alias("tw"))
-    active = seeds.select(F.col("id"), F.lit(0).alias("round")) \
-        .distinct().localCheckpoint(eager=True)
-    for rnd in range(1, max_rounds + 1):
+
+    def step(state):
+        rnd, active = state
         aw = (e.join(active.select(F.col("id").alias("u")), "u")
               .groupBy("v").agg(F.sum("w").alias("aw")))
         fresh = (aw.join(tot, "v")
@@ -978,13 +967,14 @@ def lt_cascade(edges: DataFrame, seeds: DataFrame, src: str = "src",
                          >= F.lit(theta_micro) * F.col("tw"))
                  .select(F.col("v").alias("id"))
                  .join(active.select("id"), "id", "left_anti")
-                 .select("id", F.lit(rnd).alias("round")))
+                 .select("id", F.lit(rnd + 1).alias("round")))
         if fresh.isEmpty():
-            return active
-        active = active.unionByName(fresh).localCheckpoint(eager=True)
-    raise RuntimeError(
-        f"lt_cascade still activating after max_rounds={max_rounds} — "
-        "raise the cap (monotone cascades need at most |V| rounds)")
+            return state, True
+        return (rnd + 1, _checkpoint(active.unionByName(fresh))), False
+
+    active = _checkpoint(seeds.select(F.col("id"), F.lit(0).alias("round"))
+                         .distinct())
+    return _fixpoint((0, active), step, max_rounds, "lt_cascade")[1]
 
 
 def coreness(edges: DataFrame, src: str = "src", dst: str = "dst",
@@ -1004,30 +994,24 @@ def coreness(edges: DataFrame, src: str = "src", dst: str = "dst",
     pre-cap mega-hubs upstream if one node's adjacency cannot sit in a
     task.  Unlike iterative peeling (|V| sequential rounds worst case),
     H-iteration converges in O(diameter)-ish rounds in practice."""
-    e = (undirected_canonical(edges, src, dst)
-         .localCheckpoint(eager=True))
+    e = _checkpoint(undirected_canonical(edges, src, dst))
     sym = (e.select(F.col("lo").alias("a"), F.col("hi").alias("b"))
            .unionByName(e.select(F.col("hi").alias("a"),
                                  F.col("lo").alias("b"))))
-    vals = (sym.groupBy(F.col("a").alias("id"))
-            .agg(F.count("*").cast("long").alias("c"))
-            .localCheckpoint(eager=True))
     w = Window.partitionBy("a").orderBy(F.desc("c"), F.asc("b"))
-    for _ in range(max_rounds):
+
+    def step(vals):
         nbr = sym.join(vals.select(F.col("id").alias("b"), "c"), "b")
-        h = (nbr.withColumn("_rn", F.row_number().over(w))
-             .groupBy(F.col("a").alias("id"))
-             .agg(F.max(F.least(F.col("c"), F.col("_rn")))
-                  .cast("long").alias("c")))
-        new = h.localCheckpoint(eager=True)
-        changed = (new.join(vals.withColumnRenamed("c", "_old"), "id")
-                   .filter(F.col("c") != F.col("_old")))
-        if changed.isEmpty():
-            return new.select("id", F.col("c").alias("coreness"))
-        vals = new
-    raise RuntimeError(
-        f"coreness H-iteration did not converge within max_rounds="
-        f"{max_rounds} — raise the cap")
+        new = _checkpoint(nbr.withColumn("_rn", F.row_number().over(w))
+                          .groupBy(F.col("a").alias("id"))
+                          .agg(F.max(F.least(F.col("c"), F.col("_rn")))
+                               .cast("long").alias("c")))
+        return new, _changed(new, vals, ["id"]).isEmpty()
+
+    vals = _checkpoint(sym.groupBy(F.col("a").alias("id"))
+                       .agg(F.count("*").cast("long").alias("c")))
+    return (_fixpoint(vals, step, max_rounds, "coreness")
+            .select("id", F.col("c").alias("coreness")))
 
 
 def nominal_assortativity(edges: DataFrame, labels: DataFrame,

@@ -29,6 +29,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from .traversal import _checkpoint
+
 MICRO = 10 ** 6
 
 
@@ -66,8 +68,7 @@ def rake_keyphrases(docs: DataFrame, stopwords: tuple[str, ...],
     the ``top_k`` by (score desc, phrase asc) — deterministic ties.
     Word score = degree * 10^6 DIV frequency; phrase score sums word
     scores WITH multiplicity (canonical RAKE)."""
-    ph = candidate_phrases(docs, stopwords, id_col, text_col) \
-        .localCheckpoint(eager=True)
+    ph = _checkpoint(candidate_phrases(docs, stopwords, id_col, text_col))
     words = ph.select(F.explode(F.split("phrase", " ")).alias("w"),
                       F.col("n_words"))
     stats = (words.groupBy("w")
@@ -152,7 +153,7 @@ def textrank_scores(docs: DataFrame, window: int = 2, iters: int = 3,
     # one materialization feeds every power-iteration round (the edge
     # table is re-joined `iters` times — rebuilding the co-occurrence
     # graph per round would re-scan the corpus each time)
-    e = edges.join(strength, "src").localCheckpoint(eager=True)
+    e = _checkpoint(edges.join(strength, "src"))
 
     # the iteration state is vocabulary-sized; when the weighted edge
     # list fits on the driver, run the identical BIGINT `div` recurrence

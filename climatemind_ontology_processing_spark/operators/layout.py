@@ -27,14 +27,14 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .traversal import _changed, _checkpoint, _fixpoint, small_rows
+
 
 def dag_layers(edges: DataFrame, src: str = "src", dst: str = "dst",
-               max_iters: int = 200) -> DataFrame:
+               max_rounds: int = 200) -> DataFrame:
     """(id, layer) — longest-path layering of a DAG; raises ValueError on a
     cycle (run ``acyclic.make_acyclic`` first, as the reference pipeline
     does before visualizing)."""
-    from .traversal import small_rows
-
     e = (edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
          .filter(F.col("u").isNotNull() & F.col("v").isNotNull())
          .distinct())
@@ -68,36 +68,32 @@ def dag_layers(edges: DataFrame, src: str = "src", dst: str = "dst",
             sorted(layer.items()), f"id {t}, layer int")
     # distributed: semi-naive longest-path — propagate layer+1 along edges,
     # keep the max per node; fixpoint after <= DAG-depth rounds
-    ec = e.localCheckpoint(eager=True)
-    nodes = (ec.select(F.col("u").alias("id"))
-             .unionByName(ec.select(F.col("v").alias("id")))
-             .distinct())
-    layers = nodes.withColumn("layer", F.lit(0)).localCheckpoint(eager=True)
+    ec = _checkpoint(e)
+
     # true semi-naive: only nodes whose layer ROSE last round can raise a
     # successor's layer, so each round joins edges against the (shrinking)
     # frontier instead of the full layer table
-    frontier = layers
-    for _ in range(max_iters):
+    def step(state):
+        layers, frontier = state
         prop = (ec.join(frontier.withColumnRenamed("id", "u"), "u")
                 .groupBy(F.col("v").alias("id"))
                 .agg((F.max("layer") + 1).alias("_cand")))
-        new = (layers.join(prop, "id", "left")
-               .select("id", F.greatest("layer",
-                                        F.coalesce("_cand", F.lit(0)))
-                       .alias("layer"))
-               .localCheckpoint(eager=True))
-        frontier = (new.join(layers.withColumnRenamed("layer", "_old"), "id")
-                    .filter(F.col("layer") != F.col("_old"))
-                    .select("id", "layer")
-                    .localCheckpoint(eager=True))
-        layers = new
-        if frontier.isEmpty():
-            return layers
-    raise RuntimeError(
-        f"dag_layers did not converge within max_iters={max_iters}: either "
-        "the graph has a cycle (run make_acyclic first) or its longest path "
-        "exceeds the cap on an ACYCLIC graph — raise max_iters for very "
-        "deep DAGs")
+        new = _checkpoint(
+            layers.join(prop, "id", "left")
+            .select("id", F.greatest("layer", F.coalesce("_cand", F.lit(0)))
+                    .alias("layer")))
+        frontier = _checkpoint(_changed(new, layers, ["id"])
+                               .select("id", "layer"))
+        return (new, frontier), frontier.isEmpty()
+
+    nodes = (ec.select(F.col("u").alias("id"))
+             .unionByName(ec.select(F.col("v").alias("id")))
+             .distinct())
+    layers = _checkpoint(nodes.withColumn("layer", F.lit(0)))
+    return _fixpoint(
+        (layers, layers), step, max_rounds, "dag_layers",
+        ": either the graph has a cycle (run make_acyclic first) or its "
+        "longest path exceeds the cap on an ACYCLIC graph")[0]
 
 
 def dot_layout(edges: DataFrame, src: str = "src", dst: str = "dst",

@@ -32,6 +32,8 @@ from pyspark.sql import functions as F
 
 from climatemind_ontology_processing_spark.operators.textstats import _tokens
 
+from .traversal import _checkpoint
+
 
 def _doc_tokens(docs: DataFrame, id_col: str, text_col: str) -> DataFrame:
     return (docs.select(F.col(id_col),
@@ -130,16 +132,14 @@ def bigram_cross_entropy(docs: DataFrame, id_col: str = "doc_id",
     their keys — never the text).  Engine-exact via the micro-BIGINT
     log-prob convention."""
     tr = train if train is not None else docs
-    vocab = (unigram_counts(tr, id_col, text_col)
-             .orderBy(F.desc("cnt"), F.asc("tok")).limit(top_v)
-             .localCheckpoint(eager=True))
+    vocab = _checkpoint(unigram_counts(tr, id_col, text_col)
+                        .orderBy(F.desc("cnt"), F.asc("tok")).limit(top_v))
     # materialized ONCE: four consumers (c2/ctx/c1 counts + the scoring
     # branch when self-scoring) would otherwise re-run the tokenize +
     # vocab-join + per-doc window subtree up to 4x (self-join attribute
     # rewrites defeat exchange reuse); the stream is (id, pos, prev, cur)
     # — small relative to the text it came from
-    pairs_tr = _class_stream(tr, vocab, id_col, text_col) \
-        .localCheckpoint(eager=True)
+    pairs_tr = _checkpoint(_class_stream(tr, vocab, id_col, text_col))
     c2 = pairs_tr.groupBy("prev", "cur").agg(F.count("*").alias("c2"))
     ctx = pairs_tr.groupBy("prev").agg(F.count("*").alias("ctx"))
     c1 = pairs_tr.groupBy("cur").agg(F.count("*").alias("c1"))

@@ -29,6 +29,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .canonicalize import connected_components
+from .traversal import _checkpoint, _fixpoint, small_rows
 
 
 def boruvka_msf(edges: DataFrame, src: str = "src", dst: str = "dst",
@@ -50,8 +51,6 @@ def boruvka_msf(edges: DataFrame, src: str = "src", dst: str = "dst",
     registered oracle proves it algorithm-independently via the cycle
     property.)  Pinned against the distributed path in pytest.
     """
-    from .traversal import small_rows
-
     probe = small_rows(edges.select(src, dst, weight))
     if probe is not None:
         best: dict = {}
@@ -76,15 +75,9 @@ def boruvka_msf(edges: DataFrame, src: str = "src", dst: str = "dst",
                 x = parent[x]
             return x
 
-        out = []
-        for _ in range(max_rounds):
+        def step(out):
             inter = [(lo, hi, w) for (lo, hi), w in best.items()
                      if find(lo) != find(hi)]
-            if not inter:
-                ts = edges.schema[src].dataType.simpleString()
-                tw = edges.schema[weight].dataType.simpleString()
-                return edges.sparkSession.createDataFrame(
-                    out, f"lo {ts}, hi {ts}, {weight} {tw}")
             chosen: dict = {}
             for lo, hi, w in inter:
                 key = (w, lo, hi)
@@ -96,11 +89,13 @@ def boruvka_msf(edges: DataFrame, src: str = "src", dst: str = "dst",
                 if ra != rb:
                     parent[max(ra, rb)] = min(ra, rb)
                 out.append((lo, hi, w))
-        raise RuntimeError(
-            f"boruvka_msf: {max_rounds} rounds exhausted before "
-            "quiescence — raise max_rounds (components halve per "
-            "round, so this indicates a bug or a graph beyond "
-            "2^max_rounds nodes)")
+            return out, not inter
+
+        ts = edges.schema[src].dataType.simpleString()
+        tw = edges.schema[weight].dataType.simpleString()
+        return edges.sparkSession.createDataFrame(
+            _fixpoint([], step, max_rounds, "boruvka_msf"),
+            f"lo {ts}, hi {ts}, {weight} {tw}")
 
     checked_w = F.when(
         F.col(weight).isNull(),
@@ -108,21 +103,14 @@ def boruvka_msf(edges: DataFrame, src: str = "src", dst: str = "dst",
             F.lit("boruvka_msf: NULL weight on edge "),
             F.col(src).cast("string"), F.lit("-"),
             F.col(dst).cast("string")))).otherwise(F.col(weight))
-    e = (edges.select(F.least(src, dst).alias("lo"),
-                      F.greatest(src, dst).alias("hi"),
-                      checked_w.alias("w"))
-         .filter(F.col("lo") != F.col("hi"))
-         .groupBy("lo", "hi").agg(F.min("w").alias("w"))
-         .localCheckpoint(eager=True))
-    spark = edges.sparkSession
-    nodes = (e.select(F.col("lo").alias("id"))
-             .unionByName(e.select(F.col("hi").alias("id")))
-             .distinct())
-    labels = nodes.select("id", F.col("id").alias("label")) \
-        .localCheckpoint(eager=True)
-    forest = spark.createDataFrame([], e.schema)
+    e = _checkpoint(edges.select(F.least(src, dst).alias("lo"),
+                                 F.greatest(src, dst).alias("hi"),
+                                 checked_w.alias("w"))
+                    .filter(F.col("lo") != F.col("hi"))
+                    .groupBy("lo", "hi").agg(F.min("w").alias("w")))
 
-    for _ in range(max_rounds):
+    def step(state):
+        e, labels, forest = state
         lab_lo = labels.select(F.col("id").alias("lo"),
                                F.col("label").alias("_cl"))
         lab_hi = labels.select(F.col("id").alias("hi"),
@@ -130,23 +118,22 @@ def boruvka_msf(edges: DataFrame, src: str = "src", dst: str = "dst",
         proj = (e.join(lab_lo, "lo").join(lab_hi, "hi")
                 .filter(F.col("_cl") != F.col("_ch")))
         # intra-component edges never rejoin the working set
-        e = proj.select("lo", "hi", "w").localCheckpoint(eager=True)
+        e = _checkpoint(proj.select("lo", "hi", "w"))
         if e.isEmpty():
-            return forest.select("lo", "hi", F.col("w").alias(weight))
+            return state, True
         # min outgoing edge per component under the (w, lo, hi) total
         # order — one keys-only min_by aggregate over both directions
         pick = F.struct(F.col("w"), F.col("lo"), F.col("hi"))
         cand = (proj.select(F.col("_cl").alias("_c"), pick.alias("_p"))
                 .unionByName(
                     proj.select(F.col("_ch").alias("_c"), pick.alias("_p"))))
-        chosen = (cand.groupBy("_c").agg(F.min("_p").alias("_p"))
-                  .select(F.col("_p.w").alias("w"),
-                          F.col("_p.lo").alias("lo"),
-                          F.col("_p.hi").alias("hi"))
-                  .distinct()          # both endpoints may pick one edge
-                  .localCheckpoint(eager=True))
-        forest = forest.unionByName(chosen.select("lo", "hi", "w")) \
-            .localCheckpoint(eager=True)
+        chosen = _checkpoint(
+            cand.groupBy("_c").agg(F.min("_p").alias("_p"))
+            .select(F.col("_p.w").alias("w"), F.col("_p.lo").alias("lo"),
+                    F.col("_p.hi").alias("hi"))
+            .distinct())               # both endpoints may pick one edge
+        forest = _checkpoint(
+            forest.unionByName(chosen.select("lo", "hi", "w")))
         # merge: component-level hook graph, then CC (min-label); the
         # hook graph has <= one edge per component — geometric shrink
         hooks = (chosen
@@ -154,16 +141,20 @@ def boruvka_msf(edges: DataFrame, src: str = "src", dst: str = "dst",
                  .select(F.col("_cl").alias("src"),
                          F.col("_ch").alias("dst")))
         merged = connected_components(hooks)  # (id=old label, component)
-        labels = (labels
-                  .join(merged.withColumnRenamed("id", "label"),
+        labels = _checkpoint(
+            labels.join(merged.withColumnRenamed("id", "label"),
                         "label", "left")
-                  .select("id", F.coalesce("component", "label")
-                          .alias("label"))
-                  .localCheckpoint(eager=True))
-    raise RuntimeError(
-        f"boruvka_msf: {max_rounds} rounds exhausted before quiescence — "
-        "raise max_rounds (components halve per round, so this indicates "
-        "a bug or a graph beyond 2^max_rounds nodes)")
+            .select("id", F.coalesce("component", "label").alias("label")))
+        return (e, labels, forest), False
+
+    nodes = (e.select(F.col("lo").alias("id"))
+             .unionByName(e.select(F.col("hi").alias("id")))
+             .distinct())
+    labels = _checkpoint(nodes.select("id", F.col("id").alias("label")))
+    forest = edges.sparkSession.createDataFrame([], e.schema)
+    forest = _fixpoint((e, labels, forest), step, max_rounds,
+                       "boruvka_msf")[2]
+    return forest.select("lo", "hi", F.col("w").alias(weight))
 
 
 def greedy_matching(edges: DataFrame, src: str = "src", dst: str = "dst",
@@ -195,42 +186,38 @@ def greedy_matching(edges: DataFrame, src: str = "src", dst: str = "dst",
             F.lit("greedy_matching: NULL weight on edge "),
             F.col(src).cast("string"), F.lit("-"),
             F.col(dst).cast("string")))).otherwise(F.col(weight))
-    alive = (edges.select(F.least(src, dst).alias("lo"),
-                          F.greatest(src, dst).alias("hi"),
-                          checked_w.alias("w"))
-             .filter(F.col("lo") != F.col("hi"))
-             .groupBy("lo", "hi").agg(F.min("w").alias("w"))
-             .localCheckpoint(eager=True))
-    spark = edges.sparkSession
-    matched = spark.createDataFrame([], alive.schema)
+    alive = _checkpoint(edges.select(F.least(src, dst).alias("lo"),
+                                     F.greatest(src, dst).alias("hi"),
+                                     checked_w.alias("w"))
+                        .filter(F.col("lo") != F.col("hi"))
+                        .groupBy("lo", "hi").agg(F.min("w").alias("w")))
     key = F.struct(F.col("w"), F.col("lo"), F.col("hi"))
-    for _ in range(max_rounds):
-        if alive.isEmpty():
-            return matched.select("lo", "hi", F.col("w").alias(weight))
+
+    def step(state):
+        alive, matched = state
         inc = (alive.select(F.col("lo").alias("_n"), key.alias("_k"))
                .unionByName(
                    alive.select(F.col("hi").alias("_n"), key.alias("_k"))))
         nodemin = inc.groupBy("_n").agg(F.min("_k").alias("_mk"))
-        dom = (alive
-               .join(nodemin.select(F.col("_n").alias("lo"),
-                                    F.col("_mk").alias("_ml")), "lo")
-               .join(nodemin.select(F.col("_n").alias("hi"),
-                                    F.col("_mk").alias("_mh")), "hi")
-               .filter((key == F.col("_ml")) & (key == F.col("_mh")))
-               .select("lo", "hi", "w")
-               .localCheckpoint(eager=True))
-        matched = matched.unionByName(dom).localCheckpoint(eager=True)
+        dom = _checkpoint(
+            alive.join(nodemin.select(F.col("_n").alias("lo"),
+                                      F.col("_mk").alias("_ml")), "lo")
+            .join(nodemin.select(F.col("_n").alias("hi"),
+                                 F.col("_mk").alias("_mh")), "hi")
+            .filter((key == F.col("_ml")) & (key == F.col("_mh")))
+            .select("lo", "hi", "w"))
+        matched = _checkpoint(matched.unionByName(dom))
         used = (dom.select(F.col("lo").alias("_n"))
                 .unionByName(dom.select(F.col("hi").alias("_n"))))
-        alive = (alive
-                 .join(used.withColumnRenamed("_n", "lo"), "lo",
-                       "left_anti")
-                 .join(used.withColumnRenamed("_n", "hi"), "hi",
-                       "left_anti")
-                 .localCheckpoint(eager=True))
-    raise RuntimeError(
-        f"greedy_matching: {max_rounds} rounds exhausted before the edge "
-        "set quiesced — raise max_rounds")
+        alive = _checkpoint(
+            alive.join(used.withColumnRenamed("_n", "lo"), "lo", "left_anti")
+            .join(used.withColumnRenamed("_n", "hi"), "hi", "left_anti"))
+        return (alive, matched), alive.isEmpty()
+
+    matched = edges.sparkSession.createDataFrame([], alive.schema)
+    matched = _fixpoint((alive, matched), step, max_rounds,
+                        "greedy_matching")[1]
+    return matched.select("lo", "hi", F.col("w").alias(weight))
 
 
 def msf_increment(forest: DataFrame, new_edges: DataFrame,
@@ -267,8 +254,7 @@ def coarsen_mapping(edges: DataFrame, src: str = "src", dst: str = "dst",
     METIS/Graclus shape): nodes paired by :func:`greedy_matching`
     contract into the pair's smaller id; unmatched nodes map to
     themselves.  Every node incident to an edge appears exactly once."""
-    m = greedy_matching(edges, src, dst, weight,
-                        max_rounds).localCheckpoint(eager=True)
+    m = _checkpoint(greedy_matching(edges, src, dst, weight, max_rounds))
     nodes = (edges.select(F.col(src).alias("id"))
              .unionByName(edges.select(F.col(dst).alias("id")))
              .filter(F.col("id").isNotNull()).distinct())
@@ -379,8 +365,7 @@ def single_linkage_clusters(edges: DataFrame, n_clusters: int,
     = Borůvka + one forest-sized sort-limit + one CC over a forest."""
     if n_clusters < 1:
         raise ValueError("n_clusters must be >= 1")
-    msf = boruvka_msf(edges, src, dst, weight,
-                      max_rounds).localCheckpoint(eager=True)
+    msf = _checkpoint(boruvka_msf(edges, src, dst, weight, max_rounds))
     cut = (msf.orderBy(F.desc(weight), F.desc("lo"), F.desc("hi"))
            .limit(n_clusters - 1))
     kept = msf.join(cut, ["lo", "hi"], "left_anti")

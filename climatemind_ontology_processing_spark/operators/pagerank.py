@@ -32,6 +32,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .traversal import _checkpoint
+
 
 def pagerank(edges: DataFrame, iters: int = 10, damping: float = 0.85,
              src: str = "src", dst: str = "dst",
@@ -50,12 +52,12 @@ def pagerank(edges: DataFrame, iters: int = 10, damping: float = 0.85,
     """
     if checkpoint_every < 1:
         raise ValueError("checkpoint_every must be >= 1")
-    e = edges.select(F.col(src).alias("u"), F.col(dst).alias("v")) \
-        .filter(F.col("u").isNotNull() & F.col("v").isNotNull()) \
-        .distinct().localCheckpoint(eager=True)
-    nodes = (e.select(F.col("u").alias("id"))
-             .unionByName(e.select(F.col("v").alias("id")))
-             .distinct().localCheckpoint(eager=True))
+    e = _checkpoint(edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
+                    .filter(F.col("u").isNotNull() & F.col("v").isNotNull())
+                    .distinct())
+    nodes = _checkpoint(e.select(F.col("u").alias("id"))
+                        .unionByName(e.select(F.col("v").alias("id")))
+                        .distinct())
     n = nodes.count()
     if n == 0:
         return nodes.withColumn("rank", F.lit(0.0))
@@ -84,7 +86,7 @@ def pagerank(edges: DataFrame, iters: int = 10, damping: float = 0.85,
                           F.lit(damping) * F.coalesce("inflow", F.lit(0.0)))
                          .alias("rank")))
         if (i + 1) % checkpoint_every == 0 or i == iters - 1:
-            ranks = ranks.localCheckpoint(eager=True)
+            ranks = _checkpoint(ranks)
     return ranks
 
 
@@ -121,12 +123,12 @@ def personalized_pagerank(edges: DataFrame, seeds: list | dict,
     else:
         w = 1.0 / len(set(seeds))
         seed_rows = [(k, w) for k in sorted(set(seeds))]
-    e = edges.select(F.col(src).alias("u"), F.col(dst).alias("v")) \
-        .filter(F.col("u").isNotNull() & F.col("v").isNotNull()) \
-        .distinct().localCheckpoint(eager=True)
-    nodes = (e.select(F.col("u").alias("id"))
-             .unionByName(e.select(F.col("v").alias("id")))
-             .distinct().localCheckpoint(eager=True))
+    e = _checkpoint(edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
+                    .filter(F.col("u").isNotNull() & F.col("v").isNotNull())
+                    .distinct())
+    nodes = _checkpoint(e.select(F.col("u").alias("id"))
+                        .unionByName(e.select(F.col("v").alias("id")))
+                        .distinct())
     t = nodes.schema["id"].dataType.simpleString()
     seed_df = edges.sparkSession.createDataFrame(
         seed_rows, f"id {t}, _w double")
@@ -140,9 +142,8 @@ def personalized_pagerank(edges: DataFrame, seeds: list | dict,
         raise ValueError(f"seeds absent from the edge set: {missing}")
     outdeg = e.groupBy("u").agg(F.count("*").alias("deg"))
     # teleport column pinned onto the node table once
-    nds = (nodes.join(F.broadcast(seed_df), "id", "left")
-           .select("id", F.coalesce("_w", F.lit(0.0)).alias("_s"))
-           .localCheckpoint(eager=True))
+    nds = _checkpoint(nodes.join(F.broadcast(seed_df), "id", "left")
+                      .select("id", F.coalesce("_w", F.lit(0.0)).alias("_s")))
 
     ranks = nds.select("id", F.col("_s").alias("rank"))
     for i in range(iters):
@@ -162,7 +163,7 @@ def personalized_pagerank(edges: DataFrame, seeds: list | dict,
                           + F.lit(damping) * F.coalesce("inflow", F.lit(0.0)))
                          .alias("rank")))
         if (i + 1) % checkpoint_every == 0 or i == iters - 1:
-            ranks = ranks.localCheckpoint(eager=True)
+            ranks = _checkpoint(ranks)
     return ranks
 
 
@@ -222,20 +223,18 @@ def katz_centrality(edges: DataFrame, rounds: int = 4, atten_denom: int = 4,
         ty = edges.schema[src].dataType.simpleString()
         return edges.sparkSession.createDataFrame(
             sorted(acc.items()), f"id {ty}, katz_micro long")
-    e = (edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-         .filter(F.col("u") != F.col("v")).distinct()
-         .localCheckpoint(eager=True))
-    nodes = (e.select(F.col("u").alias("id"))
-             .unionByName(e.select(F.col("v").alias("id")))
-             .distinct().localCheckpoint(eager=True))
+    e = _checkpoint(edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
+                    .filter(F.col("u") != F.col("v")).distinct())
+    nodes = _checkpoint(e.select(F.col("u").alias("id"))
+                        .unionByName(e.select(F.col("v").alias("id")))
+                        .distinct())
     limit = (2 ** 63 - 1) // 1_000_000
     w = nodes.select("id", F.lit(1).cast("long").alias("w"))
     acc = nodes.select("id", F.lit(0).cast("long").alias("katz_micro"))
     for k in range(1, rounds + 1):
-        w = (e.join(w.withColumnRenamed("id", "u"), "u")
-             .groupBy(F.col("v").alias("id"))
-             .agg(F.sum("w").alias("w"))
-             .localCheckpoint(eager=True))
+        w = _checkpoint(e.join(w.withColumnRenamed("id", "u"), "u")
+                        .groupBy(F.col("v").alias("id"))
+                        .agg(F.sum("w").alias("w")))
         mx = w.agg(F.coalesce(F.max("w"), F.lit(0))).first()[0]
         if mx > limit:
             raise RuntimeError(
@@ -243,9 +242,8 @@ def katz_centrality(edges: DataFrame, rounds: int = 4, atten_denom: int = 4,
                 "micro-BIGINT term — reduce rounds or use a float variant")
         term = w.select("id", F.expr(
             f"(w * 1000000L) DIV {atten_denom ** k}L").alias("t"))
-        acc = (acc.join(term, "id", "left")
-               .select("id", (F.col("katz_micro")
-                              + F.coalesce("t", F.lit(0)))
-                       .alias("katz_micro"))
-               .localCheckpoint(eager=True))
+        acc = _checkpoint(acc.join(term, "id", "left")
+                          .select("id", (F.col("katz_micro")
+                                         + F.coalesce("t", F.lit(0)))
+                                  .alias("katz_micro")))
     return acc

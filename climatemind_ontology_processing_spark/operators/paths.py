@@ -22,7 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .traversal import _checkpoint
+from .traversal import _checkpoint, _fixpoint, _relax_min
 
 
 def shortest_paths(edges: DataFrame, seeds: DataFrame | list,
@@ -60,29 +60,14 @@ def shortest_paths(edges: DataFrame, seeds: DataFrame | list,
         t = e.schema["u"].dataType.simpleString()
         seeds = spark.createDataFrame([(s,) for s in sorted(set(seeds))],
                                       f"id {t}")
-    dist = _checkpoint(seeds.select("id", F.lit(0).cast("long").alias("dist")))
-    converged = False
-    for _ in range(max_rounds):
-        relaxed = (e.join(dist.withColumnRenamed("id", "u"), "u")
-                   .select(F.col("v").alias("id"),
-                           (F.col("dist") + F.col("w")).alias("d")))
-        new = (dist.unionByName(relaxed.withColumnRenamed("d", "dist"))
-               .groupBy("id").agg(F.min("dist").alias("dist")))
-        new = _checkpoint(new)
-        changed = (new.join(dist.withColumnRenamed("dist", "old"),
-                            "id", "left")
-                   .filter(F.col("old").isNull() |
-                           (F.col("dist") != F.col("old"))))
-        dist = new
-        if changed.isEmpty():
-            converged = True
-            break
-    if not converged:
-        # a truncated relaxation is indistinguishable from a converged one
-        raise RuntimeError(
-            f"shortest_paths did not converge within max_rounds={max_rounds} "
-            "— the graph's hop diameter exceeds the cap; raise max_rounds")
-    return dist
+
+    def relax(dist):
+        return (e.join(dist.withColumnRenamed("id", "u"), "u")
+                .select(F.col("v").alias("id"),
+                        (F.col("dist") + F.col("w")).alias("dist")))
+
+    return _relax_min(seeds.select("id", F.lit(0).cast("long").alias("dist")),
+                      ["id"], "dist", relax, max_rounds, "shortest_paths")
 
 
 # ---------------------------------------------------------------------------
@@ -155,9 +140,8 @@ def landmark_distances(edges: DataFrame, num_landmarks: int = 16,
             lm_ids = lms[:int(num_landmarks)]
         else:
             lm_ids = sorted({r[0] for r in landmarks.collect()})
-        dist = {(lm, lm): 0 for lm in lm_ids}
-        converged = False
-        for _ in range(max_rounds):
+
+        def step(dist):
             new = dict(dist)
             for u, v, ew in probe:
                 for lm in lm_ids:
@@ -167,14 +151,10 @@ def landmark_distances(edges: DataFrame, num_landmarks: int = 16,
                         cur = new.get((lm, v))
                         if cur is None or d < cur:
                             new[(lm, v)] = d
-            if new == dist:
-                converged = True
-                break
-            dist = new
-        if not converged:
-            raise RuntimeError(
-                f"landmark_distances did not converge within "
-                f"max_rounds={max_rounds} — raise max_rounds")
+            return new, new == dist
+
+        dist = _fixpoint({(lm, lm): 0 for lm in lm_ids}, step, max_rounds,
+                         "landmark_distances")
         ty = e0.schema["u"].dataType.simpleString()
         return edges.sparkSession.createDataFrame(
             [(lm, n, d) for (lm, n), d in sorted(dist.items())],
@@ -184,30 +164,17 @@ def landmark_distances(edges: DataFrame, num_landmarks: int = 16,
         raise ValueError("negative edge weights not supported")
     if landmarks is None:
         landmarks = pick_landmarks(edges, num_landmarks, src, dst)
-    dist = _checkpoint(landmarks.select(
-        F.col("id").alias("landmark"), F.col("id"),
-        F.lit(0).cast("long").alias("dist")))
-    converged = False
-    for _ in range(max_rounds):
-        relaxed = (e.join(dist.withColumnRenamed("id", "u"), "u")
-                   .select("landmark", F.col("v").alias("id"),
-                           (F.col("dist") + F.col("w")).alias("dist")))
-        new = (dist.unionByName(relaxed)
-               .groupBy("landmark", "id").agg(F.min("dist").alias("dist")))
-        new = _checkpoint(new)
-        changed = (new.join(dist.withColumnsRenamed({"dist": "old"}),
-                            ["landmark", "id"], "left")
-                   .filter(F.col("old").isNull() |
-                           (F.col("dist") != F.col("old"))))
-        dist = new
-        if changed.isEmpty():
-            converged = True
-            break
-    if not converged:
-        raise RuntimeError(
-            f"landmark_distances did not converge within "
-            f"max_rounds={max_rounds} — raise max_rounds")
-    return dist
+
+    def relax(dist):
+        return (e.join(dist.withColumnRenamed("id", "u"), "u")
+                .select("landmark", F.col("v").alias("id"),
+                        (F.col("dist") + F.col("w")).alias("dist")))
+
+    return _relax_min(landmarks.select(F.col("id").alias("landmark"),
+                                       F.col("id"),
+                                       F.lit(0).cast("long").alias("dist")),
+                      ["landmark", "id"], "dist", relax, max_rounds,
+                      "landmark_distances")
 
 
 def landmark_estimate(dists: DataFrame, pairs: DataFrame,
@@ -265,26 +232,15 @@ def earliest_arrival(edges: DataFrame, seeds: DataFrame | list,
         t = e.schema["u"].dataType.simpleString()
         seeds = spark.createDataFrame([(s,) for s in sorted(set(seeds))],
                                       f"id {t}")
-    arr = _checkpoint(seeds.select(
-        "id", F.lit(start).cast("long").alias("arrival")))
-    for _ in range(max_rounds):
-        relaxed = (e.join(arr.withColumnRenamed("id", "u"), "u")
-                   .filter(F.col("t") >= F.col("arrival"))
-                   .select(F.col("v").alias("id"),
-                           F.col("t").alias("arrival")))
-        new = _checkpoint(arr.unionByName(relaxed)
-                          .groupBy("id").agg(F.min("arrival")
-                                             .alias("arrival")))
-        changed = (new.join(arr.withColumnRenamed("arrival", "old"),
-                            "id", "left")
-                   .filter(F.col("old").isNull()
-                           | (F.col("arrival") != F.col("old"))))
-        if changed.isEmpty():
-            return new
-        arr = new
-    raise RuntimeError(
-        f"earliest_arrival did not converge within max_rounds="
-        f"{max_rounds} — the temporal hop diameter exceeds the cap")
+
+    def relax(arr):
+        return (e.join(arr.withColumnRenamed("id", "u"), "u")
+                .filter(F.col("t") >= F.col("arrival"))
+                .select(F.col("v").alias("id"), F.col("t").alias("arrival")))
+
+    return _relax_min(seeds.select("id",
+                                   F.lit(start).cast("long").alias("arrival")),
+                      ["id"], "arrival", relax, max_rounds, "earliest_arrival")
 
 
 def dag_path_counts(edges: DataFrame, sources: DataFrame | list,
@@ -313,29 +269,29 @@ def dag_path_counts(edges: DataFrame, sources: DataFrame | list,
         t = e.schema["u"].dataType.simpleString()
         sources = spark.createDataFrame(
             [(s,) for s in sorted(set(sources))], f"id {t}")
-    cur = _checkpoint(sources.select(
-        "id", F.lit(1).cast("long").alias("w")))
-    total = cur
-    for _ in range(max_rounds):
+
+    def step(state):
+        cur, total = state
         nxt = _checkpoint(
             e.join(cur.withColumnRenamed("id", "u"), "u")
             .groupBy(F.col("v").alias("id"))
             .agg(F.sum("w").alias("w")))
         if nxt.isEmpty():
-            return (total.groupBy("id")
-                    .agg(F.sum("w").alias("n_paths")))
-        overflow = nxt.filter(F.col("w") > max_count)
-        if not overflow.isEmpty():
+            return state, True
+        if not nxt.filter(F.col("w") > max_count).isEmpty():
             raise RuntimeError(
                 "dag_path_counts: a path count exceeded max_count="
                 f"{max_count} — combinatorial explosion; count on a "
                 "restricted subgraph")
-        total = _checkpoint(total.unionByName(nxt))
-        cur = nxt
-    raise RuntimeError(
-        f"dag_path_counts: walks still alive after max_rounds="
-        f"{max_rounds} — longest path exceeds the cap, or the graph "
-        "has a CYCLE (walk counts never drain on cycles)")
+        return (nxt, _checkpoint(total.unionByName(nxt))), False
+
+    cur = _checkpoint(sources.select(
+        "id", F.lit(1).cast("long").alias("w")))
+    total = _fixpoint(
+        (cur, cur), step, max_rounds, "dag_path_counts",
+        ": walks are still alive, so the longest path exceeds the cap or "
+        "the graph has a CYCLE (walk counts never drain on cycles)")[1]
+    return total.groupBy("id").agg(F.sum("w").alias("n_paths"))
 
 
 def double_sweep_diameter(edges: DataFrame, src: str = "src",
@@ -356,9 +312,9 @@ def double_sweep_diameter(edges: DataFrame, src: str = "src",
     e = (edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
          .filter(F.col("u").isNotNull() & F.col("v").isNotNull()
                  & (F.col("u") != F.col("v"))))
-    sym = e.unionByName(e.select(F.col("v").alias("u"),
-                                 F.col("u").alias("v"))).distinct() \
-        .localCheckpoint(eager=True)
+    sym = _checkpoint(e.unionByName(e.select(F.col("v").alias("u"),
+                                             F.col("u").alias("v")))
+                      .distinct())
     if start is None:
         start = sym.agg(F.min("u")).collect()[0][0]
     d1 = shortest_paths(sym, [start], src="u", dst="v",

@@ -34,11 +34,13 @@ test_traversal_distributed).
 """
 from __future__ import annotations
 
+from functools import partial, reduce
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .traversal import (_adjacency, _checkpoint, _reach, _reach_local,
-                        small_rows)
+from .traversal import (_adjacency, _changed, _checkpoint, _fixpoint, _reach,
+                        _reach_local, small_rows)
 
 
 def _tarjan_components(edge_rows, nodes) -> list[tuple]:
@@ -93,6 +95,25 @@ def _tarjan_components(edge_rows, nodes) -> list[tuple]:
     return sorted(comp.items())
 
 
+def _coloring_round(cur: DataFrame, color: DataFrame):
+    """One min-ancestor coloring round over the edges ``cur``: forward
+    propagation plus a pointer jump; converged once no color moved."""
+    inc = (cur.join(color.select(F.col("id").alias("a"),
+                                 F.col("comp").alias("cu")), "a")
+           .groupBy("b").agg(F.min("cu").alias("nbr")))
+    new = (color.join(inc.withColumnRenamed("b", "id"), "id", "left")
+           .select("id", F.least(F.col("comp"),
+                                 F.coalesce("nbr", "comp")).alias("comp")))
+    jump = _checkpoint(
+        new.alias("x")
+        .join(new.alias("y"), F.col("x.comp") == F.col("y.id"), "left")
+        .select(F.col("x.id").alias("id"),
+                F.least(F.col("x.comp"),
+                        F.coalesce(F.col("y.comp"),
+                                   F.col("x.comp"))).alias("comp")))
+    return jump, _changed(jump, color, ["id"]).isEmpty()
+
+
 def strongly_connected_components(edges: DataFrame, src: str = "src",
                                   dst: str = "dst", max_outer: int = 50,
                                   max_inner: int = 50) -> DataFrame:
@@ -124,60 +145,28 @@ def strongly_connected_components(edges: DataFrame, src: str = "src",
         return spark.createDataFrame(sorted((v, c) for c, v in members),
                                      f"id {t}, component {t}")
 
-    done: DataFrame | None = None
-
-    def emit(df: DataFrame) -> None:
-        nonlocal done
-        done = df if done is None else done.unionByName(df)
-
-    cur = _checkpoint(e)
-    nodes = _checkpoint(cur.select(F.col("a").alias("id"))
-                        .union(cur.select(F.col("b").alias("id"))).distinct())
-    for _ in range(max_outer):
-        if nodes.isEmpty():
-            break
-        # --- 1. trim singleton SCCs (no in- or no out-edges remaining)
+    def outer_step(state):
+        cur, nodes, found = state
+        # --- 1. trim singleton SCCs (no in- or no out-edges remaining).
+        # The cap only bounds an optimization, so it does not raise: a
+        # singleton left untrimmed is still found by steps 2-3.
         for _ in range(max_inner):
             core = (cur.select(F.col("a").alias("id")).distinct()
                     .join(cur.select(F.col("b").alias("id")).distinct(), "id"))
             trimmed = nodes.join(core, "id", "left_anti")
             if trimmed.isEmpty():
                 break
-            emit(trimmed.select("id", F.col("id").alias("component")))
+            found.append(trimmed.select("id", F.col("id").alias("component")))
             cur = _checkpoint(
                 cur.join(core.withColumnRenamed("id", "a"), "a", "left_semi")
                    .join(core.withColumnRenamed("id", "b"), "b", "left_semi"))
             nodes = _checkpoint(core)
         if nodes.isEmpty():
-            break
+            return (cur, nodes, found), True
         # --- 2. min-ancestor coloring (forward propagation + pointer jump)
-        color = _checkpoint(nodes.select("id", F.col("id").alias("comp")))
-        for _ in range(max_inner):
-            inc = (cur.join(color.select(F.col("id").alias("a"),
-                                         F.col("comp").alias("cu")), "a")
-                   .groupBy("b").agg(F.min("cu").alias("nbr")))
-            new = (color.join(inc.withColumnRenamed("b", "id"), "id", "left")
-                   .select("id", F.least(F.col("comp"),
-                                         F.coalesce("nbr", "comp")).alias("comp")))
-            jump = (new.alias("x")
-                    .join(new.alias("y"),
-                          F.col("x.comp") == F.col("y.id"), "left")
-                    .select(F.col("x.id").alias("id"),
-                            F.least(F.col("x.comp"),
-                                    F.coalesce(F.col("y.comp"),
-                                               F.col("x.comp"))).alias("comp")))
-            jump = _checkpoint(jump)
-            changed = (jump.join(color.withColumnRenamed("comp", "old"), "id")
-                       .filter(F.col("comp") != F.col("old")))
-            color = jump
-            if changed.isEmpty():
-                break
-        else:  # pragma: no cover - loud cap-exhaustion guard
-            raise RuntimeError(
-                f"SCC coloring did not reach fixpoint within max_inner="
-                f"{max_inner} rounds — a truncated coloring would emit "
-                "wrong color classes; raise max_inner (pointer jumping "
-                "needs ~log2(diameter) rounds)")
+        color = _fixpoint(
+            _checkpoint(nodes.select("id", F.col("id").alias("comp"))),
+            partial(_coloring_round, cur), max_inner, "SCC coloring")
         # --- 3. collect SCC(root) by backward BFS within each color class
         roots = (color.filter(F.col("id") == F.col("comp"))
                  .select(F.col("id").alias("tag"), "id"))
@@ -190,18 +179,20 @@ def strongly_connected_components(edges: DataFrame, src: str = "src",
         members = _reach(roots, intra.select(F.col("b").alias("from"),
                                              F.col("a").alias("to")),
                          max_inner, "SCC backward collect")
-        emit(members.select("id", F.col("tag").alias("component")))
+        found.append(members.select("id", F.col("tag").alias("component")))
         # --- 4. peel the found SCCs and iterate
-        found = members.select("id")     # one tag per id: hops are intra-color
+        peeled = members.select("id")    # one tag per id: hops are intra-color
         cur = _checkpoint(
-            cur.join(found.withColumnRenamed("id", "a"), "a", "left_anti")
-               .join(found.withColumnRenamed("id", "b"), "b", "left_anti"))
-        nodes = _checkpoint(nodes.join(found, "id", "left_anti"))
-    if not nodes.isEmpty():
-        raise RuntimeError(
-            f"SCC decomposition did not finish within max_outer={max_outer} "
-            "rounds — raise max_outer (each round peels at least one SCC "
-            "per color class)")
-    if done is None:                     # no non-self-loop edges at all
+            cur.join(peeled.withColumnRenamed("id", "a"), "a", "left_anti")
+               .join(peeled.withColumnRenamed("id", "b"), "b", "left_anti"))
+        nodes = _checkpoint(nodes.join(peeled, "id", "left_anti"))
+        return (cur, nodes, found), nodes.isEmpty()
+
+    cur = _checkpoint(e)
+    nodes = _checkpoint(cur.select(F.col("a").alias("id"))
+                        .union(cur.select(F.col("b").alias("id"))).distinct())
+    found = _fixpoint((cur, nodes, []), outer_step, max_outer,
+                      "SCC decomposition")[2]
+    if not found:                        # no non-self-loop edges at all
         return spark.createDataFrame([], f"id {t}, component {t}")
-    return done
+    return reduce(DataFrame.unionByName, found)

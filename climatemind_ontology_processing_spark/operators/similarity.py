@@ -25,6 +25,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from .traversal import _checkpoint
+
 
 def _dot(a, b):
     return F.aggregate(F.zip_with(a, b, lambda x, y: x * y),
@@ -203,14 +205,13 @@ def embedding_near_dups(vectors: DataFrame, dim: int, threshold: float = 0.9,
     v = vectors.select(F.col(id_col).alias("vid"),
                        F.transform(vec_col, lambda x: x.cast("double")).alias("v"))
     sig = lsh_signature(F.col("v"), dim, bits)
-    banded = v.select(
+    banded = _checkpoint(v.select(
         "vid", "v",
         F.explode(F.array(*[
             F.struct(F.lit(b).alias("band"),
                      F.shiftright(sig, b * rows).bitwiseAND(F.lit(mask)).alias("bh"))
             for b in range(bands)
-        ])).alias("bk")).select("vid", "v", "bk.band", "bk.bh") \
-        .localCheckpoint(eager=True)
+        ])).alias("bk")).select("vid", "v", "bk.band", "bk.bh"))
     cand = (banded.alias("l").join(
                 banded.alias("r"),
                 (F.col("l.band") == F.col("r.band")) &
@@ -827,12 +828,11 @@ def ivfpq_topk(vectors: DataFrame, queries: DataFrame, dim: int,
             F.transform(F.col(vec_col), lambda x: x.cast("double")),
             F.element_at(cent_arr, F.col("cell") + 1),
             lambda x, c: x - c)
-        base = (vectors.select(F.col(id_col).alias("vec_id"),
-                               cell_of.alias("cell"),
-                               F.col(vec_col))
-                .withColumn("_res", res)
-                .select("vec_id", "cell", "_res")
-                .localCheckpoint(eager=True))
+        base = _checkpoint(vectors.select(F.col(id_col).alias("vec_id"),
+                                          cell_of.alias("cell"),
+                                          F.col(vec_col))
+                           .withColumn("_res", res)
+                           .select("vec_id", "cell", "_res"))
         corpus = base.select("vec_id", "cell",
                              pq_codes(F.col("_res"), cbs).alias("codes"))
     else:
@@ -852,9 +852,8 @@ def ivfpq_topk(vectors: DataFrame, queries: DataFrame, dim: int,
             F.transform(F.col("qv"), lambda x: x.cast("double")),
             F.element_at(cent_arr, F.col("cell") + 1),
             lambda x, c: x - c)
-        qbase = (probe_cells.withColumn("_qres", qres)
-                 .select("qid", "cell", "_qres")
-                 .localCheckpoint(eager=True))
+        qbase = _checkpoint(probe_cells.withColumn("_qres", qres)
+                            .select("qid", "cell", "_qres"))
         probe = qbase.select(
             "qid", "cell", pq_luts(F.col("_qres"), cbs).alias("luts"))
     else:

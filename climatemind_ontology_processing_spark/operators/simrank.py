@@ -28,6 +28,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .traversal import _checkpoint
+
 MICRO = 10 ** 6
 
 
@@ -44,19 +46,18 @@ def simrank(edges: DataFrame, rounds: int = 3, c_num: int = 4,
         raise ValueError("rounds must be >= 1")
     if not (0 < c_num < c_den):
         raise ValueError("need 0 < c_num < c_den (C in (0, 1))")
-    e = (edges.select(F.col(src).alias("i"), F.col(dst).alias("v"))
-         .filter(F.col("i") != F.col("v")).distinct()
-         .localCheckpoint(eager=True))
+    e = _checkpoint(edges.select(F.col(src).alias("i"), F.col(dst).alias("v"))
+                    .filter(F.col("i") != F.col("v")).distinct())
     n_edges = e.count()
     if n_edges > max_edges:
         raise ValueError(
             f"{n_edges} edges > max_edges={max_edges}: exact SimRank is "
             "|E|^2 per round — run on an induced candidate neighborhood")
-    nodes = (e.select(F.col("i").alias("id"))
-             .unionByName(e.select(F.col("v").alias("id")))
-             .distinct().localCheckpoint(eager=True))
-    indeg = e.groupBy(F.col("v").alias("id")) \
-             .agg(F.count("*").alias("d")).localCheckpoint(eager=True)
+    nodes = _checkpoint(e.select(F.col("i").alias("id"))
+                        .unionByName(e.select(F.col("v").alias("id")))
+                        .distinct())
+    indeg = _checkpoint(e.groupBy(F.col("v").alias("id"))
+                        .agg(F.count("*").alias("d")))
     diag = nodes.select(F.col("id").alias("a"), F.col("id").alias("b"),
                         F.lit(MICRO).cast("long").alias("s"))
     s = diag
@@ -76,6 +77,6 @@ def simrank(edges: DataFrame, rounds: int = 3, c_num: int = 4,
                           F.expr(f"({c_num} * _sum) DIV "
                                  f"({c_den} * da * db)").alias("s"))
                   .filter(F.col("s") > 0))
-        s = diag.unionByName(scaled).localCheckpoint(eager=True)
+        s = _checkpoint(diag.unionByName(scaled))
     return s.filter(F.col("a") != F.col("b")) \
             .select("a", "b", F.col("s").alias("s_micro"))

@@ -12,6 +12,11 @@ it under AQE.  The small-graph arm runs the kernel's driver twin,
 :func:`_reach_local`.  Both arms share one round cap: they raise iff the
 frontier is still non-empty after ``max_rounds`` expansions.
 
+Every capped loop in the package runs on :func:`_fixpoint` (the round
+count and the shared cap error) and every checkpoint goes through
+:func:`_checkpoint`; :func:`_changed` and :func:`_relax_min` serve the
+loops that detect convergence by comparing rounds.
+
 Edges schema throughout: (src string, dst string, type string, ...).
 """
 from __future__ import annotations
@@ -112,11 +117,43 @@ def _check_direction(direction: str) -> None:
         raise ValueError(f"bad direction {direction!r}")
 
 
-def _cap_error(what: str, max_rounds: int) -> RuntimeError:
+def _cap_error(what: str, max_rounds: int, hint: str = "") -> RuntimeError:
     return RuntimeError(
-        f"{what} did not converge within max_rounds={max_rounds}: the "
-        f"frontier is still non-empty after {max_rounds} expansions — "
+        f"{what} did not converge within max_rounds={max_rounds}{hint} — "
         "raise the operator's round cap")
+
+
+def _fixpoint(state, step, max_rounds: int, what: str, hint: str = ""):
+    """The one capped loop: runs ``state, done = step(state)`` at most
+    ``max_rounds`` times and returns ``state`` as soon as ``done``.  Raises
+    :func:`_cap_error` iff the loop has not converged after ``max_rounds``
+    rounds — a truncated fixpoint would be indistinguishable from a
+    converged one.  ``step`` owns its probe and its checkpoints."""
+    for _ in range(max_rounds):
+        state, done = step(state)
+        if done:
+            return state
+    raise _cap_error(what, max_rounds, hint)
+
+
+def _changed(new: DataFrame, old: DataFrame, keys: list[str]) -> DataFrame:
+    """Rows of ``new`` whose one value column (every column not in
+    ``keys``) moved since ``old``, keys missing from ``old`` included."""
+    (val,) = [c for c in new.columns if c not in keys]
+    return (new.join(old.select(*keys, F.col(val).alias("_old")), keys, "left")
+            .filter(F.col("_old").isNull() | (F.col(val) != F.col("_old"))))
+
+
+def _relax_min(state: DataFrame, keys: list[str], val: str, relax,
+               max_rounds: int, what: str) -> DataFrame:
+    """Min-label relaxation to fixpoint: each round folds ``relax(state)``
+    (rows of ``keys`` + ``val``) into ``state`` with one map-side-combinable
+    min per key, checkpoints, and stops once no value moved."""
+    def step(cur):
+        new = _checkpoint(cur.unionByName(relax(cur)).groupBy(*keys)
+                          .agg(F.min(val).alias(val)))
+        return new, _changed(new, cur, keys).isEmpty()
+    return _fixpoint(_checkpoint(state), step, max_rounds, what)
 
 
 def _reach(seeds: DataFrame, hops: DataFrame, max_rounds: int,
@@ -126,21 +163,22 @@ def _reach(seeds: DataFrame, hops: DataFrame, max_rounds: int,
     struct) id type.  Each round joins the frontier to ``hops`` and
     anti-joins the visited set on (tag, id), so converged tags stop
     contributing work and one loop serves every tag.  Returns the visited
-    (tag, id) pairs, seeds included.  Raises iff the frontier is still
-    non-empty after ``max_rounds`` expansions (a truncated fixpoint would be
-    indistinguishable from a converged one)."""
+    (tag, id) pairs, seeds included; converged once a round finds nothing
+    new."""
     hops = _checkpoint(hops)
-    visited = _checkpoint(seeds.select("tag", "id").distinct())
-    frontier = visited
-    for _ in range(max_rounds):
+
+    def step(state):
+        visited, frontier = state
         frontier = _checkpoint(
             frontier.join(hops, frontier.id == hops["from"])
             .select("tag", F.col("to").alias("id")).distinct()
             .join(visited, ["tag", "id"], "left_anti"))
         if frontier.isEmpty():
-            return visited
-        visited = _checkpoint(visited.unionByName(frontier))
-    raise _cap_error(what, max_rounds)
+            return state, True
+        return (_checkpoint(visited.unionByName(frontier)), frontier), False
+
+    visited = _checkpoint(seeds.select("tag", "id").distinct())
+    return _fixpoint((visited, visited), step, max_rounds, what)[0]
 
 
 def _reach_local(adj: dict, seeds, max_rounds: int, what: str) -> set:
@@ -149,14 +187,15 @@ def _reach_local(adj: dict, seeds, max_rounds: int, what: str) -> set:
     raises at exactly the kernel's boundary.  Returns the visited (tag, id)
     set, seeds included."""
     visited = set(seeds)
-    frontier = visited
-    for _ in range(max_rounds):
+
+    def step(frontier):
         frontier = {(t, v) for t, u in frontier
                     for v in adj.get(u, ())} - visited
-        if not frontier:
-            return visited
-        visited |= frontier
-    raise _cap_error(what, max_rounds)
+        visited.update(frontier)
+        return frontier, not frontier
+
+    _fixpoint(visited, step, max_rounds, what)
+    return visited
 
 
 def bfs_reachable(edges: DataFrame, seeds: DataFrame | list,

@@ -23,6 +23,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from .traversal import _checkpoint
+
 MICRO = 1_000_000
 
 
@@ -48,21 +50,20 @@ def spread_types(edges: DataFrame, seeds: DataFrame, rounds: int = 2,
     e = (edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
          .filter(F.col("a").isNotNull() & F.col("b").isNotNull())
          .filter(F.col("a") != F.col("b")).distinct())
-    sym = (e.select(F.col("a").alias("id"), F.col("b").alias("nbr"))
-           .unionByName(e.select(F.col("b").alias("id"),
-                                 F.col("a").alias("nbr")))
-           .distinct().localCheckpoint(eager=True))
+    sym = _checkpoint(e.select(F.col("a").alias("id"), F.col("b").alias("nbr"))
+                      .unionByName(e.select(F.col("b").alias("id"),
+                                            F.col("a").alias("nbr")))
+                      .distinct())
 
     dup = F.when(
         F.count("*").over(Window.partitionBy(id_col)) > 1,
         F.raise_error(F.concat(F.lit("spread_types: node seeded twice: "),
                                F.col(id_col).cast("string"))))
-    clamped = (seeds.select(F.col(id_col).alias("id"),
-                            F.col(type_col).alias("type"),
-                            F.coalesce(dup.cast("long"),
-                                       F.lit(MICRO).cast("long"))
-                            .alias("score_micro"))
-               .localCheckpoint(eager=True))
+    clamped = _checkpoint(seeds.select(F.col(id_col).alias("id"),
+                                       F.col(type_col).alias("type"),
+                                       F.coalesce(dup.cast("long"),
+                                                  F.lit(MICRO).cast("long"))
+                                       .alias("score_micro")))
     state = clamped
     for _ in range(rounds):
         gathered = (sym.join(state.withColumnRenamed("id", "nbr"), "nbr")
@@ -74,9 +75,9 @@ def spread_types(edges: DataFrame, seeds: DataFrame, rounds: int = 2,
                       .select("id", "type",
                               F.expr(f"(_g * {MICRO}) div _tot")
                               .cast("long").alias("score_micro")))
-        state = (normalized.join(clamped.select("id"), "id", "left_anti")
-                 .unionByName(clamped)
-                 .localCheckpoint(eager=True))
+        state = _checkpoint(
+            normalized.join(clamped.select("id"), "id", "left_anti")
+            .unionByName(clamped))
     return state
 
 

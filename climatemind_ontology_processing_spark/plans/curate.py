@@ -35,6 +35,7 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..operators.traversal import _checkpoint
 from .lineage import append_lineage_rows, completed_buckets
 
 STAGES = ("paragraphs", "pii", "exact", "near", "quality", "pack")
@@ -521,7 +522,7 @@ def curate_stream(pages: DataFrame, base_out: str, checkpoint_path: str,
         if batch_df.isEmpty():
             return
         curate_increment(batch_df.sparkSession,
-                         batch_df.localCheckpoint(eager=True),
+                         _checkpoint(batch_df),
                          base_out, f"b{batch_id:06d}",
                          min_quality=min_quality, langs=langs,
                          seq_len=seq_len, max_para_df=max_para_df,

@@ -32,6 +32,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..operators.traversal import _checkpoint
+
 _LSH_MARKERS = ("hash_family", "shingle_n", "num_hashes", "bands")
 
 
@@ -183,7 +185,7 @@ def near_dup_probe_stream(pages: DataFrame, bucket_path: str,
 
     def _process(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
-        batch_df = batch_df.localCheckpoint(eager=True)
+        batch_df = _checkpoint(batch_df)
         # explicit existence check — a bare try/except around the read
         # would silently treat a CORRUPT bucket table as "no history" and
         # drop every cross-batch candidate (loud-failure philosophy)

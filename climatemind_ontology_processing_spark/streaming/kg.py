@@ -46,6 +46,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..operators.traversal import _checkpoint
+
 LABELS_SCHEMA = "id string, component string"
 
 
@@ -130,8 +132,9 @@ def kg_build_stream(pages: DataFrame, out_dir: str, checkpoint_path: str,
 
     def _process(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
-        t = (triples_from_pages(batch_df, aliases, reextract=reextract)
-             .localCheckpoint(eager=True))   # used twice: sink + edges
+        # used twice: sink + edges
+        t = _checkpoint(triples_from_pages(batch_df, aliases,
+                                           reextract=reextract))
         _idempotent_write(t, batch_id, triples_path)
         edges = alias_edges_fn(t)
         prev = _latest_labels(spark, labels_path, before_batch=batch_id)

@@ -62,7 +62,8 @@ def test_sigma_overflow_guard_is_loud(spark, monkeypatch):
 
 def test_forward_cap_is_loud(spark):
     e = _edges(spark, [(i, i + 1) for i in range(10)])
-    with pytest.raises(RuntimeError, match="did not exhaust"):
+    with pytest.raises(RuntimeError, match="sampled_betweenness did not "
+                                           "converge within max_rounds=3"):
         sampled_betweenness(
             e, sources=spark.createDataFrame([(0,)], "id int"),
             max_rounds=3)

@@ -77,3 +77,15 @@ def test_empty_input_returns_empty_frame(spark):
     out = jp_coloring(df)
     assert out.count() == 0
     assert out.columns == ["id", "color", "jp_round"]
+
+
+def test_converges_at_the_cap(spark):
+    """A single edge colors one node per round: ``max_rounds=2`` colors
+    both ends, and one round less raises."""
+    df = spark.createDataFrame([(0, 1)], "src int, dst int")
+    got = {r.id: (r.color, r.jp_round)
+           for r in jp_coloring(df, max_rounds=2).collect()}
+    assert sorted(got.values()) == [(0, 1), (1, 2)]
+    with pytest.raises(RuntimeError, match="jp_coloring did not converge "
+                                           "within max_rounds=1"):
+        jp_coloring(df, max_rounds=1)

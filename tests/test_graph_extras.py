@@ -243,6 +243,19 @@ def test_k_truss_peeling_and_guards(spark):
         k_truss(edges, k=4, max_rounds=1)  # cascade needs >1 round
 
 
+def test_k_truss_converges_when_every_edge_peels(spark):
+    """A round that peels every edge leaves nothing to peel: a lone edge
+    (no triangle) gives an empty 3-truss at ``max_rounds=1``, and one
+    round less raises."""
+    from climatemind_ontology_processing_spark.operators.graphstats import (
+        k_truss)
+    edges = spark.createDataFrame([(0, 1)], "src long, dst long")
+    assert k_truss(edges, k=3, max_rounds=1).count() == 0
+    with pytest.raises(RuntimeError,
+                       match="k_truss did not converge within max_rounds=0"):
+        k_truss(edges, k=3, max_rounds=0)
+
+
 def test_hll_windowed_stream_equals_batch(spark, tmp_path):
     """Streaming windowed HLL: the streamed register tables (two
     micro-batches, one late-but-in-watermark duplicate-heavy delivery)
@@ -651,7 +664,8 @@ def test_lt_cascade_guards(spark):
         lt_cascade(edf, sdf)
     edf2 = spark.createDataFrame([(0, 1, 5), (1, 2, 5)],
                                  "src int, dst int, w int")
-    with pytest.raises(RuntimeError, match="still activating"):
+    with pytest.raises(RuntimeError, match="lt_cascade did not converge "
+                                           "within max_rounds=1"):
         lt_cascade(edf2, sdf, max_rounds=1)
 
 

@@ -79,3 +79,16 @@ def test_round_cap_raises(spark):
     e = spark.createDataFrame([(0, 1), (1, 2)], "src int, dst int")
     with pytest.raises(RuntimeError, match="max_rounds"):
         luby_mis(e, max_rounds=0)
+
+
+def test_converges_at_the_cap(spark):
+    """A single edge empties the live set in round 1: ``max_rounds=1``
+    returns that round's result, and one round less raises."""
+    e = spark.createDataFrame([(0, 1)], "src int, dst int")
+    got = {(r["id"], r["mis_round"])
+           for r in luby_mis(e, max_rounds=1).collect()}
+    assert got == set(_replica([(0, 1)]).items())
+    assert len(got) == 1
+    with pytest.raises(RuntimeError,
+                       match="luby_mis did not converge within max_rounds=0"):
+        luby_mis(e, max_rounds=0)

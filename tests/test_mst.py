@@ -72,7 +72,8 @@ def test_boruvka_round_cap_raises(spark):
     # a path of 9 nodes needs ~log2 rounds; cap 1 round can't finish
     edges = [(i, i + 1, i + 1) for i in range(8)]
     df = spark.createDataFrame(edges, "src int, dst int, weight int")
-    with pytest.raises(RuntimeError, match="rounds exhausted"):
+    with pytest.raises(RuntimeError, match="boruvka_msf did not converge "
+                                           "within max_rounds=1"):
         boruvka_msf(df, max_rounds=1)
 
 
@@ -141,7 +142,8 @@ def test_greedy_matching_cap_raises(spark):
     # left end -> needs >1 round; cap at 1 must raise loudly
     edges = [(i, i + 1, i + 1) for i in range(6)]
     df = spark.createDataFrame(edges, "src int, dst int, weight int")
-    with pytest.raises(RuntimeError, match="rounds exhausted"):
+    with pytest.raises(RuntimeError, match="greedy_matching did not converge "
+                                           "within max_rounds=1"):
         greedy_matching(df, max_rounds=1)
 
 
@@ -277,3 +279,16 @@ def test_single_linkage_matches_scipy_style_reference(spark):
         wsets.setdefault(c, set()).add(n)
     assert sorted(map(sorted, gsets.values())) == \
         sorted(map(sorted, wsets.values()))
+
+
+def test_greedy_matching_converges_at_the_cap(spark):
+    """A single edge matches in round 1: ``max_rounds=1`` returns it, and
+    one round less raises."""
+    from climatemind_ontology_processing_spark.operators.mst import (
+        greedy_matching)
+    df = spark.createDataFrame([(0, 1, 5)], "src int, dst int, weight int")
+    got = [tuple(r) for r in greedy_matching(df, max_rounds=1).collect()]
+    assert got == [(0, 1, 5)]
+    with pytest.raises(RuntimeError, match="greedy_matching did not "
+                                           "converge within max_rounds=0"):
+        greedy_matching(df, max_rounds=0)

@@ -104,6 +104,22 @@ def test_dag_layers_paths_agree(spark, force_distributed):
     assert fast == {"a": 0, "x": 0, "b": 1, "c": 2, "d": 3}
 
 
+def test_dag_layers_raises_one_round_short(spark, force_distributed):
+    """The driver twin has no rounds, so the distributed loop is pinned
+    alone: a 3-edge chain converges in 4 rounds (the 4th moves no layer),
+    so max_rounds=3 raises and max_rounds=4 returns the layering."""
+    from climatemind_ontology_processing_spark.operators.layout import (
+        dag_layers)
+    e = spark.createDataFrame([("a", "b"), ("b", "c"), ("c", "d")],
+                              "src string, dst string")
+    with pytest.raises(RuntimeError,
+                       match="dag_layers did not converge within "
+                             "max_rounds=3"):
+        dag_layers(e, max_rounds=3)
+    got = {r.id: r.layer for r in dag_layers(e, max_rounds=4).collect()}
+    assert got == {"a": 0, "b": 1, "c": 2, "d": 3}
+
+
 def test_dag_layers_cycle_raises(spark):
     from climatemind_ontology_processing_spark.operators.layout import (
         dag_layers)
@@ -373,6 +389,54 @@ def test_round_cap_boundary_same_on_both_arms(spark, monkeypatch, case):
         got[threshold] = sorted(run(spark, CAP).collect())
         with pytest.raises(RuntimeError, match=f"max_rounds={CAP}"):
             run(spark, CAP + 1).collect()
+    small, dist = got.values()
+    assert len(small) == n_rows
+    assert small == dist
+
+
+def _counted_twin_cases():
+    """{name: (run(spark, edges, cap) -> DataFrame, first cap that
+    converges, rows at that cap)} for the driver twins that count rounds,
+    on the weighted path n0 -> n1 -> ... -> n5 (edge i weighs i + 1)."""
+    from climatemind_ontology_processing_spark.operators.betweenness import (
+        sampled_betweenness)
+    from climatemind_ontology_processing_spark.operators.mst import (
+        boruvka_msf)
+    from climatemind_ontology_processing_spark.operators.paths import (
+        landmark_distances)
+
+    def n0(spark):
+        return spark.createDataFrame([("n0",)], "id string")
+
+    return {
+        "landmark_distances": (lambda spark, e, cap: landmark_distances(
+            e, weight="weight", undirected=False, landmarks=n0(spark),
+            max_rounds=cap), 6, 6),
+        "sampled_betweenness": (lambda spark, e, cap: sampled_betweenness(
+            e, sources=n0(spark), max_rounds=cap), 6, 5),
+        "boruvka_msf": (lambda spark, e, cap: boruvka_msf(
+            e, max_rounds=cap), 2, 5),
+    }
+
+
+@pytest.mark.parametrize("case", sorted(_counted_twin_cases()))
+def test_counted_twin_cap_boundary_same_on_both_arms(spark, monkeypatch,
+                                                     case):
+    """The driver twins that count rounds share their distributed loop's
+    cap: one round short of convergence raises on both arms, and the
+    first converging cap returns identical rows on both."""
+    run, cap, n_rows = _counted_twin_cases()[case]
+    e = spark.createDataFrame(
+        [(f"n{i}", f"n{i + 1}", i + 1) for i in range(5)],
+        "src string, dst string, weight int")
+    got = {}
+    for threshold in (trav.SMALL_GRAPH_THRESHOLD, 0):
+        monkeypatch.setattr(trav, "SMALL_GRAPH_THRESHOLD", threshold)
+        got[threshold] = sorted(run(spark, e, cap).collect())
+        with pytest.raises(RuntimeError,
+                           match=f"{case} did not converge within "
+                                 f"max_rounds={cap - 1}"):
+            run(spark, e, cap - 1).collect()
     small, dist = got.values()
     assert len(small) == n_rows
     assert small == dist

@@ -6,7 +6,7 @@ row counts, sorted-column schemas, and the driver's stringified
 value hash.  Exit code 0 iff everything matches.
 
 Usage:  python tools/verify_oracles.py [sf_dir] [query ...]
-        (default sf_dir /root/testdata/sf0.01; no query names = all)
+        (default sf_dir tests/data/sf0.001; no query names = all)
 """
 from __future__ import annotations
 
@@ -18,6 +18,7 @@ import sys
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
+SF_DIR = os.path.join(REPO, "tests", "data", "sf0.001")
 TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
           "lineitem", "events", "documents", "embeddings"]
 
@@ -35,8 +36,7 @@ def main() -> int:
     from climatemind_ontology_processing_spark.session import get_spark
 
     args = sys.argv[1:]
-    sf_dir = args[0] if args and os.path.isdir(args[0]) else \
-        "/root/testdata/sf0.01"
+    sf_dir = args[0] if args and os.path.isdir(args[0]) else SF_DIR
     wanted = [a for a in args if not os.path.isdir(a)]
 
     mod = importlib.import_module("__spark_entry__")
