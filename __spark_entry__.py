@@ -305,9 +305,9 @@ def _q_lsh_probe(spark, sf_dir):
     with marker columns) and a probing 'new' side (odd doc_ids); emits the
     cross near-dup candidates (a, b), a < b.  md5_60 family so the DuckDB
     oracle replays every bucket; cap OFF so query == oracle semantics (the
-    cap is pinned by pytest, per the guardrail pattern).  The batch core of
-    near_dup_probe_stream — streaming==batch equivalence is pinned in
-    tests/test_streaming_and_classes.py."""
+    cap is pinned by pytest, per the guardrail pattern).  The same probe
+    ``plans/curate.curate_increment`` runs against its persisted bucket
+    table."""
     from climatemind_ontology_processing_spark.streaming.dedup import (
         _doc_lsh_buckets, probe_lsh_buckets)
     docs = _read(spark, sf_dir, "documents")
@@ -1441,9 +1441,7 @@ def _q_trade_edges(spark, sf_dir):
 
 def _q_dag_layers(spark, sf_dir):
     """X3 layering stage: longest-path DAG layers (the Sugiyama/dot layer
-    assignment, operators/layout.py) over the acyclic src<dst trade graph.
-    The barycenter x-coordinates are presentation-side (pytest-pinned);
-    the layering is the scale-relevant stage and is oracled here."""
+    assignment, operators/layout.py) over the acyclic src<dst trade graph."""
     from climatemind_ontology_processing_spark.operators.layout import (
         dag_layers)
     edges = _trade_edges(spark, sf_dir).filter(F.col("src") < F.col("dst"))
@@ -5322,7 +5320,9 @@ def _oracle_sql_literal() -> dict[str, str]:
     # 8 bands x 4 rows exploded; `src` is a CTE named `docs`(doc_id, text)
     minhash_cte = f"""
             toks AS (
-              SELECT doc_id, regexp_split_to_array(lower(text), '\\s+') AS t
+              SELECT doc_id,
+                     list_filter(regexp_split_to_array(lower(text), '\\s+'),
+                                 w -> w <> '') AS t
               FROM docs
             ),
             sh0 AS (
@@ -5331,7 +5331,7 @@ def _oracle_sql_literal() -> dict[str, str]:
                        i -> ('0x' || substring(
                               md5(array_to_string(t[i : i + 2], ' ')), 1, 15)
                             )::BIGINT)) AS sh
-              FROM toks
+              FROM toks WHERE len(t) > 0
             ),
             sigs AS (
               SELECT doc_id, [{sig_exprs}] AS sig
@@ -5396,7 +5396,9 @@ def _oracle_sql_literal() -> dict[str, str]:
         """,
         "jaccard_pairs": """
             WITH toks AS (
-              SELECT doc_id, regexp_split_to_array(lower(text), '\\s+') AS t
+              SELECT doc_id,
+                     list_filter(regexp_split_to_array(lower(text), '\\s+'),
+                                 w -> w <> '') AS t
               FROM documents
             ),
             sh AS (
@@ -5405,7 +5407,7 @@ def _oracle_sql_literal() -> dict[str, str]:
                        unnest(list_transform(
                          generate_series(1, greatest(len(t) - 2, 1)),
                          i -> array_to_string(t[i : i + 2], ' '))) AS s
-                FROM toks
+                FROM toks WHERE len(t) > 0
               )
             ),
             sizes AS (SELECT doc_id, count(*) AS sz FROM sh GROUP BY doc_id),
@@ -5823,7 +5825,9 @@ def _oracle_sql_literal() -> dict[str, str]:
         """,
         "decontamination": """
             WITH toks AS (
-              SELECT doc_id, regexp_split_to_array(lower(text), '\\s+') AS t
+              SELECT doc_id,
+                     list_filter(regexp_split_to_array(lower(text), '\\s+'),
+                                 w -> w <> '') AS t
               FROM documents
             ),
             grams AS (
@@ -5831,7 +5835,7 @@ def _oracle_sql_literal() -> dict[str, str]:
                      unnest(list_transform(
                        generate_series(1, greatest(len(t) - 4, 1)),
                        i -> array_to_string(t[i : i + 4], ' '))) AS g
-              FROM toks
+              FROM toks WHERE len(t) > 0
             ),
             bench AS (SELECT DISTINCT g FROM grams WHERE doc_id % 20 = 0)
             SELECT doc_id, count(DISTINCT g) AS n_hits
@@ -7544,7 +7548,9 @@ def _oracle_sql_literal() -> dict[str, str]:
         """,
         "containment_pairs": """
             WITH toks AS (
-              SELECT doc_id, regexp_split_to_array(lower(text), '\\s+') AS t
+              SELECT doc_id,
+                     list_filter(regexp_split_to_array(lower(text), '\\s+'),
+                                 w -> w <> '') AS t
               FROM documents
             ),
             sh AS (
@@ -7553,7 +7559,7 @@ def _oracle_sql_literal() -> dict[str, str]:
                        unnest(list_transform(
                          generate_series(1, greatest(len(t) - 2, 1)),
                          i -> array_to_string(t[i : i + 2], ' '))) AS s
-                FROM toks
+                FROM toks WHERE len(t) > 0
               )
             ),
             sizes AS (SELECT doc_id, count(*) AS sz FROM sh GROUP BY doc_id),

@@ -6,7 +6,7 @@ anchor text — the visible text of links pointing at an entity's page
 (the classic Wikipedia/web entity-linking dictionary construction).
 This module extracts (page_url, href, anchor) rows from raw HTML and
 aggregates them into a per-target alias dictionary that
-``functions.mentions.detect_mentions`` can consume as its broadcast
+``functions.triples.extract_triples`` can consume as its broadcast
 alias map.
 
 Extraction is a frozen pure-Python scanner (same determinism contract,

@@ -137,17 +137,19 @@ def let_bound(expr, fn):
 
 def shingle_hashes(text_col, n: int, hash_family: str = "xxhash64"):
     """``array<long>`` of DISTINCT word n-gram hashes — THE shingling
-    contract (lower + ``\\s+`` tokenize ONCE via let-binding, n-window
-    slide, ``token_hash``).  Shared by the dedup suite and
-    ``decontaminate._ngram_hashes`` so the two can never silently diverge
-    on tokenization or hashing."""
-    tokens = F.split(F.lower(text_col), r"\s+")
+    contract (lower + ``\\s+`` tokenize ONCE via let-binding, empty tokens
+    dropped, n-window slide, ``token_hash``).  Blank text has no tokens and
+    so no shingles: content-free documents never pair with each other.
+    Shared by the dedup suite and ``decontaminate._ngram_hashes`` so the
+    two can never silently diverge on tokenization or hashing."""
+    tokens = F.filter(F.split(F.lower(text_col), r"\s+"), lambda w: w != "")
     shingle = let_bound(
         tokens,
-        lambda t: F.transform(
+        lambda t: F.when(F.size(t) == 0, F.array().cast("array<bigint>"))
+        .otherwise(F.transform(
             F.sequence(F.lit(0), F.greatest(F.size(t) - n, F.lit(0))),
             lambda i: token_hash(F.concat_ws(" ", F.slice(t, i + 1, n)),
-                                 hash_family)))
+                                 hash_family))))
     return F.array_distinct(shingle)
 
 

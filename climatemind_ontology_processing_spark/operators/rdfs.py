@@ -40,8 +40,6 @@ is invisible).
 """
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -58,8 +56,7 @@ S, P, O = "subj", "pred", "obj"
 # precedent (CLAUDE.md: literal expression trees cost analysis time) —
 # bigger schemas keep the broadcast-join path unchanged.  Set to 0 to
 # disable (used by the equivalence pin in tests).
-SCHEMA_LITERAL_MAX = int(os.environ.get("CMKG_RDFS_SCHEMA_LITERAL_MAX",
-                                        "256"))
+SCHEMA_LITERAL_MAX = 256
 
 
 def transitive_closure(pairs: DataFrame, a: str = "a", b: str = "b",

@@ -4,7 +4,7 @@ The highest-precision triple source on the real web is not free text —
 it is embedded schema.org markup: ``<script type="application/ld+json">``
 blocks that sites publish for search engines.  A web-scale KG pipeline
 mines these FIRST (precision ~1, no NLP) and falls back to
-dictionary/pattern extraction (functions/mentions, operators/hearst,
+dictionary/pattern extraction (functions/triples, operators/hearst,
 operators/openie) for the long tail.  The reference has no counterpart
 (its input is a curated OWL file); this is the web generalization of its
 "trusted structured source" role.

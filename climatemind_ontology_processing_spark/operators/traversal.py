@@ -66,10 +66,14 @@ def _checkpoint(df: DataFrame) -> DataFrame:
     Re-aliasing every column mints fresh attribute ids, which sidesteps the
     stale-attribute lookup.  If the retry fails too, its error propagates:
     an uncheckpointed plan would grow the lineage of every later iteration.
+    A plan that fails on purpose (``F.raise_error``) is not retried: it
+    would only fail the same way again.
     """
     try:
         return df.localCheckpoint(eager=True)
-    except Exception:
+    except Exception as e:
+        if getattr(e, "getCondition", lambda: None)() == "USER_RAISED_EXCEPTION":
+            raise
         aliased = df.select([F.col(c).alias(c) for c in df.columns])
         return aliased.localCheckpoint(eager=True)
 

@@ -111,22 +111,6 @@ def reverse_solution_edges(edges: DataFrame, adaptation_ids: DataFrame) -> DataF
         *out_cols)
 
 
-def filter_by_edge_type(nodes: DataFrame, edges: DataFrame,
-                        edge_type: str | None = None
-                        ) -> tuple[DataFrame, DataFrame]:
-    """P7 — edge-type display filter (``visualize.py:248-264``
-    ``get_filtered_data``): None keeps everything; otherwise keep edges of
-    exactly that type plus their incident nodes (duplicates deduped — the
-    reference appends both endpoints per edge; node identity is a set)."""
-    if edge_type is None:
-        return nodes, edges
-    kept = edges.filter(F.col("type") == edge_type)
-    endpoint_ids = (kept.select(F.col("src").alias("label"))
-                    .unionByName(kept.select(F.col("dst").alias("label")))
-                    .distinct())
-    return nodes.join(endpoint_ids, "label", "left_semi"), kept
-
-
 def build_subgraphs(nodes: DataFrame, edges_annot: DataFrame,
                     mitigation_ids: DataFrame, adaptation_ids: DataFrame,
                     root: str = GREENHOUSE_EFFECT) -> dict[str, DataFrame]:

@@ -64,9 +64,8 @@ def get_spark(
         # local/SSD storage and parallelizes small-file scans; A/B-measured
         # -10..-20% on every TPC-H-substrate query.  Production tables
         # should target 128 MB–1 GB files anyway (guide §6), where this
-        # knob is inert; raise via env for pathological many-tiny-file dirs.
-        .config("spark.sql.files.openCostInBytes",
-                os.environ.get("SPARK_GRAFT_OPEN_COST", str(256 * 1024)))
+        # knob is inert.
+        .config("spark.sql.files.openCostInBytes", str(256 * 1024))
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
         # Spark 4.1: localCheckpoint of a projected join fails with
@@ -85,8 +84,7 @@ def get_spark(
         # keeps the block manager drained; System.gc() on this heap
         # measured ~0.1 s, so the cadence is effectively free (hygiene —
         # co-tenant noise prevented attributing a specific win to it).
-        .config("spark.cleaner.periodicGC.interval",
-                os.environ.get("SPARK_GRAFT_PERIODIC_GC", "1min"))
+        .config("spark.cleaner.periodicGC.interval", "1min")
         .config("spark.driver.memory", driver_memory())
     )
     for k, v in (extra_conf or {}).items():

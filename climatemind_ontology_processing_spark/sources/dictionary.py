@@ -128,7 +128,7 @@ def class_edges(concepts: DataFrame) -> DataFrame:
 
 def alias_map(path: str | None = None, alias_fn=default_aliases) -> dict[str, str]:
     """alias (lowercased) -> canonical concept label.  Broadcast to executors
-    for Aho-Corasick-style mention scanning (functions/mentions.py)."""
+    for entity linking in ``functions.triples.extract_from_text``."""
     out: dict[str, str] = {}
     for c in load_concept_rows(path):
         for a in alias_fn(c["label"]):

@@ -1,7 +1,7 @@
 """Watermarked stream-stream join — event attribution (§2.9).
 
-The remaining Structured Streaming primitive after windows / stateful
-sessions / streaming dedup: joining two live streams (e.g. crawl-fetch
+The Structured Streaming primitive next to windowed counts: joining
+two live streams (e.g. crawl-fetch
 events against robots-fetch events, impressions against conversions)
 requires BOUNDED state on both sides — Spark buffers each side until the
 other side's watermark plus the join's time bound passes, then drops the

@@ -8,9 +8,7 @@ import pytest
 
 from climatemind_ontology_processing_spark.functions.text import (
     decode_html, html_to_text, extraction_parity, with_extracted_text)
-from climatemind_ontology_processing_spark.functions.mentions import detect_mentions
 from climatemind_ontology_processing_spark.plans.pipeline import triples_from_pages
-from climatemind_ontology_processing_spark.sources.dictionary import alias_map
 from climatemind_ontology_processing_spark.sources.pages import (
     expected_triples, gen_row, pages_df)
 
@@ -50,62 +48,6 @@ def test_extraction_partitioning_invariance(spark):
     t8 = sorted(with_extracted_text(pages_df(spark, 50, SEED, partitions=8))
                 .select("url", "text").collect())
     assert t1 == t8
-
-
-def test_mentions_found(spark):
-    pages = pages_df(spark, N, SEED, partitions=4)
-    m = detect_mentions(pages, alias_map())
-    rows = m.limit(10).collect()
-    assert len(rows) > 0
-    assert set(m.columns) == {"url", "warc_ts", "concept", "surface", "pos"}
-
-
-def test_mention_matcher_paths_equivalent(spark):
-    """The large-dictionary token scanner must reproduce the regex path
-    exactly — (concept, surface, pos) triples on real extracted text."""
-    from climatemind_ontology_processing_spark.functions.mentions import scan_text
-    from climatemind_ontology_processing_spark.functions.text import (
-        with_extracted_text)
-    aliases = alias_map()
-    texts = [r.text for r in
-             with_extracted_text(pages_df(spark, 40, SEED)).select("text").collect()]
-    # synthetic edge cases: boundaries, case, double spaces (must NOT match),
-    # hyphens, overlapping candidates
-    texts += [
-        "Global warming causes flooding. global WARMING!",
-        "warming (global warming) xglobal warming global warmingx",
-        "global  warming has two spaces; global warming has one.",
-        "",
-        # non-ASCII: Unicode-alnum neighbours are word boundaries to the
-        # regex's [A-Za-z0-9] and must be to the token path too
-        "églobal warmingé global warming éé global warmingé.",
-        # 'İ'.lower() is 2 chars — a whole-text lower() would misalign every
-        # offset after it; matches following 'İ' runs must still line up
-        "İstanbul heute: global warming beschleunigt. İİİ global warming!",
-        "İ" * 50 + " global warming at a large shifted offset",
-    ]
-    assert any(texts), "need non-empty corpus"
-    for t in texts:
-        assert scan_text(t, aliases, force="regex") == \
-            scan_text(t, aliases, force="tokens"), t[:80]
-
-
-def test_mention_scan_large_dictionary():
-    """10^5-alias dictionary: the token path must stay fast (cost independent
-    of alias count) and find the planted phrases."""
-    import time
-    from climatemind_ontology_processing_spark.functions.mentions import scan_text
-    big = {f"synthetic alias {i} phrase": f"concept_{i}" for i in range(100_000)}
-    big["global warming"] = "global warming"
-    text = ("filler words " * 200 + "global warming " +
-            "synthetic alias 77 phrase ends here. ") * 20
-    t0 = time.time()
-    hits = scan_text(text, big, force="tokens")
-    dt = time.time() - t0
-    concepts = {h[0] for h in hits}
-    assert {"global warming", "concept_77"} <= concepts
-    assert len(hits) == 40
-    assert dt < 2.0, f"token scan degraded: {dt:.2f}s"
 
 
 def test_triples_precision_recall(spark):

@@ -256,70 +256,6 @@ def test_k_truss_converges_when_every_edge_peels(spark):
         k_truss(edges, k=3, max_rounds=0)
 
 
-def test_hll_windowed_stream_equals_batch(spark, tmp_path):
-    """Streaming windowed HLL: the streamed register tables (two
-    micro-batches, one late-but-in-watermark duplicate-heavy delivery)
-    must be ROW-IDENTICAL to the batch computation over all delivered
-    events — registers are a pure function of each window's value set —
-    and the per-window estimates must track the exact distinct counts."""
-    import datetime as dt
-
-    from climatemind_ontology_processing_spark.operators.sketch import (
-        hll_estimate)
-    from climatemind_ontology_processing_spark.streaming.sketches import (
-        hll_windowed_registers)
-
-    def t(minute):
-        return dt.datetime(2026, 1, 1, 12, minute)
-
-    src = str(tmp_path / "hw_in")
-    out = str(tmp_path / "hw_out")
-    ckpt = str(tmp_path / "hw_ckpt")
-    schema = "ts timestamp, value string"
-    # window 1 ([12:00,12:10)): 40 distinct urls (10 arrive LATE in the
-    # second micro-batch); window 2 ([12:10,12:20)): 25 distinct
-    b1 = [(t(1), f"url{i}") for i in range(30)] + \
-         [(t(3), f"url{i}") for i in range(10)]          # dups of the first
-    b2 = [(t(12), f"w2url{i}") for i in range(25)] + \
-         [(t(8), f"url{i}") for i in range(30, 40)]      # LATE, new values
-
-    def run_stream():
-        stream = spark.readStream.schema(schema).parquet(src)
-        q = (hll_windowed_registers(stream, window="10 minutes", p=9)
-             .writeStream.format("parquet").option("path", out)
-             .option("checkpointLocation", ckpt)
-             .outputMode("append").trigger(availableNow=True).start())
-        q.awaitTermination(120)
-
-    spark.createDataFrame(b1, schema).write.mode("append").parquet(src)
-    run_stream()
-    future = [(t(0) + dt.timedelta(hours=6), "z")]
-    spark.createDataFrame(b2, schema).write.mode("append").parquet(src)
-    spark.createDataFrame(future, schema).write.mode("append").parquet(src)
-    run_stream()
-
-    all_events = spark.createDataFrame(b1 + b2 + future, schema)
-    want = {(r.window_start, r.register, r.max_rho)
-            for r in hll_windowed_registers(all_events, window="10 minutes",
-                                            p=9).collect()}
-    got_rows = spark.read.parquet(out).collect()
-    got = {(r.window_start, r.register, r.max_rho) for r in got_rows}
-    unfinalized = want - got
-    assert got <= want
-    assert all(ws.hour >= 18 for ws, _, _ in unfinalized), unfinalized
-
-    # estimates per finalized window vs exact distincts (40 and 35)
-    per_win: dict = {}
-    for r in got_rows:
-        per_win.setdefault(r.window_start, []).append(
-            (r.register, r.max_rho))
-    exact = {t(0): 40, t(10): 25}
-    for ws, regs in per_win.items():
-        df = spark.createDataFrame(regs, "register long, max_rho int")
-        est = hll_estimate(df, p=9)
-        assert abs(est - exact[ws]) / exact[ws] < 0.25, (ws, est)
-
-
 def test_temperature_mix_quotas_and_exact_total(spark):
     """Hand-computed Hamilton apportionment: strata of 100/25/4 rows at
     alpha=0.5 and total_k=26 give weights 10:5:2 -> bases 15/7/3, the one
@@ -355,133 +291,6 @@ def test_temperature_mix_quotas_and_exact_total(spark):
         temperature_quotas(df, "lang", 0)
     with pytest.raises(ValueError):
         temperature_quotas(df, "lang", 10, alpha=0.0)
-
-
-def test_take_k_stream_converges_to_batch(spark, tmp_path):
-    """Streaming exact-k per stratum: after all events are delivered, the
-    max-version selection per stratum must equal the batch
-    stratified_take_k over the union — and only strata whose cut actually
-    improved re-emit (version bumps)."""
-    from climatemind_ontology_processing_spark.operators.sampling import (
-        stratified_take_k)
-    from climatemind_ontology_processing_spark.streaming.sampling import (
-        take_k_stream)
-
-    src = str(tmp_path / "tk_in")
-    ckpt = str(tmp_path / "tk_ckpt")
-    schema = "lang string, doc_id long"
-    b1 = [("en", i) for i in range(20)] + [("de", 100 + i) for i in range(5)]
-    b2 = [("en", 200 + i) for i in range(20)]     # may improve en's cut
-    spark.createDataFrame(b1, schema).coalesce(1) \
-        .write.mode("append").parquet(src)
-    spark.createDataFrame(b2, schema).coalesce(1) \
-        .write.mode("append").parquet(src)
-
-    stream = (spark.readStream.schema(schema)
-              .option("maxFilesPerTrigger", 1).parquet(src))
-    q = (take_k_stream(stream, k=8, stratum_col="lang", key_col="doc_id",
-                       seed=7, hash_family="md5_60")
-         .writeStream.format("memory").queryName("tkq")
-         .option("checkpointLocation", ckpt)
-         .outputMode("update").trigger(availableNow=True).start())
-    q.awaitTermination(120)
-    rows = spark.sql("SELECT * FROM tkq").collect()
-    latest_ver: dict = {}
-    for r in rows:
-        latest_ver[r.stratum] = max(latest_ver.get(r.stratum, 0), r.version)
-    got = {(r.stratum, r.key) for r in rows
-           if r.version == latest_ver[r.stratum]}
-
-    batch = spark.createDataFrame(b1 + b2, schema)
-    want = {(r.lang, str(r.doc_id))
-            for r in stratified_take_k(batch, "lang", k=8, key="doc_id",
-                                       seed=7, hash_family="md5_60")
-            .collect()}
-    assert got == want
-    # de saw one delivery -> exactly one version; en improved or not, but
-    # never more versions than micro-batches
-    assert latest_ver["de"] == 1 and latest_ver["en"] <= 2
-
-
-def test_warc_roundtrip_plain_gzip_and_guards(spark, tmp_path):
-    """WARC scan: byte-exact (url, ts, html) round-trip for plain AND
-    per-record-gzip-member files; non-response records skipped by type;
-    truncation and bad magic raise with offsets; the html body survives
-    multi-byte content and embedded CRLFs."""
-    import datetime as dt
-
-    from climatemind_ontology_processing_spark.sources.warc import (
-        iter_warc_records, parse_warc_responses, read_warc, write_warc,
-        write_warc_record)
-
-    recs = [
-        ("https://a.example/x", dt.datetime(2024, 1, 2, 3, 4, 5),
-         "<html><body>héllo &amp; wörld</body></html>".encode()),
-        ("https://b.example/y?q=1", dt.datetime(2024, 2, 3, 4, 5, 6),
-         b"<html>line1\r\n\r\nline2 WARC/1.0 fake-header</html>"),
-        ("https://c.example/z", dt.datetime(2024, 3, 4, 5, 6, 7),
-         b""),
-    ]
-    body = write_warc(recs) \
-        + write_warc_record("https://req.example/", recs[0][1],
-                            b"GET / HTTP/1.1", rtype="request")
-    gz = write_warc(recs, gzip_members=True)
-    assert parse_warc_responses(body) == recs
-    assert parse_warc_responses(gz) == recs
-
-    plain_dir = tmp_path / "warc_plain"
-    plain_dir.mkdir()
-    (plain_dir / "seg-00000.warc").write_bytes(body)
-    (plain_dir / "seg-00001.warc.gz").write_bytes(gz)
-    got = sorted((r.url, r.warc_ts, bytes(r.html))
-                 for r in read_warc(spark, str(plain_dir)).collect())
-    assert got == sorted(recs * 2)
-
-    # cutting mid-trailing/header -> unterminated; cutting mid-BLOCK of a
-    # lone record -> truncated; both loud
-    with __import__("pytest").raises(ValueError,
-                                     match="truncated|unterminated"):
-        list(iter_warc_records(body[:-20]))
-    one = write_warc(recs[:1])
-    with __import__("pytest").raises(ValueError, match="truncated"):
-        list(iter_warc_records(one[:-10]))
-    with __import__("pytest").raises(ValueError, match="expected WARC"):
-        list(iter_warc_records(b"NOT-A-WARC\r\n\r\n"))
-
-
-def test_warc_feeds_extraction_pipeline(spark, tmp_path):
-    """End-to-end ingest: synthetic pages serialized to WARC (gzip
-    members), scanned back with read_warc, and run through the SAME fused
-    html->text->triples extraction — the triple set must equal the direct
-    pages_df path (byte-identity of html through the WARC wire format)."""
-    from climatemind_ontology_processing_spark.plans.pipeline import (
-        triples_from_pages)
-    from climatemind_ontology_processing_spark.sources.pages import gen_row
-    from climatemind_ontology_processing_spark.sources.warc import (
-        read_warc, write_warc)
-
-    rows = [gen_row(42, i) for i in range(40)]
-    warc = write_warc([(r[0], r[1], r[2]) for r in rows], gzip_members=True)
-    d = tmp_path / "warc_pipe"
-    d.mkdir()
-    (d / "seg.warc.gz").write_bytes(warc)
-
-    pages = spark.createDataFrame(
-        [(r[0], r[1], r[2], r[3], r[4]) for r in rows],
-        "url string, warc_ts timestamp, html binary, text string, lang string")
-    direct = {(r.subj, r.pred, r.obj)
-              for r in triples_from_pages(pages).collect()}
-
-    # WARC carries no lang; tag it the way an ingest pipeline would
-    # (language id after extraction) — here via the known url->lang map
-    langs = spark.createDataFrame([(r[0], r[4]) for r in rows],
-                                  "url string, lang string")
-    scanned = (read_warc(spark, str(d))
-               .join(F.broadcast(langs), "url")
-               .withColumn("text", F.lit("")))
-    via_warc = {(r.subj, r.pred, r.obj)
-                for r in triples_from_pages(scanned).collect()}
-    assert via_warc == direct and direct
 
 
 def test_skipgram_pairs_window_semantics(spark):

@@ -206,116 +206,6 @@ def test_residual_cycle_detector_self_loop(spark):
     assert pairs == {("a", "a")}
 
 
-def test_figure_data_golden_subgraph(bundle):
-    """EP3 closure (round-3 verdict #7): the figure-data builder must hand
-    the (absent) Plotly layer everything `get_figure` consumes, computed
-    over the golden annotated graph — positions from the deterministic
-    Sugiyama layout, straight-cubic Bézier control points whose sampled
-    path starts/ends exactly on the endpoint nodes, per-type adornment
-    geometry, and the reference's hovertext shape (visualize.py:53-232,
-    248-264 semantics)."""
-    from climatemind_ontology_processing_spark.operators.figure_data import (
-        CAUSES_TYPE, figure_data)
-
-    nodes, edges = bundle.annotated_nodes, bundle.annotated_edges
-    fn, fe = figure_data(nodes, edges, edge_type=None, num_samples=10)
-    frows = fn.collect()
-    erows = fe.collect()
-    assert len(frows) == nodes.count()
-    assert len(erows) == edges.count()
-    pos = {r.name: (r.x, r.y) for r in frows}
-
-    for r in erows:
-        # sampled path endpoints == control polygon endpoints == layout
-        assert (r.path_x[0], r.path_y[0]) == (r.ctrl_x[0], r.ctrl_y[0])
-        assert (r.path_x[-1], r.path_y[-1]) == (r.ctrl_x[3], r.ctrl_y[3])
-        assert pos[r.node1] == (r.ctrl_x[0], r.ctrl_y[0])
-        assert pos[r.node2] == (pytest.approx(r.ctrl_x[3]),
-                                pytest.approx(r.ctrl_y[3]))
-        assert len(r.path_x) == 10
-        if r.edge_type == CAUSES_TYPE:
-            assert r.adornment == "arrow" and len(r.adorn_x) == 3
-            # arrowhead vertex sits ON the source endpoint (visualize.py
-            # anchors at path[0])
-            assert r.adorn_x[1] == r.ctrl_x[0] and r.adorn_y[1] == r.ctrl_y[0]
-        elif r.adornment == "tee":
-            assert len(r.adorn_x) == 2
-        else:
-            assert r.adorn_x is None
-
-    # hovertext shape
-    assert all(r.node_hovertext.startswith("<b>Node classes:</b><br>")
-               for r in frows)
-    assert all(r.edge_hovertext.startswith("<b>Edge properties:</b><br>")
-               for r in erows)
-    assert all(r.width >= 0.75 and r.height == 0.5 for r in frows)
-
-    # edge-type display filter: only that type's edges, only their endpoints
-    fn_c, fe_c = figure_data(nodes, edges, edge_type=CAUSES_TYPE)
-    ec = fe_c.collect()
-    assert ec and all(r.edge_type == CAUSES_TYPE for r in ec)
-    endpoints = {r.node1 for r in ec} | {r.node2 for r in ec}
-    assert {r.name for r in fn_c.collect()} == endpoints
-
-    # deterministic across runs
-    again = {(r.node1, r.node2, tuple(r.ctrl_x), tuple(r.ctrl_y))
-             for r in figure_data(nodes, edges, num_samples=10)[1].collect()}
-    assert again == {(r.node1, r.node2, tuple(r.ctrl_x), tuple(r.ctrl_y))
-                     for r in erows}
-
-
-def test_to_plotly_figure_golden_subgraph(bundle):
-    """Round-4 verdict #7 (zero-gap EP3): driver-side figure assembly over
-    the golden annotated graph reproduces the reference's trace/shape
-    structure (visualize.py get_figure :53-232) — one circle shape + one
-    text trace per node with the 72x inch->point oval bbox, one spline
-    trace per edge preceded by a blue arrow / red tee adornment trace for
-    the causal types, reference layout flags.  plotly itself is absent
-    from this environment, so the asserted object is the figure's plain
-    dict form (go.Figure-compatible by construction)."""
-    from climatemind_ontology_processing_spark.operators.figure_data import (
-        figure_data, to_plotly_figure)
-
-    nodes, edges = bundle.annotated_nodes, bundle.annotated_edges
-    fn, fe = figure_data(nodes, edges, edge_type=None, num_samples=10)
-    frows, erows = fn.collect(), fe.collect()
-    fig = to_plotly_figure(fn, fe)
-    assert isinstance(fig, dict)          # plotly absent in this container
-    layout, data = fig["layout"], fig["data"]
-
-    assert len(layout["shapes"]) == len(frows)
-    text_traces = [t for t in data if t.get("mode") == "text"]
-    spline_traces = [t for t in data if t.get("line_shape") == "spline"]
-    adorn_traces = [t for t in data if t.get("mode") == "lines"]
-    assert len(text_traces) == len(frows)
-    assert len(spline_traces) == len(erows)
-    assert len(adorn_traces) == sum(1 for r in erows
-                                    if r.adornment is not None)
-
-    # node oval bbox + text trace coordinates match the figure data rows
-    by_name = {r.name: r for r in frows}
-    for shape, trace in zip(layout["shapes"], text_traces):
-        r = by_name[trace["text"]]
-        assert trace["x"] == [r.x] and trace["y"] == [r.y]
-        assert shape["x0"] == pytest.approx(r.x - 0.5 * r.width * 72)
-        assert shape["x1"] == pytest.approx(r.x + 0.5 * r.width * 72)
-        assert shape["y1"] - shape["y0"] == pytest.approx(r.height * 72)
-        assert shape["layer"] == "below" and shape["type"] == "circle"
-    # adornment color drives the path marker color (blue/red/black)
-    spline_by_hover = {}
-    for r, t in zip(erows, spline_traces):
-        assert t["x"] == list(r.path_x) and t["y"] == list(r.path_y)
-        want = {"arrow": "blue", "tee": "red"}.get(r.adornment, "black")
-        assert t["marker"]["color"] == want
-    assert layout["showlegend"] is False and layout["height"] == 700
-    assert layout["plot_bgcolor"] == "rgba(0,0,0,0)"
-    assert layout["xaxis"]["showgrid"] is False
-    # data bounds live inside the computed axis ranges
-    all_x = [x for t in data for x in t["x"]]
-    assert layout["xaxis"]["range"][0] <= min(all_x)
-    assert layout["xaxis"]["range"][1] >= max(all_x)
-
-
 def _canon(v):
     """Map key order is not part of a row's value."""
     if isinstance(v, dict):

@@ -209,6 +209,23 @@ def test_near_dup_pairs_subset_of_exact(spark, docs):
     assert (0, 1) not in nd_def and nd_def <= set(exact)
 
 
+def test_blank_documents_pair_with_nothing(spark):
+    """Blank and whitespace-only texts have no shingles, so no near-dup
+    operator reports them as duplicates of each other; edge whitespace
+    around real text adds no shingle either."""
+    from climatemind_ontology_processing_spark.operators.dedup import (
+        near_dup_pairs, ppjoin_pairs)
+    text = "the quick brown fox jumps over the lazy dog"
+    docs = spark.createDataFrame(
+        [(1, ""), (2, "   "), (3, "\t\n "), (4, " "), (5, ""),
+         (10, f"  {text}"), (11, f"{text}\n")],
+        "doc_id long, text string")
+    for op in (jaccard_pairs, near_dup_pairs, ppjoin_pairs,
+               minhash_lsh_pairs):
+        got = {(r.a, r.b) for r in op(docs).collect()}
+        assert got == {(10, 11)}, op.__name__
+
+
 def test_near_dup_guardrails_planted_dups(spark):
     """The LSH scale-killer guardrails: 10k planted EXACT duplicates must not
     produce ~5*10^7 candidate pairs.  (a) near_dup_pairs collapses them via

@@ -57,38 +57,6 @@ def test_gen_row_total_determinism(i):
     assert html_to_text(a[2]) == a[3]  # extraction invariant for any row id
 
 
-@settings(max_examples=300, deadline=None)
-@given(st.lists(st.integers(0, 100_000), max_size=60),
-       st.integers(1, 500), st.data())
-def test_merge_intervals_batch_associative(events, gap, data):
-    """The lemma behind streaming==batch sessionization: folding events into
-    session intervals is ASSOCIATIVE over batching — merging any shuffled
-    partition of the events incrementally (state + next batch, as the
-    streaming operator does) equals merging all events at once, and both
-    equal a naive sort-and-split-on-gap sessionizer."""
-    from climatemind_ontology_processing_spark.streaming.sessions import (
-        merge_intervals)
-    one_shot = merge_intervals([(t, t, 1) for t in events], gap)
-
-    # naive reference: sort, split where the gap exceeds gap_sec
-    ref = []
-    for t in sorted(events):
-        if ref and t - ref[-1][1] <= gap:
-            ref[-1][1] = max(ref[-1][1], t)
-            ref[-1][2] += 1
-        else:
-            ref.append([t, t, 1])
-    assert one_shot == [tuple(x) for x in ref]
-
-    shuffled = data.draw(st.permutations(events))
-    k = data.draw(st.integers(min_value=1, max_value=5))
-    acc = []
-    for i in range(k):
-        batch = shuffled[i::k]
-        acc = merge_intervals(list(acc) + [(t, t, 1) for t in batch], gap)
-    assert acc == one_shot
-
-
 @given(st.lists(st.tuples(st.integers(0, 10_000), st.integers(0, 500)),
                 max_size=60, unique_by=lambda t: t[0]),
        st.integers(min_value=1, max_value=64),

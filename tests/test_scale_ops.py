@@ -17,8 +17,6 @@ from climatemind_ontology_processing_spark.plans.lineage import (
     LINEAGE_SCHEMA, append_lineage_rows, completed_buckets, run_bucketed,
     with_bucket)
 from climatemind_ontology_processing_spark.sources.pages import pages_df
-from climatemind_ontology_processing_spark.streaming.incremental import (
-    incremental_triples)
 
 
 def test_textstats(spark):
@@ -378,20 +376,6 @@ def test_lineage_uri_scheme_paths(spark, tmp_path):
     rep2 = run_bucketed(pages, out, lin, run_id="ru", n_buckets=2)
     assert rep2.processed == [] and rep2.skipped == [0, 1]
     assert spark.read.parquet(out).count() > 0
-
-
-def test_incremental_antijoin(spark, tmp_path):
-    p1 = pages_df(spark, 60, seed=42)
-    path = str(tmp_path / "triples")
-    inc1 = incremental_triples(p1, path)
-    inc1.write.mode("overwrite").parquet(path)
-    n1 = spark.read.parquet(path).count()
-    # second batch: same 60 pages + 30 new -> only the 30 new produce increments
-    p2 = pages_df(spark, 90, seed=42)
-    inc2 = incremental_triples(p2, path)
-    urls = {r.url for r in inc2.select("url").distinct().collect()}
-    old_urls = {r.url for r in p1.select("url").collect()}
-    assert not (urls & old_urls), "already-processed pages must be skipped"
 
 
 def test_embedding_near_dups(spark, vectors):

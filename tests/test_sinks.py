@@ -162,22 +162,6 @@ def test_s8_gpickle_scan_fixed_point(spark, artifacts, normalize_attrs):
         assert normalize_attrs(g1.edges[e]) == normalize_attrs(g2.edges[e]), e
 
 
-def test_p7_edge_type_display_filter(spark, artifacts):
-    """P7 — get_filtered_data semantics (visualize.py:248-264)."""
-    from climatemind_ontology_processing_spark.operators.visualization import (
-        filter_by_edge_type)
-    nodes = spark.read.parquet(os.path.join(artifacts, "nodes"))
-    edges = spark.read.parquet(os.path.join(artifacts, "edges"))
-    n2, e2 = filter_by_edge_type(nodes, edges, "causes_or_promotes")
-    kept_edges = e2.collect()
-    assert kept_edges and all(r.type == "causes_or_promotes" for r in kept_edges)
-    want_nodes = {r.src for r in kept_edges} | {r.dst for r in kept_edges}
-    assert {r.label for r in n2.select("label").collect()} == want_nodes
-    # None = display everything
-    n3, e3 = filter_by_edge_type(nodes, edges, None)
-    assert n3 is nodes and e3 is edges
-
-
 def test_ntriples_roundtrip(spark, tmp_path):
     """Distributed N-Triples export: <s> <p> <o> . lines with RFC-3986
     percent-encoded IRIs; load is the exact inverse, including labels

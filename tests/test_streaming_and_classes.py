@@ -1,5 +1,5 @@
-"""Structured Streaming wrapper smoke test + is_a class-edge emission +
-entity-link scoring."""
+"""Streaming operators, incremental LSH probing, curation runs, is_a
+class-edge emission and entity-link scoring."""
 from __future__ import annotations
 
 import os
@@ -11,9 +11,6 @@ from climatemind_ontology_processing_spark.functions.triples import (
     extract_from_text)
 from climatemind_ontology_processing_spark.sources.dictionary import (
     alias_map, class_edges, concepts_df)
-from climatemind_ontology_processing_spark.sources.pages import pages_df
-from climatemind_ontology_processing_spark.streaming.incremental import (
-    streaming_triples)
 
 
 def test_class_edges(spark):
@@ -39,243 +36,20 @@ def test_link_scoring():
     assert t2 and t2[0][0] == "increase in greenhouse effect" and t2[0][3] == 0.9
 
 
-def test_streaming_triples(spark, tmp_path):
-    src = str(tmp_path / "stream_in")
-    out = str(tmp_path / "stream_out")
-    ckpt = str(tmp_path / "ckpt")
-    pages_df(spark, 200, seed=42).write.mode("overwrite").parquet(src)
-    q = streaming_triples(spark, src, alias_map(), ckpt, out)
-    q.awaitTermination(120)
-    got = spark.read.parquet(out)
-    assert got.count() > 0
-    assert set(got.columns) == {"subj", "pred", "obj", "url", "warc_ts", "score"}
-    # exactly-once: restarting over the same source adds nothing
-    q2 = streaming_triples(spark, src, alias_map(), ckpt, out)
-    q2.awaitTermination(120)
-    assert spark.read.parquet(out).count() == got.count()
-
-
-def test_stateful_sessionization_stream(spark, tmp_path):
-    """applyInPandasWithState gap sessionization with WATERMARK-GATED
-    emission: nothing appears while an admissible late event could still
-    extend a session; once the watermark passes, emitted sessions equal
-    the batch sessionization, labeled 'gap' when a later session for the
-    user was pending at emit time and 'timeout' otherwise."""
-    import datetime as dt
-
-    from climatemind_ontology_processing_spark.streaming.sessions import (
-        sessionize_stream)
-
-    def t(minute, hour=10):
-        return dt.datetime(2026, 1, 1, hour, minute)
-
-    rows = [
-        # user 1: session A (3 events), 40-min gap, session B (1 event)
-        (1, t(0)), (1, t(5)), (1, t(10)), (1, t(50)),
-        # user 2: session A (2 events), 35-min gap, session B (2 events)
-        (2, t(0)), (2, t(2)), (2, t(37)), (2, t(39)),
-        # user 3: single session
-        (3, t(0)), (3, t(1)),
-    ]
-    src = str(tmp_path / "sess_in")
-    out = str(tmp_path / "sess_out")
-    ckpt = str(tmp_path / "sess_ckpt")
-
-    def run_batch():
-        stream = spark.readStream.schema("user_id long, ts timestamp").parquet(src)
-        q = (sessionize_stream(stream, gap_sec=1800).writeStream
-             .format("parquet").option("path", out)
-             .option("checkpointLocation", ckpt)
-             .trigger(availableNow=True).start())
-        q.awaitTermination(120)
-
-    spark.createDataFrame(rows, "user_id long, ts timestamp") \
-        .write.mode("append").parquet(src)
-    run_batch()
-    # batch 1: watermark is still behind every session end + gap -> nothing
-    assert spark.read.parquet(out).collect() == []
-
-    # two watermark-advancing batches: batch 2 raises max event time, batch 3
-    # computes its watermark from it (wm = max_ts(prev) - gap) and flushes
-    spark.createDataFrame([(99, t(0, hour=20))], "user_id long, ts timestamp") \
-        .write.mode("append").parquet(src)
-    run_batch()
-    spark.createDataFrame([(99, t(0, hour=21))], "user_id long, ts timestamp") \
-        .write.mode("append").parquet(src)
-    run_batch()
-
-    got = {(r.user_id, r.session_start, r.session_end, r.n_events, r.closed_by)
-           for r in spark.read.parquet(out).collect()}
-    e = lambda m, h=10: int(t(m, h).replace(tzinfo=dt.timezone.utc).timestamp())
-    # EQUALITY for users 1-3 (a subset check would let duplicate or split
-    # sessions slip through — exactly the corruption class this targets);
-    # user 99 is the watermark driver and excluded
-    got_123 = {row for row in got if row[0] in (1, 2, 3)}
-    assert got_123 == {
-        (1, e(0), e(10), 3, "gap"),
-        (1, e(50), e(50), 1, "timeout"),
-        (2, e(0), e(2), 2, "gap"),
-        (2, e(37), e(39), 2, "timeout"),
-        (3, e(0), e(1), 2, "timeout"),
-    }, got
-
-
-def test_stateful_sessionization_timeout_flush(spark, tmp_path):
-    """The event-time timeout branch: a second micro-batch with much later
-    events advances the watermark past last_ts + gap, flushing the open
-    session with closed_by='timeout'."""
-    import datetime as dt
-    import glob
-
-    from climatemind_ontology_processing_spark.streaming.sessions import (
-        sessionize_stream)
-
-    def t(hour, minute=0):
-        return dt.datetime(2026, 1, 1, hour, minute)
-
-    src = str(tmp_path / "sess2_in")
-    out = str(tmp_path / "sess2_out")
-    ckpt = str(tmp_path / "sess2_ckpt")
-
-    def run_batch():
-        stream = spark.readStream.schema("user_id long, ts timestamp").parquet(src)
-        q = (sessionize_stream(stream, gap_sec=1800).writeStream
-             .format("parquet").option("path", out)
-             .option("checkpointLocation", ckpt)
-             .trigger(availableNow=True).start())
-        q.awaitTermination(120)
-
-    # batch 1: user 7 has an open session (2 events at 10:00, 10:05)
-    spark.createDataFrame([(7, t(10, 0)), (7, t(10, 5))],
-                          "user_id long, ts timestamp") \
-        .write.mode("append").parquet(src)
-    run_batch()
-    got1 = spark.read.parquet(out).collect()
-    assert got1 == [], "open session must not be emitted yet"
-
-    # batches 2+3: a different user far in the future advances the
-    # watermark (one batch to raise max event time, one to compute the
-    # watermark from it and fire the event-time timeout)
-    spark.createDataFrame([(8, t(20, 0))], "user_id long, ts timestamp") \
-        .write.mode("append").parquet(src)
-    run_batch()
-    spark.createDataFrame([(8, t(21, 0))], "user_id long, ts timestamp") \
-        .write.mode("append").parquet(src)
-    run_batch()
-    got2 = {(r.user_id, r.n_events, r.closed_by)
-            for r in spark.read.parquet(out).collect()}
-    assert (7, 2, "timeout") in got2, got2
-
-
-def test_streaming_dedup_within_watermark(spark, tmp_path):
-    """dropDuplicatesWithinWatermark-based streaming dedup: re-delivered
-    identical texts across micro-batches within the watermark emit once;
-    distinct texts all pass; output agrees with batch dedup_exact on the
-    distinct-text set."""
-    import datetime as dt
-
-    from climatemind_ontology_processing_spark.streaming.dedup import (
-        dedup_stream)
-
-    def t(minute):
-        return dt.datetime(2026, 1, 1, 12, minute)
-
-    src = str(tmp_path / "sd_in")
-    out = str(tmp_path / "sd_out")
-    ckpt = str(tmp_path / "sd_ckpt")
-
-    def run_batch():
-        stream = spark.readStream.schema(
-            "url string, warc_ts timestamp, text string").parquet(src)
-        q = (dedup_stream(stream, watermark="1 hour").writeStream
-             .format("parquet").option("path", out)
-             .option("checkpointLocation", ckpt)
-             .trigger(availableNow=True).start())
-        q.awaitTermination(120)
-
-    spark.createDataFrame(
-        [("u1", t(0), "alpha text"), ("u2", t(1), "beta text"),
-         ("u3", t(2), "alpha text")],           # intra-batch duplicate
-        "url string, warc_ts timestamp, text string") \
-        .write.mode("append").parquet(src)
-    run_batch()
-    # second delivery of the same texts in a later micro-batch (in-watermark)
-    spark.createDataFrame(
-        [("u4", t(10), "alpha text"), ("u5", t(11), "gamma text")],
-        "url string, warc_ts timestamp, text string") \
-        .write.mode("append").parquet(src)
-    run_batch()
-
-    got = spark.read.parquet(out).collect()
-    texts = sorted(r.text for r in got)
-    assert texts == ["alpha text", "beta text", "gamma text"], texts
-    assert len(got) == 3, "each distinct text exactly once"
-
-
-def test_incremental_lsh_stream_equals_batch(spark, tmp_path):
-    """Incremental MinHash-LSH (round-3 verdict #5): history docs persist
-    their bucket table; each micro-batch probes it for cross-batch
-    candidates, self-joins for within-batch candidates, and appends its own
-    buckets.  The union over the stream must equal one big batch
-    minhash_lsh_pairs run MINUS the within-history pairs (history pre-dates
-    the stream)."""
-    from climatemind_ontology_processing_spark.operators.dedup import (
-        minhash_lsh_pairs)
-    from climatemind_ontology_processing_spark.streaming.dedup import (
-        near_dup_probe_stream, persist_lsh_buckets)
-
-    def doc(i, a, b, c):
-        return (i, f"shared prefix words {a} {b} middle section {c} "
-                   f"tail portion stays mostly common across variants")
-
-    # history: 0-3; batch1: 10-13; batch2: 20-23 — near-dups span groups
-    hist = [doc(0, "x", "y", "z"), doc(1, "x", "y", "w"),
-            (2, "completely unrelated text about parquet file footers"),
-            (3, "another unrelated text mentioning shuffle partitions")]
-    b1 = [doc(10, "x", "y", "z2"), (11, "novel content in batch one only"),
-          doc(12, "x", "y", "w")]
-    b2 = [doc(20, "x", "y", "z2"), (21, "novel content in batch two only")]
-    schema = "doc_id long, text string"
-    all_docs = spark.createDataFrame(hist + b1 + b2, schema)
-    batch_pairs = {(r.a, r.b) for r in
-                   minhash_lsh_pairs(all_docs, max_bucket_size=None).collect()}
-    hist_df = spark.createDataFrame(hist, schema)
-    within_hist = {(r.a, r.b) for r in
-                   minhash_lsh_pairs(hist_df, max_bucket_size=None).collect()}
-
-    bkt = str(tmp_path / "lsh_buckets")
-    cand = str(tmp_path / "lsh_cands")
-    ckpt = str(tmp_path / "lsh_ckpt")
-    src = str(tmp_path / "lsh_src")
-    persist_lsh_buckets(hist_df, bkt)
-    # two files + maxFilesPerTrigger=1 -> two micro-batches in order
-    spark.createDataFrame(b1, schema).coalesce(1).write.mode("append").parquet(src)
-    spark.createDataFrame(b2, schema).coalesce(1).write.mode("append").parquet(src)
-    stream = (spark.readStream.schema(schema)
-              .option("maxFilesPerTrigger", 1).parquet(src))
-    q = near_dup_probe_stream(stream, bkt, cand, ckpt,
-                              max_bucket_size=None)
-    q.awaitTermination(180)
-    got = {(r.a, r.b) for r in spark.read.parquet(cand).collect()}
-    assert got == batch_pairs - within_hist, (
-        f"missing={batch_pairs - within_hist - got} extra="
-        f"{got - (batch_pairs - within_hist)}")
-    # the planted cross-group near-dups actually crossed batch boundaries
-    assert (0, 10) in got and (10, 20) in got and (1, 12) in got
-
-
-def test_lsh_probe_marker_validation(spark, tmp_path):
+def test_lsh_probe_marker_validation(spark):
     """A persisted bucket table built with one hash family must refuse a
     probe with another (the join would match nothing and silently report
     zero near-dups), and a partial marker set is rejected too."""
     from climatemind_ontology_processing_spark.streaming.dedup import (
-        persist_lsh_buckets, probe_lsh_buckets)
+        _doc_lsh_buckets, probe_lsh_buckets)
     docs = spark.createDataFrame(
         [(1, "some text body here for shingling purposes right now")],
         "doc_id long, text string")
-    bkt = str(tmp_path / "bkt_md5")
-    persist_lsh_buckets(docs, bkt, hash_family="md5_60")
-    loaded = spark.read.parquet(bkt)
+    loaded = (_doc_lsh_buckets(docs, "doc_id", "text", 3, 32, 8, "md5_60")
+              .withColumn("hash_family", F.lit("md5_60"))
+              .withColumn("shingle_n", F.lit(3))
+              .withColumn("num_hashes", F.lit(32))
+              .withColumn("bands", F.lit(8)))
     with pytest.raises(ValueError, match="match nothing"):
         probe_lsh_buckets(docs, loaded, hash_family="xxhash64")
     with pytest.raises(ValueError, match="match nothing"):
@@ -285,117 +59,6 @@ def test_lsh_probe_marker_validation(spark, tmp_path):
     assert ok.count() == 0  # self pairs excluded (doc != doc)
     with pytest.raises(ValueError, match="partial marker"):
         probe_lsh_buckets(docs, loaded.drop("bands"), hash_family="md5_60")
-
-
-def test_stateful_sessionization_late_event(spark, tmp_path):
-    """Regression for the late-data corruption: an in-watermark event in a
-    LATER micro-batch that precedes the stored session (t < session_start)
-    must extend the open session backwards (interval merge) — never drag
-    session_end backwards or emit start > end."""
-    import datetime as dt
-
-    from climatemind_ontology_processing_spark.streaming.sessions import (
-        sessionize_stream)
-
-    def t(hour, minute=0):
-        return dt.datetime(2026, 1, 1, hour, minute)
-
-    src = str(tmp_path / "sess3_in")
-    out = str(tmp_path / "sess3_out")
-    ckpt = str(tmp_path / "sess3_ckpt")
-
-    def run_batch():
-        stream = spark.readStream.schema("user_id long, ts timestamp").parquet(src)
-        q = (sessionize_stream(stream, gap_sec=1800).writeStream
-             .format("parquet").option("path", out)
-             .option("checkpointLocation", ckpt)
-             .trigger(availableNow=True).start())
-        q.awaitTermination(120)
-
-    # batch 1: user 9 has a single-event open session at 10:20
-    # (watermark after this batch: 10:20 - 30min = 09:50)
-    spark.createDataFrame([(9, t(10, 20))], "user_id long, ts timestamp") \
-        .write.mode("append").parquet(src)
-    run_batch()
-
-    # batch 2: LATE but in-watermark event at 10:00 — before session_start,
-    # within gap.  Must merge: open session becomes [10:00, 10:20], n=2.
-    spark.createDataFrame([(9, t(10, 0))], "user_id long, ts timestamp") \
-        .write.mode("append").parquet(src)
-    run_batch()
-    assert spark.read.parquet(out).collect() == [], \
-        "merged session is still open; nothing should be emitted"
-
-    # batches 3+4: far-future events advance the watermark past the merged
-    # session's end + gap, flushing user 9 via timeout
-    spark.createDataFrame([(42, t(20, 0))], "user_id long, ts timestamp") \
-        .write.mode("append").parquet(src)
-    run_batch()
-    spark.createDataFrame([(42, t(21, 0))], "user_id long, ts timestamp") \
-        .write.mode("append").parquet(src)
-    run_batch()
-    e = lambda h, m=0: int(t(h, m).replace(tzinfo=dt.timezone.utc).timestamp())
-    got = {(r.user_id, r.session_start, r.session_end, r.n_events, r.closed_by)
-           for r in spark.read.parquet(out).collect()}
-    assert (9, e(10, 0), e(10, 20), 2, "timeout") in got, got
-    for _, ss, se, _, _ in got:
-        assert ss <= se, f"session with start > end emitted: {got}"
-
-
-def test_stateful_sessionization_no_premature_close(spark, tmp_path):
-    """The deeper late-data case eager emission gets wrong: a session whose
-    gap was already OBSERVED (a much newer event exists) must still wait for
-    the watermark — an admissible late event can bridge into it.  Events
-    ..., 65min, then 100min, then LATE 80min (in-watermark): batch
-    sessionization yields ONE session [65..100]; eager gap-closure would
-    have emitted [..65] early and produced two."""
-    import datetime as dt
-
-    from climatemind_ontology_processing_spark.streaming.sessions import (
-        sessionize_stream)
-
-    base = dt.datetime(2026, 1, 1, 10, 0)
-
-    def t(minute):
-        return base + dt.timedelta(minutes=minute)
-
-    src = str(tmp_path / "sess4_in")
-    out = str(tmp_path / "sess4_out")
-    ckpt = str(tmp_path / "sess4_ckpt")
-
-    def run_batch():
-        stream = spark.readStream.schema("user_id long, ts timestamp").parquet(src)
-        q = (sessionize_stream(stream, gap_sec=1800).writeStream
-             .format("parquet").option("path", out)
-             .option("checkpointLocation", ckpt)
-             .trigger(availableNow=True).start())
-        q.awaitTermination(120)
-
-    # batch 1: events at 65 and 100 min — a 35-min gap > 30-min gap_sec
-    spark.createDataFrame([(1, t(65)), (1, t(100))],
-                          "user_id long, ts timestamp") \
-        .write.mode("append").parquet(src)
-    run_batch()
-    assert spark.read.parquet(out).collect() == [], \
-        "observed gap must not emit before the watermark allows"
-
-    # batch 2: LATE event at 80 min — watermark is 100-30=70, so admissible;
-    # it bridges 65 and 100 into ONE session
-    spark.createDataFrame([(1, t(80))], "user_id long, ts timestamp") \
-        .write.mode("append").parquet(src)
-    run_batch()
-
-    # flush via two watermark-advancing batches
-    for h in (20, 21):
-        spark.createDataFrame([(42, dt.datetime(2026, 1, 1, h, 0))],
-                              "user_id long, ts timestamp") \
-            .write.mode("append").parquet(src)
-        run_batch()
-
-    got = {(r.user_id, r.session_start, r.session_end, r.n_events, r.closed_by)
-           for r in spark.read.parquet(out).collect() if r.user_id == 1}
-    e = lambda m: int(t(m).replace(tzinfo=dt.timezone.utc).timestamp())
-    assert got == {(1, e(65), e(100), 3, "timeout")}, got
 
 
 def test_windowed_counts_stream_equals_batch(spark, tmp_path):
@@ -752,50 +415,6 @@ def test_curate_increment_rolls_exact_fp_from_exact_stage(spark, tmp_path):
     with pytest.raises(ValueError, match="match nothing"):
         curate_increment(spark, inc3, base_out, "i3",
                          lsh_params={"bands": 16, "num_hashes": 64}, **kw)
-
-
-def test_near_dup_probe_stream_replay_idempotent(spark, tmp_path):
-    """Round-4 advice (medium): a replayed foreachBatch must not duplicate
-    bucket or candidate rows.  Wiping the CHECKPOINT and re-running the same
-    source replays every batch with the same ids — the bucket table and
-    candidate set must come out identical (partitioned dynamic overwrite),
-    where blind appends would double every row and silently push real
-    buckets over max_bucket_size."""
-    from climatemind_ontology_processing_spark.streaming.dedup import (
-        near_dup_probe_stream, persist_lsh_buckets)
-
-    def doc(i, a, b, c):
-        return (i, f"shared prefix words {a} {b} middle section {c} "
-                   f"tail portion stays mostly common across variants")
-
-    schema = "doc_id long, text string"
-    hist = spark.createDataFrame(
-        [doc(0, "x", "y", "z"), doc(1, "x", "y", "w")], schema)
-    bkt = str(tmp_path / "rp_bkt")
-    cand = str(tmp_path / "rp_cand")
-    src = str(tmp_path / "rp_src")
-    persist_lsh_buckets(hist, bkt)
-    spark.createDataFrame([doc(10, "x", "y", "z2")], schema) \
-        .coalesce(1).write.mode("append").parquet(src)
-    spark.createDataFrame([doc(20, "x", "y", "z3")], schema) \
-        .coalesce(1).write.mode("append").parquet(src)
-
-    def run(ckpt):
-        stream = (spark.readStream.schema(schema)
-                  .option("maxFilesPerTrigger", 1).parquet(src))
-        q = near_dup_probe_stream(stream, bkt, cand, ckpt,
-                                  max_bucket_size=None)
-        q.awaitTermination(180)
-
-    run(str(tmp_path / "rp_ckpt1"))
-    buckets1 = sorted(map(tuple, spark.read.parquet(bkt).collect()))
-    cands1 = sorted(map(tuple, spark.read.parquet(cand).collect()))
-    assert {(r[0], r[1]) for r in cands1} >= {(0, 10), (10, 20)}
-
-    # fresh checkpoint -> both file batches replay with the same batch ids
-    run(str(tmp_path / "rp_ckpt2"))
-    assert sorted(map(tuple, spark.read.parquet(bkt).collect())) == buckets1
-    assert sorted(map(tuple, spark.read.parquet(cand).collect())) == cands1
 
 
 def test_curation_stage_resume_rejects_uncommitted_output(spark, tmp_path):

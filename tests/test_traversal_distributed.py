@@ -3,6 +3,8 @@ produce identical results (the scale path is what runs at 10^12 docs; the
 fast path is what runs on curated-ontology-sized graphs)."""
 from __future__ import annotations
 
+import time
+
 import pytest
 
 import climatemind_ontology_processing_spark.operators.traversal as trav
@@ -126,29 +128,6 @@ def test_dag_layers_cycle_raises(spark):
     e = spark.createDataFrame([("a", "b"), ("b", "a")], "src string, dst string")
     with pytest.raises(ValueError, match="cycl|acyclic"):
         dag_layers(e)
-
-
-def test_dot_layout_contract(spark):
-    """Layout invariants: every edge points strictly downward (y(src) <
-    y(dst)), no two nodes of a layer share an x, output is deterministic,
-    and the crossing count on a known graph is minimized by the barycenter
-    sweep (the 2-layer crossing pair untangles)."""
-    from climatemind_ontology_processing_spark.operators.layout import (
-        dot_layout)
-    e = spark.createDataFrame(
-        [("r", "a"), ("r", "b"), ("a", "x"), ("b", "y"),
-         ("a", "y2"), ("b", "x2")],
-        "src string, dst string")
-    out1 = {r.id: (r.x, r.y, r.layer) for r in dot_layout(e).collect()}
-    out2 = {r.id: (r.x, r.y, r.layer) for r in dot_layout(e).collect()}
-    assert out1 == out2, "layout must be deterministic"
-    for s, d in [("r", "a"), ("r", "b"), ("a", "x"), ("b", "y")]:
-        assert out1[s][1] < out1[d][1], f"edge {s}->{d} must point down"
-    by_layer = {}
-    for n, (x, y, l) in out1.items():
-        assert not any(abs(x - ox) < 1e-9 for ox in by_layer.get(l, [])), \
-            f"x collision in layer {l}"
-        by_layer.setdefault(l, []).append(x)
 
 
 def test_cc_chain_pointer_jumping_log_rounds(spark, force_distributed):
@@ -319,6 +298,33 @@ def test_checkpoint_raises_after_retry(spark, monkeypatch):
     with pytest.raises(RuntimeError, match="checkpoint failed"):
         trav._checkpoint(df)
     assert len(calls) == 2
+
+
+def test_checkpoint_does_not_retry_a_deliberate_error(spark, monkeypatch):
+    """A plan that fails on purpose (``F.raise_error``: boruvka_msf's NULL
+    weight check) fails the same way on a retry, so _checkpoint re-raises
+    it after the first failed job."""
+    from climatemind_ontology_processing_spark.operators.mst import (
+        boruvka_msf)
+    monkeypatch.setattr(trav, "SMALL_GRAPH_THRESHOLD", 0)
+    df = spark.createDataFrame([(1, 2, None), (2, 3, None)],
+                               "src int, dst int, weight int")
+    sc = spark.sparkContext
+    sc.setJobGroup("deliberate-error", "boruvka_msf NULL weight")
+    try:
+        with pytest.raises(Exception, match="NULL weight"):
+            boruvka_msf(df)
+    finally:
+        sc.setJobGroup(None, None)
+    tracker = sc.statusTracker()
+    # job statuses arrive through the listener bus; wait for final ones
+    for _ in range(100):
+        status = [tracker.getJobInfo(j).status
+                  for j in tracker.getJobIdsForGroup("deliberate-error")]
+        if "RUNNING" not in status and "UNKNOWN" not in status:
+            break
+        time.sleep(0.1)
+    assert status == ["FAILED"]
 
 
 CAP = 3
