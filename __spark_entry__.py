@@ -6085,7 +6085,7 @@ def _oracle_sql_literal() -> dict[str, str]:
             WHERE r.rn = 1
             ORDER BY subj, pred
         """,
-        "fingerprint_clusters": """
+        "fingerprint_clusters": r"""
             WITH recs AS (
               SELECT p_partkey::BIGINT AS id, p_name AS name FROM part
               UNION ALL
@@ -6281,7 +6281,7 @@ def _oracle_sql_literal() -> dict[str, str]:
             FROM urls u LEFT JOIN best b USING (url)
             ORDER BY u.url
         """,
-        "readability": """
+        "readability": r"""
             WITH base AS (
               SELECT doc_id, lower(coalesce(text, '')) AS t FROM documents),
             stats AS (
@@ -6455,7 +6455,7 @@ def _oracle_sql_literal() -> dict[str, str]:
                    END AS ratio_micro
             FROM w ORDER BY event_type, bucket_idx
         """,
-        "table_facts": """
+        "table_facts": r"""
             WITH pages AS (
               SELECT 'p:' || p_partkey AS url,
                      '<html><body><table><tr><th>Name</th><th> Size </th>'

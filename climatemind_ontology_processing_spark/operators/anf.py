@@ -36,6 +36,7 @@ import math
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..session import local_frame
 from .sketch import _HASH_BITS, _alpha, hll_reg_rho
 from .traversal import _checkpoint
 
@@ -113,8 +114,8 @@ def _hyperball_local(spark, edge_rows, rounds: int, p: int, ty: str):
             new[v] = merged
         state = new
         summarize(t)
-    return spark.createDataFrame(
-        rows, f"id {ty}, step int, n_registers long, harm_total long, "
+    return local_frame(
+        spark, rows, f"id {ty}, step int, n_registers long, harm_total long, "
               f"est double")
 
 
@@ -185,8 +186,8 @@ def effective_diameter(anf: DataFrame, q: float = 0.9) -> DataFrame:
     target = q * final
     eff = next(r["step"] for r in rows if r["mass"] >= target)
     spark = anf.sparkSession
-    return spark.createDataFrame(
-        [(int(eff), float(target), float(final))],
+    return local_frame(
+        spark, [(int(eff), float(target), float(final))],
         "eff_diameter int, q_mass double, final_mass double")
 
 

@@ -35,6 +35,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..session import local_frame
 from .traversal import _checkpoint, _fixpoint
 
 # sigma <= 2^20 keeps sigma * (1e6 + delta) far below 2^63 even with
@@ -108,8 +109,8 @@ def _betweenness_local(spark, sym_rows, sources, num_sources, max_rounds, ty):
     for (s, v), d in all_rows.items():
         if v != s:
             out[v] = out.get(v, 0) + d
-    return spark.createDataFrame(
-        [(v, d) for v, d in sorted(out.items())],
+    return local_frame(
+        spark, [(v, d) for v, d in sorted(out.items())],
         f"id {ty}, bc_micro long")
 
 

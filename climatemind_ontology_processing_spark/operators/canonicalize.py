@@ -36,6 +36,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..session import local_frame
+
 
 def connected_components(edges: DataFrame, src: str = "src", dst: str = "dst",
                          max_rounds: int = 50, salted: bool = False,
@@ -79,8 +81,8 @@ def connected_components(edges: DataFrame, src: str = "src", dst: str = "dst",
                 parent[hi] = lo
         rows = sorted((n, find(n)) for n in parent)
         t = e.schema["a"].dataType.simpleString()
-        return edges.sparkSession.createDataFrame(
-            rows, f"id {t}, component {t}")
+        return local_frame(
+            edges.sparkSession, rows, f"id {t}, component {t}")
     # undirected
     sym = _checkpoint(e.unionByName(e.select(F.col("b").alias("a"),
                                              F.col("a").alias("b")))

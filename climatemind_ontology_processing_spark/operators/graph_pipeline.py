@@ -28,6 +28,7 @@ from pyspark.sql import functions as F
 
 from ..config import GREENHOUSE_EFFECT
 from ..functions.arrays import flatten_source_lists, flatten_source_lists_local
+from ..session import local_frame
 from .acyclic import make_acyclic, make_acyclic_local
 from .adaptation import (adaptation_solutions, adaptations_local,
                          total_adaptation_nodes)
@@ -77,8 +78,9 @@ def build_graph(triples: DataFrame, concepts: DataFrame,
     The size choice is made once, here: :func:`.traversal.small_rows` over
     the raw (src, dst, type) projection of ``triples``.  A graph within the
     threshold takes the SMALL arm: one driver pass over the probe rows and
-    one collect of ``concepts``, each frame one ``createDataFrame``, so no
-    Spark job runs until the caller writes or collects.  Any larger graph
+    one collect of ``concepts`` (no job when it is a local relation, as
+    ``concepts_df`` builds it), each frame one :func:`.session.local_frame`,
+    so no Spark job runs until the caller writes or collects.  Any larger graph
     runs every pass as DataFrame plans.  Both arms give identical rows and
     schemas (pinned in tests/test_graph_parity.py).
 
@@ -165,10 +167,8 @@ def _build_graph_local(g_rows: list[tuple], edge_schema, concepts: DataFrame,
                 + [("pv_conflicts", s)])
 
     def frame(rows, fields):
-        rows = [tuple(r.get(c) for c, _t in fields) if isinstance(r, dict)
-                else r for r in rows]
-        return concepts.sparkSession.createDataFrame(
-            rows, ", ".join(f"`{c}` {t}" for c, t in fields))
+        return local_frame(concepts.sparkSession, rows,
+                           ", ".join(f"`{c}` {t}" for c, t in fields))
 
     return GraphBundle(
         nodes=frame(nodes.values(), n_fields + [

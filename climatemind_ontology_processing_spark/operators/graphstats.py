@@ -18,6 +18,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..session import local_frame
 from .traversal import _changed, _checkpoint, _fixpoint
 
 
@@ -282,7 +283,8 @@ def label_propagation(edges: DataFrame, src: str = "src", dst: str = "dst",
                     new[n] = min(cnt, key=lambda l: (-cnt[l], l))
                 lab = new
             ty = e.schema["a"].dataType.simpleString()
-            return edges.sparkSession.createDataFrame(
+            return local_frame(
+                edges.sparkSession,
                 sorted(lab.items()), f"id {ty}, community {ty}")
 
     und = _checkpoint(e.unionByName(e.select(F.col("b").alias("a"),
@@ -707,8 +709,8 @@ def node2vec_walks(edges: DataFrame, length: int = 4,
                     rows.append((s, t, best[1]))
             cur = nxt
         ty = sel.schema["c"].dataType.simpleString()
-        return edges.sparkSession.createDataFrame(
-            rows, f"start {ty}, step int, node {ty}")
+        return local_frame(
+            edges.sparkSession, rows, f"start {ty}, step int, node {ty}")
 
     e = _checkpoint(sel)
     und = (e.unionByName(e.select(F.col("n").alias("c"),

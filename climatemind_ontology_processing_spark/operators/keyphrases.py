@@ -29,6 +29,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..session import local_frame
 from .traversal import _checkpoint
 
 MICRO = 10 ** 6
@@ -172,8 +173,8 @@ def textrank_scores(docs: DataFrame, window: int = 2, iters: int = 3,
             score = {tok: 15 * MICRO // 100
                      + (85 * flow.get(tok, 0)) // 100
                      for tok in score}
-        return docs.sparkSession.createDataFrame(
-            sorted(score.items()), "tok string, score long")
+        return local_frame(
+            docs.sparkSession, sorted(score.items()), "tok string, score long")
 
     scores = strength.select(F.col("src").alias("tok"),
                              F.lit(MICRO).cast("long").alias("score"))

@@ -17,6 +17,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..session import local_frame
 from .traversal import _changed, _checkpoint, _fixpoint, small_rows
 
 
@@ -54,8 +55,8 @@ def dag_layers(edges: DataFrame, src: str = "src", dst: str = "dst",
             raise ValueError("dag_layers requires an acyclic graph "
                              "(run make_acyclic first)")
         t = e.schema["u"].dataType.simpleString()
-        return edges.sparkSession.createDataFrame(
-            sorted(layer.items()), f"id {t}, layer int")
+        return local_frame(
+            edges.sparkSession, sorted(layer.items()), f"id {t}, layer int")
     # distributed: semi-naive longest-path — propagate layer+1 along edges,
     # keep the max per node; fixpoint after <= DAG-depth rounds
     ec = _checkpoint(e)

@@ -28,6 +28,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..session import local_frame
 from .canonicalize import connected_components
 from .traversal import _checkpoint, _fixpoint, small_rows
 
@@ -93,8 +94,8 @@ def boruvka_msf(edges: DataFrame, src: str = "src", dst: str = "dst",
 
         ts = edges.schema[src].dataType.simpleString()
         tw = edges.schema[weight].dataType.simpleString()
-        return edges.sparkSession.createDataFrame(
-            _fixpoint([], step, max_rounds, "boruvka_msf"),
+        return local_frame(
+            edges.sparkSession, _fixpoint([], step, max_rounds, "boruvka_msf"),
             f"lo {ts}, hi {ts}, {weight} {tw}")
 
     checked_w = F.when(
@@ -151,7 +152,7 @@ def boruvka_msf(edges: DataFrame, src: str = "src", dst: str = "dst",
              .unionByName(e.select(F.col("hi").alias("id")))
              .distinct())
     labels = _checkpoint(nodes.select("id", F.col("id").alias("label")))
-    forest = edges.sparkSession.createDataFrame([], e.schema)
+    forest = local_frame(edges.sparkSession, [], e.schema)
     forest = _fixpoint((e, labels, forest), step, max_rounds,
                        "boruvka_msf")[2]
     return forest.select("lo", "hi", F.col("w").alias(weight))
@@ -214,7 +215,7 @@ def greedy_matching(edges: DataFrame, src: str = "src", dst: str = "dst",
             .join(used.withColumnRenamed("_n", "hi"), "hi", "left_anti"))
         return (alive, matched), alive.isEmpty()
 
-    matched = edges.sparkSession.createDataFrame([], alive.schema)
+    matched = local_frame(edges.sparkSession, [], alive.schema)
     matched = _fixpoint((alive, matched), step, max_rounds,
                         "greedy_matching")[1]
     return matched.select("lo", "hi", F.col("w").alias(weight))

@@ -32,6 +32,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..session import local_frame
 from .traversal import _checkpoint
 
 
@@ -130,8 +131,8 @@ def personalized_pagerank(edges: DataFrame, seeds: list | dict,
                         .unionByName(e.select(F.col("v").alias("id")))
                         .distinct())
     t = nodes.schema["id"].dataType.simpleString()
-    seed_df = edges.sparkSession.createDataFrame(
-        seed_rows, f"id {t}, _w double")
+    seed_df = local_frame(
+        edges.sparkSession, seed_rows, f"id {t}, _w double")
     # a seed absent from the edge set would silently vanish in the join
     # below, losing its teleport mass (all-zero ranks for a fully-absent
     # seed list) — fail loudly instead; seeds are tiny, one cheap action
@@ -221,7 +222,8 @@ def katz_centrality(edges: DataFrame, rounds: int = 4, atten_denom: int = 4,
             for v, c in w.items():
                 acc[v] += (c * 1_000_000) // denom
         ty = edges.schema[src].dataType.simpleString()
-        return edges.sparkSession.createDataFrame(
+        return local_frame(
+            edges.sparkSession,
             sorted(acc.items()), f"id {ty}, katz_micro long")
     e = _checkpoint(edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
                     .filter(F.col("u") != F.col("v")).distinct())

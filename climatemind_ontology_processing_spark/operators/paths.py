@@ -22,6 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..session import local_frame
 from .traversal import _checkpoint, _fixpoint, _relax_min
 
 
@@ -58,8 +59,8 @@ def shortest_paths(edges: DataFrame, seeds: DataFrame | list,
     spark = edges.sparkSession
     if isinstance(seeds, list):
         t = e.schema["u"].dataType.simpleString()
-        seeds = spark.createDataFrame([(s,) for s in sorted(set(seeds))],
-                                      f"id {t}")
+        seeds = local_frame(spark, [(s,) for s in sorted(set(seeds))],
+                            f"id {t}")
 
     def relax(dist):
         return (e.join(dist.withColumnRenamed("id", "u"), "u")
@@ -156,7 +157,8 @@ def landmark_distances(edges: DataFrame, num_landmarks: int = 16,
         dist = _fixpoint({(lm, lm): 0 for lm in lm_ids}, step, max_rounds,
                          "landmark_distances")
         ty = e0.schema["u"].dataType.simpleString()
-        return edges.sparkSession.createDataFrame(
+        return local_frame(
+            edges.sparkSession,
             [(lm, n, d) for (lm, n), d in sorted(dist.items())],
             f"landmark {ty}, id {ty}, dist long")
     e = _checkpoint(e0.distinct())
@@ -230,8 +232,8 @@ def earliest_arrival(edges: DataFrame, seeds: DataFrame | list,
     spark = edges.sparkSession
     if isinstance(seeds, list):
         t = e.schema["u"].dataType.simpleString()
-        seeds = spark.createDataFrame([(s,) for s in sorted(set(seeds))],
-                                      f"id {t}")
+        seeds = local_frame(spark, [(s,) for s in sorted(set(seeds))],
+                            f"id {t}")
 
     def relax(arr):
         return (e.join(arr.withColumnRenamed("id", "u"), "u")
@@ -267,8 +269,8 @@ def dag_path_counts(edges: DataFrame, sources: DataFrame | list,
     spark = edges.sparkSession
     if isinstance(sources, list):
         t = e.schema["u"].dataType.simpleString()
-        sources = spark.createDataFrame(
-            [(s,) for s in sorted(set(sources))], f"id {t}")
+        sources = local_frame(
+            spark, [(s,) for s in sorted(set(sources))], f"id {t}")
 
     def step(state):
         cur, total = state
@@ -325,6 +327,6 @@ def double_sweep_diameter(edges: DataFrame, src: str = "src",
     spark = edges.sparkSession
     lb = d2.agg(F.max("dist").alias("diameter_lb"))
     t = sym.schema["u"].dataType.simpleString()
-    meta = spark.createDataFrame([(start, far.id)],
-                                 f"start {t}, far_node {t}")
+    meta = local_frame(spark, [(start, far.id)],
+                       f"start {t}, far_node {t}")
     return meta.crossJoin(lb)

@@ -24,6 +24,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..session import local_frame
+
 MICRO = 10 ** 6
 
 
@@ -59,9 +61,9 @@ def exact_quantiles(df: DataFrame, value_col: str,
            .select("v", "cnt",
                    (F.col("_off") + F.sum("cnt").over(local)).alias("cum")))
     n_total = census.agg(F.sum("cnt").alias("n"))
-    targets = (df.sparkSession
-               .createDataFrame([(int(round(q * MICRO)),) for q in sorted(qs)],
-                                "q_micro long")
+    targets = (local_frame(df.sparkSession,
+                           [(int(round(q * MICRO)),) for q in sorted(qs)],
+                           "q_micro long")
                .crossJoin(F.broadcast(n_total))
                .select("q_micro", "n",
                        F.expr(f"(q_micro * n + {MICRO - 1}) div {MICRO}")

@@ -43,6 +43,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..session import local_frame
 from .traversal import (_adjacency, _checkpoint, _reach, _reach_local,
                         small_rows)
 
@@ -82,8 +83,8 @@ def transitive_closure(pairs: DataFrame, a: str = "a", b: str = "b",
         ta, tb = (f.dataType.simpleString() for f in sel.schema.fields)
         out = _reach_local(_adjacency(probe), probe, max_rounds,
                            "transitive_closure")
-        return pairs.sparkSession.createDataFrame(sorted(out),
-                                                  f"{a} {ta}, {b} {tb}")
+        return local_frame(pairs.sparkSession, sorted(out),
+                           f"{a} {ta}, {b} {tb}")
     closure = _reach(sel, sel.select(F.col("tag").alias("from"),
                                      F.col("id").alias("to")),
                      max_rounds, "transitive_closure")
@@ -280,17 +281,17 @@ def _rdfs_closure_literal(inst: DataFrame, sch_rows: list, type_pred: str,
         all_types = types.unionByName(types.select(
             F.col(S), F.explode(_map_arr(sc_by_c)[F.col("c")]).alias("c")))
 
-    sch_df = spark.createDataFrame(sch_rows, trip_schema)
+    sch_df = local_frame(spark, sch_rows, trip_schema)
     entailed = (ext_a
                 .unionByName(all_types.select(
                     S, F.lit(type_pred).alias(P), F.col("c").alias(O)))
                 .unionByName(sch_df))
     if sc_pairs:
-        entailed = entailed.unionByName(spark.createDataFrame(
-            [(c, sub_class, d) for c, d in sc_pairs], trip_schema))
+        entailed = entailed.unionByName(local_frame(
+            spark, [(c, sub_class, d) for c, d in sc_pairs], trip_schema))
     if sp_pairs:
-        entailed = entailed.unionByName(spark.createDataFrame(
-            [(p, sub_prop, q) for p, q in sp_pairs], trip_schema))
+        entailed = entailed.unionByName(local_frame(
+            spark, [(p, sub_prop, q) for p, q in sp_pairs], trip_schema))
     entailed = entailed.withColumn("derived", F.lit(1))
     asserted = inst.unionByName(sch_df).withColumn("derived", F.lit(0))
     return (entailed.unionByName(asserted)

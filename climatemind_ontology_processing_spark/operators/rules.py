@@ -34,6 +34,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..session import local_frame
+
 
 def chain_body_pairs(triples: DataFrame,
                      max_fanout: int | None = None) -> tuple[DataFrame, DataFrame]:
@@ -51,8 +53,8 @@ def chain_body_pairs(triples: DataFrame,
         t1 = t.join(fan.select(F.col("z").alias("obj")), "obj", "left_anti")
         t2 = t.join(fan.select(F.col("z").alias("subj")), "subj", "left_anti")
     else:
-        fan = (triples.sparkSession
-               .createDataFrame([], "z string, n_in long, n_out long"))
+        fan = local_frame(triples.sparkSession, [],
+                          "z string, n_in long, n_out long")
         t1 = t2 = t
     body = (t1.alias("b1")
             .join(t2.alias("b2"), F.col("b1.obj") == F.col("b2.subj"))

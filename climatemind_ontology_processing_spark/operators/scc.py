@@ -39,6 +39,7 @@ from functools import partial, reduce
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..session import local_frame
 from .traversal import (_adjacency, _changed, _checkpoint, _fixpoint, _reach,
                         _reach_local, small_rows)
 
@@ -142,8 +143,8 @@ def strongly_connected_components(edges: DataFrame, src: str = "src",
                           "reverse")
         members = _reach_local(hops, [(c, c) for c in set(comp.values())],
                                max_inner, "SCC backward collect")
-        return spark.createDataFrame(sorted((v, c) for c, v in members),
-                                     f"id {t}, component {t}")
+        return local_frame(spark, sorted((v, c) for c, v in members),
+                           f"id {t}, component {t}")
 
     def outer_step(state):
         cur, nodes, found = state
@@ -194,5 +195,5 @@ def strongly_connected_components(edges: DataFrame, src: str = "src",
     found = _fixpoint((cur, nodes, []), outer_step, max_outer,
                       "SCC decomposition")[2]
     if not found:                        # no non-self-loop edges at all
-        return spark.createDataFrame([], f"id {t}, component {t}")
+        return local_frame(spark, [], f"id {t}, component {t}")
     return reduce(DataFrame.unionByName, found)

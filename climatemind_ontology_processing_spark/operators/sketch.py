@@ -31,6 +31,7 @@ import math
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..session import local_frame
 from .dedup import token_hash
 
 _HASH_BITS = 60          # md5_60: 15 hex chars
@@ -182,7 +183,7 @@ def cms_lookup(sketch: DataFrame, probes: list[str], depth: int = 4,
         raise ValueError("probes must be non-empty")
     spark = sketch.sparkSession
     probe_rows = [(v, j) for v in sorted(set(probes)) for j in range(depth)]
-    pr = spark.createDataFrame(probe_rows, "item string, row int")
+    pr = local_frame(spark, probe_rows, "item string, row int")
     pr = pr.select(
         "item", "row",
         _salted_bucket(F.col("item"), "cms", F.col("row"), width,
@@ -219,8 +220,8 @@ def bloom_contains(bits: DataFrame, probes: list[str], k: int = 5,
     if not probes:
         raise ValueError("probes must be non-empty")
     spark = bits.sparkSession
-    pr = spark.createDataFrame(
-        [(v, i) for v in sorted(set(probes)) for i in range(k)],
+    pr = local_frame(
+        spark, [(v, i) for v in sorted(set(probes)) for i in range(k)],
         "item string, i int")
     pr = pr.select(
         "item",
@@ -228,8 +229,8 @@ def bloom_contains(bits: DataFrame, probes: list[str], k: int = 5,
                        hash_family).alias("bit"))
     hits = (pr.join(bits, "bit", "left_semi")
             .groupBy("item").agg(F.count("*").alias("_hits")))
-    base = spark.createDataFrame([(v,) for v in sorted(set(probes))],
-                                 "item string")
+    base = local_frame(spark, [(v,) for v in sorted(set(probes))],
+                       "item string")
     return (base.join(hits, "item", "left")
             .select("item",
                     (F.coalesce("_hits", F.lit(0)) == k)

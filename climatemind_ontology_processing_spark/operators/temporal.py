@@ -26,6 +26,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..session import local_frame
+
 
 def asof_join(left: DataFrame, right: DataFrame, key: str,
               left_ts: str = "ts", right_ts: str = "ts",
@@ -387,7 +389,8 @@ def funnel_counts(events: DataFrame, steps: tuple[str, ...],
     :func:`funnel_steps`."""
     f = funnel_steps(events, steps, key_col, ts_col, type_col, window)
     spark = events.sparkSession
-    idx = spark.createDataFrame(
+    idx = local_frame(
+        spark,
         [(i + 1, s) for i, s in enumerate(steps)], "step_idx int, step string")
     counts = (f.groupBy("n_steps").agg(F.count("*").alias("_n"))
               .withColumnRenamed("n_steps", "step_idx"))

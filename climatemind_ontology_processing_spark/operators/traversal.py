@@ -27,6 +27,8 @@ from collections import defaultdict
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..session import local_frame
+
 # Adaptive execution: below this edge count the traversal runs driver-side on
 # the collected edge list (identical semantics, zero per-iteration job
 # overhead); above it, the iterative-join path runs.  Mirrors Spark's own
@@ -218,7 +220,8 @@ def bfs_reachable(edges: DataFrame, seeds: DataFrame | list,
     """
     if isinstance(seeds, list):
         src_type = edges.schema["src"].dataType.simpleString()
-        seeds = edges.sparkSession.createDataFrame(
+        seeds = local_frame(
+            edges.sparkSession,
             [(s,) for s in sorted(set(seeds))], f"id {src_type}")
     tagged = seeds.select(F.lit(0).alias("tag"), seeds.columns[0])
     return bfs_reachable_tagged(edges, tagged, direction, edge_type,
@@ -242,8 +245,8 @@ def bfs_reachable_tagged(edges: DataFrame, seeds: DataFrame,
                            [tuple(r) for r in seeds.collect()],
                            max_rounds, "bfs_reachable")
     tag_t, id_t = (f.dataType.simpleString() for f in seeds.schema.fields)
-    return edges.sparkSession.createDataFrame(sorted(reached),
-                                              f"tag {tag_t}, id {id_t}")
+    return local_frame(edges.sparkSession, sorted(reached),
+                       f"tag {tag_t}, id {id_t}")
 
 
 def induced_edges(edges: DataFrame, nodeset: DataFrame) -> DataFrame:
@@ -287,8 +290,8 @@ def transitive_closure(edges: DataFrame, edge_type: str | None = None,
         reached = _reach_local(_adjacency(rows), [(n, n) for n in nodes],
                                max_rounds, "transitive_closure")
         t = edges.schema["src"].dataType.simpleString()
-        return edges.sparkSession.createDataFrame(sorted(reached),
-                                                  f"src {t}, dst {t}")
+        return local_frame(edges.sparkSession, sorted(reached),
+                           f"src {t}, dst {t}")
     hops = _hop_table(edges, "forward", edge_type)
     nodes = hops.select(F.col("from").alias("tag")).unionByName(
         hops.select(F.col("to").alias("tag")))
@@ -324,7 +327,8 @@ def rpq_reachable(triples: DataFrame, seeds: DataFrame,
         raise ValueError("transitions must be non-empty")
     if not accept_states:
         raise ValueError("accept_states must be non-empty")
-    trans = triples.sparkSession.createDataFrame(
+    trans = local_frame(
+        triples.sparkSession,
         [(int(a), str(pr), int(b)) for a, pr, b in transitions],
         "state int, pred string, nstate int")
     node_type = triples.schema[s].dataType

@@ -28,6 +28,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..functions.triples import TRIPLES_SCHEMA
+from ..session import local_frame
 from .pipeline import triples_from_pages
 
 LINEAGE_SCHEMA = ("run_id string, stage string, bucket int, n_pages bigint, "
@@ -89,7 +90,8 @@ def append_lineage_rows(spark: SparkSession, lineage_path: str,
     if len(consts) != 1:
         raise ValueError("rows of one lineage append must share "
                          f"(run_id, stage, status, attempt); got {consts}")
-    counts = spark.createDataFrame(
+    counts = local_frame(
+        spark,
         [(int(r["bucket"]), int(r["n_pages"]), int(r["n_triples"])) for r in rows],
         "bucket int, n_pages bigint, n_triples bigint")
     append_lineage_counts(lineage_path, counts, *consts.pop())

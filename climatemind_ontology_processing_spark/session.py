@@ -3,12 +3,16 @@
 Arrow execution on (all Python UDF surfaces are pandas/Arrow batched — the
 ``input_hint`` forbids per-row Python), AQE on (runtime skew-join splitting +
 coalescing belt-and-braces on top of our explicit salting).
+:func:`local_frame` is the one way driver-side rows become a DataFrame.
 """
 from __future__ import annotations
 
+import math
 import os
+from typing import Any, Iterable
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import types as T
 
 from .config import DEFAULT_SHUFFLE_PARTITIONS
 
@@ -90,3 +94,73 @@ def get_spark(
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+def local_frame(spark: SparkSession, rows: Iterable[Any],
+                schema: T.StructType | str) -> DataFrame:
+    """A driver-built frame as an Arrow local relation (``LocalTableScan``).
+
+    ``spark.createDataFrame(list, schema)`` parallelizes pickled rows and
+    re-serializes them in a Python ``map`` (``RDD._pickled``), so every
+    action on the frame starts Python workers.  This is the one place the
+    package builds a frame from driver values, and it takes Spark's Arrow
+    route from pandas instead: no Python stage runs later.  The route is
+    called directly, because the public one only takes it when
+    ``arrow.pyspark.enabled`` is set (a plain session leaves it off), falls
+    back to the pickled path with a mere warning, and skips it for zero
+    rows.
+
+    ``rows`` are tuples in ``schema`` order or dicts keyed by field name;
+    ``schema`` is a StructType or a DDL string.  Values mean what they mean
+    to ``createDataFrame(list, schema)``: naive timestamps are local time,
+    and a top-level NaN stays NaN (an Arrow-backed column skips the pandas
+    null mask).  A NaN inside an array, map or struct would become null on
+    this route, so it raises ``ValueError`` naming the column instead.
+    """
+    import pandas as pd
+
+    if isinstance(schema, str):
+        schema = T.StructType.fromDDL(schema)
+    names = schema.names
+    rows = [tuple(map(r.get, names)) if isinstance(r, dict) else r
+            for r in rows]
+    pdf = pd.DataFrame({f.name: _column([r[i] for r in rows], f)
+                        for i, f in enumerate(schema.fields)})
+    return spark._create_from_pandas_with_arrow(
+        pdf, schema, spark.conf.get("spark.sql.session.timeZone"))
+
+
+def _column(values: list, field: T.StructField):
+    """One pandas column of :func:`local_frame`."""
+    import pandas as pd
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_type
+
+    dt = field.dataType
+    if isinstance(dt, (T.FloatType, T.DoubleType)):
+        return pd.arrays.ArrowExtensionArray(pa.array(values, to_arrow_type(dt)))
+    if isinstance(dt, T.TimestampType):
+        # epoch micros as the list route computes them (naive = local time)
+        micros = pa.array([dt.toInternal(v) for v in values], pa.int64())
+        return pd.arrays.ArrowExtensionArray(micros.cast(to_arrow_type(dt)))
+    if _nests_float(dt) and any(map(_has_nan, values)):
+        raise ValueError(f"column {field.name!r}: a NaN inside "
+                         f"{dt.simpleString()} cannot enter a local frame")
+    return pd.Series(values, dtype=object)
+
+
+def _nests_float(dt: T.DataType) -> bool:
+    inner = ([dt.elementType] if isinstance(dt, T.ArrayType)
+             else [dt.keyType, dt.valueType] if isinstance(dt, T.MapType)
+             else [f.dataType for f in dt.fields]
+             if isinstance(dt, T.StructType) else [])
+    return any(isinstance(t, (T.FloatType, T.DoubleType)) or _nests_float(t)
+               for t in inner)
+
+
+def _has_nan(v: Any) -> bool:
+    if isinstance(v, dict):
+        v = list(v.values())
+    if isinstance(v, (list, tuple)):
+        return any(map(_has_nan, v))
+    return isinstance(v, float) and math.isnan(v)

@@ -25,6 +25,8 @@ from typing import Any
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
+from ..session import local_frame
+
 CONCEPT_SCHEMA = T.StructType([
     T.StructField("concept_id", T.StringType(), False),
     T.StructField("label", T.StringType(), False),
@@ -100,7 +102,7 @@ def concepts_df_from_rows(spark: SparkSession, concept_rows: list[dict[str, Any]
             {k: float(v) for k, v in dp.items() if v is not None},
             sorted(dp.keys()),
         ))
-    return spark.createDataFrame(rows, CONCEPT_SCHEMA)
+    return local_frame(spark, rows, CONCEPT_SCHEMA)
 
 
 def concepts_df(spark: SparkSession, path: str | None = None,

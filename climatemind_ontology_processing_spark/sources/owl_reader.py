@@ -36,6 +36,8 @@ from __future__ import annotations
 import xml.etree.ElementTree as ET
 from dataclasses import dataclass, field
 
+from ..session import local_frame
+
 RDF = "http://www.w3.org/1999/02/22-rdf-syntax-ns#"
 RDFS = "http://www.w3.org/2000/01/rdf-schema#"
 OWL = "http://www.w3.org/2002/07/owl#"
@@ -288,4 +290,4 @@ def triples_df_from_owl(spark, path: str):
     """EP2 front half from OWL: DataFrame[subj, pred, obj] (plus null
     provenance columns so it feeds the same pipeline as web triples)."""
     rows = [(s, p, o) for (s, o, p) in edge_triples(parse_owl(path))]
-    return spark.createDataFrame(rows, "subj string, pred string, obj string")
+    return local_frame(spark, rows, "subj string, pred string, obj string")

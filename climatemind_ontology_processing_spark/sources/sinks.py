@@ -16,6 +16,8 @@ from typing import Any
 
 from pyspark.sql import DataFrame
 
+from ..session import local_frame
+
 
 def _node_attrs(row: dict) -> dict[str, Any]:
     """Engine node row -> reference-style attribute dict
@@ -241,8 +243,8 @@ def load_graph_pickle(spark, path: str):
                       T.MapType(T.StringType(), T.ArrayType(T.StringType())), True),
         T.StructField("cyto_classes", T.ArrayType(T.StringType()), True),
     ])
-    return (spark.createDataFrame(node_rows, node_schema),
-            spark.createDataFrame(edge_rows, edge_schema))
+    return (local_frame(spark, node_rows, node_schema),
+                        local_frame(spark, edge_rows, edge_schema))
 
 
 def jit_data(nodes: DataFrame, edges: DataFrame) -> list[dict]:

@@ -367,11 +367,12 @@ def test_edge_case_graph_same_on_both_arms(spark):
 
 
 def test_small_arm_runs_no_job_before_the_writes(spark, golden):
-    """The small arm of build_graph starts two Spark jobs: the size probe
-    and the collect of the concept dictionary.  Every annotation pass runs
-    on the driver, so nothing runs until the frames are written or
-    collected.  The triples sit in one partition, as in a one-file parquet
-    input: the probe's limit collect then scans in one job."""
+    """The small arm of build_graph starts one Spark job: the size probe.
+    The concept dictionary is a local relation, so its collect runs no
+    job, and every annotation pass runs on the driver, so nothing runs
+    until the frames are written or collected.  The triples sit in one
+    partition, as in a one-file parquet input: the probe's limit collect
+    then scans in one job."""
     sc = spark.sparkContext
     triples, concepts = _golden_triples(spark, golden).coalesce(1), \
         concepts_df(spark)
@@ -381,4 +382,25 @@ def test_small_arm_runs_no_job_before_the_writes(spark, golden):
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
-    assert len(sc.statusTracker().getJobIdsForGroup("small-arm-jobs")) <= 2
+    assert len(sc.statusTracker().getJobIdsForGroup("small-arm-jobs")) == 1
+
+
+@pytest.mark.filterwarnings("error::UserWarning")
+def test_small_arm_frames_are_local_relations(spark, golden):
+    """Every frame the small arm builds on the driver, and the concept
+    dictionary, plans as an Arrow local relation: no ``ExistingRDD``,
+    whose pickled rows a Python stage would re-serialize on every action.
+    A silent fallback of Spark's Arrow conversion would warn; here that
+    warning is an error."""
+    concepts = concepts_df(spark)
+    b = build_graph(_golden_triples(spark, golden), concepts)
+    frames = {"concepts": concepts, **{
+        name: getattr(b, name) for name in (
+            "nodes", "edges", "edges_b", "annotated_nodes",
+            "annotated_edges", "subgraph_nodes", "subgraph_edges")},
+        **b.extras}
+    assert len(frames) == 12
+    for name, df in frames.items():
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert "LocalTableScan" in plan and "ExistingRDD" not in plan, \
+            (name, plan)

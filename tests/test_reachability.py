@@ -8,7 +8,6 @@ import is dead weight: wire it into an entry point or delete it.
 from __future__ import annotations
 
 import ast
-import warnings
 from pathlib import Path
 
 ROOT = Path(__file__).resolve().parent.parent
@@ -39,9 +38,7 @@ def _imported_files(path: Path) -> set[Path]:
     ones against the repo root and the importer's own directory
     (perfbench's sibling imports).
     """
-    with warnings.catch_warnings():  # invalid escapes in SQL strings
-        warnings.simplefilter("ignore")
-        tree = ast.parse(path.read_text(), str(path))
+    tree = ast.parse(path.read_text(), str(path))
     names: list[tuple[str, Path]] = []
     for node in ast.walk(tree):
         if isinstance(node, ast.Import):
